@@ -45,16 +45,17 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Registry rows that MATERIALIZE an artifact on first build (documented in
 # each builder): warm runs serve the artifact, so only these get a second,
-# caches-cleared timing in the cold pass.
+# caches-cleared timing in the cold pass. Comments name the persist-layer
+# kind (persist.get_or_build) each row's artifact is memoized under.
 MATERIALIZED_ROWS = (
-    "ohlc_bars",                # _OHLC_BARS_CACHE (plans/catalog.py)
-    "similarity_ivf_full_probe",  # _IVF_INDEX_CACHE
+    "ohlc_bars",                # "ohlc_bars" (plans/catalog.py)
+    "similarity_ivf_full_probe",  # "ivf_index"
     "curation_pipeline",        # curated-corpus artifact (plans/curation.py)
-    "sink_csv_lines",           # _BARS_CACHE (plans/sinks_catalog.py)
+    "sink_csv_lines",           # "bars" (plans/sinks_catalog.py)
     "sink_bar_rows",
-    "sink_excel",               # _XTOKENS_CACHE
-    "sink_document_rows",       # _TOKENS_CACHE
-    "sink_text_lines",          # _XTOKENS_CACHE + _BARS_CACHE
+    "sink_excel",               # "xtokens"
+    "sink_document_rows",       # "tokens"
+    "sink_text_lines",          # "xtokens" + "bars"
     # In-query tracked persists (not artifacts, but warm runs 2..3 serve
     # the persisted intermediate from the CacheManager): a caches-cleared
     # cold row records the honest first-build cost (VERDICT r12 §wrong-2).
@@ -140,17 +141,6 @@ def main() -> None:
     shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8"))
     spark = get_spark("bench", shuffle_partitions=shuffle)
     spark.sparkContext.setLogLevel("ERROR")
-
-    # AQE is a large-shuffle feature: runtime re-planning costs one extra
-    # scheduler round-trip per shuffle stage (~50-80 ms/query measured
-    # here), which it repays only when there are oversized/skewed
-    # partitions to fix. At bench scale (MB-range shuffles, reducers
-    # already sized to the data above) there is nothing to re-plan, so
-    # the bench session turns it off — the same static-vs-adaptive call a
-    # warehouse makes per workload. Production defaults (session.py) keep
-    # AQE on; SPARK_GRAFT_AQE=on restores it here to measure that config.
-    if os.environ.get("SPARK_GRAFT_AQE", "off") != "on":
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     # Warm up the JVM and the Python/pandas UDF worker, and pin the bench
     # tables in memory (one-time engine costs, not per-query costs — the

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from dexscraper_spark.persist import get_or_build
+
 
 DEFAULT_DIM = 64
 
@@ -299,9 +301,6 @@ def exact_cosine_pairs_blocked(emb: DataFrame, *, id_col: str = "vec_id",
     ).filter(F.col("cosine") >= threshold)
 
 
-_LSH_PLANES_CACHE: dict = {}
-
-
 def _lsh_planes(spark, *, num_planes: int = 16, dim: int = 64) -> list:
     """Hyperplane weights h_p[i] = (xxhash64(p*dim + i) mod 2001 - 1000)/1000
     — deterministic pseudo-random planes. Evaluated ONCE per session by the
@@ -310,8 +309,7 @@ def _lsh_planes(spark, *, num_planes: int = 16, dim: int = 64) -> list:
     times per ROW (46 M hash evals over a 60 k corpus — measured as the
     dominant LSH cost). Same formula, same doubles, identical signatures.
     """
-    key = (spark.sparkContext.applicationId, num_planes, dim)
-    if key not in _LSH_PLANES_CACHE:
+    def build():
         # xxhash64 of the INT index — matches the int arithmetic
         # (sequence elements) the in-row expression used
         rows = (spark.range(num_planes * dim)
@@ -320,9 +318,8 @@ def _lsh_planes(spark, *, num_planes: int = 16, dim: int = 64) -> list:
                           - F.lit(1000.0)) / F.lit(1000.0)).alias("w"))
                 .collect())
         ws = [r["w"] for r in rows]
-        _LSH_PLANES_CACHE[key] = [ws[p * dim:(p + 1) * dim]
-                                  for p in range(num_planes)]
-    return _LSH_PLANES_CACHE[key]
+        return [ws[p * dim:(p + 1) * dim] for p in range(num_planes)]
+    return get_or_build(spark, "lsh_planes", (num_planes, dim), build)
 
 
 def lsh_signature(vec_col, *, num_planes: int = 16, dim: int = 64,
@@ -584,7 +581,7 @@ def ivf_build(corpus: DataFrame, *, id_col: str = "vec_id",
         # lineage is deep, and every probe against a plain cached index
         # re-analyzes it (~0.4 s/driver round measured at sf0.1). The
         # parquet artifact scans as a one-node plan and releases
-        # deterministically (IvfIndex.unpersist / clear_plan_cache).
+        # deterministically (IvfIndex.unpersist / persist.refresh).
         from dexscraper_spark.persist import materialize_artifact
         assigned = materialize_artifact(assigned, "ivf")
     spark = corpus.sparkSession

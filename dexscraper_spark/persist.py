@@ -1,18 +1,23 @@
-"""Tracked persists — single release point for every internal
-``.persist()`` the engine's operators take.
+"""The engine's one cache and artifact layer.
 
-Operators persist intermediates they read more than once (simhash
-fingerprints, MinHash candidate pairs, the fine OHLC bar frame, IVF
-assignments, the curation dedup frame). Those handles used to be
-function-locals: nothing outside the operator could unpersist them, so
-every artifact refresh/rebuild cycle leaked block-manager storage.
-Routing them through :func:`tracked_persist` gives
-``registry.clear_plan_cache()`` (the REFRESH entry point) one switch
-that releases them all.
+Three kinds of reuse share one lifetime:
 
-Kept as a flat list, not app-keyed: entries belonging to stopped
-sessions unpersist as harmless no-ops, and a long-lived engine calls
-release on every refresh anyway.
+* :func:`get_or_build` — the app-keyed memo for every resolved object a
+  long-lived engine reuses: prepared plans, table resolutions, the
+  bar/token/IVF artifact frames, the LSH hyperplanes. Entries are keyed
+  by ``(applicationId, kind, key)``; a lookup under a new application
+  drops every entry of the old one (their storage is one of the two
+  kinds below, which the sweeps free).
+* :func:`tracked_persist` — every internal ``.persist()`` an operator
+  takes on an intermediate it reads more than once (simhash
+  fingerprints, MinHash candidates, IVF assignments, the curation dedup
+  frame). Kept as a flat list, not app-keyed: entries of stopped
+  sessions unpersist as harmless no-ops.
+* :func:`materialize_artifact` — session-scoped parquet directories
+  serving materialized frames.
+
+:func:`refresh` (``registry.clear_plan_cache``, the REFRESH TABLE
+analog) releases all three in the one safe order.
 """
 
 from __future__ import annotations
@@ -20,15 +25,46 @@ from __future__ import annotations
 import atexit
 import shutil
 import tempfile
+from collections.abc import Callable
+from typing import TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
+T = TypeVar("T")
+
+_MEMO: dict[tuple, object] = {}
 _TRACKED: list[DataFrame] = []
 _ARTIFACT_DIRS: list[str] = []
 
 
+def get_or_build(spark: SparkSession, kind: str, key,
+                 build: Callable[[], T]) -> T:
+    """Return the memoized ``build()`` for ``(kind, key)`` in this
+    Spark application, building it on first use. Entries of any other
+    (stopped) application are dropped first, so a process that creates
+    several sessions never pins dead frames."""
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _MEMO if k[0] != app]:
+        del _MEMO[k]
+    k = (app, kind, key)
+    if k not in _MEMO:
+        _MEMO[k] = build()
+    return _MEMO[k]
+
+
+def refresh() -> None:
+    """The REFRESH TABLE analog: drop every memo entry (the next lookup
+    re-resolves against current files), unpersist every tracked frame,
+    then delete every artifact directory. The order is the invariant:
+    artifact dirs go LAST, once no memo entry can still hold a scan of
+    them — deleting earlier would leave cached frames dangling."""
+    _MEMO.clear()
+    release_tracked()
+    release_artifacts()
+
+
 def tracked_persist(df: DataFrame) -> DataFrame:
-    """``df.persist()`` whose handle clear_plan_cache() can release."""
+    """``df.persist()`` whose handle :func:`refresh` releases."""
     df.persist()
     _TRACKED.append(df)
     return df
@@ -54,8 +90,9 @@ def materialize_artifact(df: DataFrame, name: str) -> DataFrame:
     table (write_curated, ivf_save); the bench artifacts simply live in
     a temp dir with engine-managed lifetime. A frame scanned after its
     directory was released fails LOUDLY (FILE_NOT_EXIST) — consistent
-    with the plan cache's loud-staleness contract; clear_plan_cache()
-    rebuilds on the next call.
+    with the plan cache's loud-staleness contract; a builder memoized
+    through :func:`get_or_build` rebuilds on its next call after
+    :func:`refresh`.
     """
     path = tempfile.mkdtemp(prefix=f"dexart_{name}_")
     df.write.mode("overwrite").parquet(path)
@@ -82,16 +119,8 @@ def release_artifact(df: DataFrame) -> bool:
 
 
 def release_tracked() -> None:
-    """Unpersist every tracked frame (refresh-cycle storage hygiene).
-
-    Deliberately does NOT delete materialized artifact directories:
-    module caches (_OHLC_BARS_CACHE, _BARS_CACHE, _TOKENS_CACHE,
-    _IVF_INDEX_CACHE, the plan cache) hold live scans of those dirs, and
-    standalone callers of this function (clear_curation_cache, tests) do
-    not clear them — deleting here would leave permanently-dangling
-    cached frames. Only :func:`release_artifacts`, called by
-    registry.clear_plan_cache() AFTER every module cache is cleared, may
-    sweep the dirs."""
+    """Unpersist every tracked frame. Leaves artifact directories alone:
+    memo entries may hold live scans of them (see :func:`refresh`)."""
     for df in _TRACKED:
         try:
             df.unpersist()
@@ -101,15 +130,14 @@ def release_tracked() -> None:
 
 
 def release_artifacts() -> None:
-    """Delete every materialized artifact directory. Call only after the
-    module caches holding their scans are cleared (clear_plan_cache does
-    this in order), or at process exit."""
+    """Delete every materialized artifact directory. Call through
+    :func:`refresh` (memo first), or at process exit."""
     for p in _ARTIFACT_DIRS:
         shutil.rmtree(p, ignore_errors=True)
     _ARTIFACT_DIRS.clear()
 
 
-# Processes that exit without a final clear_plan_cache() (bench, CLI,
+# Processes that exit without a final refresh() (bench, CLI,
 # pytest) must not strand sf-scale parquet in the temp dir — the
 # cache()/localCheckpoint storage this mechanism replaced died with the
 # JVM automatically; match that.

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from dexscraper_spark.functions.exact import (
     _cents_sql, avg_money, avg_money_sql, sum_money, sum_money_sql,
 )
+from dexscraper_spark.persist import get_or_build, materialize_artifact
 from dexscraper_spark.plans.flagship import flagship_oracle_sql, flagship_top_revenue
 from dexscraper_spark.plans.registry import register
 from dexscraper_spark.session import tune_session
@@ -137,20 +138,6 @@ def _ohlc_frame_sql(frame: str, seconds: int) -> str:
     """
 
 
-_OHLC_BARS_CACHE: dict = {}
-
-
-def clear_ohlc_bars_cache() -> None:
-    """Release the block-manager storage pinned by the cached bar frames
-    (same contract as the sink layer's clear_*_cache helpers)."""
-    for df in _OHLC_BARS_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # owning session already stopped; entry is dead anyway
-    _OHLC_BARS_CACHE.clear()
-
-
 @register(
     "ohlc_bars",
     " UNION ALL ".join(_ohlc_frame_sql(n, s) for n, s in
@@ -165,16 +152,13 @@ def ohlc_bars(spark, sf_dir):
     the finest level in one exploded groupBy (see ohlc_windowed_frames /
     ohlc_frames_from_partials for the bit-exactness argument). The DuckDB oracle computes each frame
     directly from the raw events, so the driver check proves
-    cascade ≡ direct. The result is memoized per (appId, sf_dir) AND kept
-    in the block-manager cache (same materialized-view pattern as the sink
-    layer's _BARS_CACHE): the bar frame is bounded by bar count — symbols ×
-    buckets, orders of magnitude below tick count at any scale — and it
-    feeds repeated reads, so repeated runs are a cached scan instead of
-    re-running the rollup cascade."""
-    from dexscraper_spark.plans.registry import evict_other_apps
-    key = (spark.sparkContext.applicationId, sf_dir)
-    evict_other_apps(_OHLC_BARS_CACHE, key[0])
-    if key not in _OHLC_BARS_CACHE:
+    cascade ≡ direct. The result is memoized per (appId, sf_dir) as a
+    materialized artifact (persist kind "ohlc_bars", the same pattern as
+    the sink layer's "bars"): the bar frame is bounded by bar count —
+    symbols × buckets, orders of magnitude below tick count at any
+    scale — and it feeds repeated reads, so repeated runs are an artifact
+    scan instead of re-running the rollup cascade."""
+    def build():
         from dexscraper_spark.config import Timeframe
         from dexscraper_spark.operators.ohlc import ohlc_windowed_frames
         ev = _t(spark, sf_dir, "events")
@@ -188,11 +172,10 @@ def ohlc_bars(spark, sf_dir):
         # lineage-truncated artifact: warm reads of a plain cached frame
         # re-analyze the whole cascade lineage per call (sinks_catalog
         # _bars has the same rationale + deterministic release)
-        from dexscraper_spark.persist import materialize_artifact
-        _OHLC_BARS_CACHE[key] = materialize_artifact(
+        return materialize_artifact(
             bars.withColumn("bucket_ts", F.col("bucket_ts").cast("long")),
             "ohlcbars")
-    return _OHLC_BARS_CACHE[key]
+    return get_or_build(spark, "ohlc_bars", sf_dir, build)
 
 
 # ---------------------------------------------------------------------------
@@ -1923,20 +1906,6 @@ def streaming_ohlc_pipeline(spark, sf_dir):
 # (ivf_save/ivf_load) and probes prune partitions. Model-fit → rows-only.
 # ---------------------------------------------------------------------------
 
-_IVF_INDEX_CACHE: dict = {}
-
-
-def clear_ivf_index_cache() -> None:
-    """Release the persisted cluster assignments the cached IVF indexes
-    hold (same contract as clear_ohlc_bars_cache)."""
-    for idx in _IVF_INDEX_CACHE.values():
-        try:
-            idx.unpersist()
-        except Exception:
-            pass  # owning session already stopped; entry is dead anyway
-    _IVF_INDEX_CACHE.clear()
-
-
 def _ivf_index(spark, sf_dir: str, *, nlist: int = 8, seed: int = 42):
     # r12 optimization: ivf_build_deterministic, not the MLlib ivf_build.
     # The MLlib fit is ~35 scheduler jobs (k-means|| init + 20 iteration
@@ -1949,14 +1918,10 @@ def _ivf_index(spark, sf_dir: str, *, nlist: int = 8, seed: int = 42):
     # so its oracle-checked output is invariant to which centroids the
     # quantizer fits — only the build cost changes (measured ~3x).
     from dexscraper_spark.operators.similarity import ivf_build_deterministic
-    from dexscraper_spark.plans.registry import evict_other_apps
-    key = (spark.sparkContext.applicationId, sf_dir, nlist, seed)
-    evict_other_apps(_IVF_INDEX_CACHE, key[0])
-    if key not in _IVF_INDEX_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        _IVF_INDEX_CACHE[key] = ivf_build_deterministic(
-            emb, nlist=nlist, seed=seed, cache=True)
-    return _IVF_INDEX_CACHE[key]
+    return get_or_build(
+        spark, "ivf_index", (sf_dir, nlist, seed),
+        lambda: ivf_build_deterministic(_t(spark, sf_dir, "embeddings"),
+                                        nlist=nlist, seed=seed, cache=True))
 
 
 # NOT registered: the nprobe<nlist probe is approximate by design, so its
@@ -2164,5 +2129,4 @@ def curation_pipeline(spark, sf_dir):
     # at sf0.1 — the r7 bench-gate catch) and release deterministically.
     # Refresh semantics unchanged: clear_plan_cache() deletes the
     # artifact and the next call re-curates.
-    from dexscraper_spark.persist import materialize_artifact
     return materialize_artifact(out, "curation")

@@ -31,18 +31,7 @@ from dexscraper_spark.functions import textstats as tx
 from dexscraper_spark.operators.dedup import (
     dedup_components, simhash, simhash_band_pairs, simhash_wide,
     simhash_wide_band_pairs, split_assignment)
-from dexscraper_spark.persist import release_tracked, tracked_persist
-
-
-def clear_curation_cache() -> None:
-    """Unpersist every intermediate frame the curation pipeline pinned —
-    invoked by registry.clear_plan_cache() so artifact refresh cycles
-    don't leak block-manager storage. Delegates to the shared tracked-
-    persist registry, which also covers persists taken INSIDE operators
-    this pipeline calls (simhash fingerprints, OHLC fine bars, ...).
-    Materialized artifact dirs are NOT touched — other module caches may
-    hold live scans of them; only clear_plan_cache() sweeps those."""
-    release_tracked()
+from dexscraper_spark.persist import tracked_persist
 
 
 @dataclass(frozen=True)
@@ -235,9 +224,9 @@ def curate_corpus_with_state(docs: DataFrame, *, id_col: str = "doc_id",
     # 3) near-dup clusters: SimHash banding (production xxhash64 hash) →
     # pairs → connected components → every cluster keeps min id.
     # Persist: the near-dup detector and the survivor anti-join both read
-    # it. tracked_persist registers the handle so clear_curation_cache()
-    # (invoked by registry.clear_plan_cache()) releases it — refresh
-    # cycles must not accumulate orphaned block-manager storage.
+    # it. tracked_persist registers the handle so
+    # registry.clear_plan_cache() releases it — refresh cycles must not
+    # accumulate orphaned block-manager storage.
     deduped = tracked_persist(deduped)
     fps = tracked_persist(_fingerprint(
         deduped, cfg, id_col=id_col, text_col=text_col,

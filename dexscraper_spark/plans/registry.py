@@ -19,6 +19,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dexscraper_spark.persist import get_or_build, refresh
+
 
 @dataclass
 class Query:
@@ -31,68 +33,38 @@ class Query:
 _REGISTRY: dict[str, Query] = {}
 
 # Prepared-plan cache: resolved (analyzed) result DataFrames per
-# (appId, sf_dir, query). Building a registry query costs 0.1-1.2 s of
-# driver-side work (Column construction py4j round-trips + Catalyst
-# analysis) before a single task runs — measured 12 s of the 27 s bench
-# total at sf0.1. A long-lived engine process resolves each plan once and
-# re-executes it, exactly like a warehouse's prepared-statement cache;
-# execution itself is NOT cached. Like Spark's own catalog-table cache,
-# the resolution snapshot includes the file LISTING: for pure plans,
-# replacing source files fails loudly with FILE_NOT_EXIST (never
-# silently stale — pinned by tests/test_plans.py), and
-# clear_plan_cache() is the REFRESH TABLE analog. The deliberate
+# (appId, sf_dir, query), kind "plan" in the persist layer. Building a
+# registry query costs 0.1-1.2 s of driver-side work (Column
+# construction py4j round-trips + Catalyst analysis) before a single
+# task runs — measured 12 s of the 27 s bench total at sf0.1. A
+# long-lived engine process resolves each plan once and re-executes it,
+# exactly like a warehouse's prepared-statement cache; execution itself
+# is NOT cached. Like Spark's own catalog-table cache, the resolution
+# snapshot includes the file LISTING: for pure plans, replacing source
+# files fails loudly with FILE_NOT_EXIST (never silently stale — pinned
+# by tests/test_plans.py), and clear_plan_cache() is the REFRESH TABLE
+# analog: it drops every memoized plan, table resolution and artifact
+# frame, then releases their storage (persist.refresh). The deliberate
 # exceptions are the MATERIALIZING rows (curation_pipeline's curated
-# corpus, the bar/token/IVF artifact caches): those serve the
-# materialized artifact until refreshed, by the same artifact semantics
-# as a materialized view — each documents this in its builder.
-# Builders are pure functions of (sf_dir → tables), so the cached frame is
+# corpus, the bar/token/IVF artifacts): those serve the materialized
+# artifact until refreshed, by the same artifact semantics as a
+# materialized view — each documents this in its builder. Builders are
+# pure functions of (sf_dir → tables), so the cached frame is
 # observationally identical to a fresh build.
-_PLAN_CACHE: dict = {}
-
-
-def clear_plan_cache() -> None:
-    """The REFRESH TABLE analog: drop every cached resolution (next call
-    re-resolves against current files) and unpersist any block-manager
-    storage the cached frames hold, so refresh cycles don't accumulate
-    orphaned blocks.
-
-    Clears EVERY module cache a rebuild could read through — the table
-    resolutions in sources.tables and the materialized artifact caches
-    (OHLC bars, sink bar/token frames, IVF index, curation intermediates)
-    — not just the plan cache: a rebuild whose builder hits a stale
-    table resolution would silently read replaced/partial files, which
-    breaks the loud-staleness guarantee this function exists to provide.
-    (Imports are deferred: these modules import ``register`` from here.)"""
-    for df in _PLAN_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # owning session already stopped; entry is dead anyway
-    _PLAN_CACHE.clear()
-    from dexscraper_spark.sources.tables import clear_table_cache
-    clear_table_cache()
-    from dexscraper_spark.plans.catalog import (
-        clear_ivf_index_cache, clear_ohlc_bars_cache)
-    clear_ohlc_bars_cache()
-    clear_ivf_index_cache()
-    from dexscraper_spark.plans.sinks_catalog import (
-        clear_bars_cache, clear_tokens_cache, clear_xtokens_cache)
-    clear_bars_cache()
-    clear_xtokens_cache()
-    clear_tokens_cache()
-    # every internal operator persist (simhash fingerprints, minhash
-    # candidates, OHLC fine bars, IVF assignments, curation dedup frame)
-    # routes through the shared tracker — one switch releases them all.
-    # Artifact dirs are swept LAST, only here: every module cache that
-    # could hold a scan of them was cleared above, so no dangling frames.
-    from dexscraper_spark.persist import release_artifacts, release_tracked
-    release_tracked()
-    release_artifacts()
+clear_plan_cache = refresh
 
 
 def register(name: str, oracle: str | None, survey_ref: str = "",
              cache_plan: bool = True):
-    """``cache_plan=False`` opts a query out of the prepared-plan cache —
+    """Register a (spark, sf_dir) -> DataFrame builder under ``name``.
+
+    Invariant for every builder: its result must not depend on row
+    order. Fact tables are round-robin repartitioned at load
+    (sources.tables), so the order rows arrive in varies with core
+    count and file layout: never take ``first()`` without a total
+    ordering, and aggregate doubles only through functions.exact.
+
+    ``cache_plan=False`` opts a query out of the prepared-plan cache —
     required for builders that EXECUTE during build (the streaming
     pipeline runs its micro-batches in the builder), where caching the
     returned frame would cache results, not a plan."""
@@ -103,16 +75,14 @@ def register(name: str, oracle: str | None, survey_ref: str = "",
             return fn
 
         def prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
-            key = (spark.sparkContext.applicationId, sf_dir, name)
-            evict_other_apps(_PLAN_CACHE, key[0])
-            if key not in _PLAN_CACHE:
-                _PLAN_CACHE[key] = fn(spark, sf_dir)
+            plan = get_or_build(spark, "plan", (sf_dir, name),
+                                lambda: fn(spark, sf_dir))
             # A thin Project(*) wrapper per call: reuses the cached ANALYZED
             # subtree (skipping the 0.1-1.2 s of Column-construction py4j
             # round-trips) but yields a fresh QueryExecution, so every call
             # re-executes — sharing the executed DataFrame would replay
             # AQE-materialized shuffle stages, i.e. cache results.
-            return _PLAN_CACHE[key].select("*")
+            return plan.select("*")
         prepared.__name__ = fn.__name__
         prepared.__doc__ = fn.__doc__
         prepared.__wrapped__ = fn
@@ -137,17 +107,3 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     return {name: q.oracle for name, q in all_queries().items() if q.oracle is not None}
 
-
-def evict_other_apps(cache: dict, app_id: str) -> None:
-    """Session-cache hygiene: drop entries keyed to OTHER (stopped)
-    SparkContexts. The (appId, ...)-keyed module caches are otherwise
-    unbounded across a process that creates several sessions — dead
-    entries pin DataFrames/indexes that can never be reused. Entries
-    expose ``unpersist`` (DataFrame or IvfIndex); failures are ignored
-    because the owning context is already gone."""
-    for k in [k for k in cache if k[0] != app_id]:
-        entry = cache.pop(k)
-        try:
-            entry.unpersist()
-        except Exception:
-            pass

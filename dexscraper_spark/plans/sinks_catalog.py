@@ -18,36 +18,20 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dexscraper_spark.functions.exact import sum_money_sql
+from dexscraper_spark.persist import get_or_build, materialize_artifact
 from dexscraper_spark.plans.registry import register
 from dexscraper_spark.session import tune_session
-
-
-# One cached bar frame per (appId, sf_dir) for the session lifetime —
-# bounded by the handful of sf_dirs a process touches. clear_bars_cache()
-# releases the block-manager storage for long-lived multi-dataset apps.
-_BARS_CACHE: dict = {}
-
-
-def clear_bars_cache() -> None:
-    for df in _BARS_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # owning session already stopped; entry is dead anyway
-    _BARS_CACHE.clear()
 
 
 def _bars(spark, sf_dir: str):
     """Deterministic 1h OHLC bars from events, sink-ready column names.
 
     Every sink query projects the same bar frame, so it is derived once per
-    (appId, sf_dir) and kept in the block-manager cache — the per-sink cost
-    is then a cached-scan + projection, not a repeated groupBy over events.
+    (appId, sf_dir) — persist kind "bars" — and served as an artifact:
+    the per-sink cost is then a scan + projection, not a repeated groupBy
+    over events.
     """
-    from dexscraper_spark.plans.registry import evict_other_apps
-    key = (spark.sparkContext.applicationId, sf_dir)
-    evict_other_apps(_BARS_CACHE, key[0])
-    if key not in _BARS_CACHE:
+    def build():
         from dexscraper_spark.operators.ohlc import ohlc_windowed
         from dexscraper_spark.sources.tables import load_table
         tune_session(spark)
@@ -61,13 +45,12 @@ def _bars(spark, sf_dir: str):
         # several sink rows per bench pass, and each read re-ANALYZES
         # the full lineage of a plain cached frame (~0.1-0.3 s/driver
         # round at sf0.1). The parquet artifact scans as a one-node
-        # plan AND releases deterministically (persist.release_tracked
-        # deletes the dir — unpersist() can't free checkpoint blocks).
-        from dexscraper_spark.persist import materialize_artifact
-        _BARS_CACHE[key] = materialize_artifact(
+        # plan AND releases deterministically (persist.refresh deletes
+        # the dir — unpersist() can't free checkpoint blocks).
+        return materialize_artifact(
             bars.withColumn("ts", F.col("bucket_ts").cast("long")),
             "bars")
-    return _BARS_CACHE[key]
+    return get_or_build(spark, "bars", sf_dir, build)
 
 
 _BARS_CTE = f"""
@@ -193,29 +176,15 @@ _XTOKENS_CTE = f"""
     )
 """
 
-_XTOKENS_CACHE: dict = {}
-
-
-def clear_xtokens_cache() -> None:
-    for df in _XTOKENS_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _XTOKENS_CACHE.clear()
-
 
 def _excel_tokens(spark, sf_dir: str):
-    from dexscraper_spark.plans.registry import evict_other_apps
-    key = (spark.sparkContext.applicationId, sf_dir)
-    evict_other_apps(_XTOKENS_CACHE, key[0])
-    if key not in _XTOKENS_CACHE:
+    def build():
         from dexscraper_spark.functions.exact import sum_money
         from dexscraper_spark.sources.tables import load_table
         tune_session(spark)
         ev = load_table(spark, sf_dir, "events")
         n = F.count(F.lit(1))
-        _XTOKENS_CACHE[key] = ev.groupBy("user_id").agg(
+        tokens = ev.groupBy("user_id").agg(
             F.max_by(F.col("value"), F.col("event_id")).alias("price"),
             sum_money(F.col("value"), 2).alias("volume_24h"),
             n.alias("txns_24h"),
@@ -236,10 +205,8 @@ def _excel_tokens(spark, sf_dir: str):
             "price", "volume_24h", "txns_24h", "makers", "liquidity",
             "market_cap", "confidence_score", "field_count", "ts",
         )
-        from dexscraper_spark.persist import materialize_artifact
-        _XTOKENS_CACHE[key] = materialize_artifact(
-            _XTOKENS_CACHE[key], "xtokens")  # see _bars
-    return _XTOKENS_CACHE[key]
+        return materialize_artifact(tokens, "xtokens")  # see _bars
+    return get_or_build(spark, "xtokens", sf_dir, build)
 
 
 @register(
@@ -286,31 +253,14 @@ _TOKENS_CTE = f"""
 """
 
 
-_TOKENS_CACHE: dict = {}
-
-
-def clear_tokens_cache() -> None:
-    for df in _TOKENS_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _TOKENS_CACHE.clear()
-
-
 def _tokens(spark, sf_dir: str):
     # same (appId, sf_dir) memoization as _bars: the coingecko and
     # pancakeswap sinks consume the identical per-user frame, so derive
-    # the events groupBy once per session instead of once per sink query
-    from dexscraper_spark.plans.registry import evict_other_apps
-    key = (spark.sparkContext.applicationId, sf_dir)
-    evict_other_apps(_TOKENS_CACHE, key[0])
-    if key not in _TOKENS_CACHE:
-        # lineage-truncated artifact (see _bars)
-        from dexscraper_spark.persist import materialize_artifact
-        _TOKENS_CACHE[key] = materialize_artifact(
-            _build_tokens(spark, sf_dir), "tokens")
-    return _TOKENS_CACHE[key]
+    # the events groupBy once per session instead of once per sink
+    # query, as a lineage-truncated artifact (see _bars)
+    return get_or_build(
+        spark, "tokens", sf_dir,
+        lambda: materialize_artifact(_build_tokens(spark, sf_dir), "tokens"))
 
 
 def _build_tokens(spark, sf_dir: str):

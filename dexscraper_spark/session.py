@@ -46,7 +46,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
     Idempotent and memoized per application: every table loader and query
     builder calls this defensively, so the conf round-trips run once per
-    session, not once per query."""
+    session, not once per query. AQE and skew-join splitting are left to
+    the session (on by default since Spark 3.2, and set by get_spark), so
+    a caller that turns AQE off keeps it off."""
     app_id = spark.sparkContext.applicationId
     if app_id in _TUNED:
         # Memo hit still re-asserts the UTC pin: external driver code may
@@ -57,8 +59,6 @@ def tune_session(spark: SparkSession) -> SparkSession:
         return spark
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
         # runtime-settable: externally-created sessions otherwise run the
         # 200-partition default, which at local test scale is pure

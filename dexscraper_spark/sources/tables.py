@@ -9,7 +9,8 @@ nanos in ``ts_ns`` for total-order tiebreaks — micros×1000 in BOTH loader
 branches, so the tiebreak order is Spark-version-invariant). Session-tz is
 pinned UTC so the conversion is engine-portable.
 
-Resolved tables are memoized per (appId, sf_dir, name): a long-lived
+Resolved tables are memoized per (appId, sf_dir, name) — kind "table"
+in the persist layer, dropped by registry.clear_plan_cache(): a long-lived
 engine process resolves each table once (file listing, schema, the
 documents repartition probe) instead of once per query — the same catalog
 behavior a warehouse gives prepared statements. The underlying scan is
@@ -24,13 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dexscraper_spark.persist import get_or_build
 from dexscraper_spark.session import tune_session
-
-_TABLE_CACHE: dict = {}
-
-
-def clear_table_cache() -> None:
-    _TABLE_CACHE.clear()
 
 
 def _byte_conf(spark: SparkSession, key: str, default: int) -> int:
@@ -47,7 +43,7 @@ def _byte_conf(spark: SparkSession, key: str, default: int) -> int:
 
 def _local_sizes(files: list[str]) -> list[int] | None:
     """Byte sizes of locally-statable scan files; None when any file is
-    on a remote FS (caller falls back to file-count proxies)."""
+    on a remote FS or cannot be stat'ed."""
     import os
 
     try:
@@ -66,18 +62,14 @@ def _local_sizes(files: list[str]) -> list[int] | None:
         return None
 
 
-def _estimate_scan_partitions(spark: SparkSession, files: list[str],
-                              par: int) -> int | None:
-    """Spark's FilePartition sizing, re-derived: maxSplitBytes =
-    min(maxPartitionBytes, max(openCostInBytes, totalPadded/cores)),
-    partitions ≈ ceil(totalPadded / maxSplitBytes). Returns None when
-    file sizes can't be stat'ed locally (remote FS) — caller falls back
-    to the file-count proxy."""
+def _estimate_scan_partitions(spark: SparkSession, sizes: list[int],
+                              par: int) -> int:
+    """Spark's FilePartition sizing over the scan's file ``sizes``,
+    re-derived: maxSplitBytes = min(maxPartitionBytes,
+    max(openCostInBytes, totalPadded/cores)), partitions ≈
+    ceil(totalPadded / maxSplitBytes)."""
     import math
 
-    sizes = _local_sizes(files)
-    if not sizes:
-        return None
     open_cost = _byte_conf(spark, "spark.sql.files.openCostInBytes",
                            4 << 20)
     max_pb = _byte_conf(spark, "spark.sql.files.maxPartitionBytes",
@@ -97,7 +89,7 @@ def _estimate_scan_partitions(spark: SparkSession, files: list[str],
 # dedup_embedding_cosine +0.02 s, vs only +0.08 s won on similarity_topk).
 # The byte floor handles both and self-corrects with scale: once a table
 # is MBs+, per-task batches are thousands of rows and widening pays
-# everywhere. Env-overridable for A/B measurement, not a tuning knob.
+# everywhere.
 _WIDEN_MIN_BYTES = 1 << 20
 
 # Target bytes per widened partition. Widening to the FULL session
@@ -127,8 +119,8 @@ _WIDEN_SPLIT_BYTES_DOCS = 64 << 10
 
 
 def _widen_narrow_scan(spark: SparkSession, df: DataFrame,
-                       min_bytes: int | None = None,
-                       split_bytes: int | None = None) -> DataFrame:
+                       min_bytes: int = _WIDEN_MIN_BYTES,
+                       split_bytes: int = _WIDEN_SPLIT_BYTES) -> DataFrame:
     """CPU-dense rows, tiny bytes (guide §2.2 fewer-idle-cores / §6 input
     split sizing): each bench table ships as ONE parquet file far below
     maxPartitionBytes, so the file-split rule runs every downstream map
@@ -156,34 +148,25 @@ def _widen_narrow_scan(spark: SparkSession, df: DataFrame,
     FilePartition packer does (file sizes padded by openCostInBytes
     over maxSplitBytes) — a raw file-count check misses the
     many-tiny-files layout, where >= cores files still pack into
-    < cores partitions. Falls back to the file-count proxy when sizes
-    aren't locally statable (remote FS URIs)."""
-    import os
-
-    par = spark.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    if min_bytes is None:
-        min_bytes = int(os.environ.get("SPARK_GRAFT_WIDEN_MIN_BYTES",
-                                       _WIDEN_MIN_BYTES))
-    sizes = _local_sizes(files)
+    < cores partitions. Scans whose files cannot be stat'ed locally
+    (remote FS URIs) are never widened: they keep Spark's own split."""
+    sizes = _local_sizes(df.inputFiles())
     if sizes is None or sum(sizes) < min_bytes:
-        # dimension-shaped (or remote-FS-unstatable): keep Spark's split
+        # dimension-shaped or unstatable: keep Spark's split
         return df
-    split = int(os.environ.get(
-        "SPARK_GRAFT_WIDEN_SPLIT_BYTES",
-        split_bytes if split_bytes is not None else _WIDEN_SPLIT_BYTES))
-    target = min(par, -(-sum(sizes) // max(split, 1)))
-    est = _estimate_scan_partitions(spark, files, par)
-    narrow = est < target if est is not None else len(files) < target
-    return df.repartition(target) if narrow else df
+    par = spark.sparkContext.defaultParallelism
+    target = min(par, -(-sum(sizes) // max(split_bytes, 1)))
+    if _estimate_scan_partitions(spark, sizes, par) < target:
+        return df.repartition(target)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from dexscraper_spark.plans.registry import evict_other_apps
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    evict_other_apps(_TABLE_CACHE, key[0])
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
+    return get_or_build(spark, "table", (sf_dir, name),
+                        lambda: _resolve_table(spark, sf_dir, name))
+
+
+def _resolve_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tune_session(spark)
     if name == "events":
         df = _load_events(spark, sf_dir)
@@ -198,12 +181,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # VERDICT r12 flagged). Everything else goes through the
     # byte-floored, generic data-sized rule.
     if name == "documents":
-        df = _widen_narrow_scan(spark, df, min_bytes=0,
-                                split_bytes=_WIDEN_SPLIT_BYTES_DOCS)
-    else:
-        df = _widen_narrow_scan(spark, df)
-    _TABLE_CACHE[key] = df
-    return df
+        return _widen_narrow_scan(spark, df, min_bytes=0,
+                                  split_bytes=_WIDEN_SPLIT_BYTES_DOCS)
+    return _widen_narrow_scan(spark, df)
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,6 +23,7 @@ def spark():
 
 
 _TALLY = {"passed": 0, "failed": 0, "error": 0, "skipped": 0}
+_SLOW_DESELECTED = 0
 
 
 def pytest_runtest_logreport(report):
@@ -37,6 +38,11 @@ def pytest_runtest_logreport(report):
         _TALLY["error"] += 1
 
 
+def pytest_deselected(items):
+    global _SLOW_DESELECTED
+    _SLOW_DESELECTED += sum(1 for i in items if i.get_closest_marker("slow"))
+
+
 def pytest_sessionfinish(session, exitstatus):
     """Re-print the tally AFTER everything else at interpreter exit:
     the slow JVM/py4j teardown logs noise past pytest's own summary
@@ -46,6 +52,9 @@ def pytest_sessionfinish(session, exitstatus):
 
     def _print_tally():
         parts = [f"{v} {k}" for k, v in _TALLY.items() if v]
+        if _SLOW_DESELECTED:
+            parts.append(f"{_SLOW_DESELECTED} slow deselected "
+                         "(run `make test-all`)")
         print(f"\n[spark-graft tally] {', '.join(parts) or 'no tests'} "
               f"(pytest exit {exitstatus})", flush=True)
 

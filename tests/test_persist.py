@@ -47,11 +47,10 @@ def test_operator_internal_persists_release_on_clear(spark):
 
 
 def test_curation_cache_clear_delegates_to_shared_tracker(spark):
-    """clear_curation_cache() must release persists taken INSIDE the
-    operators the pipeline calls (simhash fingerprints), not only its
-    own dedup frame — the r6 ADVICE leak."""
-    from dexscraper_spark.plans.curation import (
-        clear_curation_cache, curate_corpus)
+    """release_tracked() must release persists taken INSIDE the
+    operators the curation pipeline calls (simhash fingerprints), not
+    only its own dedup frame — the r6 ADVICE leak."""
+    from dexscraper_spark.plans.curation import curate_corpus
 
     P.release_tracked()
     docs = spark.createDataFrame(
@@ -62,7 +61,7 @@ def test_curation_cache_clear_delegates_to_shared_tracker(spark):
     handles = list(P._TRACKED)
     assert len(handles) >= 2          # dedup frame + fingerprint table
     assert all(_stored(df) for df in handles)
-    clear_curation_cache()
+    P.release_tracked()
     assert P._TRACKED == []
     assert all(not _stored(df) for df in handles)
 
@@ -72,8 +71,8 @@ def test_materialized_artifacts_release_deterministically(spark):
     deterministic half the localCheckpoint approach could not give);
     a stale frame read after release fails LOUDLY, matching the plan
     cache's staleness contract. release_tracked must NOT delete them:
-    module caches hold live scans, and standalone release_tracked
-    callers (clear_curation_cache) don't clear those caches."""
+    memo entries hold live scans, and standalone release_tracked
+    callers don't clear the memo."""
     import os
 
     import pytest
@@ -113,20 +112,19 @@ def test_release_artifact_frees_one_frame(spark):
     P.release_artifacts()
 
 
-def test_clear_curation_cache_leaves_other_artifacts_usable(spark):
-    """Regression (r7 review): clear_curation_cache delegates to
-    release_tracked, which used to sweep ALL artifact dirs — leaving the
-    ohlc-bars module cache serving a scan of a deleted dir (FILE_NOT_EXIST
-    on every later call, with no rebuild path short of clear_plan_cache).
-    The artifact another cache holds must stay readable."""
+def test_release_tracked_leaves_other_artifacts_usable(spark):
+    """Regression (r7 review): release_tracked used to sweep ALL
+    artifact dirs — leaving the memoized ohlc-bars artifact serving a
+    scan of a deleted dir (FILE_NOT_EXIST on every later call, with no
+    rebuild path short of clear_plan_cache). The artifact a memo entry
+    holds must stay readable."""
     from dexscraper_spark.plans.catalog import ohlc_bars
-    from dexscraper_spark.plans.curation import clear_curation_cache
     from dexscraper_spark.plans.registry import clear_plan_cache
 
     clear_plan_cache()
     n = ohlc_bars(spark, "/root/testdata/sf0.001").count()
     assert n > 0
-    clear_curation_cache()
+    P.release_tracked()
     assert ohlc_bars(spark, "/root/testdata/sf0.001").count() == n
     clear_plan_cache()
 
@@ -146,3 +144,38 @@ def test_ivf_unpersist_releases_artifact_dir(spark):
     assert os.path.isdir(path)
     idx.unpersist()
     assert not os.path.exists(path) and P._ARTIFACT_DIRS == []
+
+
+def test_one_memo_evicts_other_apps_and_refresh_frees_everything(spark):
+    """The persist layer end to end: a lookup under a second
+    applicationId drops the first app's entries; clear_plan_cache()
+    leaves no memo entry of any kind, no tracked persist and no artifact
+    dir; an artifact-materializing registry row rebuilds correctly
+    afterwards."""
+    import os
+
+    from conftest import SF_DIR as sf
+    from dexscraper_spark.plans.registry import all_queries, clear_plan_cache
+
+    clear_plan_cache()
+    excel = all_queries()["sink_excel"].build
+    before = sorted(excel(spark, sf).collect())
+    assert before
+    assert {"plan", "table", "xtokens"} <= {k[1] for k in P._MEMO}
+    dirs = list(P._ARTIFACT_DIRS)
+    assert dirs and all(os.path.isdir(d) for d in dirs)
+
+    class OtherApp:
+        class sparkContext:
+            applicationId = "another-app"
+
+    assert P.get_or_build(OtherApp, "probe", 1, lambda: "built") == "built"
+    assert list(P._MEMO) == [("another-app", "probe", 1)]
+
+    P.tracked_persist(spark.range(3)).count()
+    clear_plan_cache()
+    assert P._MEMO == {} and P._TRACKED == [] and P._ARTIFACT_DIRS == []
+    assert not any(os.path.exists(d) for d in dirs)
+
+    assert sorted(excel(spark, sf).collect()) == before
+    clear_plan_cache()

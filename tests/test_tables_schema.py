@@ -10,9 +10,18 @@ here — in one obvious place — instead of across the query catalog.
 
 from __future__ import annotations
 
+import pytest
+
 from dexscraper_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _skip_single_core(spark):
+    """The widening tests compare partition counts against the session
+    parallelism; a 1-core session has nothing to widen to."""
+    if spark.sparkContext.defaultParallelism == 1:
+        pytest.skip("widening needs a session parallelism above 1")
 
 # The loader contract under the current runtime (PySpark 4.x). The
 # driver-facing invariants that matter most: events.ts is a session-tz
@@ -128,6 +137,23 @@ def test_tune_session_warns_instead_of_silent_pass(spark, caplog, monkeypatch):
     sess.tune_session(spark)  # leave the shared session actually tuned
 
 
+def test_tune_session_keeps_explicit_aqe_off(spark):
+    """The settings a caller asks for are the settings that run: an
+    explicit adaptive.enabled=false survives tune_session on a
+    never-tuned app (it used to be forced back on by the first
+    load_table)."""
+    from dexscraper_spark import session as sess
+    try:
+        sess._TUNED.clear()  # simulate a fresh, never-tuned session
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        sess.tune_session(spark)
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        sess._TUNED.clear()
+        sess.tune_session(spark)
+
+
 def test_documents_scan_widened_data_sized(spark):
     """CPU-dense guard: the documents loader must widen the 1-2-file
     table (the raw file-split rule would serialize regex/shingle stages
@@ -139,6 +165,7 @@ def test_documents_scan_widened_data_sized(spark):
     import os
 
     from dexscraper_spark.sources.tables import _WIDEN_SPLIT_BYTES_DOCS
+    _skip_single_core(spark)
     df = load_table(spark, SF_DIR, "documents")
     total = sum(os.path.getsize(p)
                 for p in glob.glob(f"{SF_DIR}/documents.parquet")
@@ -169,8 +196,11 @@ def test_scan_partition_estimate(spark, tmp_path):
     ~parallelism partitions (bytesPerCore targeting - NOT narrow, the
     case the raw file-count proxy got right by accident); ONE huge file
     splits to >= parallelism (the case the proxy got wrong: it would
-    have paid a pointless widening shuffle); remote URIs -> None."""
-    from dexscraper_spark.sources.tables import _estimate_scan_partitions
+    have paid a pointless widening shuffle); remote URIs stat to None
+    (such scans are never widened)."""
+    from dexscraper_spark.sources.tables import (_estimate_scan_partitions,
+                                                 _local_sizes)
+    _skip_single_core(spark)
     par = spark.sparkContext.defaultParallelism
 
     few = []
@@ -178,25 +208,25 @@ def test_scan_partition_estimate(spark, tmp_path):
         p = tmp_path / f"small{i}.bin"
         p.write_bytes(b"x" * 1024)
         few.append(f"file://{p}")
-    est_few = _estimate_scan_partitions(spark, few, par)
-    assert est_few is not None and est_few < par
+    est_few = _estimate_scan_partitions(spark, _local_sizes(few), par)
+    assert est_few < par
 
     many = []
     for i in range(par * 4):
         p = tmp_path / f"tiny{i}.bin"
         p.write_bytes(b"x" * 64)
         many.append(f"file://{p}")
-    est_many = _estimate_scan_partitions(spark, many, par)
-    assert est_many is not None and est_many >= par
+    est_many = _estimate_scan_partitions(spark, _local_sizes(many), par)
+    assert est_many >= par
 
     big = tmp_path / "big.bin"
     with open(big, "wb") as fh:
         fh.truncate(2 << 30)  # 2 GiB sparse
-    est_big = _estimate_scan_partitions(spark, [f"file://{big}"], par)
-    assert est_big is not None and est_big >= par
+    est_big = _estimate_scan_partitions(
+        spark, _local_sizes([f"file://{big}"]), par)
+    assert est_big >= par
 
-    assert _estimate_scan_partitions(
-        spark, ["hdfs://nn/x.parquet"], par) is None
+    assert _local_sizes(["hdfs://nn/x.parquet"]) is None
 
 
 def test_fact_table_scan_widened_above_byte_floor(spark, tmp_path):
@@ -213,6 +243,7 @@ def test_fact_table_scan_widened_above_byte_floor(spark, tmp_path):
 
     from dexscraper_spark.sources.tables import (_WIDEN_SPLIT_BYTES,
                                                  _widen_narrow_scan)
+    _skip_single_core(spark)
     par = spark.sparkContext.defaultParallelism
 
     big = spark.range(60_000).selectExpr(

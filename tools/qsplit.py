@@ -47,8 +47,6 @@ def main() -> None:
     shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8"))
     spark = get_spark("qsplit", shuffle_partitions=shuffle)
     spark.sparkContext.setLogLevel("ERROR")
-    if os.environ.get("SPARK_GRAFT_AQE", "off") != "on":
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
     for t in TABLES:
         load_table(spark, sf_dir, t).cache().count()
     spark.range(1).toDF("x").mapInPandas(lambda it: it, "x long").count()

@@ -39,8 +39,6 @@ def main() -> None:
     shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8"))
     spark = get_spark("qtime", shuffle_partitions=shuffle)
     spark.sparkContext.setLogLevel("ERROR")
-    if os.environ.get("SPARK_GRAFT_AQE", "off") != "on":
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
     for t in TABLES:
         load_table(spark, sf_dir, t).cache().count()
     warm = spark.range(1).toDF("msg_id")

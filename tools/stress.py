@@ -85,11 +85,6 @@ SELF_CONTAINED = {
 def spark_session():
     from dexscraper_spark.session import get_spark
     spark = get_spark("stress")
-    # mirror bench.py's static-vs-adaptive knob so x-K rows can be
-    # re-measured under the exact bench config: SPARK_GRAFT_AQE=off
-    # disables AQE here; the default stays the production (AQE-on) config
-    if os.environ.get("SPARK_GRAFT_AQE", "on") != "on":
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
