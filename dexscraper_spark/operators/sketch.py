@@ -239,8 +239,7 @@ def mg_sketch_and_total(df: DataFrame, *, cols: list[str],
     row-count rows (no data row can encode to NULL — see
     :func:`_mg_local_fn`), the tiny partials frame (O(partitions × k)
     rows) is persisted, and the total is summed from the count rows
-    while the item rows merge as usual. For callers like
-    :func:`~dexscraper_spark.operators.skew.skew_report` that would
+    while the item rows merge as usual. For callers that would
     otherwise pay a second full scan just for ``df.count()``."""
     from dexscraper_spark.persist import tracked_persist
 

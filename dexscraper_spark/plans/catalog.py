@@ -1777,8 +1777,8 @@ def agg_percentiles(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # R1/R5/R8 — the streaming pipeline as a catalog entry: synthetic frames →
-# file stream → decode kernel → event-time OHLC (created_at) → memory sink,
-# bounded with availableNow. Closed-form oracle: frames are formulaic
+# file stream → decode kernel → streaming.pipeline.streaming_ohlc (event
+# time from created_at) → memory sink, bounded with availableNow. Closed-form oracle: frames are formulaic
 # (sample_pairs: symbol TK{(rec+1)*(msg+1)}, price 0.000123*(rec+1),
 # created_at 1756793176+60*rec) and every created_at falls in the single
 # 5-minute window starting 1756793100, so the streaming aggregate equals a
@@ -1803,7 +1803,7 @@ def agg_percentiles(spark, sf_dir):
     FROM rows_in GROUP BY symbol, bucket_ts
     ORDER BY symbol, bucket_ts
     """,
-    survey_ref="R1,R4,R5,R6,R8,S1",
+    survey_ref="R1,R5,R6,R8,S1",
     cache_plan=False,  # the builder RUNS the stream: results must not cache
 )
 def streaming_ohlc_pipeline(spark, sf_dir):
@@ -1814,6 +1814,7 @@ def streaming_ohlc_pipeline(spark, sf_dir):
     from dexscraper_spark.schemas import RAW_MESSAGES
     from dexscraper_spark.sources.binary import make_frame, sample_pairs
     from dexscraper_spark.sources.decode import decode_messages
+    from dexscraper_spark.streaming.pipeline import streaming_ohlc
     tune_session(spark)
 
     # r13 NEGATIVE RESULT: moving this ephemeral checkpoint to RAM-backed
@@ -1840,17 +1841,11 @@ def streaming_ohlc_pipeline(spark, sf_dir):
         f"{workdir}/frames/part-00000.parquet")
 
     raw = spark.readStream.schema(RAW_MESSAGES).parquet(f"{workdir}/frames")
-    decoded = decode_messages(raw)
-    bars = (
-        decoded.withColumn("ev_ts", F.timestamp_seconds(F.col("created_at")))
-        .withWatermark("ev_ts", "10 minutes")
-        .groupBy(F.col("base_token_symbol").alias("symbol"),
-                 F.window("ev_ts", "5 minutes").alias("w"))
-        .agg(F.min("price_usd").alias("low"), F.max("price_usd").alias("high"),
-             F.count(F.lit(1)).alias("trades"))
-        .select("symbol", F.col("w.start").cast("long").alias("bucket_ts"),
-                "low", "high", "trades")
-    )
+    decoded = decode_messages(raw).withColumn(
+        "event_ts", F.timestamp_seconds("created_at"))
+    bars = streaming_ohlc(decoded, ts_col="event_ts").select(
+        "symbol", F.col("bucket_ts").cast("long").alias("bucket_ts"),
+        "low", "high", "trades")
     # unique per invocation: bench/driver may run this twice in a session
     name = "dexstream_bars_" + workdir.rsplit("dexstream_", 1)[-1]
     # State-store partition count is pinned by shuffle.partitions at the
@@ -1890,7 +1885,11 @@ def streaming_ohlc_pipeline(spark, sf_dir):
         # not reference the files: reclaim the scratch (it may be RAM)
         import shutil
         shutil.rmtree(workdir, ignore_errors=True)
-    return spark.table(name).orderBy("symbol", "bucket_ts")
+    # The ordered frame keeps the memory sink's rows after its view is
+    # dropped; dropping it stops every run leaving a view in the session.
+    result = spark.table(name).orderBy("symbol", "bucket_ts")
+    spark.catalog.dropTempView(name)
+    return result
 
 
 # ---------------------------------------------------------------------------
@@ -1922,20 +1921,6 @@ def _ivf_index(spark, sf_dir: str, *, nlist: int = 8, seed: int = 42):
         spark, "ivf_index", (sf_dir, nlist, seed),
         lambda: ivf_build_deterministic(_t(spark, sf_dir, "embeddings"),
                                         nlist=nlist, seed=seed, cache=True))
-
-
-# NOT registered: the nprobe<nlist probe is approximate by design, so its
-# driver row could only ever be rows-only; the IVF path is driver-gated
-# through `similarity_ivf_full_probe` (bit-exact vs brute force) and the
-# recall/save-load pytest suite. The freed registry slot (50-row driver
-# cap) carries the oracle-checked as-of join instead.
-def similarity_ivf(spark, sf_dir):
-    from dexscraper_spark.operators.similarity import ivf_query
-    emb = _t(spark, sf_dir, "embeddings")
-    index = _ivf_index(spark, sf_dir, nlist=8, seed=42)
-    q = emb.filter(F.col("vec_id") < 10)
-    return ivf_query(index, q, k=5, nprobe=4) \
-        .select("query_id", "neighbor_id", "cosine", "rank")
 
 
 # ---------------------------------------------------------------------------

@@ -1,10 +1,9 @@
 """Canonical StructTypes for the engine's tables.
 
 Derived from the reference data model (FIXTURES.md; ``dexscraper/models.py``):
-``TokenProfile`` (models.py:168-210) → ``TOKENS``, ``TradingPair``
-(models.py:93-108) → ``PAIRS``, ``OHLCData`` (models.py:49-59) → ``OHLC``,
-metadata-pattern rows (scraper.py:836-843) → ``METADATA``, raw frames →
-``RAW_MESSAGES``. All columns nullable — the reference model is
+``TokenProfile`` (models.py:168-210) → ``TOKENS``, ``OHLCData``
+(models.py:49-59) → ``OHLC``, metadata-pattern rows (scraper.py:836-843)
+→ ``METADATA``, raw frames → ``RAW_MESSAGES``. All columns nullable — the reference model is
 fully-Optional and completeness is data-dependent.
 """
 
@@ -40,24 +39,6 @@ TOKENS = T.StructType([
     T.StructField("field_count", T.IntegerType()),
     T.StructField("record_position", T.LongType()),
     T.StructField("ts", T.LongType()),
-])
-
-PAIRS = T.StructType([
-    T.StructField("chain", T.StringType()),
-    T.StructField("protocol", T.StringType()),
-    T.StructField("pair_address", T.StringType()),
-    T.StructField("base_token_name", T.StringType()),
-    T.StructField("base_token_symbol", T.StringType()),
-    T.StructField("base_token_address", T.StringType()),
-    T.StructField("price", T.StructType([
-        T.StructField("current", T.DoubleType()),
-        T.StructField("usd", T.DoubleType()),
-        T.StructField("change_24h", T.DoubleType()),
-    ])),
-    T.StructField("liquidity", T.StructType([T.StructField("usd", T.DoubleType())])),
-    T.StructField("volume", T.StructType([T.StructField("h24", T.DoubleType())])),
-    T.StructField("fdv", T.DoubleType()),
-    T.StructField("created_at", T.LongType()),
 ])
 
 OHLC = T.StructType([

@@ -25,7 +25,7 @@ def write_tokens(tokens: DataFrame, path: str, *,
                  files_per_chain: int = 16, mode: str = "overwrite") -> None:
     # salt the repartition: a bare repartition("chain") funnels each
     # chain (≤ a handful of values, one dominant) through ONE task — the
-    # exact hot-key straggler/OOM skew.py exists to prevent. Two past
+    # exact hot-key straggler/OOM that salting prevents. Two past
     # failure modes shape this:
     #   * the salt must come from a HIGH-CARDINALITY column —
     #     confidence_score collapses to ~6 discrete values here

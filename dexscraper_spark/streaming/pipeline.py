@@ -1,19 +1,35 @@
 """Streaming pipeline (SURVEY §2.9): the reference's 5-second poll loop
-(scraper.py:1491-1524) re-expressed as Structured Streaming.
+(scraper.py:1491-1524) re-expressed as ONE Structured Streaming path —
+a decoded frame source, watermarked event-time OHLC, a micro-batch sink:
+
+  ``frame_stream`` (or a parquet file stream through ``decode_messages``
+  plus ``event_ts``) → ``streaming_ohlc`` → ``run_foreach_batch`` or a
+  memory sink.
+
+The registered ``streaming_ohlc_pipeline`` row, the ``stream`` CLI
+command and the ``feed_replay`` benchmark all build on these three
+functions.
 
 Mapping (R1-R8):
-  R1 micro-batch cadence → ``trigger(processingTime='5 seconds')``
-  R2 rate limiting       → source option (``rowsPerSecond`` /
-                           ``maxOffsetsPerTrigger``); never driver sleeps
+  R1 micro-batch cadence → ``run_foreach_batch``:
+                           ``trigger(processingTime='5 seconds')``, or
+                           ``availableNow`` for a bounded run
+  R2 rate limiting       → source option (``frames_per_batch`` on
+                           ``frame_stream``, ``maxFilesPerTrigger`` on a
+                           file stream); never driver sleeps
   R3 reconnect/backoff   → Spark restarts failed micro-batches from the
                            checkpoint; no hand-rolled retry loop
-  R4 batch timestamping  → ``current_timestamp()`` per micro-batch
-  R5 windows             → real event-time tumbling windows (Timeframe →
+  R4 batch timestamping  → not implemented: bars use the event time
+                           ``event_ts`` (from ``created_at``), and no
+                           processing-time stamp is added per batch
+  R5 windows             → event-time tumbling windows (Timeframe →
                            window duration)
-  R6 late data           → ``withWatermark`` on the incremental path;
-                           ``complete``-mode snapshot aggregation reproduces
-                           the reference's stateless snapshot semantics
-  R7 stateful ops        → windowed state via watermark retention
+  R6 late data           → ``withWatermark`` in ``streaming_ohlc``; append
+                           mode emits only closed windows, complete mode
+                           reproduces the reference's snapshot semantics
+  R7 stateful ops        → windowed OHLC state, bounded by the watermark;
+                           the reference's recent-N buffer has no streaming
+                           implementation
   R8 stream sink         → ``foreachBatch`` routing to the K1-K11 exporters
 
 Scale notes: the streaming OHLC agg is the same partial-aggregatable plan
@@ -31,7 +47,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dexscraper_spark.config import Timeframe
-from dexscraper_spark.sources.decode import decode_messages
 
 
 def frame_stream(spark: SparkSession, *, pairs_per_frame: int = 4,
@@ -40,8 +55,8 @@ def frame_stream(spark: SparkSession, *, pairs_per_frame: int = 4,
     """S1 live ingestion path: the ``dexframes`` streaming source (offset
     protocol, deterministic replay, subscription-time Filters pushdown —
     the reference's WebSocket URL-param contract, scraper.py:177-246)
-    surfaced as the engine-facing decoded stream with an event-time
-    column ready for watermarked OHLC (``ts_col="event_ts"``).
+    surfaced as the engine-facing decoded stream with the event-time
+    column ``event_ts`` that ``streaming_ohlc`` reads.
 
     ``filters`` is a Filters-DSL kwargs dict (e.g. {"liquidity_min": 5e4})
     applied INSIDE the source scan, before rows enter the engine —
@@ -65,64 +80,17 @@ def frame_stream(spark: SparkSession, *, pairs_per_frame: int = 4,
         "event_ts", F.timestamp_seconds(F.col("created_at")))
 
 
-def rate_frame_stream(spark: SparkSession, *, rows_per_second: int = 4,
-                      pairs_per_frame: int = 4) -> DataFrame:
-    """Demo/test source: the built-in ``rate`` source drives deterministic
-    synthetic wire frames through the decode kernel (R2: the 4 req/s
-    reference rate limit becomes ``rowsPerSecond=4``).
-
-    The frame bytes are generated executor-side by an Arrow-batched
-    ``mapInPandas`` stage (same batch shape as the decode kernel) — keeping
-    the engine's "decode is the only row-at-a-time Python" audit honest:
-    this stage is batch-at-a-time too, never a per-row Python UDF.
-    """
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-    from dexscraper_spark.sources.binary import make_frame, sample_pairs
-
-    out_schema = StructType([StructField("msg_id", LongType()),
-                             StructField("payload", BinaryType())])
-
-    def frame_batches(batches):
-        for pdf in batches:
-            vals = pdf["value"].astype("int64")
-            yield pd.DataFrame({
-                "msg_id": vals,
-                "payload": [
-                    make_frame(sample_pairs(pairs_per_frame, seed=int(v) % 13))
-                    for v in vals
-                ],
-            })
-
-    raw = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .select("value")
-        .mapInPandas(frame_batches, schema=out_schema)
-    )
-    return raw
-
-
-def decoded_stream(raw: DataFrame) -> DataFrame:
-    """raw frames → decoded pair rows + batch extraction timestamp (R4)."""
-    return decode_messages(raw).withColumn(
-        "extraction_ts", F.current_timestamp())
-
-
 def streaming_ohlc(decoded: DataFrame, *, timeframe: Timeframe = Timeframe.M5,
                    watermark: str = "10 minutes",
-                   ts_col: str = "extraction_ts") -> DataFrame:
+                   ts_col: str = "event_ts") -> DataFrame:
     """R5/R6: watermarked event-time tumbling OHLC over the decoded stream.
 
-    open/close ordering uses a composite key — extraction_ts is assigned
-    per micro-batch (every row in a batch ties), so (ts, msg_id,
-    record_position) provides the deterministic total order, same rule as
-    ohlc_windowed's tiebreak_col.
-
-    ``ts_col`` defaults to the ``decoded_stream`` composition
-    (processing-time ``extraction_ts``); for event-time bars over
-    ``frame_stream`` pass ``ts_col="event_ts"``.
+    ``ts_col`` is the event-time column: ``frame_stream`` adds
+    ``event_ts``; a file stream adds it as
+    ``timestamp_seconds("created_at")`` after ``decode_messages``.
+    open/close ordering uses the composite key (ts, msg_id,
+    record_position): rows can share a timestamp, so the key gives the
+    deterministic total order, same rule as ohlc_windowed's tiebreak_col.
 
     ``volume`` is the rolling-24h figure AS OF BAR CLOSE (max_by on the
     order key) — the input rows are snapshots whose ``volume_h24`` is
@@ -132,12 +100,10 @@ def streaming_ohlc(decoded: DataFrame, *, timeframe: Timeframe = Timeframe.M5,
     at any parallelism).
     """
     if ts_col not in decoded.columns:
-        have = [c for c in ("extraction_ts", "event_ts")
-                if c in decoded.columns]
         raise ValueError(
-            f"ts_col {ts_col!r} not in stream columns; this stream has "
-            f"{have or decoded.columns} — pass ts_col explicitly "
-            f"(decoded_stream → 'extraction_ts', frame_stream → 'event_ts')")
+            f"ts_col {ts_col!r} not in stream columns {decoded.columns}; "
+            f"add it as timestamp_seconds('created_at') after "
+            f"decode_messages, or use frame_stream (which adds 'event_ts')")
     price = F.col("price_usd")
     order_key = F.struct(F.col(ts_col), F.col("msg_id"),
                          F.col("record_position"))
@@ -158,37 +124,6 @@ def streaming_ohlc(decoded: DataFrame, *, timeframe: Timeframe = Timeframe.M5,
     )
 
 
-def streaming_dedup(decoded: DataFrame, *, keys: list[str] | None = None,
-                    ts_col: str = "event_ts",
-                    watermark: str = "10 minutes") -> DataFrame:
-    """Cross-batch seen-set dedup — the reference's ``seen`` sets
-    (utils.py:136,168; scraper.py:847-867) as a stateful streaming
-    operator: the first row per key survives, replays and re-sends are
-    dropped, and the watermark bounds how long a key is remembered so
-    state does not grow forever (the reference's unbounded in-process
-    set, made 100 TB-safe). ``dropDuplicatesWithinWatermark`` keys state
-    by the dedup columns only; at scale the state store shards by key
-    hash, so the dedup is a linear shuffle."""
-    keyed = decoded.withWatermark(ts_col, watermark)
-    return keyed.dropDuplicatesWithinWatermark(keys or ["pair_address"])
-
-
-def snapshot_stats(decoded: DataFrame) -> DataFrame:
-    """Stream-lifetime stats with the reference's ``ExtractedTokenBatch``
-    column derivation (models.py:369-375). NOTE: under
-    ``outputMode('complete')`` a global streaming aggregate is CUMULATIVE
-    over the whole stream, not per-batch — for the reference's per-batch
-    numbers, apply these aggregate expressions inside ``run_foreach_batch``
-    (each callback sees exactly one batch)."""
-    return decoded.agg(
-        F.count(F.lit(1)).alias("total_extracted"),
-        F.sum(F.when(F.col("price_usd").isNotNull(), 1).otherwise(0))
-        .alias("priced_count"),
-        F.sum(F.when(F.col("liquidity_usd") >= 10_000, 1).otherwise(0))
-        .alias("liquid_count"),
-    )
-
-
 def run_foreach_batch(decoded: DataFrame, sink: Callable[[DataFrame, int], None],
                       *, trigger_seconds: int = 5, checkpoint: str | None = None,
                       once: bool = False):
@@ -202,521 +137,3 @@ def run_foreach_batch(decoded: DataFrame, sink: Callable[[DataFrame, int], None]
     else:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
-
-
-def _list_bar_versions(state_root: str, spark=None) -> list[int]:
-    """COMMITTED versions of a bar store, ascending: a ``v{N}`` dir
-    counts only once Spark's job commit wrote its ``_SUCCESS`` marker —
-    an in-flight or crashed partial write is invisible to readers and
-    never picked as a fold's merge base. Listing/probing goes through
-    :mod:`dexscraper_spark.fsio`, so ``state_root`` may live on any
-    filesystem Spark can write (``spark`` is only needed for non-local
-    schemes; local paths keep the pure-``os`` fast path)."""
-    from dexscraper_spark import fsio
-
-    return sorted(
-        int(d[1:]) for d in fsio.list_names(spark, state_root)
-        if d.startswith("v") and d[1:].isdigit()
-        and fsio.exists(spark, fsio.join(state_root, d, "_SUCCESS")))
-
-
-def versioned_fold_builder(state_root: str, *, init: Callable,
-                           update: Callable,
-                           keep_versions: int = 2,
-                           name: str = "state",
-                           spec: dict | None = None) -> Callable:
-    """Generic foreachBatch builder for a VERSIONED monoid store —
-    the machinery behind ``bars_fold_builder``, reusable for any state
-    whose update is a deterministic merge (OHLC partials, KMV sketches,
-    Misra-Gries summaries, DD histograms...).
-
-    ``init(batch_df) -> DataFrame`` builds the state from the first
-    batch; ``update(prev_state_df, batch_df) -> DataFrame`` folds a
-    batch into the immutable previous version. ``v{N}`` derives only
-    from ``v{N-1}`` + batch N and commits atomically via parquet's
-    ``_SUCCESS`` marker, so non-idempotent merges replay exactly-once:
-    a post-crash replay of batch N recomputes the same ``v{N}`` (update
-    must be deterministic!) and never touches ``v{N-1}``. Versions
-    AHEAD of the incoming batch id fail loudly (lost/reset checkpoint
-    while the store survived — folding would silently shadow the
-    stored history).
-
-    ``spec``: the merge's parameters (sketch k, histogram alpha, bar
-    bucket size...). Written to ``{state_root}/_spec.json`` on first
-    fold and VALIDATED on every later one — restarting a stream with a
-    different k/alpha over surviving state would otherwise merge
-    incompatible summaries silently (dd_merge's 'same alpha!' contract,
-    kmv_estimate's size<k exactness branch).
-
-    All control-plane I/O (spec read/write, version listing, partial
-    cleanup) goes through :mod:`dexscraper_spark.fsio`, so
-    ``state_root`` may be an hdfs/s3a/abfss URI."""
-    import json as _json
-
-    from dexscraper_spark import fsio
-
-    def _check_spec(spark) -> None:
-        if spec is None:
-            return
-        sp = fsio.join(state_root, "_spec.json")
-        if fsio.exists(spark, sp):
-            stored = _json.loads(fsio.read_text(spark, sp))
-            if stored != spec:
-                raise RuntimeError(
-                    f"{name} store {state_root} was built with spec "
-                    f"{stored}, fold constructed with {spec}: merging "
-                    "under different parameters silently corrupts the "
-                    "state — use a fresh state_root or the stored "
-                    "parameters")
-        else:
-            # atomic: a crash mid-dump would leave a truncated file
-            # that bricks every later fold with JSONDecodeError
-            fsio.write_text_atomic(spark, sp, _json.dumps(spec))
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fsio.mkdirs(spark, state_root)
-        _check_spec(spark)
-        versions = _list_bar_versions(state_root, spark)
-        if any(v > batch_id for v in versions):
-            raise RuntimeError(
-                f"{name} store {state_root} holds version "
-                f"v{max(versions)} ahead of incoming batch {batch_id}: "
-                "checkpoint/state mismatch (lost or reset checkpoint?) "
-                "— folding would silently drop the stored history")
-        prev = max((v for v in versions if v < batch_id), default=None)
-        if prev is None:
-            state = init(batch_df)
-        else:
-            state = update(
-                spark.read.parquet(f"{state_root}/v{prev}"), batch_df)
-        out = f"{state_root}/v{batch_id}"
-        fsio.delete(spark, out)  # crashed partial attempt
-        state.write.parquet(out)
-        # retention counts batch_id separately: on a REPLAY the current
-        # id is already in the committed list and must not crowd out
-        # the older versions a concurrent reader may still be scanning
-        others = [v for v in versions if v != batch_id]
-        keep = set(others[-(keep_versions - 1):] if keep_versions > 1
-                   else []) | {batch_id}
-        for v in versions:
-            if v not in keep:
-                fsio.delete(spark, f"{state_root}/v{v}")
-
-    return fold
-
-
-def bars_fold_builder(state_root: str, *, symbol_col: str = "symbol",
-                      ts_col: str = "ts", price_col: str = "price",
-                      qty_col: str | None = "qty",
-                      order_col: str | None = None,
-                      tiebreak_col: str | None = None,
-                      bucket_seconds: int = 300,
-                      volume_scale: int = 6,
-                      keep_versions: int = 2) -> Callable:
-    """Build the foreachBatch callback that folds each tick micro-batch
-    into a VERSIONED partial-bar store (the streaming twin of the
-    nightly ``bars --delta`` CLI — a continuous aggregate maintained
-    outside the stream's own state store, queryable by any batch
-    session while the stream runs).
-
-    Exactly-once without idempotent writes: the monoid merge is NOT
-    idempotent (re-folding a replayed batch double-counts volume), so
-    the store is versioned by micro-batch epoch — ``v{batch_id}`` is
-    computed from the IMMUTABLE ``v{prev}`` plus this batch and written
-    to its own directory, visible to readers only once its ``_SUCCESS``
-    commit marker lands. A post-crash replay of batch N recomputes
-    ``v{N}`` from the same inputs (deterministic merge — which is why
-    one of ``order_col``/``tiebreak_col`` is REQUIRED: bare-timestamp
-    ties would let a replay pin different open/close bits than the
-    pre-crash attempt) and overwrites the possibly-partial attempt;
-    ``v{N-1}`` is never modified, so replay is safe at any crash point.
-
-    ``keep_versions`` (default 2: the roll-back target + current) bounds
-    retention; a concurrent batch reader holds its version for about
-    ``keep_versions − 1`` trigger intervals before the prune loop can
-    delete it from under a long-running scan — raise it when analysts
-    run heavy queries against the live store.
-
-    If the store already holds versions AHEAD of the incoming batch id,
-    the checkpoint was lost or reset while the store survived; folding
-    would silently rebuild from scratch and later shadow the stale
-    history, so it fails loudly instead (start a fresh ``state_root`` or
-    restore the matching checkpoint).
-
-    Paths are driver-visible (local/NFS); object storage swaps only
-    :func:`_list_bar_versions` and the prune deletes.
-    """
-    from dexscraper_spark.operators.ohlc import ohlc_partials, ohlc_update
-
-    if order_col is None and tiebreak_col is None:
-        raise ValueError(
-            "bars_fold_builder: pass order_col or tiebreak_col — a "
-            "unique order key is what makes replayed folds bit-identical")
-    kw = dict(symbol_col=symbol_col, ts_col=ts_col, price_col=price_col,
-              qty_col=qty_col, order_col=order_col,
-              tiebreak_col=tiebreak_col, bucket_seconds=bucket_seconds,
-              volume_scale=volume_scale)
-
-    return versioned_fold_builder(
-        state_root,
-        init=lambda batch: ohlc_partials(batch, **kw),
-        update=lambda prev, batch: ohlc_update(prev, batch, **kw),
-        keep_versions=keep_versions, name="bar",
-        spec={"bucket_seconds": bucket_seconds,
-              "volume_scale": volume_scale})
-
-
-def sketch_fold_builder(state_root: str, *, cols: list,
-                        group_by: list | None = None, k: int = 256,
-                        keep_versions: int = 2) -> Callable:
-    """foreachBatch callback maintaining per-group KMV distinct-count
-    sketches as a versioned store — the streaming twin of storing
-    per-day sketches and rolling them up. KMV merge is EXACTLY the
-    sketch of the union (pinned in test_sketch), so the folded state
-    equals the one-shot sketch of everything seen — bit-identical, any
-    batching. Empty micro-batches pass the previous state through."""
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.sketch import kmv_merge, kmv_sketch
-
-    groups = list(group_by or [])
-
-    def snap(batch: DataFrame) -> DataFrame:
-        return kmv_sketch(batch, cols=cols, group_by=groups, k=k) \
-            .select(*groups, "sketch")
-
-    def update(prev: DataFrame, batch: DataFrame) -> DataFrame:
-        new = snap(batch).select(
-            *[F.col(g).alias(f"__n_{g}") for g in groups],
-            F.col("sketch").alias("__new"))
-        if groups:
-            cond = None
-            for g in groups:
-                # eqNullSafe: a NULL group key is a real group — a
-                # plain equi-join would silently drop its state
-                c = F.col(g).eqNullSafe(F.col(f"__n_{g}"))
-                cond = c if cond is None else cond & c
-            joined = prev.join(new, cond, "full")
-        else:
-            joined = prev.join(new, F.lit(True), "full")
-        return joined.select(
-            *[F.coalesce(F.col(g), F.col(f"__n_{g}")).alias(g)
-              for g in groups],
-            kmv_merge(F.col("sketch"), F.col("__new"), k=k)
-            .alias("sketch"))
-
-    return versioned_fold_builder(state_root, init=snap, update=update,
-                                  keep_versions=keep_versions,
-                                  name="kmv-sketch",
-                                  spec={"k": k, "cols": list(cols),
-                                        "group_by": groups})
-
-
-def heavy_hitters_fold_builder(state_root: str, *, cols: list,
-                               group_by: list | None = None,
-                               k: int = 64,
-                               keep_versions: int = 2) -> Callable:
-    """foreachBatch callback maintaining per-group Misra-Gries
-    heavy-hitter summaries as a versioned store. The merge is NOT
-    idempotent (counts add) — exactly the case the versioned store
-    exists for: replayed batches recompute v{N} from the immutable
-    v{N-1}. The folded summary keeps the mergeable-summaries
-    guarantee (cnt <= true <= cnt + n_total/(k+1)) under any
-    batching; in the exact regime (distinct <= k) it equals the
-    one-shot summary."""
-    from dexscraper_spark.operators.sketch import mg_merge, mg_sketch
-
-    groups = list(group_by or [])
-
-    def snap(batch: DataFrame) -> DataFrame:
-        return mg_sketch(batch, cols=cols, group_by=groups, k=k)
-
-    def update(prev: DataFrame, batch: DataFrame) -> DataFrame:
-        return mg_merge(prev, snap(batch), group_by=groups, k=k)
-
-    return versioned_fold_builder(state_root, init=snap, update=update,
-                                  keep_versions=keep_versions,
-                                  name="mg-summary",
-                                  spec={"k": k, "cols": list(cols),
-                                        "group_by": groups})
-
-
-def quantile_fold_builder(state_root: str, *, value_col: str,
-                          group_cols: list | None = None,
-                          alpha: float = 0.01,
-                          keep_versions: int = 2) -> Callable:
-    """foreachBatch callback maintaining DD-style quantile histograms
-    as a versioned store — completes the streaming sketch triad
-    (distinct counts, heavy hitters, quantiles). dd_merge is exact
-    integer vector addition, so the folded histogram is BIT-IDENTICAL
-    to the one-shot histogram of all data under any batching; query
-    it any time with ``dd_quantiles(latest_versioned_state(...))``."""
-    from dexscraper_spark.operators.sketch import dd_histogram, dd_merge
-
-    gcols = list(group_cols or [])
-
-    def snap(batch: DataFrame) -> DataFrame:
-        return dd_histogram(batch, value_col=value_col,
-                            group_cols=gcols, alpha=alpha)
-
-    def update(prev: DataFrame, batch: DataFrame) -> DataFrame:
-        return dd_merge(prev, snap(batch), group_cols=gcols)
-
-    return versioned_fold_builder(state_root, init=snap, update=update,
-                                  keep_versions=keep_versions,
-                                  name="dd-histogram",
-                                  spec={"alpha": alpha,
-                                        "value_col": value_col,
-                                        "group_cols": gcols})
-
-
-def latest_versioned_state(spark: SparkSession,
-                           state_root: str) -> DataFrame:
-    """Newest COMMITTED version of ANY versioned fold store (bars,
-    sketches, summaries) as a batch DataFrame."""
-    versions = _list_bar_versions(state_root, spark)
-    if not versions:
-        raise FileNotFoundError(
-            f"no committed state versions in {state_root}")
-    return spark.read.parquet(f"{state_root}/v{versions[-1]}")
-
-
-def latest_bars_state(spark: SparkSession, state_root: str) -> DataFrame:
-    """Open the newest COMMITTED partial-bar version (``_SUCCESS``
-    present — an in-flight fold's partial directory is never served; see
-    :func:`bars_fold_builder`) as a batch DataFrame — feed it to
-    ``ohlc_frames_from_partials`` for live multi-frame bars."""
-    return latest_versioned_state(spark, state_root)
-
-
-def streaming_bars_maintenance(ticks: DataFrame, state_root: str, *,
-                               checkpoint: str, once: bool = False,
-                               trigger_seconds: int = 5,
-                               **fold_kw):
-    """Run the continuous-aggregate maintenance loop: every micro-batch
-    of ``ticks`` folds into the versioned partial-bar store. Returns the
-    StreamingQuery. ``fold_kw`` forwards to :func:`bars_fold_builder`."""
-    return run_foreach_batch(
-        ticks, bars_fold_builder(state_root, **fold_kw),
-        checkpoint=checkpoint, once=once,
-        trigger_seconds=trigger_seconds)
-
-
-def ann_extend_fold_builder(index_path: str, *, id_col: str = "vec_id",
-                            vec_col: str = "embedding") -> Callable:
-    """foreachBatch callback maintaining an IVF-PQ search artifact
-    (``ivf_pq_save`` layout) from a live vector stream — the ANN twin
-    of :func:`bars_fold_builder` / :func:`sketch_fold_builder`: day-0
-    builds the artifact (train centroids + codebooks on a bounded
-    sample, ``ivf_pq_save``), then the stream keeps it queryable as
-    vectors arrive.
-
-    Unlike the sketch/bar folds this needs NO versioned store:
-    :func:`~dexscraper_spark.operators.quantize.ivf_pq_extend_saved` is
-    id-keyed idempotent (anti-join against the stored ids) and
-    self-repairing (each table backfills what IT is missing), so a
-    post-crash micro-batch replay appends nothing the artifact already
-    holds, and a crash BETWEEN the assigned/codes appends is completed
-    by the next batch. Model parameters cannot drift: assignment and
-    encoding always use the artifact's own stored centroids/codebooks
-    (the _spec.json analogue is the artifact itself).
-
-    Within-batch duplicate ids are collapsed to one arbitrary-but-
-    deterministic row first (max struct by id — streams can deliver a
-    vector twice in one trigger; the stored-id anti-join only guards
-    across batches). Empty batches are no-ops.
-
-    Query while streaming with
-    :func:`~dexscraper_spark.operators.quantize.ivf_pq_query_saved`
-    in any batch session — NOT raw ``ivf_pq_load`` + ``ivf_pq_topk``:
-    query_saved resolves the version pointer once and folds the
-    artifact's TOMBSTONE set into the exclusion, so docs a nightly
-    ``pipeline --delta`` retracted are never served even though their
-    codes stay in the list files until the next republish.
-    Centroids/codebooks are day-0 frozen — retrain offline and
-    republish when drift costs recall (the recall artifact tracks it:
-    tools/recall.py).
-    """
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.quantize import ivf_pq_extend_saved
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        # empty-check the RAW batch (pre-shuffle — empty keep-alive
-        # triggers must not pay an aggregation job each)
-        if batch_df.isEmpty():
-            return
-        # one row per id: groupBy-max over a (vec) struct is
-        # deterministic under replays, unlike dropDuplicates. Persist:
-        # the extend's assignment and codes-backfill branches both read
-        # the batch — without it the dedup shuffle re-executes.
-        batch = (batch_df.select(id_col, vec_col)
-                 .groupBy(id_col)
-                 .agg(F.max(F.struct(vec_col)).alias("__v"))
-                 .select(id_col, F.col(f"__v.{vec_col}"))
-                 .persist())
-        try:
-            ivf_pq_extend_saved(batch.sparkSession, index_path, batch,
-                                id_col=id_col, vec_col=vec_col)
-        finally:
-            batch.unpersist()
-
-    return fold
-
-
-def streaming_ann_maintenance(vectors: DataFrame, index_path: str, *,
-                              checkpoint: str, once: bool = False,
-                              trigger_seconds: int = 5,
-                              **fold_kw):
-    """Run the ANN-index maintenance loop: every micro-batch of
-    ``vectors`` extends the saved IVF-PQ artifact. Returns the
-    StreamingQuery. ``fold_kw`` forwards to
-    :func:`ann_extend_fold_builder`."""
-    return run_foreach_batch(
-        vectors, ann_extend_fold_builder(index_path, **fold_kw),
-        checkpoint=checkpoint, once=once,
-        trigger_seconds=trigger_seconds)
-
-
-def ann_dedup_extend_fold_builder(index_path: str, out_path: str, *,
-                                  threshold: float = 0.95,
-                                  nprobe: int = 4, expand: int = 4,
-                                  id_col: str = "vec_id",
-                                  vec_col: str = "embedding") -> Callable:
-    """Streaming SEMANTIC-DEDUP INGEST — the online twin of
-    :func:`~dexscraper_spark.operators.dedup.semantic_dedup`: each
-    micro-batch of vectors is (1) deduped within itself (exact
-    within-batch cosine pairs → min-id connected-component survivors),
-    (2) searched against the indexed corpus (IVF-PQ top-1; a hit with
-    cosine ≥ ``threshold`` means the corpus already holds this
-    content → drop), and the survivors are (3) published to
-    ``{out_path}/batch={batch_id}`` and (4) appended to the index so
-    LATER batches dedup against them.
-
-    Exactly-once without a versioned store: the within-batch stage is
-    deterministic, and the corpus search runs against the stored index
-    MINUS this batch's ids — not merely excluding self-matches: after
-    a crash the batch's survivors already sit in the index, and their
-    codes would otherwise perturb the ADC k×expand candidate window on
-    replay (a true near-dup's corpus twin could be pushed out of the
-    window and the dup would slip through — replay would not recompute
-    the same survivor set). Anti-joining the batch ids out of the code
-    and re-rank tables restores the exact pre-append search universe,
-    so a replay recomputes identical decisions; the publish is an
-    overwrite of the batch's own directory and the index append is
-    id-keyed idempotent (:func:`~dexscraper_spark.operators.quantize.
-    ivf_pq_extend_saved`). Centroids/codebooks never change on extend,
-    so the probe side is replay-stable by construction.
-
-    The corpus probe EXCLUDES the artifact's tombstones (docs a
-    nightly ``pipeline --delta`` retracted whose codes await the next
-    republish): a deleted document must not suppress its live
-    streaming near-copy as a "duplicate". The version pointer is
-    resolved once per batch so index, codes and tombstones come from
-    one version.
-
-    Honesty notes: the vs-corpus stage inherits IVF-PQ's recall — a
-    true near-dup can slip through when its list isn't probed or ADC
-    misranks it out of the k×expand window (tracked in RECALL.json).
-    And replay determinism is exact w.r.t. this batch's OWN appends
-    (anti-joined out); external corpus changes between run and replay
-    — another writer's extend, a nightly fold's new tombstones — were
-    never replay-invisible and still are not: the replay dedups
-    against the corpus AS IT IS, which is the correct current answer.
-    Raise ``nprobe``/``expand`` (up to nprobe=nlist) to trade
-    per-batch cost for dedup recall; the within-batch stage is always
-    exact. Batches are micro-batch-sized by contract (the search
-    collects query vectors driver-side, same stance as ivf_pq_topk).
-    """
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark import fsio
-    from dexscraper_spark.operators.dedup import dedup_components
-    from dexscraper_spark.operators.quantize import (
-        ivf_pq_extend_saved, ivf_pq_load, ivf_pq_tombstones,
-        ivf_pq_topk)
-    from dexscraper_spark.operators.similarity import (
-        exact_cosine_pairs_blocked)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        batch = (batch_df.select(id_col, vec_col)
-                 .groupBy(id_col)
-                 .agg(F.max(F.struct(vec_col)).alias("__v"))
-                 .select(id_col, F.col(f"__v.{vec_col}"))
-                 .persist())
-        try:
-            # 1) exact within-batch dedup (batch-scale pair graph)
-            pairs = exact_cosine_pairs_blocked(
-                batch.withColumn("__blk", F.lit(0)),
-                id_col=id_col, vec_col=vec_col, block_col="__blk",
-                threshold=threshold)
-            comps = dedup_components(pairs, id_a="id_a", id_b="id_b")
-            batch_losers = (comps
-                            .filter(F.col("node") != F.col("component"))
-                            .select(F.col("node").alias(id_col)))
-            fresh = batch.join(batch_losers, id_col, "left_anti")
-
-            # 2) vs the indexed corpus MINUS this batch's ids: a crashed
-            # run's appends must not perturb the replay's ADC window
-            # (see docstring). exclude_ids applies after the probed-
-            # list join inside ivf_pq_topk, so the list-partitioned
-            # codes scan keeps its file pruning; the re-rank only ever
-            # sees candidate ids, which are already exclusion-filtered.
-            #
-            # The artifact's TOMBSTONES join the exclusion set too
-            # (VERDICT r11 §wrong-1): after a nightly `pipeline
-            # --delta` retracts doc X, X's codes stay in the index
-            # until the next republish but X is DELETED — a streaming
-            # near-copy of X must survive, not be suppressed by a
-            # document the pipeline just declared gone. The pointer is
-            # resolved ONCE so index, codes and tombstones all come
-            # from the same version even if a republish flips mid-
-            # batch (same contract as ivf_pq_query_saved).
-            resolved = fsio.pointer_resolve(spark, index_path)
-            index, books, codes = ivf_pq_load(
-                spark, resolved, id_col=id_col, vec_col=vec_col)
-            excl = batch.select(id_col)
-            tomb = ivf_pq_tombstones(spark, resolved, id_col=id_col)
-            if tomb is not None:
-                excl = excl.unionByName(tomb).distinct()
-            hits = ivf_pq_topk(index.assigned, index, codes, fresh,
-                               books, k=1, nprobe=nprobe, expand=expand,
-                               exclude_ids=excl)
-            dup_ids = (hits.filter(F.col("cosine") >= threshold)
-                       .select(F.col("query_id").alias(id_col))
-                       .distinct())
-            survivors = fresh.join(dup_ids, id_col, "left_anti") \
-                             .persist()
-            try:
-                # 3) publish (idempotent: the batch owns its directory)
-                survivors.write.mode("overwrite").parquet(
-                    f"{out_path}/batch={batch_id}")
-                # 4) index append so later batches dedup against these
-                ivf_pq_extend_saved(spark, index_path, survivors,
-                                    id_col=id_col, vec_col=vec_col)
-            finally:
-                survivors.unpersist()
-        finally:
-            batch.unpersist()
-
-    return fold
-
-
-def streaming_semantic_dedup_ingest(vectors: DataFrame, index_path: str,
-                                    out_path: str, *, checkpoint: str,
-                                    once: bool = False,
-                                    trigger_seconds: int = 5,
-                                    **fold_kw):
-    """Run the online semantic-dedup ingest loop: every micro-batch of
-    ``vectors`` is deduped (within-batch exact + vs the indexed corpus)
-    and its survivors published + appended. Returns the StreamingQuery.
-    ``fold_kw`` forwards to :func:`ann_dedup_extend_fold_builder`."""
-    return run_foreach_batch(
-        vectors, ann_dedup_extend_fold_builder(index_path, out_path,
-                                               **fold_kw),
-        checkpoint=checkpoint, once=once,
-        trigger_seconds=trigger_seconds)

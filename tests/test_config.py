@@ -84,27 +84,6 @@ def test_timeframe_durations():
     assert Timeframe.H24.seconds == 86400
 
 
-def test_sql_api_matches_dataframe_api(spark):
-    """The same ScrapingConfig must produce identical results through
-    spark.sql (Filters.to_sql) and the DataFrame API (Filters.to_column)."""
-    from dexscraper_spark.config import Filters, Order, RankBy, ScrapingConfig
-    from dexscraper_spark.plans.sql_api import register_views, sql_trending
-    register_views(spark, "/root/testdata/sf0.001", names=("lineitem",))
-    cfg = ScrapingConfig(
-        filters=Filters(liquidity_min=20_000.0, liquidity_max=60_000.0),
-        rank_by=RankBy.VOLUME, order=Order.DESC, limit=15)
-    cmap = {"liquidity": "l_extendedprice"}
-    via_sql = sql_trending(spark, cfg, table="lineitem",
-                           rank_column="l_extendedprice", column_map=cmap)
-    df = spark.table("lineitem")
-    via_df = cfg.apply(df, column_map=cmap, rank_column="l_extendedprice")
-    sql_rows = [tuple(r) for r in via_sql.collect()]
-    df_rows = [tuple(r) for r in via_df.collect()]
-    # top-15 by a unique-ish double; compare as sorted sets (ties possible)
-    assert sorted(sql_rows) == sorted(df_rows)
-    assert len(sql_rows) == 15
-
-
 def test_apply_derives_trending_score(spark):
     """RankBy.TRENDING_* derives the volume×change×activity blend on the
     fly (the reference can only request the server's trendingScore;

@@ -131,36 +131,6 @@ def test_rename_across_filesystems_rejected(spark, mockfs, tmp_path):
 
 # ------------------------------------------- consumers on a mockfs root
 
-def test_versioned_fold_store_on_mockfs(spark, mockfs, tmp_path):
-    """The streaming versioned store works end-to-end on a non-file
-    scheme: spec write+validate, _SUCCESS-gated version listing,
-    retention deletes — plus Spark's own parquet writes to the same
-    URI."""
-    from dexscraper_spark.streaming.pipeline import (
-        _list_bar_versions, latest_versioned_state,
-        versioned_fold_builder)
-
-    root = mockfs("folds")
-    fold = versioned_fold_builder(
-        root,
-        init=lambda b: b.groupBy().sum("v").toDF("s"),
-        update=lambda prev, b: prev.unionByName(
-            b.groupBy().sum("v").toDF("s")).groupBy().sum("s").toDF("s"),
-        keep_versions=2, name="t", spec={"k": 1})
-    fold(spark.range(3).selectExpr("id as v"), 0)   # s = 3
-    fold(spark.range(5).selectExpr("id as v"), 1)   # s = 3 + 10
-    assert _list_bar_versions(root, spark) == [0, 1]
-    assert latest_versioned_state(spark, root).collect()[0][0] == 13
-    fold(spark.range(2).selectExpr("id as v"), 2)   # retention drops v0
-    assert _list_bar_versions(root, spark) == [1, 2]
-    # spec mismatch still fails loudly through the Hadoop read path
-    bad = versioned_fold_builder(root, init=lambda b: b,
-                                 update=lambda p, b: p, name="t",
-                                 spec={"k": 2})
-    with pytest.raises(RuntimeError, match="spec"):
-        bad(spark.range(1).selectExpr("id as v"), 3)
-
-
 def test_compact_zordered_on_mockfs(spark, mockfs, tmp_path):
     """The 2-rename compaction swap runs against the Hadoop client."""
     from dexscraper_spark.sinks.lake import (

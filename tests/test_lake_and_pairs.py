@@ -1,9 +1,8 @@
-"""Lake-layout writers + nested pairs projection tests."""
+"""Lake-layout writer tests."""
 
 from __future__ import annotations
 
 import glob
-import json
 
 from pyspark.sql import functions as F
 
@@ -17,17 +16,6 @@ def _decoded(spark, n_frames=3):
         "payload": [make_frame(sample_pairs(4, seed=i)) for i in range(n_frames)],
     })
     return decode_messages(spark.createDataFrame(pdf).coalesce(1))
-
-
-def test_nested_pairs_projection_and_json(spark):
-    from dexscraper_spark.plans.pairs import pairs_json, to_pairs
-    pairs = to_pairs(_decoded(spark))
-    assert pairs.schema["price"].dataType.simpleString() == \
-        "struct<current:double,usd:double,change_24h:double>"
-    doc = json.loads(pairs_json(pairs).collect()[0]["json"])
-    assert doc["price"]["usd"] > 0
-    assert doc["liquidity"]["usd"] >= 50_000
-    assert doc["volume"]["h24"] >= 1_000_000
 
 
 def test_write_tokens_partitioned_by_chain(spark, tmp_path):

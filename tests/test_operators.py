@@ -204,40 +204,6 @@ def test_sessionize_gap_boundaries(spark):
     assert sess[(2, 0)] == 1
 
 
-def test_salted_agg_equals_plain_agg(spark):
-    """Salted two-phase aggregation must be value-identical to the plain
-    one (using exact fixed-point sums so the comparison is bit-level)."""
-    from dexscraper_spark.functions.exact import cents
-    from dexscraper_spark.operators.skew import salted_agg
-    rows = [("hot", i, float(i % 97) + 0.25) for i in range(5000)]
-    rows += [(f"k{i % 7}", i, float(i) / 3.0) for i in range(300)]
-    df = spark.createDataFrame(rows, "key string, id long, v double")
-    plain = {r["key"]: (r["s"], r["n"]) for r in
-             df.groupBy("key").agg(
-                 F.sum(cents(F.col("v"))).alias("s"),
-                 F.count(F.lit(1)).alias("n")).collect()}
-    salted = {r["key"]: (r["s"], r["n"]) for r in salted_agg(
-        df, keys=["key"], n_salts=8, salt_source="id",
-        partial_aggs=[F.sum(cents(F.col("v"))).alias("ps"),
-                      F.count(F.lit(1)).alias("pn")],
-        final_aggs=[F.sum("ps").alias("s"), F.sum("pn").alias("n")],
-    ).collect()}
-    assert plain == salted
-
-
-def test_salted_broadcast_join_equals_plain(spark):
-    from dexscraper_spark.operators.skew import salted_broadcast_left
-    fact = spark.createDataFrame(
-        [("hot", i) for i in range(2000)] + [("cold", i) for i in range(50)],
-        "key string, id long")
-    dim = spark.createDataFrame(
-        [("hot", "H"), ("cold", "C")], "key string, tag string")
-    plain = sorted((r["id"], r["tag"]) for r in fact.join(dim, "key").collect())
-    salted = sorted((r["id"], r["tag"]) for r in salted_broadcast_left(
-        fact, dim, key="key", n_salts=8, salt_source="id").collect())
-    assert plain == salted
-
-
 def test_ohlc_windowed_invariants_and_partition_independence(spark):
     """low <= open/close <= high, trades = row count, and the result is
     IDENTICAL at different parallelism (total-order open/close + exact
@@ -836,17 +802,3 @@ def test_ivf_add_extended_index_releases_base_artifact(spark):
     ext.unpersist()
     assert not os.path.exists(path) and P._ARTIFACT_DIRS == []
 
-
-def test_skew_report_flags_hot_key(spark):
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.skew import skew_report
-
-    # 10k rows: one key owns half, the rest spread over 500 keys
-    df = spark.range(0, 10_000).select(
-        F.when(F.col("id") % 2 == 0, F.lit("HOT"))
-        .otherwise((F.col("id") % 500).cast("string")).alias("k"))
-    rep = skew_report(df, keys=["k"], k=16, threshold=2.0).collect()
-    assert rep[0].item == "HOT" and rep[0].skewed
-    assert rep[0].share > 0.4
-    assert all(not r.skewed for r in rep[1:])

@@ -120,17 +120,6 @@ def test_document_exporters_bounded_before_collect(spark):
     assert agg_pos != -1 and take_pos != -1
 
 
-def test_streaming_demo_source_no_row_udf(spark):
-    """The rate-source frame generator must be an Arrow-batched
-    mapInPandas stage (like decode), never a row-at-a-time Python UDF
-    (BatchEvalPython)."""
-    from dexscraper_spark.streaming.pipeline import rate_frame_stream
-    raw = rate_frame_stream(spark, rows_per_second=1, pairs_per_frame=2)
-    plan = plan_of(raw, mode="extended")
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" in plan or "mapInPandas" in plan.lower()
-
-
 def test_percentiles_no_object_hash_aggregate(spark):
     """agg_percentiles must stay on the sort-based two-pass plan — a
     spillable WindowExec + codegen'd HashAggregate — never the

@@ -1,6 +1,6 @@
 """Recall-gated IVF-PQ retrain/republish (VERDICT r8 §next-2).
 
-The streaming/extend path keeps centroids + codebooks day-0 frozen by
+The extend path keeps centroids + codebooks day-0 frozen by
 design; under distribution shift the frozen quantizers degrade and
 recall decays. ivf_pq_republish closes the loop: deterministic rebuild
 on the current corpus, recall@k gate against the brute-force oracle
@@ -203,39 +203,6 @@ def test_recover_rolls_forward_and_back(spark, tmp_path):
     fsio.rename(spark, path, path + "__rebuilding")
     res = ivf_pq_republish(spark, corpus, path, **PARAMS)
     assert res["published"] and res["recall_old"] is not None
-
-
-def test_streaming_extend_fold_survives_republish(spark, tmp_path):
-    """The ann maintenance fold holds only the PATH; a republish under
-    it must be transparent — the next micro-batch extends the NEW
-    artifact with its new quantizers."""
-    from dexscraper_spark.streaming.pipeline import (
-        ann_extend_fold_builder)
-
-    rng = np.random.default_rng(9)
-    day0, drift = _day0_and_drift(rng, n0=200, nd=200)
-    extra = drift[:100] + 0.01
-    path = str(tmp_path / "ann")
-    assert ivf_pq_republish(spark, _vdf(spark, day0), path,
-                            **PARAMS)["published"]
-
-    fold = ann_extend_fold_builder(path)
-    fold(_vdf(spark, drift, offset=len(day0)), 0)
-    assert spark.read.parquet(f"{path}/codes").count() == 400
-
-    full = _vdf(spark, np.vstack([day0, drift]))
-    assert ivf_pq_republish(spark, full, path, **PARAMS)["published"]
-    cents_new = spark.read.parquet(f"{path}/centroids").collect()
-
-    fold(_vdf(spark, extra, offset=400), 1)
-    assert spark.read.parquet(f"{path}/codes").count() == 500
-    # the fold extended the REBUILT artifact (centroids unchanged by
-    # extend — still the republished ones)
-    assert sorted(map(str, cents_new)) == sorted(
-        map(str, spark.read.parquet(f"{path}/centroids").collect()))
-    # replay of batch 1 is a no-op (id-keyed idempotence across swap)
-    fold(_vdf(spark, extra, offset=400), 1)
-    assert spark.read.parquet(f"{path}/codes").count() == 500
 
 
 def test_recover_parked_marker_partial_path(spark, tmp_path):

@@ -3,7 +3,6 @@ OHLC → foreachBatch sink (availableNow trigger = bounded run)."""
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 
@@ -18,15 +17,24 @@ def _write_frame_parquet(spark, path: str, n_frames: int = 3):
         .write.mode("overwrite").parquet(path)
 
 
+def _decoded_file_stream(spark, src: str):
+    """A parquet frame stream through the decode kernel, with the
+    event-time column ``streaming_ohlc`` reads."""
+    from pyspark.sql import functions as F
+    from dexscraper_spark.sources.decode import decode_messages
+
+    raw = spark.readStream.schema(RAW_MESSAGES).parquet(src)
+    return decode_messages(raw).withColumn(
+        "event_ts", F.timestamp_seconds("created_at"))
+
+
 @pytest.mark.slow  # r13 fast-lane split (>10 s)
 def test_stream_decode_foreach_batch(spark, tmp_path):
-    from dexscraper_spark.streaming.pipeline import decoded_stream, run_foreach_batch
+    from dexscraper_spark.streaming.pipeline import run_foreach_batch
 
     src = str(tmp_path / "frames")
     _write_frame_parquet(spark, src)
-
-    raw = (spark.readStream.schema(RAW_MESSAGES).parquet(src))
-    decoded = decoded_stream(raw)
+    decoded = _decoded_file_stream(spark, src)
 
     seen: list[tuple[int, int]] = []
 
@@ -41,13 +49,12 @@ def test_stream_decode_foreach_batch(spark, tmp_path):
 
 def test_streaming_ohlc_complete_mode(spark, tmp_path):
     from dexscraper_spark.config import Timeframe
-    from dexscraper_spark.streaming.pipeline import (
-        decoded_stream, streaming_ohlc)
+    from dexscraper_spark.streaming.pipeline import streaming_ohlc
 
     src = str(tmp_path / "frames2")
     _write_frame_parquet(spark, src, n_frames=2)
-    raw = spark.readStream.schema(RAW_MESSAGES).parquet(src)
-    bars = streaming_ohlc(decoded_stream(raw), timeframe=Timeframe.M5)
+    bars = streaming_ohlc(_decoded_file_stream(spark, src),
+                          timeframe=Timeframe.M5)
 
     q = (bars.writeStream.format("memory").queryName("bars_mem")
          .outputMode("complete").trigger(availableNow=True).start())
@@ -60,68 +67,56 @@ def test_streaming_ohlc_complete_mode(spark, tmp_path):
         assert r["trades"] >= 1
 
 
-def test_stateful_recent_buffer_across_batches(spark, tmp_path):
-    """R7: applyInPandasWithState keeps the last-N buffer per key across
-    micro-batches (maxFilesPerTrigger=1 → one batch per file)."""
-    from dexscraper_spark.streaming.state import recent_buffer_stats
-
-    src = str(tmp_path / "ticks")
-    # two files → two micro-batches; buffer cap 3 per key
-    spark.createDataFrame(
-        [("A", 1, 10.0), ("A", 2, 20.0), ("B", 3, 5.0)],
-        "k string, o long, v double").write.parquet(src + "/f1")
-    spark.createDataFrame(
-        [("A", 4, 30.0), ("A", 5, 40.0)],
-        "k string, o long, v double").write.parquet(src + "/f2")
-
-    stream = (spark.readStream.schema("k string, o long, v double")
-              .option("maxFilesPerTrigger", 1)
-              .parquet(src + "/*"))
-    out = recent_buffer_stats(stream, key_col="k", order_col="o",
-                              value_col="v", n=3)
-    q = (out.writeStream.format("memory").queryName("buf_mem")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM buf_mem").collect()
-    # last emission for A must hold the 3 most recent of [10,20,30,40]
-    a_rows = [r for r in rows if r["key"] == "A"]
-    final_a = max(a_rows, key=lambda r: sum(r["recent_values"]))
-    assert sorted(final_a["recent_values"]) == [20.0, 30.0, 40.0]
-    assert final_a["recent_max"] == 40.0
-    b_rows = [r for r in rows if r["key"] == "B"]
-    assert b_rows and b_rows[-1]["recent_values"] == [5.0]
-
-
 def test_watermarked_ohlc_append_emits_closed_windows(spark, tmp_path):
-    """R6: with a watermark, append mode emits only windows the watermark
-    has closed — the final (still-open) window stays unemitted."""
+    """R6: with a watermark, append mode (the mode the feed benchmark
+    drives) emits only windows the watermark has closed — the final
+    (still-open) window stays unemitted."""
     from pyspark.sql import functions as F
 
+    from dexscraper_spark.config import Timeframe
+    from dexscraper_spark.streaming.pipeline import streaming_ohlc
+
     src = str(tmp_path / "wm_ticks")
-    rows = [("X", f"2024-01-01 10:{m:02d}:00", float(m)) for m in range(0, 50, 5)]
-    rows += [("X", "2024-01-01 13:00:00", 99.0)]  # advances watermark far
-    spark.createDataFrame(rows, "sym string, ts_s string, price double") \
-        .select("sym", F.to_timestamp("ts_s").alias("ts"), "price") \
+    # price p lands at 10:00 + 2p minutes: ten ticks across two 1-hour
+    # windows, then one tick at 13:00 that advances the watermark far
+    rows = [(i, f"2024-01-01 {10 + 2 * m // 60}:{2 * m % 60:02d}:00",
+             float(m)) for i, m in enumerate(range(0, 50, 5))]
+    rows += [(10, "2024-01-01 13:00:00", 99.0)]
+    spark.createDataFrame(rows, "msg_id long, ts_s string, price double") \
+        .select("msg_id", F.lit(0).cast("long").alias("record_position"),
+                F.lit("X").alias("base_token_symbol"),
+                F.col("price").alias("price_usd"),
+                F.lit(1.0).alias("volume_h24"),
+                F.to_timestamp("ts_s").alias("event_ts")) \
         .write.parquet(src)
 
-    stream = spark.readStream.schema("sym string, ts timestamp, price double") \
-        .parquet(src)
-    bars = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy("sym", F.window("ts", "30 minutes").alias("w"))
-        .agg(F.min("price").alias("lo"), F.max("price").alias("hi"),
-             F.count(F.lit(1)).alias("n"))
-        .select("sym", F.col("w.start").cast("long").alias("t0"), "lo", "hi", "n")
-    )
+    stream = spark.readStream.schema(
+        "msg_id long, record_position long, base_token_symbol string, "
+        "price_usd double, volume_h24 double, event_ts timestamp").parquet(src)
+    bars = streaming_ohlc(stream, timeframe=Timeframe.H1)
     q = (bars.writeStream.format("memory").queryName("wm_mem")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
-    got = {r["t0"]: (r["lo"], r["hi"], r["n"])
-           for r in spark.sql("SELECT * FROM wm_mem").collect()}
+    got = {r["t0"]: (r["low"], r["high"], r["trades"])
+           for r in spark.sql("SELECT CAST(bucket_ts AS BIGINT) AS t0, * "
+                              "FROM wm_mem").collect()}
     base = 1704103200  # 2024-01-01 10:00:00 UTC
-    assert base in got and got[base] == (0.0, 25.0, 6)      # 10:00-10:30 closed
-    assert base + 1800 in got and got[base + 1800] == (30.0, 45.0, 4)
+    assert base in got and got[base] == (0.0, 25.0, 6)      # 10:00-11:00 closed
+    assert base + 3600 in got and got[base + 3600] == (30.0, 45.0, 4)
     assert base + 3600 * 3 not in got  # the 13:00 window is still open
+
+
+def test_registered_stream_row_leaves_no_memory_view(spark):
+    """Each run of ``streaming_ohlc_pipeline`` drops its memory-sink view;
+    the returned frame still holds the sink's rows."""
+    from dexscraper_spark.plans.registry import queries
+
+    build = queries()["streaming_ohlc_pipeline"]
+    for _ in range(2):
+        assert len(build(spark, "/root/testdata/sf0.01").collect()) == 20
+    left = [t.name for t in spark.catalog.listTables()
+            if t.name.startswith("dexstream_bars_")]
+    assert left == []
 
 
 def test_processing_time_trigger_checkpoint_restart(spark, tmp_path):
@@ -235,400 +230,6 @@ def test_frame_stream_end_to_end_ohlc(spark, tmp_path):
     assert got and got == expected
 
 
-def test_streaming_dedup_drops_cross_batch_repeats(spark, tmp_path):
-    """The synthetic frame cycle repeats every 13 seeds, so 26 frames
-    contain every pair twice in different micro-batches; the seen-set
-    dedup must keep exactly one row per pair_address across batches."""
-    from dexscraper_spark.streaming.pipeline import frame_stream, streaming_dedup
-
-    decoded = frame_stream(spark, pairs_per_frame=4, frames_per_batch=5,
-                           max_frames=26)
-    deduped = streaming_dedup(decoded, keys=["pair_address"])
-    q = (deduped.writeStream.format("memory").queryName("dedup_stream")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .start())
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT pair_address FROM dedup_stream").collect()
-    addrs = [r.pair_address for r in rows]
-    assert addrs, "dedup stream produced no rows"
-    assert len(addrs) == len(set(addrs)), "duplicate pair_address survived"
-    # and it actually dropped something: raw stream has each pair twice
-    raw_count = 26 * 4
-    assert len(addrs) < raw_count
-
-
-def test_streaming_asof_enrich_state_across_batches(spark, tmp_path):
-    """R7 + as-of: latest-snapshot state enriches events across
-    micro-batches (maxFilesPerTrigger=1 → one batch per file), including
-    an event arriving before any snapshot (NULL payload) and an
-    arrival-order late event picking up the prior batch's state."""
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.streaming.state import streaming_asof_enrich
-
-    src = str(tmp_path / "asof_stream")
-    schema = "k string, t long, side string, eid long, v double"
-    # batch 1: event@1 (no state yet), snapshot@2 v=100, event@4
-    spark.createDataFrame(
-        [("A", 1, "L", 1, None), ("A", 2, "R", None, 100.0),
-         ("A", 4, "L", 4, None)], schema).coalesce(1).write.parquet(src + "/f1")
-    # batch 2: event@3 (arrival-order: sees v=100 despite t<4),
-    #          snapshot@10 v=200, event@11, other-key event
-    spark.createDataFrame(
-        [("A", 3, "L", 3, None), ("A", 10, "R", None, 200.0),
-         ("A", 11, "L", 11, None), ("B", 7, "L", 7, None)],
-        schema).coalesce(1).write.parquet(src + "/f2")
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src + "/*"))
-    left = stream.filter("side = 'L'").select("k", F.col("t").alias("et"),
-                                              "eid")
-    right = stream.filter("side = 'R'").select("k", F.col("t").alias("st"),
-                                               "v")
-    out = streaming_asof_enrich(left, right, key_col="k", left_time="et",
-                                right_time="st", payload=["v"])
-    q = (out.writeStream.format("memory").queryName("asof_mem")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = {r.eid: (r.v, r.matched_time)
-            for r in spark.sql("SELECT * FROM asof_mem").collect()}
-    assert rows[1] == (None, None)        # before any snapshot
-    assert rows[4] == (100.0, 2)
-    assert rows[3] == (100.0, 2)          # arrival-order late event
-    assert rows[11] == (200.0, 10)
-    assert rows[7] == (None, None)        # other key, no state
-
-
-def test_streaming_asof_out_of_order_snapshot_does_not_regress(spark, tmp_path):
-    """A late-arriving OLDER snapshot in a later batch must not replace
-    newer state; and payload/left column collisions fail fast."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.streaming.state import streaming_asof_enrich
-
-    src = str(tmp_path / "asof_ooo")
-    schema = "k string, t long, side string, eid long, v double"
-    spark.createDataFrame(
-        [("A", 10, "R", None, 200.0)], schema).coalesce(1) \
-        .write.parquet(src + "/f1")
-    # batch 2: older snapshot arrives late, then an event
-    spark.createDataFrame(
-        [("A", 2, "R", None, 100.0), ("A", 11, "L", 11, None)],
-        schema).coalesce(1).write.parquet(src + "/f2")
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src + "/*"))
-    left = stream.filter("side = 'L'").select("k", F.col("t").alias("et"), "eid")
-    right = stream.filter("side = 'R'").select("k", F.col("t").alias("st"), "v")
-    out = streaming_asof_enrich(left, right, key_col="k", left_time="et",
-                                right_time="st", payload=["v"])
-    q = (out.writeStream.format("memory").queryName("asof_ooo_mem")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    [row] = spark.sql("SELECT * FROM asof_ooo_mem").collect()
-    assert (row.v, row.matched_time) == (200.0, 10)
-
-    bad_left = stream.filter("side = 'L'").select(
-        "k", F.col("t").alias("et"), F.col("v"))
-    with pytest.raises(ValueError, match="collide"):
-        streaming_asof_enrich(bad_left, right, key_col="k", left_time="et",
-                              right_time="st", payload=["v"])
-
-
-def test_streaming_asof_null_time_snapshot_never_enters_state(spark, tmp_path):
-    """ADVICE r4: a snapshot with NULL time would become NaN in pandas,
-    slip past the regression guard, and poison the LongType state field —
-    it must be filtered before grouping, like the batch operator."""
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.streaming.state import streaming_asof_enrich
-
-    src = str(tmp_path / "asof_nullts")
-    schema = "k string, t long, side string, eid long, v double"
-    spark.createDataFrame(
-        [("A", None, "R", None, 666.0), ("A", 5, "L", 5, None)],
-        schema).coalesce(1).write.parquet(src + "/f1")
-    # second batch proves state stayed writable after the NULL-time row
-    spark.createDataFrame(
-        [("A", 6, "R", None, 100.0), ("A", 7, "L", 7, None)],
-        schema).coalesce(1).write.parquet(src + "/f2")
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src + "/*"))
-    left = stream.filter("side = 'L'").select("k", F.col("t").alias("et"), "eid")
-    right = stream.filter("side = 'R'").select("k", F.col("t").alias("st"), "v")
-    out = streaming_asof_enrich(left, right, key_col="k", left_time="et",
-                                right_time="st", payload=["v"])
-    q = (out.writeStream.format("memory").queryName("asof_nullts_mem")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = {r.eid: (r.v, r.matched_time)
-            for r in spark.sql("SELECT * FROM asof_nullts_mem").collect()}
-    assert rows[5] == (None, None)      # NULL-time snapshot never matched
-    assert rows[7] == (100.0, 6)        # real snapshot still lands
-
-
-def test_streaming_bars_maintenance_folds_microbatches(spark, tmp_path):
-    """Continuous-aggregate maintenance: three tick files → three
-    micro-batches folded into the versioned partial-bar store; the
-    latest version must equal the one-shot batch aggregation of all
-    ticks, and a restart with a NEW file folds only the new data."""
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.ohlc import ohlc_partials
-    from dexscraper_spark.streaming.pipeline import (
-        latest_bars_state, streaming_bars_maintenance)
-
-    src = str(tmp_path / "ticks")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1) \
-            .write.mode("append").parquet(src)
-    kw = dict(symbol_col="event_type", ts_col="ts", price_col="value",
-              qty_col="value", order_col="event_id", bucket_seconds=300)
-
-    stream = (spark.readStream
-              .schema(spark.read.parquet(src).schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    state_root = str(tmp_path / "barstate")
-    q = streaming_bars_maintenance(
-        stream, state_root, checkpoint=str(tmp_path / "ckpt"),
-        once=True, **kw)
-    q.awaitTermination(120)
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    got = latest_bars_state(spark, state_root)
-    assert rows(got) == rows(ohlc_partials(ev, **kw))
-    # at most two versions retained (rollback target + current)
-    import os
-    assert len([d for d in os.listdir(state_root)
-                if d.startswith("v")]) <= 2
-
-    # restart: a fourth file arrives; the checkpoint resumes and folds
-    # ONLY the new data (no double count of history)
-    extra = ev.filter(F.col("event_id") % 3 == 0) \
-        .withColumn("event_id", F.col("event_id") + 10_000_000)
-    extra.coalesce(1).write.mode("append").parquet(src)
-    stream2 = (spark.readStream
-               .schema(spark.read.parquet(src).schema)
-               .option("maxFilesPerTrigger", 1).parquet(src))
-    q2 = streaming_bars_maintenance(
-        stream2, state_root, checkpoint=str(tmp_path / "ckpt"),
-        once=True, **kw)
-    q2.awaitTermination(120)
-    assert rows(latest_bars_state(spark, state_root)) \
-        == rows(ohlc_partials(ev.unionByName(extra), **kw))
-
-
-def test_bars_fold_replay_is_idempotent(spark, tmp_path):
-    """The merge monoid is NOT idempotent, so exactly-once rests on the
-    versioned-store protocol: re-running a batch id (post-crash replay)
-    recomputes its version from the immutable previous one — same
-    bits, no double count — including replay after a PARTIAL crashed
-    write of the version directory."""
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.streaming.pipeline import (
-        bars_fold_builder, latest_bars_state)
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    a = ev.filter(F.col("event_id") % 2 == 0)
-    b = ev.filter(F.col("event_id") % 2 == 1)
-    kw = dict(symbol_col="event_type", ts_col="ts", price_col="value",
-              qty_col="value", order_col="event_id", bucket_seconds=300)
-    root = str(tmp_path / "state")
-    fold = bars_fold_builder(root, **kw)
-
-    def rows():
-        return sorted(tuple(r) for r in
-                      latest_bars_state(spark, root).collect())
-
-    fold(a, 0)
-    fold(b, 1)
-    want = rows()
-    fold(b, 1)          # clean replay
-    assert rows() == want
-    # crashed partial attempt: garbage in v1, then replay
-    import os
-    import shutil
-    shutil.rmtree(f"{root}/v1")
-    os.makedirs(f"{root}/v1")
-    open(f"{root}/v1/part-garbage.parquet", "w").write("not parquet")
-    fold(b, 1)
-    assert rows() == want
-
-
-def test_bars_fold_guards(spark, tmp_path):
-    """Protocol guards: (a) an order key is mandatory (replay
-    bit-determinism); (b) versions AHEAD of the incoming batch id mean
-    a lost/reset checkpoint — fail loudly instead of silently shadowing
-    stored history; (c) an uncommitted (_SUCCESS-less) version dir is
-    invisible to readers and never picked as a merge base."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.streaming.pipeline import (
-        bars_fold_builder, latest_bars_state)
-
-    with pytest.raises(ValueError, match="order key"):
-        bars_fold_builder(str(tmp_path / "x"))
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    kw = dict(symbol_col="event_type", ts_col="ts", price_col="value",
-              qty_col="value", order_col="event_id", bucket_seconds=300)
-    root = str(tmp_path / "state")
-    fold = bars_fold_builder(root, **kw)
-    fold(ev, 41)
-    fold(ev.limit(10), 42)
-    with pytest.raises(RuntimeError, match="ahead of incoming batch"):
-        fold(ev.limit(5), 0)      # checkpoint reset to batch 0
-
-    # uncommitted partial dir: newer id but no _SUCCESS — reader still
-    # serves v42, and a fold for batch 50 merges from v42, not v49
-    os.makedirs(f"{root}/v49")
-    open(f"{root}/v49/part-0.parquet", "w").write("partial")
-    assert latest_bars_state(spark, root).count() \
-        == spark.read.parquet(f"{root}/v42").count()
-    fold(ev.limit(3), 50)         # must not try to read v49
-    assert latest_bars_state(spark, root).count() > 0
-
-
-def test_bars_fold_keep_versions_retention(spark, tmp_path):
-    """keep_versions bounds the store: after N folds only the last
-    keep_versions committed dirs survive, and a replay does not crowd
-    out the concurrent reader's older versions."""
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.streaming.pipeline import (
-        _list_bar_versions, bars_fold_builder)
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    kw = dict(symbol_col="event_type", ts_col="ts", price_col="value",
-              qty_col="value", order_col="event_id", bucket_seconds=300)
-    root = str(tmp_path / "state")
-    fold = bars_fold_builder(root, keep_versions=3, **kw)
-    batches = [ev.filter(F.col("event_id") % 4 == i) for i in range(4)]
-    for i, b in enumerate(batches):
-        fold(b, i)
-    assert _list_bar_versions(root) == [1, 2, 3]
-    fold(batches[3], 3)   # replay of the newest batch
-    assert _list_bar_versions(root) == [1, 2, 3]  # readers keep 1 and 2
-
-
-def test_streaming_sketch_fold_equals_one_shot(spark, tmp_path):
-    """KMV fold across micro-batches is bit-identical to the one-shot
-    sketch of all data (merge == union sketch); MG fold is exact in the
-    distinct<=k regime."""
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.sketch import kmv_sketch, mg_sketch
-    from dexscraper_spark.streaming.pipeline import (
-        heavy_hitters_fold_builder, latest_versioned_state,
-        sketch_fold_builder)
-
-    src = str(tmp_path / "events")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .select("event_id", "event_type", "user_id")
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1) \
-            .write.mode("append").parquet(src)
-
-    def run(fold, ckpt):
-        stream = (spark.readStream
-                  .schema(spark.read.parquet(src).schema)
-                  .option("maxFilesPerTrigger", 1).parquet(src))
-        q = (stream.writeStream.foreachBatch(fold)
-             .option("checkpointLocation", str(tmp_path / ckpt))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    kroot = str(tmp_path / "kmvstate")
-    run(sketch_fold_builder(kroot, cols=["user_id"],
-                            group_by=["event_type"], k=64), "ck1")
-    got = {r.event_type: r.sketch for r in
-           latest_versioned_state(spark, kroot).collect()}
-    want = {r.event_type: r.sketch for r in
-            kmv_sketch(ev, cols=["user_id"], group_by=["event_type"],
-                       k=64).collect()}
-    assert got == want          # bit-identical to one-shot
-
-    mroot = str(tmp_path / "mgstate")
-    run(heavy_hitters_fold_builder(mroot, cols=["event_type"], k=64),
-        "ck2")
-    got_mg = {r.item: r.cnt for r in
-              latest_versioned_state(spark, mroot).collect()}
-    want_mg = {r.item: r.cnt for r in
-               mg_sketch(ev, cols=["event_type"], k=64).collect()}
-    assert got_mg == want_mg    # exact regime: distinct event types <= k
-
-
-def test_streaming_quantile_fold_equals_one_shot(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.sketch import dd_histogram, dd_quantiles
-    from dexscraper_spark.streaming.pipeline import (
-        latest_versioned_state, quantile_fold_builder)
-
-    src = str(tmp_path / "vals")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .select("event_id", "event_type", "value") \
-        .filter(~F.isnan("value"))
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1) \
-            .write.mode("append").parquet(src)
-    root = str(tmp_path / "ddstate")
-    stream = (spark.readStream
-              .schema(spark.read.parquet(src).schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = (stream.writeStream
-         .foreachBatch(quantile_fold_builder(
-             root, value_col="value", group_cols=["event_type"]))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = sorted(map(tuple, latest_versioned_state(spark, root).collect()))
-    want = sorted(map(tuple, dd_histogram(
-        ev, value_col="value", group_cols=["event_type"]).collect()))
-    assert got == want            # exact integer merge: bit-identical
-    # and the folded state answers quantile queries
-    qs = dd_quantiles(latest_versioned_state(spark, root), [0.5],
-                      group_cols=["event_type"]).collect()
-    assert qs and all(r.value is not None for r in qs)
-
-
-def test_fold_store_spec_mismatch_fails_loudly(spark, tmp_path):
-    """Restarting a fold with different sketch parameters over
-    surviving state must raise, not silently merge incompatible
-    summaries."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.streaming.pipeline import sketch_fold_builder
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .select("event_id", "event_type", "user_id")
-    root = str(tmp_path / "state")
-    fold = sketch_fold_builder(root, cols=["user_id"], k=64)
-    fold(ev, 0)
-    fold2 = sketch_fold_builder(root, cols=["user_id"], k=128)
-    with _pytest.raises(RuntimeError, match="spec"):
-        fold2(ev.limit(10), 1)
-    # same params resume fine
-    sketch_fold_builder(root, cols=["user_id"], k=64)(ev.limit(10), 1)
-
-
 def test_streaming_decontamination_filter(spark, tmp_path):
     """The decontamination gram filter composes into a stream: eval
     grams broadcast once, each micro-batch is filtered map-side (the
@@ -663,312 +264,3 @@ def test_streaming_decontamination_filter(spark, tmp_path):
     ids = {r.doc_id for r in landed.select("doc_id").collect()}
     assert probe.doc_id not in ids          # never landed
     assert len(ids) >= 40                   # the rest flowed through
-
-
-@pytest.mark.slow  # r13 fast-lane split (>10 s)
-def test_streaming_ann_maintenance_equals_batch_extend(spark, tmp_path):
-    """Streamed IVF-PQ extends must leave the artifact exactly where
-    one batch ivf_pq_extend_saved of the same vectors would — same
-    ids, same codes, same list assignment — and the live artifact
-    answers ivf_pq_topk identically in both worlds."""
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.quantize import (
-        ivf_pq_encode, ivf_pq_extend_saved, ivf_pq_load, ivf_pq_save,
-        ivf_pq_topk, pq_encode, pq_train)
-    from dexscraper_spark.operators.similarity import ivf_build
-    from dexscraper_spark.streaming.pipeline import (
-        streaming_ann_maintenance)
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet") \
-        .select("vec_id", "embedding")
-    hi = emb.agg(F.max("vec_id")).first()[0]
-    seed = emb.filter(F.col("vec_id") <= hi // 3)
-    rest = emb.filter(F.col("vec_id") > hi // 3)
-
-    def build_seed(path):
-        index = ivf_build(seed, nlist=8, cache=False)
-        books = pq_train(seed, dim=64, m=16, ksub=64, seed=7)
-        codes = ivf_pq_encode(index, books)
-        ivf_pq_save(spark, index, books, codes, path)
-        index.unpersist()
-
-    # world A: stream the rest in file-sized micro-batches
-    a = str(tmp_path / "idx_stream")
-    build_seed(a)
-    src = str(tmp_path / "vecs")
-    for i in range(3):
-        rest.filter(F.col("vec_id") % 3 == i).coalesce(1) \
-            .write.mode("append").parquet(src)
-    stream = (spark.readStream
-              .schema(spark.read.parquet(src).schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = streaming_ann_maintenance(
-        stream, a, checkpoint=str(tmp_path / "ck"), once=True)
-    q.awaitTermination(180)
-
-    # world B: one batch extend of the same vectors
-    b = str(tmp_path / "idx_batch")
-    build_seed(b)
-    ivf_pq_extend_saved(spark, b, rest)
-
-    for sub in ("assigned", "codes"):
-        got = spark.read.parquet(f"{a}/{sub}")
-        want = spark.read.parquet(f"{b}/{sub}")
-        assert got.count() == emb.count()
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-
-    ia, ba, ca = ivf_pq_load(spark, a)
-    ib, bb, cb = ivf_pq_load(spark, b)
-    queries = emb.orderBy("vec_id").limit(4)
-    ra = ivf_pq_topk(emb, ia, ca, queries, ba, k=5, nprobe=8,
-                     expand=4).collect()
-    rb = ivf_pq_topk(emb, ib, cb, queries, bb, k=5, nprobe=8,
-                     expand=4).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert sorted(((r["query_id"], r["rank"], r["neighbor_id"])
-                   for r in ra)) == \
-           sorted(((r["query_id"], r["rank"], r["neighbor_id"])
-                   for r in rb))
-    ia.unpersist(), ib.unpersist()
-
-
-def test_ann_fold_replay_and_within_batch_dupes(spark, tmp_path):
-    """A replayed micro-batch (same batch after a 'crash') must append
-    nothing, and duplicate ids WITHIN one batch collapse to one row —
-    both failure modes would silently corrupt top-k ranks."""
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.quantize import (
-        ivf_pq_encode, ivf_pq_save, pq_train)
-    from dexscraper_spark.operators.similarity import ivf_build
-    from dexscraper_spark.streaming.pipeline import ann_extend_fold_builder
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet") \
-        .select("vec_id", "embedding")
-    hi = emb.agg(F.max("vec_id")).first()[0]
-    seed = emb.filter(F.col("vec_id") <= hi // 2)
-    delta = emb.filter(F.col("vec_id") > hi // 2)
-
-    path = str(tmp_path / "idx")
-    index = ivf_build(seed, nlist=8, cache=False)
-    books = pq_train(seed, dim=64, m=16, ksub=64, seed=7)
-    ivf_pq_save(spark, index, books, ivf_pq_encode(index, books), path)
-    index.unpersist()
-
-    fold = ann_extend_fold_builder(path)
-    doubled = delta.unionByName(delta)      # within-batch dupes
-    fold(doubled, 1)
-    n1 = spark.read.parquet(f"{path}/codes").count()
-    assert n1 == emb.count()                # each id exactly once
-    fold(delta, 1)                          # crash replay of batch 1
-    fold(delta.limit(0), 2)                 # empty batch no-op
-    assert spark.read.parquet(f"{path}/codes").count() == n1
-    assert spark.read.parquet(f"{path}/assigned").count() == emb.count()
-
-
-@pytest.mark.slow  # r13 fast-lane split (>10 s)
-def test_streaming_semantic_dedup_ingest(spark, tmp_path):
-    """The online semantic-dedup filter: exact copies of indexed
-    corpus vectors are dropped, novel vectors survive + get published
-    and appended (so a LATER batch's copy of them is dropped too), the
-    within-batch copy of a novel vector keeps the min id, and a crash
-    replay recomputes identically (no double-append, same published
-    rows)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.quantize import (
-        ivf_pq_encode, ivf_pq_save, pq_train)
-    from dexscraper_spark.operators.similarity import ivf_build
-    from dexscraper_spark.streaming.pipeline import (
-        ann_dedup_extend_fold_builder)
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet") \
-        .select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    index = ivf_build(emb, nlist=8, cache=False)
-    books = pq_train(emb, dim=64, m=16, ksub=64, seed=7)
-    ivf_pq_save(spark, index, books, ivf_pq_encode(index, books), path)
-    index.unpersist()
-    n_codes0 = spark.read.parquet(f"{path}/codes").count()
-
-    v0 = emb.filter(F.col("vec_id") == 3).first()["embedding"]
-    rng = np.random.default_rng(5)
-    novel = [float(x) for x in rng.normal(size=64)]
-    batch1 = spark.createDataFrame(
-        [(1_000_001, list(v0)),       # exact copy of corpus vec 3 → drop
-         (1_000_002, novel),          # novel → survives
-         (1_000_003, novel)],         # within-batch copy → loses to _002
-        "vec_id long, embedding array<float>")
-
-    out = str(tmp_path / "clean")
-    # full probe + generous expand: the test pins dedup LOGIC, not
-    # IVF-PQ recall (that has its own artifact)
-    fold = ann_dedup_extend_fold_builder(path, out, threshold=0.99,
-                                         nprobe=8, expand=16)
-    fold(batch1, 1)
-    pub1 = {r["vec_id"] for r in
-            spark.read.parquet(f"{out}/batch=1").collect()}
-    assert pub1 == {1_000_002}
-    assert spark.read.parquet(f"{path}/codes").count() == n_codes0 + 1
-
-    # crash replay of batch 1: identical publish, no double-append
-    fold(batch1, 1)
-    assert {r["vec_id"] for r in
-            spark.read.parquet(f"{out}/batch=1").collect()} == pub1
-    assert spark.read.parquet(f"{path}/codes").count() == n_codes0 + 1
-
-    # batch 2: a copy of batch 1's survivor must now be dropped too
-    batch2 = spark.createDataFrame(
-        [(1_000_004, novel),
-         (1_000_005, [float(x) for x in rng.normal(size=64)])],
-        "vec_id long, embedding array<float>")
-    fold(batch2, 2)
-    pub2 = {r["vec_id"] for r in
-            spark.read.parquet(f"{out}/batch=2").collect()}
-    assert pub2 == {1_000_005}
-    assert spark.read.parquet(f"{path}/codes").count() == n_codes0 + 2
-
-
-@pytest.mark.slow  # r13 fast-lane split (>10 s)
-def test_streaming_semantic_dedup_ingest_real_stream(spark, tmp_path):
-    """The ingest filter through an actual Structured Streaming query
-    (file source, one file per trigger): corpus copies die, novel
-    vectors flow through in every batch, the index grows only by the
-    survivors, and a checkpointed restart replays nothing."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.quantize import (
-        ivf_pq_encode, ivf_pq_save, pq_train)
-    from dexscraper_spark.operators.similarity import ivf_build
-    from dexscraper_spark.streaming.pipeline import (
-        streaming_semantic_dedup_ingest)
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet") \
-        .select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    index = ivf_build(emb, nlist=8, cache=False)
-    books = pq_train(emb, dim=64, m=16, ksub=64, seed=7)
-    ivf_pq_save(spark, index, books, ivf_pq_encode(index, books), path)
-    index.unpersist()
-    n0 = spark.read.parquet(f"{path}/codes").count()
-
-    v3 = list(emb.filter(F.col("vec_id") == 3).first()["embedding"])
-    v9 = list(emb.filter(F.col("vec_id") == 9).first()["embedding"])
-    rng = np.random.default_rng(11)
-    nov = [[float(x) for x in rng.normal(size=64)] for _ in range(2)]
-    src = str(tmp_path / "in")
-    spark.createDataFrame([(2_000_001, v3), (2_000_002, nov[0])],
-                          "vec_id long, embedding array<float>") \
-        .coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame([(2_000_003, v9), (2_000_004, nov[1])],
-                          "vec_id long, embedding array<float>") \
-        .coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "clean")
-
-    def start():
-        stream = (spark.readStream
-                  .schema(spark.read.parquet(src).schema)
-                  .option("maxFilesPerTrigger", 1).parquet(src))
-        return streaming_semantic_dedup_ingest(
-            stream, path, out, checkpoint=str(tmp_path / "ck"),
-            once=True, threshold=0.99, nprobe=8, expand=16)
-
-    start().awaitTermination(180)
-    pub = {r["vec_id"] for r in spark.read.parquet(out).collect()}
-    assert pub == {2_000_002, 2_000_004}       # copies of 3 and 9 died
-    assert spark.read.parquet(f"{path}/codes").count() == n0 + 2
-    # restart on the same checkpoint: no new batches, nothing replayed
-    start().awaitTermination(180)
-    assert {r["vec_id"] for r in spark.read.parquet(out).collect()} == pub
-    assert spark.read.parquet(f"{path}/codes").count() == n0 + 2
-
-
-@pytest.mark.slow  # r13 fast-lane split (>10 s)
-def test_streaming_ingest_respects_tombstones(spark, tmp_path):
-    """Round-12 seam (VERDICT r11 §wrong-1): after a nightly delta
-    RETRACTS a corpus doc — its codes stay in the shared IVF-PQ index
-    until the next republish, but its id is tombstoned — a streaming
-    near-copy of that doc must SURVIVE ingest: a document the pipeline
-    declared deleted cannot suppress live content as its "duplicate".
-    Replay stays idempotent, a live survivor still dedups later
-    copies, and after a corpus-only republish re-admits the doc
-    (tombstones cleared by construction) the same copy is dropped
-    again."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.quantize import (
-        ivf_pq_encode, ivf_pq_republish, ivf_pq_save, ivf_pq_tombstone,
-        ivf_pq_tombstones, pq_train)
-    from dexscraper_spark.operators.similarity import ivf_build
-    from dexscraper_spark.streaming.pipeline import (
-        ann_dedup_extend_fold_builder)
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet") \
-        .select("vec_id", "embedding")
-    path = str(tmp_path / "idx")
-    index = ivf_build(emb, nlist=8, cache=False)
-    books = pq_train(emb, dim=64, m=16, ksub=64, seed=7)
-    ivf_pq_save(spark, index, books, ivf_pq_encode(index, books), path)
-    index.unpersist()
-    n0 = spark.read.parquet(f"{path}/codes").count()
-
-    v3 = list(emb.filter(F.col("vec_id") == 3).first()["embedding"])
-    rng = np.random.default_rng(5)
-    nov = [[float(x) for x in rng.normal(size=64)] for _ in range(2)]
-
-    # the nightly delta retracted doc 3: codes stay, id tombstoned
-    ivf_pq_tombstone(spark, path,
-                     spark.createDataFrame([(3,)], "vec_id long"))
-
-    out = str(tmp_path / "clean")
-    fold = ann_dedup_extend_fold_builder(path, out, threshold=0.99,
-                                         nprobe=8, expand=16)
-    # batch 1: an exact copy of the DELETED doc 3 must survive
-    batch1 = spark.createDataFrame(
-        [(1_000_001, v3), (1_000_002, nov[0])],
-        "vec_id long, embedding array<float>")
-    fold(batch1, 1)
-    pub1 = {r["vec_id"] for r in
-            spark.read.parquet(f"{out}/batch=1").collect()}
-    assert pub1 == {1_000_001, 1_000_002}
-    assert spark.read.parquet(f"{path}/codes").count() == n0 + 2
-
-    # crash replay: the tombstone still excludes doc 3 and the batch's
-    # own appends are anti-joined out — identical decisions
-    fold(batch1, 1)
-    assert {r["vec_id"] for r in
-            spark.read.parquet(f"{out}/batch=1").collect()} == pub1
-    assert spark.read.parquet(f"{path}/codes").count() == n0 + 2
-
-    # the survivor is LIVE (not tombstoned): a later copy of it dies
-    batch2 = spark.createDataFrame(
-        [(1_000_003, v3), (1_000_004, nov[1])],
-        "vec_id long, embedding array<float>")
-    fold(batch2, 2)
-    pub2 = {r["vec_id"] for r in
-            spark.read.parquet(f"{out}/batch=2").collect()}
-    assert pub2 == {1_000_004}
-
-    # corpus-only republish re-admits doc 3 and clears the tombstone
-    # table by construction (fresh directory, codes rebuilt corpus-
-    # only) — the same copy is now a true duplicate and is dropped
-    assert ivf_pq_republish(spark, emb, path, nlist=8, m=16, ksub=64,
-                            seed=7, k=5, n_queries=16, nprobe=8,
-                            expand=8)["published"]
-    assert ivf_pq_tombstones(spark, path) is None
-    n1 = spark.read.parquet(f"{path}/codes").count()
-    batch3 = spark.createDataFrame(
-        [(1_000_005, v3),
-         (1_000_006, [float(x) for x in rng.normal(size=64)])],
-        "vec_id long, embedding array<float>")
-    fold(batch3, 3)
-    pub3 = {r["vec_id"] for r in
-            spark.read.parquet(f"{out}/batch=3").collect()}
-    assert pub3 == {1_000_006}
-    assert spark.read.parquet(f"{path}/codes").count() == n1 + 1
