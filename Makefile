@@ -2,8 +2,9 @@
 	recall-gate stress smoke
 
 # default lane: pyproject addopts exclude the `slow` marker (multi-second
-# delta/crash-replay/socket/e2e integration tests) so the suite fits the
-# verification budget; `test-all` runs the complete suite.
+# curation-delta, CLI round-trip, ANN recall/republish, socket and
+# streaming integration tests) so the suite fits the verification
+# budget; `test-all` runs the complete suite.
 test:
 	python -m pytest tests/ -q
 

@@ -97,16 +97,15 @@ def apply_filter_flags(cfg, args):
 
 
 def build_parser() -> argparse.ArgumentParser:
-    # allow_abbrev=False: `pipeline --config` detects explicitly-passed
-    # flags from the raw argv tokens, and a prefix abbreviation
-    # (--min-qual) would parse but evade that detection, letting the
-    # config silently override an explicit flag. Exact spellings only.
+    # allow_abbrev=False: exact flag spellings only. A prefix
+    # abbreviation (--min-q) would bind to whichever flag it uniquely
+    # prefixes today and silently re-bind, or start failing, when a
+    # later flag shares that prefix.
     p = argparse.ArgumentParser(prog="dexscraper_spark",
                                 allow_abbrev=False)
     p.add_argument("command",
                    choices=list(PRESETS) + ["stream", "curate", "bars",
-                                            "pack", "zorder", "ann",
-                                            "select", "pipeline"])
+                                            "pack", "zorder", "ann"])
     p.add_argument("--chain", default="solana",
                    choices=[c.value for c in Chain])
     p.add_argument("--timeframe", default="h6", choices=[t.value for t in Timeframe])
@@ -159,19 +158,6 @@ def build_parser() -> argparse.ArgumentParser:
                           "saturate with chance candidates (the store "
                           "and every later --delta must use the same "
                           "tier; mismatches fail loudly)")
-    cur.add_argument("--quality-model", default=None,
-                     help="curate: qc_save directory of a trained "
-                          "quality classifier — docs are filtered with "
-                          "the GPT-3 Pareto keep rule BEFORE curation")
-    cur.add_argument("--quality-alpha", type=float, default=9.0,
-                     help="curate: Pareto alpha for --quality-model "
-                          "(higher = stricter)")
-    cur.add_argument("--eval-docs", default=None,
-                     help="curate: parquet of benchmark/eval documents "
-                          "— training docs sharing a 13-gram are "
-                          "removed BEFORE curation (GPT-3-style "
-                          "decontamination) and logged to "
-                          "<out>/contaminated/")
     bar = p.add_argument_group(
         "bars (OHLC hypertable maintenance: full rebuild or nightly "
         "delta; shares --out/--state/--state-out/--delta with curate)")
@@ -244,85 +230,6 @@ def build_parser() -> argparse.ArgumentParser:
     an.add_argument("--min-recall", type=float, default=None,
                     help="ann republish: absolute recall@k floor for "
                          "publishing")
-    se = p.add_argument_group(
-        "select (DSIR-style importance resampling: sample --n docs from "
-        "--docs proportional to p_target/p_raw, LMs trained on "
-        "--target-docs vs --docs; shares --docs/--out with curate)")
-    se.add_argument("--target-docs", default=None,
-                    help="select: parquet of target-domain documents "
-                         "(doc_id, text) the selection should move "
-                         "toward")
-    se.add_argument("--n", type=int, default=None,
-                    help="select: number of documents to draw "
-                         "(without replacement)")
-    se.add_argument("--lm-order", type=int, default=3,
-                    help="select: n-gram order of both LMs")
-    se.add_argument("--temperature", type=float, default=1.0,
-                    help="select: softmax temperature over log-weights "
-                         "(higher = flatter, closer to uniform)")
-    se.add_argument("--seed", type=int, default=42)
-    pl = p.add_argument_group(
-        "pipeline (ONE-COMMAND training-data run: decontaminate -> "
-        "quality classifier -> DSIR selection -> curate [gates + exact "
-        "+ near dedup + split assignment] -> semantic dedup -> "
-        "sliding-window split -> pack -> training shards; shares "
-        "--docs/--out/--eval-docs/--quality-model/--quality-alpha/"
-        "--min-quality/--min-tokens/--fingerprint-bits/--mode/"
-        "--max-tokens/--num-shards and select's --target-docs/--n/"
-        "--lm-order/--temperature/--seed)")
-    pl.add_argument("--config", default=None,
-                    help="pipeline: JSON file of flag values (keys = "
-                         "flag dests, e.g. min_quality); explicit "
-                         "command-line flags override it")
-    pl.add_argument("--embeddings", default=None,
-                    help="pipeline: parquet with (doc_id, embedding) — "
-                         "enables the semantic-dedup stage (docs "
-                         "without an embedding pass through)")
-    pl.add_argument("--semantic-threshold", type=float, default=0.95,
-                    help="pipeline: cosine threshold for semantic dedup")
-    pl.add_argument("--semantic-nlist", type=int, default=16,
-                    help="pipeline: k-means blocks for semantic dedup")
-    pl.add_argument("--assign-n", type=int, default=1,
-                    help="pipeline: semantic-dedup multi-assignment "
-                         "(2 = cross-cluster recall)")
-    pl.add_argument("--split-max-tokens", type=int, default=None,
-                    help="pipeline: sliding-window size (default: "
-                         "--max-tokens; 0 disables splitting)")
-    pl.add_argument("--stride", type=int, default=None,
-                    help="pipeline: window stride (default: window "
-                         "size = disjoint windows)")
-    pl.add_argument("--train-shards", type=int, default=16,
-                    help="pipeline: output training shard count")
-    pl.add_argument("--max-cluster", type=int, default=None,
-                    help="pipeline: semantic-dedup hot-cluster cap — "
-                         "blocks above this size are hash-split/"
-                         "contracted so one degenerate boilerplate "
-                         "cluster cannot go quadratic")
-    pl.add_argument("--resume", action="store_true",
-                    help="pipeline: skip stages whose _stages/ marker "
-                         "matches the current flags (crash recovery; "
-                         "a changed flag invalidates that stage and "
-                         "everything downstream, loudly)")
-    pl.add_argument("--state-buckets", type=int, default=None,
-                    help="pipeline --delta: hash-bucket count for the "
-                         "layered fingerprint store (default derived "
-                         "from the corpus size; only read on the "
-                         "FIRST delta fold — afterwards the store's "
-                         "recorded layout wins, and a mismatched "
-                         "explicit value is refused)")
-    pl.add_argument("--upsert", action="store_true",
-                    help="pipeline --delta: the slice is a RE-CRAWL — "
-                         "ids the store knows are compared by content "
-                         "hash; unchanged docs no-op, changed docs are "
-                         "retracted under their old content (stale "
-                         "index codes tombstoned sticky) and re-enter "
-                         "the fold under the new; previously-gated-"
-                         "out ids may reappear")
-    pl.add_argument("--break-lease", action="store_true",
-                    help="pipeline --delta: clear a crashed fold's "
-                         "_delta/__fold.lock before starting (folds "
-                         "are serialized per --out; never use while "
-                         "the holder is alive)")
     flt = p.add_argument_group(
         "custom filters (reference cli.py:811-843; override preset bounds)")
     for flag, (field, typ) in FILTER_FLAGS.items():
@@ -341,10 +248,6 @@ def _emit(text: str, output: str) -> None:
 
 def run(argv: list[str] | None = None, spark=None) -> int:
     args = build_parser().parse_args(argv)
-    # raw tokens, so `pipeline --config` can tell an EXPLICIT flag from
-    # a default (comparing values against parser defaults misreads a
-    # flag deliberately set to its default value)
-    args._raw_argv = list(argv) if argv is not None else sys.argv[1:]
     if spark is None:
         from dexscraper_spark.session import get_spark
         spark = get_spark("dexscraper-cli")
@@ -364,12 +267,6 @@ def run(argv: list[str] | None = None, spark=None) -> int:
 
     if args.command == "ann":
         return _run_ann(args, spark)
-
-    if args.command == "select":
-        return _run_select(args, spark)
-
-    if args.command == "pipeline":
-        return _run_pipeline(args, spark)
 
     if args.command == "stream":
         # before the batch source: the stream path generates its own
@@ -574,39 +471,6 @@ def _run_curate(args, spark) -> int:
                          min_tokens=args.min_tokens,
                          fingerprint_bits=args.fingerprint_bits)
     docs = spark.read.parquet(args.docs)
-    n_contaminated = None
-    if args.eval_docs:
-        from dexscraper_spark.operators.decontaminate import decontaminate
-
-        eval_docs = spark.read.parquet(args.eval_docs)
-        docs, removed = decontaminate(docs, eval_docs)
-        # tracked persist, released only by clear_plan_cache: the clean
-        # frame's anti-join embeds this report, so unpersisting it here
-        # would recompute the full-corpus 13-gram scan inside every
-        # downstream curation action
-        from dexscraper_spark.persist import tracked_persist
-        removed = tracked_persist(removed)
-        n_contaminated = removed.count()
-        removed.write.mode("overwrite").parquet(
-            f"{args.out}/contaminated")
-    n_quality_dropped = None
-    if args.quality_model:
-        from dexscraper_spark.operators.classifier import (qc_filter,
-                                                           qc_load)
-        from dexscraper_spark.persist import tracked_persist
-
-        qcm = qc_load(spark, args.quality_model)
-        # persist the UPSTREAM frame before counting: docs may embed the
-        # decontamination 13-gram anti-join, and an unpersisted
-        # docs.count() would re-execute that whole plan a second time
-        # solely for the summary (the double-execution cost the counting
-        # strategy below warns about)
-        docs = tracked_persist(docs)
-        n_docs = docs.count()
-        kept = tracked_persist(
-            qc_filter(docs, qcm, alpha=args.quality_alpha).drop("prob"))
-        n_quality_dropped = n_docs - kept.count()
-        docs = kept
     # Counting strategy for the summary, both branches: persist the
     # result frames and count THOSE, not the written dirs — (a) a
     # zero-survivor partitionBy write leaves no parquet footers, and
@@ -628,10 +492,6 @@ def _run_curate(args, spark) -> int:
             summary = {
                 "mode": "delta",
                 "new_survivors": res.curated_new.count(),
-                **({"contaminated": n_contaminated}
-                   if n_contaminated is not None else {}),
-                **({"quality_dropped": n_quality_dropped}
-                   if n_quality_dropped is not None else {}),
                 "retracted": res.retracted.count(),
                 "state_rows": spark.read.parquet(args.state_out).count(),
             }
@@ -648,10 +508,6 @@ def _run_curate(args, spark) -> int:
             summary = {
                 "mode": "full",
                 "survivors": curated.count(),
-                **({"contaminated": n_contaminated}
-                   if n_contaminated is not None else {}),
-                **({"quality_dropped": n_quality_dropped}
-                   if n_quality_dropped is not None else {}),
                 "state_rows": spark.read.parquet(state_out).count(),
             }
         finally:
@@ -897,10 +753,6 @@ def _run_ann(args, spark) -> int:
         else:
             queries = (spark.read.parquet(args.queries)
                        .select("vec_id", "embedding"))
-            # query_saved folds the artifact's tombstone set (delta-
-            # retracted/demoted ids awaiting the next republish) into
-            # exclude_ids — a nightly-folded index must not serve
-            # deleted documents' neighbors
             out = ivf_pq_query_saved(spark, args.index, queries,
                                      k=args.k, nprobe=args.nprobe)
             lines = [_json.dumps({"query_id": r.query_id,
@@ -908,23 +760,6 @@ def _run_ann(args, spark) -> int:
                                   "cosine": r.cosine, "rank": r.rank})
                      for r in out.collect()]
             _emit("\n".join(lines), args.output)
-            # tombstone pressure (VERDICT r11 §next-6): tell the
-            # operator when the nightly folds' deletions have made
-            # the index mostly dead weight
-            from dexscraper_spark.operators import quantize as _q
-            pres = _q.ivf_pq_tombstone_pressure(spark, args.index)
-            if pres["tombstones"]:
-                print(f"ann: tombstone_fraction={pres['fraction']} "
-                      f"({pres['tombstones']}/{pres['indexed']} "
-                      "indexed ids excluded)", file=sys.stderr)
-                if pres["fraction"] >= _q.TOMBSTONE_REPUBLISH_FRACTION:
-                    print("ann: WARNING tombstone fraction at or above "
-                          f"{_q.TOMBSTONE_REPUBLISH_FRACTION:.0%} — "
-                          "queries drag the dead ids through every "
-                          "exclusion and recall vs the live corpus "
-                          "degrades; run --mode republish on the live "
-                          "corpus to rebuild corpus-only",
-                          file=sys.stderr)
     except Exception as e:
         print(f"ann: {type(e).__name__}: {e}", file=sys.stderr)
         return 2
@@ -973,172 +808,6 @@ def _run_stream(args, spark) -> int:
         except KeyboardInterrupt:
             q.stop()
     _emit("\n".join(out), args.output)
-    return 0
-
-
-
-def _run_select(args, spark) -> int:
-    """DSIR-style data selection:
-
-        select --docs RAW.parquet --target-docs TARGET.parquet \
-               --n 100000 --out OUT
-
-    trains one stupid-backoff LM per side (--lm-order grams), computes
-    per-doc log importance ratios, draws --n docs without replacement
-    via Gumbel top-k (deterministic under --seed, layout-independent),
-    and writes OUT/selected/ (the drawn docs + their logw). Emits one
-    JSON summary line."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.lm import lm_train
-    from dexscraper_spark.operators.sampling import importance_resample
-    from dexscraper_spark.persist import tracked_persist
-
-    if not args.docs or not args.target_docs or not args.out:
-        print("select: --docs, --target-docs and --out are required",
-              file=sys.stderr)
-        return 2
-    if not args.n or args.n < 1:
-        print("select: --n (a positive sample size) is required",
-              file=sys.stderr)
-        return 2
-    docs = spark.read.parquet(args.docs)
-    target_docs = spark.read.parquet(args.target_docs)
-    target_lm = lm_train(target_docs.select("text"), n=args.lm_order)
-    raw_lm = lm_train(docs.select("text"), n=args.lm_order)
-    picked = tracked_persist(importance_resample(
-        docs, target_lm, raw_lm, n=args.n, lm_order=args.lm_order,
-        seed=args.seed, temperature=args.temperature))
-    n_out = picked.count()
-    picked.write.mode("overwrite").parquet(f"{args.out}/selected")
-    stats = picked.agg(F.min("logw").alias("lo"),
-                       F.avg("logw").alias("mean"),
-                       F.max("logw").alias("hi")).first()
-    print(_json.dumps({
-        "mode": "select", "requested": args.n, "selected": n_out,
-        "lm_order": args.lm_order, "temperature": args.temperature,
-        "seed": args.seed,
-        "logw_min": round(stats["lo"], 4) if stats["lo"] is not None
-        else None,
-        "logw_mean": round(stats["mean"], 4) if stats["mean"] is not None
-        else None,
-        "logw_max": round(stats["hi"], 4) if stats["hi"] is not None
-        else None}))
-    return 0
-
-def _run_pipeline(args, spark) -> int:
-    """ONE-COMMAND training-data pipeline — the composition a nightly
-    100 TB run executes, from one flags/JSON config:
-
-        pipeline --docs RAW.parquet --out RUN_DIR \
-                 [--eval-docs EVAL] [--quality-model QCM] \
-                 [--embeddings EMB] [--config run.json]
-
-    Stage order (each stage optional-by-flag except curation):
-      1. decontaminate      (--eval-docs: 13-gram leak removal, audited)
-      2. quality classifier (--quality-model: GPT-3 Pareto keep rule)
-      2b. DSIR selection    (--target-docs + --n: importance-resample
-                             the cleaned pool toward the target domain
-                             BEFORE dedup/curation spends work on docs
-                             that would not be drawn)
-      3. curate_corpus      (gates + exact dedup + near-dup dedup +
-                             train/valid/test split assignment)
-      4. semantic dedup     (--embeddings: SemDeDup over the curated
-                             set; docs without an embedding pass)
-      5. sliding-window split (--split-max-tokens; 0 disables)
-      6. pack               (--mode chunk|bins over the piece tokens,
-                             PER train/valid/test split — a shared
-                             stream would pack eval text into training
-                             sequences)
-      7. write_training_shards (hash-sharded pieces + manifest)
-
-    Outputs under --out: contaminated/ (audit), state/ (fingerprint
-    store), sem_state/ + sem_dropped/ (semantic-dedup state + dropped
-    docs — the delta fold's resurrection source), curated/ (split/lang-
-    partitioned docs), packed/ (pack assignment), shards/ (+ manifest),
-    _stages/ (resume markers + intermediate artifacts),
-    _run_summary.json (the same JSON line the command prints); delta
-    runs add state_versions/ (pointer-versioned state) and
-    _delta/<batch>/ (batch markers, audit, delta-local pack).
-
-    ``--config`` is a JSON object of flag dests (e.g. {"min_quality":
-    0.4, "train_shards": 64}); explicit command-line flags override it.
-
-    Operability (round 10; logic lives in plans/pipeline_driver.py):
-    * ``--resume`` — skip stages whose ``_stages/<name>.json`` marker
-      matches the current flag chain (crash recovery: a crash at stage
-      6 of 7 re-reads five artifacts instead of recomputing them; a
-      changed flag invalidates that stage and everything downstream,
-      loudly).
-    * ``--delta`` — the NIGHTLY twin: fold a new docs slice into a
-      bootstrapped --out at delta cost (curate_delta + semantic fold +
-      partition-level corpus/shard merges + delta-local pack +
-      optional ``--index`` ANN extend + tombstone of retracted/demoted
-      ids so the folded index never serves deleted docs), publishing
-      both state stores behind one reader-atomic version pointer,
-      LAST. Bootstrap + N deltas ≡ the full rebuild row-for-row on
-      corpus, state, shards, manifest (pytest-pinned); crashed delta
-      runs replay to the same result, and an already-folded batch
-      no-ops. Batch identity is CONTENT-based (slice fingerprint +
-      knobs), so overwriting a stable --docs path with new data folds
-      it; knobs are validated against the bootstrap's _knobs.json
-      record and a mismatch is refused naming both values.
-    * Bucketed layered state (round 11): the fingerprint store is
-      hash-bucketed (``--state-buckets``, default 64); each fold
-      rewrites only its touched buckets into the new version dir, the
-      pointer meta maps every bucket to its owning version, and the
-      manifest compacts once it spans more than 6 versions — a small
-      nightly fold writes k≪B bucket partitions instead of the whole
-      corpus-sized store.
-    """
-    import json as _json
-
-    if args.config:
-        try:
-            with open(args.config) as f:
-                conf = _json.load(f)
-        except (OSError, ValueError) as e:
-            print(f"pipeline: cannot read --config: {e}", file=sys.stderr)
-            return 2
-        if not isinstance(conf, dict):
-            print("pipeline: --config must hold a JSON object",
-                  file=sys.stderr)
-            return 2
-        raw = getattr(args, "_raw_argv", []) or []
-
-        def _explicit(dest: str) -> bool:
-            # exact spellings only — the parser runs with
-            # allow_abbrev=False, so every accepted flag token appears
-            # here verbatim
-            opt = "--" + dest.replace("_", "-")
-            return any(tok == opt or tok.startswith(opt + "=")
-                       for tok in raw)
-
-        for key, val in conf.items():
-            if key in ("command", "config") or not hasattr(args, key):
-                print(f"pipeline: unknown config key {key!r}",
-                      file=sys.stderr)
-                return 2
-            # explicit flags win — detected from the raw argv, so a flag
-            # deliberately set to its default value still overrides
-            if not _explicit(key):
-                setattr(args, key, val)
-    if not args.docs or not args.out:
-        print("pipeline: --docs and --out are required", file=sys.stderr)
-        return 2
-    from dexscraper_spark.fsio import PointerMovedError
-    from dexscraper_spark.plans.pipeline_driver import (
-        PipelineArgError, run_delta, run_full)
-
-    try:
-        summary = run_delta(spark, args) if args.delta \
-            else run_full(spark, args)
-    except (PipelineArgError, PointerMovedError) as e:
-        print(f"pipeline: {e}", file=sys.stderr)
-        return 2
-    _emit(_json.dumps(summary), args.output)
     return 0
 
 

@@ -617,7 +617,8 @@ def repetition_ratio(text: Column, n: int = 3) -> Column:
     let-binding): passing the inline ``tokens(text)`` HOF expression
     into ``word_ngrams`` re-evaluates the whole filter+split chain per
     slice and per reference, the O(len²) pitfall word_ngrams' docstring
-    forbids (measured 6.6x at sf0.1 in operators/lm.py)."""
+    forbids (an n-gram LM scorer built that way measured 6.6x slower
+    at sf0.1)."""
     from dexscraper_spark.operators.bpe import word_ngrams
 
     def _ratio(t: Column) -> Column:

@@ -44,34 +44,13 @@ _EOW = "▁"  # end-of-word marker (SentencePiece's visible space)
 _WS = "[ \\t\\n\\x0b\\f\\r]+"
 
 
-def norm_words(text_col: str):
-    """Normalized word array (lowercase, ASCII-whitespace split, no
-    empties) — THE tokenization every corpus-pipeline stage shares
-    (decontamination, LM scoring); two hand-copied variants would
-    silently drift."""
-    return F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), _WS),
-        lambda w: F.length(w) > 0)
-
-
-def raw_words(text_col: str):
-    """:func:`norm_words` WITHOUT case folding — same whitespace class
-    and empty-token handling, for stages that must return text verbatim
-    (split_documents' training windows). Lives here so the two
-    tokenizations cannot drift on the split rule."""
-    return F.filter(
-        F.split(F.trim(F.col(text_col)), _WS),
-        lambda w: F.length(w) > 0)
-
-
 def word_ngrams(words, n: int):
     """Array of space-joined word n-grams over a word-array COLUMN —
-    the one shared gram constructor (LM, decontamination, repetition
-    scoring must agree on what an n-gram is). Carries the two pitfalls
-    once: docs shorter than n yield an EMPTY array (F.sequence(1, 0)
-    DESCENDS in Spark, then slice(start=0) errors), and callers must
-    pass a materialized column, not an inline HOF expression (O(len²)
-    re-evaluation — see operators/lm.py)."""
+    the one gram constructor, so every caller agrees on what an n-gram
+    is. Carries the two pitfalls once: docs shorter than n yield an
+    EMPTY array (F.sequence(1, 0) DESCENDS in Spark, then
+    slice(start=0) errors), and callers must pass a materialized
+    column, not an inline HOF expression (O(len²) re-evaluation)."""
     if n == 1:
         return words
     return F.when(

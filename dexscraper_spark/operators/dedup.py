@@ -19,8 +19,6 @@ everything beyond that is the scale extension the reference cannot do.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -766,14 +764,11 @@ def semantic_dedup_with_state(emb: DataFrame, *, id_col: str = "vec_id",
                               assign_n: int = 1,
                               max_cluster: int | None = None
                               ) -> tuple[DataFrame, DataFrame]:
-    """:func:`semantic_dedup` plus the SEMANTIC-DEDUP STATE — the table
-    a nightly pipeline stores so :func:`semantic_dedup_delta` can fold a
-    new batch without re-pairing the corpus.
+    """:func:`semantic_dedup` plus the SEMANTIC-DEDUP STATE: every input
+    vector labelled with its duplicate group.
 
-    State schema, one row per input vector (LOSERS included — a future
-    vector can join an old semantic cluster only through a loser's
-    embedding, the same reason near-dup losers stay in the curation
-    fingerprint store): ``(id_col, vec_col, component long)`` where
+    State schema, one row per input vector (LOSERS included, as in the
+    curation fingerprint store): ``(id_col, vec_col, component long)`` where
     ``component`` is the vector's duplicate-group label = the group's
     min id (the published survivor); singletons label themselves.
     Both frames are lazy; the pair-graph components are materialized
@@ -835,301 +830,3 @@ def semantic_dedup_with_state(emb: DataFrame, *, id_col: str = "vec_id",
              .withColumn("component",
                          F.coalesce(F.col("component"), F.col(id_col))))
     return survivors, state
-
-
-@dataclass
-class SemDeltaResult:
-    """Output of :func:`semantic_dedup_delta` — the corpus edits a
-    nightly incremental run publishes instead of re-deduping the whole
-    embedding space:
-
-    * ``kept_new`` — ids of NEW vectors that survive semantic dedup.
-    * ``dropped_new`` — ids of new vectors that lost (to the corpus or
-      within the batch); their documents go to the sem-dropped store so
-      a later run can resurrect them.
-    * ``resurrected`` — ids of OLD vectors that were semantic losers
-      but whose group winner has just been removed from the universe
-      (a curation retraction) and now win their (split) group: a full
-      rebuild would publish them, so the delta must add them back.
-    * ``demoted`` — ids of OLD vectors that were published winners but
-      now lose: either a new vector bridged their group with a
-      smaller-id group, or a retraction re-split their group under a
-      smaller surviving min. Remove from the published corpus.
-    * ``state`` — the COMPLETE updated semantic state (same schema as
-      :func:`semantic_dedup_with_state`'s): next delta's input.
-    * ``state_changed_ids`` — ids of OLD state rows whose stored row
-      differs after the fold (relabeled under a merged component, or a
-      member of a retraction-affected group whose label re-resolved) —
-      delta-scoped, the set a layered store must rewrite; every other
-      old row is byte-identical to its stored version. New ids are not
-      included (they are appends, ``state`` ∖ old ids).
-    """
-    kept_new: DataFrame
-    dropped_new: DataFrame
-    resurrected: DataFrame
-    demoted: DataFrame
-    state: DataFrame
-    state_changed_ids: DataFrame
-
-
-def semantic_dedup_delta(new_emb: DataFrame, state: DataFrame, *,
-                         removed_ids: DataFrame | None = None,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding", nlist: int = 16,
-                         threshold: float = 0.95, seed: int = 42,
-                         round_to: int = 6, assign_n: int = 1,
-                         check_ids: bool = True) -> SemDeltaResult:
-    """Incrementally fold a batch of NEW vectors into a stored semantic-
-    dedup state (:func:`semantic_dedup_with_state`) — cost scales with
-    the delta (plus one coarse-assignment pass over the stored vectors
-    and the members of retraction-affected groups), never corpus².
-
-    ``removed_ids``: ids being RETRACTED from the corpus upstream (the
-    curation delta's near-dup retractions). In a full rebuild those
-    docs never reach the semantic stage, so here they leave the search
-    universe, and every multi-member group that loses a member is
-    recomputed exactly from the surviving members' stored embeddings —
-    that recompute is what makes RESURRECTION work: if the retracted
-    doc was the group's published winner, the group's remaining members
-    re-resolve and a new min wins (exactly what the full rebuild would
-    publish).
-
-    Exactness contract (pytest-pinned): provided every id in
-    ``new_emb`` is GREATER than every id in ``state`` (monotone ingest,
-    checked via ``check_ids`` like :func:`~dexscraper_spark.plans.
-    curation.curate_delta`) and every above-threshold pair is
-    co-blocked by the coarse k-means in both runs (SemDeDup's standing
-    block-boundary approximation — the delta blocks new-vs-universe
-    with a deterministic k-means over universe ∪ delta, the rebuild
-    over its own corpus; geometrically tight groups land identically),
-
-        semantic_dedup(old ∪ new − removed)
-            ≡ (winners(state) − removed − demoted) ∪ resurrected
-              ∪ kept_new
-
-    row-for-row. Why it decomposes, stage by stage:
-    * new-touching pairs are found by probing the universe with the
-      delta (``probe_col`` kernel — |delta| × |block| flops);
-    * old endpoints NOT in a retraction-affected group contract to
-      their stored ``component`` label (quotient-graph argument, same
-      as curate_delta): old-old connectivity is already folded into
-      the labels;
-    * members of retraction-affected groups stay RAW nodes with their
-      within-group pairs recomputed exactly (component-blocked, cost
-      bounded by affected-group sizes²);
-    * min-id over each merged/split component then reproduces the full
-      rebuild's winner because ids are monotone: a new vector can
-      never displace an old winner, only bridge old groups (demotion)
-      or lose (drop).
-
-    ``assign_n`` (r11, unlocking ``pipeline --delta`` for assign_n=2
-    bootstraps): every (universe ∪ delta) vector is coarse-assigned to
-    its n nearest lists — the same cross-cluster-recall knob as
-    :func:`semantic_dedup_with_state` — and the probe kernel runs per
-    list, ~assign_n²× the probe flops. The co-blocking proviso
-    weakens the same way it does in the rebuild: a boundary pair is
-    caught if ANY of the n lists is shared.
-    """
-    from dexscraper_spark.operators.similarity import (
-        _ivf_assign, exact_cosine_pairs_blocked,
-        ivf_build_deterministic)
-    from dexscraper_spark.persist import materialize_artifact
-
-    if assign_n < 1:
-        raise ValueError(f"assign_n must be >= 1, got {assign_n}")
-
-    if check_ids:
-        lo_new = new_emb.agg(F.min(F.col(id_col))).first()[0]
-        hi_old = state.agg(F.max(F.col(id_col))).first()[0]
-        if lo_new is not None and hi_old is not None and lo_new <= hi_old:
-            raise ValueError(
-                f"semantic_dedup_delta: append-only precondition "
-                f"violated — delta min {id_col}={lo_new} <= stored max "
-                f"{id_col}={hi_old}; the min-id-survivor decomposition "
-                f"is only exact for monotone ids")
-
-    # 0) the universe a full rebuild would dedup: stored state minus
-    # upstream retractions
-    if removed_ids is not None:
-        removed_ids = removed_ids.select(F.col(id_col))
-        removed_present = tracked_persist(
-            state.join(removed_ids, id_col, "left_semi"))
-        universe = state.join(removed_ids, id_col, "left_anti")
-    else:
-        removed_present = None
-        universe = state
-    universe = tracked_persist(universe)
-
-    # 1) retraction-affected groups: any group that LOSES a member must
-    # re-resolve from its survivors (exact within-group pairs — the
-    # stored label already proves they were one group; recomputing the
-    # pair graph over survivors finds the post-removal split, if any)
-    if removed_present is not None:
-        affected = removed_present.select("component").distinct()
-        members = tracked_persist(
-            universe.join(affected, "component", "left_semi"))
-        int_pairs = exact_cosine_pairs_blocked(
-            members.select(F.col(id_col), F.col(vec_col),
-                           F.col("component")),
-            id_col=id_col, vec_col=vec_col, block_col="component",
-            threshold=threshold, round_to=round_to)
-    else:
-        members = None
-        int_pairs = None
-
-    # 2) new-touching pairs: deterministic coarse blocks over
-    # (universe ∪ delta), probe = the delta rows only
-    allv = universe.select(F.col(id_col), F.col(vec_col)).unionByName(
-        new_emb.select(F.col(id_col), F.col(vec_col)))
-    new_ids = new_emb.select(F.col(id_col))
-    # cache only when the index's own top-1 assignment is what we block
-    # on (same rationale as semantic_dedup_with_state)
-    index = ivf_build_deterministic(allv, id_col=id_col, vec_col=vec_col,
-                                    nlist=nlist, seed=seed,
-                                    cache=(assign_n == 1))
-    try:
-        if assign_n == 1:
-            assigned = index.assigned
-            verify = None
-        else:
-            # one row per (vector, list) for the n nearest lists; the
-            # exact verify needs the unique-id frame (a duplicate-id
-            # phase-2 join would multiply candidate rows)
-            assigned = _ivf_assign(index, allv, n=assign_n)
-            verify = allv
-        blocked = (assigned
-                   .join(new_ids.withColumn("__probe", F.lit(True)),
-                         id_col, "left")
-                   .withColumn("__probe",
-                               F.coalesce(F.col("__probe"),
-                                          F.lit(False)))
-                   .select(id_col, vec_col, "__list", "__probe"))
-        new_pairs = exact_cosine_pairs_blocked(
-            blocked, id_col=id_col, vec_col=vec_col, block_col="__list",
-            threshold=threshold, round_to=round_to, probe_col="__probe",
-            verify_against=verify)
-
-        # 3) contract old endpoints to their stored labels — EXCEPT
-        # members of affected groups, whose labels are stale (their
-        # group is being re-resolved); they stay raw, as do new ids
-        unaffected = universe
-        if members is not None:
-            unaffected = universe.join(members.select(id_col), id_col,
-                                       "left_anti")
-        labels = unaffected.select(F.col(id_col).alias("__n"),
-                                   F.col("component").alias("__c"))
-        contracted = (
-            new_pairs
-            .join(labels.withColumnRenamed("__n", "id_a")
-                        .withColumnRenamed("__c", "__ca"), "id_a", "left")
-            .join(labels.withColumnRenamed("__n", "id_b")
-                        .withColumnRenamed("__c", "__cb"), "id_b", "left")
-            .select(F.coalesce(F.col("__ca"), F.col("id_a")).alias("ea"),
-                    F.coalesce(F.col("__cb"), F.col("id_b")).alias("eb"))
-            .filter(F.col("ea") != F.col("eb"))
-            .select(F.least("ea", "eb").alias("id_a"),
-                    F.greatest("ea", "eb").alias("id_b"))
-            .distinct()
-        )
-        graph = contracted if int_pairs is None else contracted.unionByName(
-            int_pairs.select("id_a", "id_b"))
-        # materialize: comps is answer-sized but its plan reads the
-        # coarse-assignment artifact released below
-        comps = materialize_artifact(
-            dedup_components(graph, id_a="id_a", id_b="id_b"),
-            "semdelta_comps")
-    finally:
-        index.unpersist()
-    node_comp = comps.withColumnRenamed("node", id_col)
-
-    # 4a) new vectors: survive iff unmatched or winning their component
-    new_fate = new_emb.select(id_col).join(node_comp, id_col, "left")
-    kept_new = (new_fate.filter(F.col("component").isNull()
-                                | (F.col("component") == F.col(id_col)))
-                .select(id_col))
-    dropped_new = (new_fate.filter(F.col("component").isNotNull()
-                                   & (F.col("component") != F.col(id_col)))
-                   .select(id_col))
-
-    # 4b) unaffected old labels merged under a smaller node: the stored
-    # winner is demoted, and every state row under it relabels
-    old_labels = labels.select(F.col("__c").alias("node")).distinct()
-    relabeled = (comps.join(old_labels, "node", "left_semi")
-                 .filter(F.col("component") != F.col("node"))
-                 .select(F.col("node").alias("old_label"),
-                         F.col("component").alias("new_label")))
-    demoted_labels = relabeled.select(F.col("old_label").alias(id_col))
-
-    # 4c) affected-group members: published-before = won the stored
-    # label; published-now = wins the recomputed component (or ends a
-    # singleton). Resurrect on loser→winner, demote on winner→loser.
-    if members is not None:
-        member_fate = (
-            members.select(F.col(id_col),
-                           F.col("component").alias("__old"))
-            .join(node_comp, id_col, "left")
-            .withColumn("__new", F.coalesce(F.col("component"),
-                                            F.col(id_col)))
-        )
-        resurrected = (member_fate
-                       .filter((F.col("__new") == F.col(id_col))
-                               & (F.col("__old") != F.col(id_col)))
-                       .select(id_col))
-        demoted_members = (member_fate
-                           .filter((F.col("__new") != F.col(id_col))
-                                   & (F.col("__old") == F.col(id_col)))
-                           .select(id_col))
-        demoted = demoted_labels.unionByName(demoted_members).distinct()
-        members_state = (member_fate
-                         .join(members.select(id_col, vec_col), id_col)
-                         .select(F.col(id_col), F.col(vec_col),
-                                 F.col("__new").alias("component")))
-        unaffected_state = unaffected
-    else:
-        resurrected = new_emb.sparkSession.createDataFrame(
-            [], universe.select(id_col).schema)
-        demoted = demoted_labels
-        members_state = None
-        unaffected_state = universe
-
-    # 5) updated state: unaffected rows with merged labels rewritten,
-    # re-resolved affected members, and the delta rows appended
-    lbl = relabeled.withColumnRenamed("old_label", "component")
-    rewritten = (
-        unaffected_state.join(lbl, "component", "left")
-        .withColumn("component", F.coalesce(F.col("new_label"),
-                                            F.col("component")))
-        .select(F.col(id_col), F.col(vec_col), F.col("component"))
-    )
-    state_new_rows = (
-        new_emb.select(F.col(id_col), F.col(vec_col))
-        .join(node_comp, id_col, "left")
-        .withColumn("component", F.coalesce(F.col("component"),
-                                            F.col(id_col)))
-    )
-    state_out = rewritten.unionByName(state_new_rows)
-    if members_state is not None:
-        state_out = state_out.unionByName(members_state)
-
-    # changed OLD rows, delta-scoped (see SemDeltaResult): relabeled
-    # unaffected rows + affected-group members whose re-resolved label
-    # DIFFERS from the stored one (most members of a group that loses
-    # one member re-resolve to the same component — their stored rows
-    # are byte-identical and marking them would make one retraction in
-    # a big group rewrite nearly every bucket) + removed rows (their
-    # stored row must DISAPPEAR — a layered store rewrites their
-    # bucket without them)
-    changed = unaffected_state.join(lbl.select("component"),
-                                    "component", "left_semi") \
-        .select(F.col(id_col))
-    if members is not None:
-        changed = changed.unionByName(
-            member_fate.filter(F.col("__new") != F.col("__old"))
-            .select(F.col(id_col)))
-    if removed_present is not None:
-        changed = changed.unionByName(
-            removed_present.select(F.col(id_col)))
-    return SemDeltaResult(kept_new=kept_new, dropped_new=dropped_new,
-                          resurrected=resurrected, demoted=demoted,
-                          state=state_out,
-                          state_changed_ids=changed.distinct())

@@ -209,74 +209,3 @@ def pack_greedy(docs: DataFrame, *, id_col: str = "doc_id",
         })
 
     return sharded.groupBy("shard").applyInPandas(pack, schema=schema)
-
-
-def split_documents(docs: DataFrame, *, max_tokens: int,
-                    stride: int | None = None, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    min_tail: int = 1) -> DataFrame:
-    """Sliding-window document splitting — the standard long-document
-    preprocessing for fixed-context training/embedding (max length +
-    overlap stride): each doc becomes ⌈(n − max)/stride⌉ + 1 windows of
-    ≤ ``max_tokens`` whitespace tokens, consecutive windows overlapping
-    by ``max_tokens − stride`` tokens. Returns
-    (id_col, window_id, window_start, n_window_tokens, window_text).
-
-    Pure map-side HOFs — the word array binds to a lambda variable
-    once per row (the repetition_ratio lesson), windows come from one
-    ``sequence`` + ``slice`` transform, and the per-window explode is
-    the only row-count change: no shuffle, no UDF, trivially
-    partition-parallel at any corpus size.
-
-    ``stride`` defaults to ``max_tokens`` (disjoint windows).
-    ``min_tail``: a final window shorter than this is dropped UNLESS it
-    is the doc's only window (short docs pass through whole) — the
-    standard guard against training on tiny fragments. Docs with NULL
-    text produce no rows.
-    """
-    from dexscraper_spark.operators.bpe import raw_words as _raw
-
-    if max_tokens < 1:
-        raise ValueError(f"max_tokens must be >= 1, got {max_tokens}")
-    stride = max_tokens if stride is None else stride
-    if not 1 <= stride <= max_tokens:
-        raise ValueError(
-            f"stride must be in [1, max_tokens], got {stride} "
-            f"(> max_tokens would skip tokens)")
-    if not 1 <= min_tail <= max_tokens:
-        raise ValueError(
-            f"min_tail must be in [1, max_tokens], got {min_tail} "
-            f"(larger would silently drop every non-first window)")
-
-    # verbatim tokens — norm_words lowercases, which destroys training
-    # text; raw_words (bpe.py) shares the whitespace/empty rules
-    raw_words = _raw(text_col)
-
-    def windows(w):
-        n = F.size(w)
-        # window starts: 1, 1+stride, ... while start <= n - max_tokens,
-        # plus the final partial window when anything remains
-        n_full = F.greatest(
-            F.floor((n - F.lit(max_tokens) + F.lit(stride) - 1)
-                    / F.lit(stride)).cast("int") + 1, F.lit(1))
-        return F.filter(
-            F.transform(
-                F.sequence(F.lit(0), n_full - 1),
-                lambda i: F.struct(
-                    (i * stride + 1).alias("start"),
-                    F.slice(w, i * stride + 1, max_tokens)
-                    .alias("toks"))),
-            lambda s: (F.size(s["toks"]) > 0)
-            & ((F.size(s["toks"]) >= min_tail) | (s["start"] == 1)))
-
-    exploded = (docs
-                .select(F.col(id_col),
-                        F.posexplode(
-                            F.transform(F.array(raw_words),
-                                        windows)[0])
-                        .alias("window_id", "__w")))
-    return exploded.select(
-        F.col(id_col), "window_id",
-        (F.col("__w.start") - 1).alias("window_start"),
-        F.size("__w.toks").alias("n_window_tokens"),
-        F.array_join("__w.toks", " ").alias("window_text"))

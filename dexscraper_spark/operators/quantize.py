@@ -592,214 +592,6 @@ def _extend_saved_locked(spark, path: str, new_vectors: DataFrame, *,
     return {"appended": n_assigned, "indexed": total}
 
 
-def ivf_pq_tombstone(spark, path: str, ids: DataFrame, *,
-                     id_col: str = "vec_id",
-                     clear_ids: DataFrame | None = None,
-                     sticky_ids: DataFrame | None = None) -> dict:
-    """Mark ids DELETED in a saved ivf_pq artifact without touching its
-    codes (VERDICT r10 §missing-3): the nightly delta fold appends new
-    vectors cheaply (:func:`ivf_pq_extend_saved`) but retracted/demoted
-    docs' codes stay in the list files until the next recall-gated
-    republish — until then, queries must not serve them. The tombstone
-    set is that bridge: a tiny ``(id_col)`` parquet under the LIVE
-    artifact directory, folded into every saved-artifact query's
-    ``exclude_ids`` by :func:`ivf_pq_query_saved`. A republish clears
-    it by construction — the rebuild writes a fresh version (or swap)
-    directory with no tombstone table, and the rebuilt index is
-    corpus-only so the deleted codes are gone too.
-
-    Append-idempotent (already-tombstoned ids are not re-written) and
-    serialized under the artifact's maintenance lease — a republish
-    swapping the directory mid-write would otherwise lose the marks.
-    A tombstone outranks a later same-id extend until the republish:
-    the extend's anti-join sees the id's code and skips it, and the
-    query keeps excluding it (doc ids are monotone in the pipeline, so
-    this only arises from manual misuse).
-
-    ``clear_ids`` UN-tombstones ids in the same leased operation — the
-    resurrection path (ADVICE r11): a doc demoted in fold N and
-    resurrected in fold N+1 is re-published to the corpus, and its
-    still-live index code must become servable again without waiting
-    for the next republish. Clearing rewrites the (answer-sized)
-    table via a sibling-dir swap; a reader racing the swap can see the
-    table absent for a moment and transiently under-exclude — it errs
-    toward serving a deleted doc for milliseconds, never toward
-    excluding a live one.
-
-    ``sticky_ids`` are tombstoned STICKY: immune to every later
-    ``clear_ids`` (a clear that hits one is ignored for it), removed
-    only by a republish's corpus-only rebuild. This is the upsert
-    (re-crawl) contract: a changed doc's indexed code encodes its OLD
-    text — unlike a demotion's (still-correct) code it must NEVER be
-    re-exposed, even if the doc is later demoted and then resurrected
-    (the resurrection clear would otherwise serve stale geometry as a
-    dedup witness). Ids in both ``ids`` and ``sticky_ids`` end up
-    sticky; re-tombstoning an existing plain id as sticky upgrades
-    it."""
-    return _with_maintenance_lease(
-        spark, path, "ivf_pq_tombstone",
-        lambda: _tombstone_locked(spark, path, ids, id_col=id_col,
-                                  clear_ids=clear_ids,
-                                  sticky_ids=sticky_ids))
-
-
-def _tombstone_locked(spark, path: str, ids: DataFrame, *,
-                      id_col: str, clear_ids: DataFrame | None = None,
-                      sticky_ids: DataFrame | None = None) -> dict:
-    from dexscraper_spark import fsio
-
-    path = fsio.pointer_resolve(spark, path)
-    dst = fsio.join(path, "tombstones")
-    tmp = f"{dst}__rewrite"
-    # crash recovery: the swap below deletes dst only AFTER tmp is
-    # fully written, so dst-missing + tmp-present can only mean a
-    # crash between the delete and the rename — finish the rename.
-    # (ivf_pq_tombstones falls back to reading tmp in that window.)
-    if not fsio.exists(spark, dst) and fsio.exists(spark, tmp):
-        fsio.rename(spark, tmp, dst)
-
-    # Only the per-fold DELTAS (add/clear/sticky — answer-sized by
-    # contract) are collected to the driver; the CUMULATIVE table
-    # stays distributed: it legitimately grows toward 20% of the
-    # index between republishes, which at the documented design point
-    # is far beyond driver memory. Existing marks for the delta ids
-    # are probed with one id-filtered scan (≤ |delta| rows back).
-    add = {r[0] for r in ids.select(id_col).distinct().collect()}
-    sticky = set()
-    if sticky_ids is not None:
-        sticky = {r[0] for r in
-                  sticky_ids.select(id_col).distinct().collect()}
-    drop: set = set()
-    if clear_ids is not None:
-        drop = {r[0] for r in
-                clear_ids.select(id_col).distinct().collect()}
-    # precedence: sticky > clear > plain add. A clear only removes
-    # PLAIN marks — sticky ones (stale-content codes) stay excluded.
-    add = (add - drop) | sticky
-    touched = sorted(add | drop)
-
-    schema = f"{id_col} long, sticky boolean"
-    table = None
-    had_sticky_col = False
-    n_total = n_sticky = 0
-    hits: dict = {}           # delta id -> stored stickiness
-    if fsio.exists(spark, dst):
-        tdf = spark.read.parquet(dst)
-        had_sticky_col = "sticky" in tdf.columns
-        if not had_sticky_col:
-            # pre-sticky table (r11 format): every mark is plain
-            tdf = tdf.withColumn("sticky", F.lit(False))
-        table = tdf.select(F.col(id_col), F.col("sticky"))
-        tot = table.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("sticky").cast("int")).alias("s")).first()
-        n_total, n_sticky = int(tot["n"]), int(tot["s"] or 0)
-        if touched:
-            hits = {r[0]: bool(r[1]) for r in
-                    table.filter(F.col(id_col).isin(touched))
-                    .collect()}
-    drop = {i for i in drop if not hits.get(i, False)} - sticky
-    new_ids = sorted(add - set(hits))
-    n_new = len(new_ids)
-    n_cleared = len(drop & set(hits))
-    upgraded = sorted(i for i in sticky if i in hits and not hits[i])
-    new_total = n_total + n_new - n_cleared
-    new_sticky = n_sticky + len(upgraded) \
-        + sum(1 for i in new_ids if i in sticky)
-
-    rewrite = bool(n_cleared or upgraded or
-                   (n_new and table is not None
-                    and not had_sticky_col))
-    if rewrite:
-        # rewrite via sibling swap — never append into a directory
-        # while a plan over it could recompute (ADVICE r11 window).
-        # The tmp dir is fully written BEFORE dst is touched, so a
-        # crash either leaves dst intact (tmp partial, rewritten next
-        # time) or leaves the COMPLETE tmp for the recovery rename
-        # above. An all-cleared table stays DELETED (absent == no
-        # tombstones). Also the upgrade path for pre-sticky tables:
-        # appending two-column rows into a one-column parquet dir
-        # would leave readers schema-dependent on file order. All
-        # edits are distributed (filter/when over the scan) — only
-        # the answer-sized new rows originate on the driver.
-        out_tbl = table
-        cleared = sorted(drop & set(hits))
-        if cleared:
-            out_tbl = out_tbl.filter(~F.col(id_col).isin(cleared))
-        if upgraded:
-            out_tbl = out_tbl.withColumn(
-                "sticky",
-                F.when(F.col(id_col).isin(upgraded), F.lit(True))
-                .otherwise(F.col("sticky")))
-        if new_ids:
-            out_tbl = out_tbl.unionByName(spark.createDataFrame(
-                [(int(i), i in sticky) for i in new_ids], schema))
-        fsio.delete(spark, tmp)
-        if new_total:
-            out_tbl.write.mode("overwrite").parquet(tmp)
-        fsio.delete(spark, dst)
-        if new_total:
-            fsio.rename(spark, tmp, dst)
-    elif n_new:
-        spark.createDataFrame(
-            [(int(i), i in sticky) for i in new_ids],
-            schema).coalesce(1) \
-            .write.mode("append").parquet(dst)
-    return {"tombstoned": n_new, "cleared": n_cleared,
-            "sticky": new_sticky, "total": new_total}
-
-
-def ivf_pq_tombstones(spark, path: str, *,
-                      id_col: str = "vec_id") -> DataFrame | None:
-    """The artifact's live tombstone set as an ``(id_col)`` frame, or
-    ``None`` when it has none. Resolves a version pointer first; pass
-    an already-resolved directory to pin one version.
-
-    When the live table is mid-swap (a rewriting maintenance op
-    deleted it but has not renamed the fully-written replacement in
-    yet — or crashed in that gap), the replacement sibling is read
-    instead: dst-missing + sibling-present implies the sibling is
-    complete (the swap only deletes dst after the sibling's write
-    finishes), so the reader never under-excludes across the window."""
-    from dexscraper_spark import fsio
-
-    path = fsio.pointer_resolve(spark, path)
-    dst = fsio.join(path, "tombstones")
-    if not fsio.exists(spark, dst):
-        tmp = f"{dst}__rewrite"
-        if not fsio.exists(spark, tmp):
-            return None
-        dst = tmp
-    return spark.read.parquet(dst).select(id_col)
-
-
-# above this share of tombstoned codes the artifact is mostly dead
-# weight: every query drags the deleted ids through its exclusion
-# anti-join, k×expand candidate windows fill with excluded codes, and
-# recall vs the LIVE corpus quietly degrades — time to republish
-# (rebuild corpus-only clears the set by construction)
-TOMBSTONE_REPUBLISH_FRACTION = 0.2
-
-
-def ivf_pq_tombstone_pressure(spark, path: str, *,
-                              id_col: str = "vec_id") -> dict:
-    """{tombstones, indexed, fraction} for a saved artifact — the
-    operator signal for WHEN to republish (VERDICT r11 §next-6). The
-    tombstone set only grows between republishes; callers print a
-    republish recommendation once ``fraction`` crosses
-    :data:`TOMBSTONE_REPUBLISH_FRACTION`. One pointer resolve, two
-    answer-sized/column-pruned counts."""
-    from dexscraper_spark import fsio
-
-    resolved = fsio.pointer_resolve(spark, path)
-    tomb = ivf_pq_tombstones(spark, resolved, id_col=id_col)
-    n_tomb = tomb.count() if tomb is not None else 0
-    n_codes = spark.read.parquet(
-        fsio.join(resolved, "codes")).select(id_col).count()
-    return {"tombstones": n_tomb, "indexed": n_codes,
-            "fraction": round(n_tomb / max(n_codes, 1), 4)}
-
-
 def ivf_pq_query_saved(spark, path: str, queries: DataFrame, *,
                        corpus: DataFrame | None = None,
                        k: int = 10, nprobe: int = 4, expand: int = 4,
@@ -809,9 +601,8 @@ def ivf_pq_query_saved(spark, path: str, queries: DataFrame, *,
                        exclude_ids: DataFrame | None = None
                        ) -> DataFrame:
     """One-stop search against a SAVED artifact: resolve the pointer
-    ONCE (so index, codes and tombstones all come from the same
-    version even if a republish flips mid-call), fold the tombstone
-    set into ``exclude_ids``, and run :func:`ivf_pq_topk`. ``corpus``
+    ONCE (so index and codes come from the same version even if a
+    republish flips mid-call) and run :func:`ivf_pq_topk`. ``corpus``
     (for the exact rerank) defaults to the artifact's own assigned
     vectors."""
     from dexscraper_spark import fsio
@@ -819,16 +610,11 @@ def ivf_pq_query_saved(spark, path: str, queries: DataFrame, *,
     resolved = fsio.pointer_resolve(spark, path)
     index, books, codes = ivf_pq_load(spark, resolved, id_col=id_col,
                                       vec_col=vec_col)
-    tomb = ivf_pq_tombstones(spark, resolved, id_col=id_col)
-    excl = exclude_ids
-    if tomb is not None:
-        excl = tomb if excl is None else \
-            excl.select(id_col).unionByName(tomb).distinct()
     if corpus is None:
         corpus = index.assigned
     return ivf_pq_topk(corpus, index, codes, queries, books, k=k,
                        nprobe=nprobe, expand=expand, round_to=round_to,
-                       exclude_ids=excl)
+                       exclude_ids=exclude_ids)
 
 
 def ivf_pq_recover(spark, path: str, *,
@@ -1164,17 +950,9 @@ def _republish_locked(spark, corpus: DataFrame, path: str, *,
             if has_old:
                 oidx, obooks, ocodes = ivf_pq_load(
                     spark, path, id_col=id_col, vec_col=vec_col)
-                # measure the old artifact the way queriers actually
-                # see it: tombstoned ids (delta-retracted, awaiting
-                # this republish) are excluded by ivf_pq_query_saved,
-                # so they must not count as old-index answers here —
-                # an un-excluded deleted id deflates recall_old and
-                # makes the gate spuriously easy
                 recall_old = _recall_vs(exact, ivf_pq_topk(
                     vecs, oidx, ocodes, queries, obooks, k=k,
-                    nprobe=nprobe, expand=expand,
-                    exclude_ids=ivf_pq_tombstones(
-                        spark, path, id_col=id_col)), k)
+                    nprobe=nprobe, expand=expand), k)
 
             if min_recall is not None and recall_new < min_recall:
                 return {"published": False, "recall_new": recall_new,

@@ -34,19 +34,6 @@ def _rank_hash(key_col: str, seed: int):
         .bitwiseXOR(F.lit(-(1 << 63)))
 
 
-def sample_deterministic(df: DataFrame, fraction: float, *,
-                         key_col: str, seed: int = 42) -> DataFrame:
-    """Partitioning-independent Bernoulli(fraction) sample: keep rows
-    whose normalized hash falls below the fraction. Same rows on every
-    layout; complementary seeds give disjoint reproducible splits."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction {fraction} outside [0, 1]")
-    if fraction >= 1.0:
-        return df  # bound would overflow int64; the sample is everything
-    bound = int(fraction * float(1 << 64)) - (1 << 63)
-    return df.filter(_rank_hash(key_col, seed) < F.lit(bound))
-
-
 def stratified_sample_exact(df: DataFrame, *, strata_cols: list[str],
                             n_per_stratum: int, key_col: str,
                             seed: int = 42,
@@ -136,85 +123,3 @@ def stratified_sample_exact(df: DataFrame, *, strata_cols: list[str],
         f"stratified_sample_exact: shortfall after {max_rounds} "
         "doublings — statistically impossible unless key_col collides "
         "heavily; use a higher-cardinality key")
-
-
-def gumbel_topk_sample(df: DataFrame, *, weight_col: str, n: int,
-                       key_col: str, seed: int = 42,
-                       temperature: float = 1.0) -> DataFrame:
-    """Weighted sampling WITHOUT replacement of ``n`` rows via the
-    Gumbel-top-k trick (Kool et al., ICML 2019 — public): rank by
-    ``logw/temperature + Gumbel noise`` and take the top n; the result
-    is distributed exactly as sequential sampling proportional to
-    ``softmax(logw/temperature)`` without replacement.
-
-    ``weight_col`` is a LOG weight (any real; NULL rows are excluded —
-    no weight means no chance, and NULL would otherwise sort
-    unpredictably). Noise is derived from ``xxhash64(key_col, seed)``,
-    so the sample is deterministic and partitioning-independent, same
-    contract as :func:`sample_deterministic`. The plan is
-    TakeOrderedAndProject (orderBy + limit) — per-partition heaps of n,
-    no global sort, no single-reducer ranking window.
-    """
-    if n < 1:
-        raise ValueError(f"n must be >= 1, got {n}")
-    if temperature <= 0:
-        raise ValueError(f"temperature must be > 0, got {temperature}")
-    # uniform in (0,1) strictly: 53 mantissa-exact bits from the hash,
-    # +1 / +2 keeps both endpoints out so log(-log(u)) never hits ±inf
-    h53 = F.shiftrightunsigned(
-        F.xxhash64(F.col(key_col), F.lit(seed)), 11)
-    u = (h53.cast("double") + F.lit(1.0)) / F.lit(float((1 << 53) + 2))
-    gumbel = -F.log(-F.log(u))
-    key = F.col(weight_col).cast("double") / F.lit(float(temperature)) \
-        + gumbel
-    return (df.filter(F.col(weight_col).isNotNull())
-            .orderBy(key.desc(), F.col(key_col).asc())
-            .limit(n))
-
-
-def importance_resample(docs: DataFrame, target_lm: DataFrame,
-                        raw_lm: DataFrame, *, n: int,
-                        lm_order: int = 3, id_col: str = "doc_id",
-                        text_col: str = "text", seed: int = 42,
-                        temperature: float = 1.0,
-                        alpha: float = 0.4) -> DataFrame:
-    """DSIR-shaped data selection (Xie et al. 2023, arXiv:2302.03169 —
-    public): sample ``n`` documents from a raw corpus with probability
-    proportional to the importance ratio p_target(x)/p_raw(x), so the
-    selected set's distribution moves toward the target domain.
-
-    This engine's variant scores both sides with the stupid-backoff
-    n-gram LM (:func:`~dexscraper_spark.operators.lm.lm_score` — the
-    same estimator family as the paper's hashed-ngram models): train
-    ``target_lm`` on a sample of the target domain and ``raw_lm`` on a
-    sample of the raw corpus with
-    :func:`~dexscraper_spark.operators.lm.lm_train`, then
-
-        log w(x) = (logp_target/token − logp_raw/token) · n_tokens
-
-    (the total-document log ratio), and draw without replacement via
-    :func:`gumbel_topk_sample`. Scale shape: two lm_score passes (each
-    ONE explode + ONE equi-join, SCALE.md), a doc-keyed join of the two
-    score frames, and a TakeOrderedAndProject — nothing quadratic,
-    nothing driver-side. Returns the selected docs with ``logw``.
-
-    Docs that score NULL under either LM (empty after normalization)
-    are excluded — they carry no evidence for either side.
-    """
-    from dexscraper_spark.operators.lm import lm_score
-
-    t = lm_score(docs, target_lm, n=lm_order, id_col=id_col,
-                 text_col=text_col, alpha=alpha) \
-        .select(F.col(id_col), F.col("n_tokens").alias("__nt"),
-                F.col("logp_per_token").alias("__lp_t"))
-    r = lm_score(docs, raw_lm, n=lm_order, id_col=id_col,
-                 text_col=text_col, alpha=alpha) \
-        .select(F.col(id_col), F.col("logp_per_token").alias("__lp_r"))
-    weighted = (docs.join(t, id_col).join(r, id_col)
-                .withColumn("logw",
-                            (F.col("__lp_t") - F.col("__lp_r"))
-                            * F.col("__nt"))
-                .drop("__nt", "__lp_t", "__lp_r"))
-    return gumbel_topk_sample(weighted, weight_col="logw", n=n,
-                              key_col=id_col, seed=seed,
-                              temperature=temperature)

@@ -151,34 +151,23 @@ def _mg_item_expr(cols: list):
         for c in cols]).alias("__item")
 
 
-def _mg_local_fn(gcols: list[str], k: int, emit_total: bool = False):
+def _mg_local_fn(gcols: list[str], k: int):
     """Partition-local Misra-Gries: one bounded summary (≤ k counters)
     per group per partition, accumulated ACROSS Arrow batches. The
     classic MG step — when a (k+1)th distinct item arrives, decrement
     every counter and drop zeros — is applied per batch via its
     vectorized equivalent: count the batch exactly (a partition's batch
     is bounded), add into the running counters, then reduce to k by
-    subtracting the (k+1)th largest count.
-
-    ``emit_total`` additionally yields one item=NULL row per (group,
-    partition) carrying the exact rows seen — so callers that need
-    both the sketch and n (skew_report's share denominator) pay ONE
-    scan, not two. NULL is collision-proof as the marker: the item
-    encoding (:func:`_mg_item_expr`) coalesces every real value to a
-    non-null string, so no data row can ever encode to SQL NULL —
-    unlike any sentinel STRING, which adversarial or binary-garbage
-    key bytes could reproduce."""
+    subtracting the (k+1)th largest count."""
     def local_mg(batches):
         import pandas as pd
         acc: dict[tuple, dict] = {}
-        seen: dict[tuple, int] = {}
         for pdf in batches:
             if pdf.empty:
                 continue
             for key, s in pdf.groupby(gcols, dropna=False,
                                       sort=False)["__item"]:
                 key = key if isinstance(key, tuple) else (key,)
-                seen[key] = seen.get(key, 0) + len(s)
                 cnt = acc.setdefault(key, {})
                 for item, c in s.value_counts().items():
                     cnt[item] = cnt.get(item, 0) + int(c)
@@ -188,9 +177,6 @@ def _mg_local_fn(gcols: list[str], k: int, emit_total: bool = False):
                                 if c > cut}
         rows = [list(key) + [item, c]
                 for key, cnt in acc.items() for item, c in cnt.items()]
-        if emit_total:
-            rows += [list(key) + [None, n]
-                     for key, n in seen.items()]
         if rows:
             yield pd.DataFrame(rows, columns=gcols + ["item", "cnt"])
     return local_mg
@@ -230,28 +216,6 @@ def mg_sketch(df: DataFrame, *, cols: list[str],
     merged = mg_merge(partials, group_by=gcols, k=k)
     return merged.select(*groups, "item", "cnt") if groups else \
         merged.select("item", "cnt")
-
-
-def mg_sketch_and_total(df: DataFrame, *, cols: list[str],
-                        k: int = 64) -> tuple[DataFrame, int]:
-    """(heavy-hitter summary, exact total row count) from ONE scan of
-    ``df``: the local MG pass also emits item=NULL per-partition
-    row-count rows (no data row can encode to NULL — see
-    :func:`_mg_local_fn`), the tiny partials frame (O(partitions × k)
-    rows) is persisted, and the total is summed from the count rows
-    while the item rows merge as usual. For callers that would
-    otherwise pay a second full scan just for ``df.count()``."""
-    from dexscraper_spark.persist import tracked_persist
-
-    src = df.select(_mg_item_expr(cols)).withColumn("__g", F.lit(0))
-    partials = tracked_persist(src.mapInPandas(
-        _mg_local_fn(["__g"], k, emit_total=True),
-        schema="`__g` int, item string, cnt long"))
-    total = partials.filter(F.col("item").isNull()) \
-        .agg(F.sum("cnt")).first()[0] or 0
-    summary = mg_merge(partials.filter(F.col("item").isNotNull()),
-                       group_by=["__g"], k=k).select("item", "cnt")
-    return summary, int(total)
 
 
 def mg_merge(*summaries: DataFrame, group_by: list[str] | None = None,

@@ -551,286 +551,3 @@ def curation_stats(curated: DataFrame) -> DataFrame:
              F.avg("quality").alias("mean_quality"))
         .orderBy("split", "lang")
     )
-
-
-def write_training_shards(curated: DataFrame, path: str, *,
-                          n_shards: int = 64, id_col: str = "doc_id",
-                          token_col: str | None = "n_tokens",
-                          seed: int = 42,
-                          format: str = "parquet") -> dict:
-    """The pipeline's LAST step: materialize a curated corpus as ``n``
-    uniform training shards plus a machine-readable manifest — what a
-    data loader actually mounts.
-
-    Shard assignment is ``pmod(xxhash64(id, seed), n)``: deterministic,
-    layout-independent, and uniform regardless of id clustering (ids
-    are often range-clustered by crawl time; hashing breaks that
-    correlation so every shard is an unbiased sample — the property
-    multi-epoch training needs from its shard sampler). Layout:
-    ``path/shard=K/part-*.parquet`` (partition-pruned reads per shard)
-    and ``path/_manifest.json`` with per-shard doc counts (and token
-    sums when ``token_col`` is present) — underscore-prefixed, so
-    table-level reads ignore it. EVERY shard id 0..n−1 appears in the
-    manifest; an empty shard records zeros and has NO shard=K directory
-    on disk (loaders must consult the manifest, not the dir listing).
-
-    Returns the manifest dict. One shuffle (the partitioned write's
-    clustering); the manifest aggregate is n-shards-sized. The manifest
-    file goes through :mod:`dexscraper_spark.fsio` (atomic tmp+rename),
-    so ``path`` may live on any filesystem Spark itself can write —
-    local, hdfs, s3a, abfss.
-    """
-    import json as _json
-
-    from dexscraper_spark import fsio
-
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    shard = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)),
-                   F.lit(n_shards)).cast("int")
-    with_shard = curated.withColumn("shard", shard)
-    # cluster rows by shard before the write so each shard directory
-    # gets ONE file per task that owns it, not one per input partition
-    (with_shard.repartition(n_shards, "shard")
-     .write.mode("overwrite").partitionBy("shard")
-     .format(format).save(path))
-    # manifest from the WRITTEN table — it must describe what a reader
-    # will actually see, not what the plan intended. Explicit schema:
-    # a zero-survivor corpus writes only _SUCCESS, and schema inference
-    # over that throws instead of returning the (valid) empty table.
-    spark = curated.sparkSession
-    written = spark.read.schema(with_shard.schema).format(format) \
-        .load(path)
-    has_tokens = bool(token_col) and token_col in written.columns
-    aggs = [F.count(F.lit(1)).alias("n_docs")]
-    if has_tokens:
-        # coalesce: an all-NULL-token shard sums to NULL, and int(None)
-        # would crash the manifest after the corpus is already written
-        aggs.append(F.coalesce(F.sum(token_col), F.lit(0))
-                    .alias("n_tokens"))
-    rows = written.groupBy("shard").agg(*aggs).collect()
-    empty = {"n_docs": 0, **({"n_tokens": 0} if has_tokens else {})}
-    shards = {k: dict(empty) for k in range(n_shards)}
-    for r in rows:
-        shards[int(r["shard"])] = {
-            k: int(r[k]) for k in r.asDict() if k != "shard"}
-    manifest = {
-        "n_shards": n_shards,
-        "seed": seed,
-        "id_col": id_col,
-        "total_docs": sum(s["n_docs"] for s in shards.values()),
-        **({"total_tokens": sum(s.get("n_tokens", 0)
-                                for s in shards.values())}
-           if has_tokens else {}),
-        "shards": {str(k): shards[k] for k in sorted(shards)},
-    }
-    fsio.write_text_atomic(spark, fsio.join(path, "_manifest.json"),
-                           _json.dumps(manifest, indent=1))
-    return manifest
-
-
-def merge_partitioned(spark, path: str, *, partition_cols: list,
-                      add: DataFrame | None = None,
-                      remove_ids: DataFrame | None = None,
-                      remove_col: str = "doc_id",
-                      key_col: str | None = None,
-                      format: str = "parquet",
-                      schema=None) -> list:
-    """In-place incremental maintenance of a partitioned table: remove
-    the rows matching ``remove_ids`` (on ``remove_col``), add the
-    ``add`` rows (which must carry the partition columns), rewriting
-    ONLY the affected partitions — the nightly shape for the published
-    corpus and the training shards, where a full rewrite would be a
-    100 TB job for a delta-sized edit.
-
-    Mechanics (all chosen for crash-replay idempotence):
-    * affected partitions = partitions receiving adds ∪ partitions
-      holding removed rows ∪ partitions already holding rows keyed by
-      ``key_col`` values being added (a crashed previous run may have
-      landed some adds — merging drops them first so a replay never
-      duplicates);
-    * the merged affected slice is STAGED to ``<path>__merge`` first,
-      then written back with Spark's dynamic partition-overwrite mode
-      (only partitions present in the write are replaced) — reading
-      and overwriting the same path in one plan is the classic
-      self-destruction hazard, the staging dir breaks the cycle;
-    * partitions whose rows are ALL removed are deleted explicitly
-      (dynamic overwrite only replaces partitions it writes rows for);
-    * a crash at any point is repaired by rerunning with the same
-      inputs: every step recomputes from the (unchanged) inputs and the
-      current table, and converges.
-
-    Returns the list of affected partition-value tuples (bounded:
-    partition keys are low-cardinality by design).
-
-    ``schema``: pass the table's schema explicitly when the target may
-    hold ZERO data files (a partitioned write of an empty frame leaves
-    only ``_SUCCESS``) — schema inference over that throws instead of
-    returning the valid empty table, and an empty store is a normal
-    state for delta-maintained side tables (e.g. a sem_dropped store
-    after a bootstrap with no semantic losers)."""
-    from dexscraper_spark import fsio
-
-    reader = spark.read.format(format)
-    if schema is not None:
-        reader = reader.schema(schema)
-    written = reader.load(path)
-    pcols = [F.col(c) for c in partition_cols]
-    aff = None
-    if add is not None:
-        aff = add.select(*pcols).distinct()
-    if remove_ids is not None:
-        hit = (written.join(remove_ids.select(remove_col), remove_col,
-                            "left_semi").select(*pcols).distinct())
-        aff = hit if aff is None else aff.unionByName(hit).distinct()
-    if add is not None and key_col is not None:
-        redo = (written.join(add.select(key_col), key_col, "left_semi")
-                .select(*pcols).distinct())
-        aff = redo if aff is None else aff.unionByName(redo).distinct()
-    if aff is None:
-        return []
-    affected = [tuple(r) for r in aff.collect()]
-    if not affected:
-        return []
-
-    def _part_pred(df):
-        from functools import reduce
-        terms = []
-        for vals in affected:
-            t = None
-            for c, v in zip(partition_cols, vals):
-                e = df[c] == F.lit(v)
-                t = e if t is None else (t & e)
-            terms.append(t)
-        return reduce(lambda a, b: a | b, terms)
-
-    merged = written.filter(_part_pred(written))
-    if remove_ids is not None:
-        merged = merged.join(remove_ids.select(remove_col), remove_col,
-                             "left_anti")
-    if add is not None:
-        if key_col is not None:
-            merged = merged.join(add.select(key_col), key_col,
-                                 "left_anti")
-        merged = merged.select(*add.columns).unionByName(
-            add.select(*add.columns))
-    else:
-        merged = merged.select(*written.columns)
-
-    staging = f"{path.rstrip('/')}__merge"
-    fsio.delete(spark, staging)
-    merged.write.mode("overwrite").format(format).save(staging)
-    # explicit schema: an all-rows-removed merge stages only _SUCCESS,
-    # and schema inference over that throws instead of returning the
-    # (valid) empty slice
-    staged = spark.read.schema(merged.schema).format(format) \
-        .load(staging)
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (staged.repartition(max(len(affected), 1), *pcols)
-         .write.mode("overwrite").partitionBy(*partition_cols)
-         .format(format).save(path))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    # dynamic overwrite never touches a partition it writes no rows for:
-    # fully-emptied partitions must be deleted explicitly
-    live = {tuple(r) for r in
-            staged.select(*pcols).distinct().collect()}
-    for vals in affected:
-        if tuple(vals) not in live:
-            sub = "/".join(f"{c}={v}" for c, v in
-                           zip(partition_cols, vals))
-            fsio.delete(spark, fsio.join(path, sub))
-    fsio.delete(spark, staging)
-    return affected
-
-
-def update_training_shards(spark, path: str, *,
-                           add: DataFrame | None = None,
-                           remove_ids: DataFrame | None = None,
-                           remove_col: str = "doc_id",
-                           format: str = "parquet") -> dict:
-    """The APPEND/RETRACT twin of :func:`write_training_shards` — fold a
-    delta into an existing shard layout without rewriting unaffected
-    shards. Shard parameters (n_shards, seed, id_col) come from the
-    stored ``_manifest.json``, so a delta can never shard-key rows
-    differently from the bootstrap; the manifest is recomputed for the
-    affected shards only and rewritten atomically (fsio), LAST — a
-    crash before the manifest write is repaired by rerunning the same
-    delta (the partition merge is idempotent, see
-    :func:`merge_partitioned`).
-
-    ``add`` rows must NOT carry a ``shard`` column (it is derived);
-    ``remove_ids``/``remove_col`` retract all pieces of the matching
-    rows (typically by doc_id — a retracted document's pieces scatter
-    across shards by design, which is exactly why the affected-shard
-    set is computed from the table, not guessed). Returns the updated
-    manifest dict."""
-    import json as _json
-
-    from dexscraper_spark import fsio
-
-    mpath = fsio.join(path, "_manifest.json")
-    manifest = _json.loads(fsio.read_text(spark, mpath))
-    n_shards, seed = manifest["n_shards"], manifest["seed"]
-    id_col = manifest["id_col"]
-    has_tokens = "total_tokens" in manifest
-    token_col = "n_tokens" if has_tokens else None
-
-    add_sharded = None
-    if add is not None:
-        if "shard" in add.columns:
-            raise ValueError("update_training_shards: 'shard' is "
-                             "derived from the manifest params — drop "
-                             "the column from `add`")
-        add_sharded = add.withColumn(
-            "shard", F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)),
-                            F.lit(n_shards)).cast("int"))
-    # capture the schema BEFORE the merge: an all-rows-retracted fold
-    # deletes every shard directory, and the recount's read below would
-    # then have nothing to infer a schema from. A table that is ALREADY
-    # empty (bootstrap with zero survivors, or a prior full retraction)
-    # can't be inferred either — fall back to the add frame's schema,
-    # and with nothing to add or remove against an empty table, no-op.
-    try:
-        table_schema = spark.read.format(format).load(path).schema
-    except Exception:
-        if add_sharded is None:
-            return manifest
-        table_schema = add_sharded.schema
-    affected = merge_partitioned(
-        spark, path, partition_cols=["shard"], add=add_sharded,
-        remove_ids=remove_ids, remove_col=remove_col, key_col=id_col,
-        format=format, schema=table_schema)
-    if not affected:
-        return manifest
-
-    # recount ONLY the affected shards from the written table — the
-    # manifest must describe what a reader sees
-    aff_ids = [int(v[0]) for v in affected]
-    written = spark.read.schema(table_schema).format(format) \
-        .load(path).filter(F.col("shard").isin(aff_ids))
-    aggs = [F.count(F.lit(1)).alias("n_docs")]
-    if has_tokens:
-        aggs.append(F.coalesce(F.sum(token_col), F.lit(0))
-                    .alias("n_tokens"))
-    rows = written.groupBy("shard").agg(*aggs).collect()
-    empty = {"n_docs": 0, **({"n_tokens": 0} if has_tokens else {})}
-    for k in aff_ids:
-        manifest["shards"][str(k)] = dict(empty)
-    for r in rows:
-        manifest["shards"][str(int(r["shard"]))] = {
-            k: int(r[k]) for k in r.asDict() if k != "shard"}
-    manifest["total_docs"] = sum(s["n_docs"]
-                                 for s in manifest["shards"].values())
-    if has_tokens:
-        manifest["total_tokens"] = sum(s.get("n_tokens", 0)
-                                       for s in manifest["shards"]
-                                       .values())
-    fsio.write_text_atomic(spark, mpath,
-                           _json.dumps(manifest, indent=1))
-    return manifest

@@ -459,35 +459,27 @@ def test_cli_ann_validation(spark, capsys):
     assert "queries" in capsys.readouterr().err
 
 
-def test_cli_curate_eval_docs_decontamination(spark, tmp_path, capsys):
-    import json as _json
+def test_cli_command_set_and_retired_flags(capsys):
+    """The parser knows the presets plus stream/curate/bars/pack/zorder/
+    ann; `select`, `pipeline` and their flags exit 2 like any unknown
+    argument, and abbreviated flags stay rejected."""
+    from dexscraper_spark.cli import PRESETS, build_parser
 
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.cli import run
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text").limit(100)
-    [probe] = docs.orderBy("doc_id").limit(1).collect()
-    docs.write.parquet(str(tmp_path / "docs"))
-    spark.createDataFrame([(0, probe.text)],
-                          "doc_id long, text string") \
-        .write.parquet(str(tmp_path / "eval"))
-
-    rc = run(["curate", "--docs", str(tmp_path / "docs"),
-              "--out", str(tmp_path / "out"),
-              "--state", str(tmp_path / "state"),
-              "--eval-docs", str(tmp_path / "eval")], spark=spark)
-    assert rc == 0
-    summary = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert summary["mode"] == "full" and summary["contaminated"] >= 1
-    removed = spark.read.parquet(str(tmp_path / "out" / "contaminated"))
-    assert probe.doc_id in {r.doc_id for r in removed.collect()}
-    # the contaminated doc never reaches the curated corpus
-    curated = spark.read.parquet(str(tmp_path / "out" / "curated"))
-    assert curated.filter(
-        F.col("doc_id") == probe.doc_id).count() == 0
+    p = build_parser()
+    kept = list(PRESETS) + ["stream", "curate", "bars", "pack", "zorder",
+                            "ann"]
+    command = next(a for a in p._actions if a.dest == "command")
+    assert command.choices == kept
+    for cmd in kept:
+        assert p.parse_args([cmd]).command == cmd
+    for argv in (["select"], ["pipeline"],
+                 ["curate", "--eval-docs", "e"],
+                 ["curate", "--quality-model", "m"],
+                 ["ann", "--upsert"], ["curate", "--min-qual", "0.4"]):
+        with pytest.raises(SystemExit) as ei:
+            p.parse_args(argv)
+        assert ei.value.code == 2, argv
+    capsys.readouterr()
 
 
 @pytest.mark.slow  # r13 fast-lane split (>10 s)
@@ -600,78 +592,3 @@ def test_cli_curate_wide_tier_roundtrip_and_mismatch(spark, tmp_path,
              "--out", str(tmp_path / "day2"),
              "--min-quality", "0.3", "--min-tokens", "3"],
             spark=spark)
-
-
-def test_cli_select_importance_resampling(spark, tmp_path, capsys):
-    """select end to end: draws exactly --n docs, writes selected/ with
-    logw, summary line carries the weight stats, and the selection
-    skews toward the target domain."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.cli import run
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    docs.write.parquet(str(tmp_path / "raw"))
-    docs.filter(F.col("lang") == "en").select("doc_id", "text") \
-        .write.parquet(str(tmp_path / "target"))
-
-    assert run(["select", "--docs", str(tmp_path / "raw"),
-                "--target-docs", str(tmp_path / "target"),
-                "--n", "80", "--lm-order", "2",
-                "--out", str(tmp_path / "sel")], spark=spark) == 0
-    doc = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert doc["mode"] == "select" and doc["selected"] == 80
-    assert doc["logw_min"] <= doc["logw_mean"] <= doc["logw_max"]
-    out = spark.read.parquet(str(tmp_path / "sel/selected"))
-    assert out.count() == 80 and "logw" in out.columns
-    en_corpus = docs.filter(F.col("lang") == "en").count() / docs.count()
-    en_picked = out.filter(F.col("lang") == "en").count() / 80
-    assert en_picked > en_corpus
-
-
-def test_cli_select_argument_validation(spark, capsys):
-    from dexscraper_spark.cli import run
-
-    assert run(["select"], spark=spark) == 2
-    assert run(["select", "--docs", "x", "--target-docs", "y",
-                "--out", "z"], spark=spark) == 2  # missing --n
-
-
-def test_cli_curate_with_quality_model(spark, tmp_path, capsys):
-    """--quality-model end to end: junk docs die before curation (the
-    summary accounts for them) and the curated output contains only
-    real-text survivors."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.cli import run
-    from dexscraper_spark.operators.classifier import qc_save, qc_train
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .filter(F.col("doc_id") < 300)
-    from tests.conftest import junk_docs
-    junk = junk_docs(spark, n=200, offset=5_000_000, salt="j",
-                     doc_cols=True)
-    model = qc_train(docs.select("doc_id", "text"),
-                     junk.select("doc_id", "text"),
-                     bits=14, sample_n=200, iters=100)
-    qc_save(spark, model, str(tmp_path / "qcm"))
-
-    mixed = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet") \
-        .filter(F.col("doc_id") < 300).unionByName(junk)
-    mixed.write.parquet(str(tmp_path / "mixed"))
-    assert run(["curate", "--docs", str(tmp_path / "mixed"),
-                "--out", str(tmp_path / "day0"),
-                "--state", str(tmp_path / "store"),
-                "--quality-model", str(tmp_path / "qcm"),
-                "--min-quality", "0.3", "--min-tokens", "3"],
-               spark=spark) == 0
-    doc = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert doc["quality_dropped"] > 150       # junk died pre-curation
-    curated = spark.read.parquet(str(tmp_path / "day0/curated"))
-    junk_survived = curated.filter(F.col("doc_id") >= 5_000_000).count()
-    assert junk_survived < 10                 # the thin Pareto tail only

@@ -195,75 +195,3 @@ def test_curation_partition_independence(spark):
     b = curate_corpus(docs.repartition(7), config=CFG) \
         .select("doc_id", "split")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_write_training_shards_manifest_and_determinism(spark, tmp_path):
-    """Shards are deterministic (hash of id, layout-independent),
-    reasonably uniform, the manifest matches the WRITTEN table exactly,
-    and a reader's per-shard partition pruning sees only its docs."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.plans.curation import (curate_corpus,
-                                                 write_training_shards)
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    curated = curate_corpus(docs, config=CurationConfig(
-        min_quality=0.3, min_tokens=3))
-    p = str(tmp_path / "shards")
-    manifest = write_training_shards(curated, p, n_shards=8)
-
-    back = spark.read.parquet(p)
-    assert back.count() == manifest["total_docs"] == curated.count()
-    assert manifest["total_tokens"] == \
-        curated.agg(F.sum("n_tokens")).first()[0]
-    on_disk = json.loads((tmp_path / "shards" / "_manifest.json")
-                         .read_text())
-    assert on_disk == manifest
-    assert len(manifest["shards"]) == 8
-    counts = [s["n_docs"] for s in manifest["shards"].values()]
-    assert max(counts) < 2.5 * (sum(counts) / len(counts))  # no hot shard
-
-    # deterministic + layout-independent: same ids per shard on rewrite
-    p2 = str(tmp_path / "shards2")
-    write_training_shards(curated.repartition(13), p2, n_shards=8)
-    for k in range(8):
-        a = {r["doc_id"] for r in
-             spark.read.parquet(p).filter(F.col("shard") == k)
-             .select("doc_id").collect()}
-        b = {r["doc_id"] for r in
-             spark.read.parquet(p2).filter(F.col("shard") == k)
-             .select("doc_id").collect()}
-        assert a == b
-
-    import pytest
-    with pytest.raises(ValueError, match="n_shards"):
-        write_training_shards(curated, str(tmp_path / "bad"), n_shards=0)
-
-
-def test_write_training_shards_empty_and_null_tokens(spark, tmp_path):
-    """Zero-survivor corpora and NULL token columns must not crash the
-    manifest step after the table is already written, and every shard
-    id 0..n-1 appears with zeros when empty."""
-    import json
-
-    from dexscraper_spark.plans.curation import write_training_shards
-
-    empty = spark.createDataFrame(
-        [], "doc_id long, text string, n_tokens long")
-    p = str(tmp_path / "empty")
-    m = write_training_shards(empty, p, n_shards=4)
-    assert m["total_docs"] == 0 and m["total_tokens"] == 0
-    assert set(m["shards"]) == {"0", "1", "2", "3"}
-    assert all(s == {"n_docs": 0, "n_tokens": 0}
-               for s in m["shards"].values())
-    assert json.loads((tmp_path / "empty" / "_manifest.json")
-                      .read_text()) == m
-
-    nulls = spark.createDataFrame(
-        [(1, "a", None), (2, "b", 5)],
-        "doc_id long, text string, n_tokens long")
-    m2 = write_training_shards(nulls, str(tmp_path / "nulls"),
-                               n_shards=2)
-    assert m2["total_docs"] == 2 and m2["total_tokens"] == 5

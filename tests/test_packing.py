@@ -145,114 +145,3 @@ def test_packing_validates_arguments(spark):
     neg = spark.createDataFrame([(1, -3)], "doc_id long, n_tokens long")
     with pytest.raises(Exception, match="negative"):
         pack_greedy(neg, max_tokens=CAP, num_shards=1).collect()
-
-
-# ---------------------------------------------------------------------------
-# Sliding-window document splitting
-
-
-def test_split_documents_matches_reference(spark):
-    """Window starts/contents row-for-row vs a sequential Python
-    reference over real docs, across disjoint and overlapping
-    strides."""
-    from dexscraper_spark.operators.packing import split_documents
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet") \
-        .select("doc_id", "text").filter(F.col("doc_id") < 120)
-    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-
-    for m, s in ((32, 32), (32, 16), (10, 3)):
-        got = {(r["doc_id"], r["window_id"]):
-               (r["window_start"], r["n_window_tokens"], r["window_text"])
-               for r in split_documents(docs, max_tokens=m,
-                                        stride=s).collect()}
-        want = {}
-        for did, text in texts.items():
-            toks = text.split()
-            if not toks:
-                continue
-            k = 0
-            start = 0
-            while True:
-                w = toks[start:start + m]
-                if not w:
-                    break
-                if len(w) >= 1 and (len(w) >= 1 or start == 0):
-                    want[(did, k)] = (start, len(w), " ".join(w))
-                k += 1
-                if start + m >= len(toks):
-                    break
-                start += s
-            # min_tail=1 default: every non-empty window kept
-        assert got == want, (m, s)
-
-
-def test_split_documents_coverage_and_overlap(spark):
-    """Every token position is covered by some window; consecutive
-    windows overlap by exactly max_tokens − stride (except the tail)."""
-    from dexscraper_spark.operators.packing import split_documents
-
-    docs = spark.createDataFrame(
-        [(1, " ".join(f"t{i}" for i in range(100)))],
-        "doc_id long, text string")
-    rows = sorted(split_documents(docs, max_tokens=16, stride=10)
-                  .collect(), key=lambda r: r["window_id"])
-    covered = set()
-    for r in rows:
-        covered.update(range(r["window_start"],
-                             r["window_start"] + r["n_window_tokens"]))
-    assert covered == set(range(100))
-    for a, b in zip(rows, rows[1:]):
-        assert b["window_start"] - a["window_start"] == 10
-
-
-def test_split_documents_short_null_and_tail(spark):
-    from dexscraper_spark.operators.packing import split_documents
-
-    docs = spark.createDataFrame(
-        [(1, "only three tokens"),     # short doc passes whole
-         (2, None),                    # NULL -> no rows
-         (3, ""),                      # empty -> no rows
-         (4, " ".join(f"w{i}" for i in range(21)))],  # 21 toks
-        "doc_id long, text string")
-    # min_tail=5: doc 4 at m=10,s=10 gives windows of 10,10,1 — the
-    # 1-token tail is dropped
-    rows = split_documents(docs, max_tokens=10, stride=10,
-                           min_tail=5).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert len(by_doc[1]) == 1 and by_doc[1][0]["n_window_tokens"] == 3
-    assert 2 not in by_doc and 3 not in by_doc
-    assert [r["n_window_tokens"] for r in
-            sorted(by_doc[4], key=lambda r: r["window_id"])] == [10, 10]
-
-
-def test_split_documents_validation_and_plan(spark):
-    import pytest
-
-    from dexscraper_spark.operators.packing import split_documents
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="max_tokens"):
-        split_documents(docs, max_tokens=0)
-    with pytest.raises(ValueError, match="stride"):
-        split_documents(docs, max_tokens=8, stride=9)
-    plan = split_documents(docs, max_tokens=8)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan    # pure map-side: no shuffle
-
-
-def test_split_documents_preserves_case_and_validates_min_tail(spark):
-    import pytest
-
-    from dexscraper_spark.operators.packing import split_documents
-
-    docs = spark.createDataFrame(
-        [(1, "The CEO of IBM said No")], "doc_id long, text string")
-    rows = split_documents(docs, max_tokens=4, stride=4).collect()
-    texts = [r["window_text"] for r in
-             sorted(rows, key=lambda r: r["window_id"])]
-    assert texts == ["The CEO of IBM", "said No"]   # verbatim case
-    with pytest.raises(ValueError, match="min_tail"):
-        split_documents(docs, max_tokens=4, min_tail=5)

@@ -322,29 +322,6 @@ def test_semantic_dedup_plan_no_cartesian(spark):
     assert "LeftAnti" in plan
 
 
-def test_importance_resample_plan_shapes(spark):
-    """The selection plan: no cartesian pair products anywhere, and the
-    final draw is TakeOrderedAndProject (per-partition heaps) — the
-    only Window nodes are lm_score's two lag windows (one per LM side,
-    documented design); the draw itself must not add a ranking
-    window."""
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.lm import lm_train
-    from dexscraper_spark.operators.sampling import importance_resample
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "lang", "text").filter(F.col("doc_id") < 300)
-    target = lm_train(docs.filter(F.col("lang") == "en")
-                      .select("text"), n=2)
-    raw = lm_train(docs.select("text"), n=2)
-    out = importance_resample(docs, target, raw, n=20, lm_order=2)
-    plan = plan_of(out)
-    assert "TakeOrderedAndProject" in plan
-    assert "CartesianProduct" not in plan
-    assert plan_of(out, "simple").count("Window") == 2
-
-
 def test_assign_roles_single_pass(spark):
     """r12 optimization: the role pivot + quote pick must be ONE
     aggregation over ONE copy of the upstream subtree — the former

@@ -324,54 +324,3 @@ def test_zorder_write_fidelity_property(spark, tmp_path_factory, vals,
             out.append((r.id, x, r.y))
         return sorted(out, key=str)
     assert norm(back.collect()) == norm(df.collect())
-
-
-# -- sliding-window splitting invariants -------------------------------------
-
-@given(n_tokens=st.integers(min_value=0, max_value=120),
-       max_tokens=st.integers(min_value=1, max_value=24),
-       stride_frac=st.floats(min_value=0.05, max_value=1.0),
-       min_tail_frac=st.floats(min_value=0.0, max_value=1.0))
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_split_documents_property(spark, n_tokens, max_tokens,
-                                  stride_frac, min_tail_frac):
-    """For arbitrary (doc length, window, stride, tail guard): full-
-    window coverage of every kept token position, exact stride spacing,
-    verbatim token content, tail-guard semantics, and the short-doc
-    passthrough."""
-    from dexscraper_spark.operators.packing import split_documents
-
-    stride = max(1, int(round(stride_frac * max_tokens)))
-    min_tail = max(1, int(round(min_tail_frac * max_tokens)))
-    toks = [f"Tok{i}x" for i in range(n_tokens)]
-    docs = spark.createDataFrame([(1, " ".join(toks))],
-                                 "doc_id long, text string")
-    rows = sorted(split_documents(docs, max_tokens=max_tokens,
-                                  stride=stride, min_tail=min_tail)
-                  .collect(), key=lambda r: r["window_id"])
-    if n_tokens == 0:
-        assert rows == []
-        return
-    # sequential reference
-    want = []
-    start = 0
-    while True:
-        w = toks[start:start + max_tokens]
-        if not w:
-            break
-        if len(w) >= min_tail or start == 0:
-            want.append((start, len(w), " ".join(w)))
-        if start + max_tokens >= n_tokens:
-            break
-        start += stride
-    got = [(r["window_start"], r["n_window_tokens"], r["window_text"])
-           for r in rows]
-    assert got == want
-    # coverage: every token < the last kept window's end is covered
-    covered = set()
-    for s, ln, _ in got:
-        covered.update(range(s, s + ln))
-    if got:
-        assert covered >= set(range(got[0][0], max(s + ln
-                                                   for s, ln, _ in got)))

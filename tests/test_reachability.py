@@ -6,11 +6,22 @@ measures or checks it, so it is either given an entry point or deleted.
 The closure follows the AST: top-level, function-local and relative
 imports, plus ``__import__``/``import_module`` calls on a string literal.
 No module is executed.
+
+The same rule holds one level down: every top-level ``def``/``class``
+of the package must be referenced by name, outside its own body, from a
+non-test file (the package, ``tools/``, ``perfbench/``, ``bench.py``,
+``__spark_entry__.py``). A reference is an AST ``Name``, an
+``Attribute``, an imported alias or a string constant that is an
+identifier (registry keys, ``__all__``). Decorated defs count as
+reached, since ``@register`` is how registry rows are wired. The names
+unreferenced when the check was added are frozen in
+:data:`UNREFERENCED_ALLOWED`; the list may only shrink.
 """
 
 from __future__ import annotations
 
 import ast
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -101,3 +112,143 @@ def test_closure_follows_local_and_relative_imports(tmp_path):
     assert {"dexscraper_spark.plans.sub", "dexscraper_spark.plans.sub.g",
             "dexscraper_spark.operators.ohlc",
             "dexscraper_spark.functions.exact"} <= names
+
+
+# Top-level defs no non-test file references, frozen when the check was
+# added. Remove a name once it is wired to an entry point or deleted;
+# never add one.
+UNREFERENCED_ALLOWED = frozenset({
+    # SDK surface: table loaders for callers outside the registry
+    "dexscraper_spark:load_tables",
+    "dexscraper_spark.sources.tables:load_events",
+    # socket test servers (the socket/websocket sources' loopback peers)
+    "dexscraper_spark.sources.socket_source:FrameSocketServer",
+    "dexscraper_spark.sources.websocket:WsFrameSocketServer",
+    # export formats K4-K9, to be wired into the CLI's --format
+    "dexscraper_spark.sinks.exporters:csv_ohlcvt_lines",
+    "dexscraper_spark.sinks.exporters:mt5_lines",
+    "dexscraper_spark.sinks.exporters:tradingview_document",
+    "dexscraper_spark.sinks.exporters:binance_klines_document",
+    "dexscraper_spark.sinks.exporters:coingecko_document",
+    "dexscraper_spark.sinks.exporters:pancakeswap_document",
+    # the rest: no entry point runs, measures or checks them; each is
+    # to be wired to one or deleted
+    "dexscraper_spark.functions.formatting:fixed8",
+    "dexscraper_spark.functions.lookups:base58_decodes_to_32_bytes",
+    "dexscraper_spark.functions.lookups:is_known_symbol",
+    "dexscraper_spark.functions.lookups:is_probable_base58_address",
+    "dexscraper_spark.functions.lookups:not_blacklisted",
+    "dexscraper_spark.functions.lookups:not_english_word",
+    "dexscraper_spark.functions.textstats:_doc_gate_metrics",
+    "dexscraper_spark.functions.textstats:rolling_fingerprint",
+    "dexscraper_spark.functions.textstats:stopword_ratio",
+    "dexscraper_spark.operators.bpe:bpe_load",
+    "dexscraper_spark.operators.bpe:bpe_save",
+    "dexscraper_spark.operators.codecs:encode_avi_mjpeg",
+    "dexscraper_spark.operators.codecs:encode_bmp",
+    "dexscraper_spark.operators.codecs:encode_png",
+    "dexscraper_spark.operators.codecs:encode_wav",
+    "dexscraper_spark.operators.jpeg:encode_jpeg",
+    "dexscraper_spark.operators.jpeg:encode_jpeg_progressive",
+    "dexscraper_spark.operators.multimodal:audio_features",
+    "dexscraper_spark.operators.multimodal:decode_media_meta",
+    "dexscraper_spark.operators.multimodal:resize_images",
+    "dexscraper_spark.operators.multimodal:video_dedup",
+    "dexscraper_spark.operators.sessionize:cluster_values",
+    "dexscraper_spark.operators.similarity:ivf_add",
+    "dexscraper_spark.operators.similarity:ivf_extend_saved",
+    "dexscraper_spark.operators.similarity:ivf_topk",
+    "dexscraper_spark.operators.similarity:lsh_signature",
+    "dexscraper_spark.operators.sketch:dd_histogram",
+    "dexscraper_spark.operators.sketch:dd_merge",
+    "dexscraper_spark.operators.sketch:dd_quantiles",
+    "dexscraper_spark.operators.sketch:kmv_merge",
+    "dexscraper_spark.plans.catalog:_text_metrics_exprs",
+    "dexscraper_spark.plans.curation:curation_stats",
+    "dexscraper_spark.sinks.lake:compact_zordered",
+    "dexscraper_spark.sinks.lake:read_zordered",
+    "dexscraper_spark.sinks.lake:write_bucketed",
+    "dexscraper_spark.sinks.lake:write_ohlc",
+    "dexscraper_spark.sinks.lake:write_tokens",
+    "dexscraper_spark.sinks.lake:write_zordered_versioned",
+    "dexscraper_spark.sources.decode:parse_frame_multi_strategy",
+})
+
+
+def _non_test_files() -> list[Path]:
+    files = sorted((ROOT / PKG).rglob("*.py"))
+    for d in ("tools", "perfbench"):
+        files += sorted(p for p in (ROOT / d).glob("*.py")
+                        if not p.name.startswith("test_"))
+    files += [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    return [f for f in files if f.exists()]
+
+
+def _references(node: ast.AST) -> Counter:
+    """Name references under ``node``: Name, Attribute, imported alias
+    (last dotted part) and identifier-shaped string constants."""
+    out: Counter = Counter()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out[n.id] += 1
+        elif isinstance(n, ast.Attribute):
+            out[n.attr] += 1
+        elif isinstance(n, ast.alias):
+            out[n.name.rpartition(".")[2]] += 1
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and n.value.isidentifier()):
+            out[n.value] += 1
+    return out
+
+
+def _unreferenced_defs(mods: dict[str, Path]) -> set[str]:
+    """``module:name`` of every undecorated top-level def/class whose
+    name no non-test file references outside the def's own body."""
+    by_path = {p: m for m, p in mods.items()}
+    total: Counter = Counter()
+    defs = []
+    for path in _non_test_files():
+        tree = ast.parse(path.read_text(), filename=str(path))
+        total.update(_references(tree))
+        module = by_path.get(path)
+        if module is None:
+            continue
+        for node in tree.body:
+            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef))
+                    and not node.decorator_list):
+                defs.append((module, node))
+    return {f"{module}:{node.name}" for module, node in defs
+            if total[node.name] - _references(node)[node.name] <= 0}
+
+
+def test_every_top_level_def_is_referenced():
+    new = sorted(_unreferenced_defs(_module_files()) - UNREFERENCED_ALLOWED)
+    assert not new, (
+        f"top-level defs no non-test file references (wire each to an "
+        f"entry point or delete it; the allowlist only shrinks): {new}")
+
+
+def test_unreferenced_allowlist_only_shrinks():
+    stale = sorted(UNREFERENCED_ALLOWED
+                   - _unreferenced_defs(_module_files()))
+    assert not stale, (
+        f"allowlisted names that are referenced again or no longer "
+        f"exist; remove them from UNREFERENCED_ALLOWED: {stale}")
+
+
+def test_def_references_skip_own_body(tmp_path):
+    """Recursion and self-mentions do not count; a string key, an
+    attribute and an import alias do."""
+    src = tmp_path / "m.py"
+    src.write_text("def f(n):\n    return f(n - 1)\n"
+                   "def g():\n    pass\n"
+                   "def h():\n    return ROWS['g'], mod.k\n"
+                   "from x import j as alias\n")
+    tree = ast.parse(src.read_text())
+    total = _references(tree)
+    own = {n.name: _references(n)[n.name] for n in tree.body
+           if isinstance(n, ast.FunctionDef)}
+    assert total["f"] - own["f"] == 0
+    assert total["g"] - own["g"] == 1
+    assert total["k"] == 1 and total["j"] == 1

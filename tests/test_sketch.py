@@ -259,37 +259,3 @@ def test_mg_merge_rollup(spark):
     assert 0 < len(m) <= k2
     for item, cnt in m.items():
         assert cnt <= truth2[item] <= cnt + 2 * n2 / (k2 + 1)
-
-
-def test_mg_sketch_and_total_one_scan_matches(spark):
-    """mg_sketch_and_total must return the EXACT row count plus a
-    summary satisfying the same MG guarantee as mg_sketch — from one
-    scan (total rows ride the partials stream, never a second count)."""
-    from dexscraper_spark.operators.sketch import mg_sketch_and_total
-
-    df = _zipf_df(spark).repartition(8)
-    n_true = df.count()
-    summary, total = mg_sketch_and_total(df, cols=["v"], k=32)
-    assert total == n_true
-    rows = {r.item: r.cnt for r in summary.collect()}
-    assert 0 < len(rows) <= 32
-    # the NULL-marked total rows never leak into the summary
-    assert None not in rows and all(i is not None for i in rows)
-    truth = {r.v: r.c for r in
-             df.groupBy("v").agg(F.count("*").alias("c")).collect()}
-    bound = n_true / 33
-    for item, cnt in rows.items():
-        assert cnt <= truth[item]
-        assert truth[item] - cnt <= bound
-
-
-def test_mg_sketch_and_total_exact_regime(spark):
-    from dexscraper_spark.operators.sketch import mg_sketch_and_total
-
-    df = spark.range(0, 9000).select(
-        (F.col("id") % 40).cast("string").alias("v"))
-    summary, total = mg_sketch_and_total(df.repartition(13),
-                                         cols=["v"], k=64)
-    assert total == 9000
-    rows = {r.item: r.cnt for r in summary.collect()}
-    assert len(rows) == 40 and all(c == 225 for c in rows.values())

@@ -228,39 +228,3 @@ def test_frame_stream_end_to_end_ohlc(spark, tmp_path):
                 "open", "high", "low", "close", "volume", "trades")
     ).collect())
     assert got and got == expected
-
-
-def test_streaming_decontamination_filter(spark, tmp_path):
-    """The decontamination gram filter composes into a stream: eval
-    grams broadcast once, each micro-batch is filtered map-side (the
-    ingest-time shape — contaminated docs never land in the lake)."""
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.operators.decontaminate import decontaminate
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text").limit(60)
-    [probe] = docs.orderBy("doc_id").limit(1).collect()
-    eval_docs = spark.createDataFrame([(0, probe.text)],
-                                      "doc_id long, text string")
-    src = str(tmp_path / "in")
-    for i in range(2):
-        docs.filter(F.col("doc_id") % 2 == i).coalesce(1) \
-            .write.mode("append").parquet(src)
-    out = str(tmp_path / "clean")
-
-    def fold(batch_df, batch_id):
-        clean, _ = decontaminate(batch_df, eval_docs)
-        clean.write.mode("append").parquet(out)
-
-    q = (spark.readStream.schema(spark.read.parquet(src).schema)
-         .option("maxFilesPerTrigger", 1).parquet(src)
-         .writeStream.foreachBatch(fold)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    landed = spark.read.parquet(out)
-    ids = {r.doc_id for r in landed.select("doc_id").collect()}
-    assert probe.doc_id not in ids          # never landed
-    assert len(ids) >= 40                   # the rest flowed through
