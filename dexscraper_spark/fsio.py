@@ -355,8 +355,19 @@ def pointer_next_version(spark, root: str) -> str:
     return f"{_VERSION_PREFIX}{mx + 1:06d}"
 
 
+_EXPECT_UNSET = object()
+
+
+class PointerMovedError(RuntimeError):
+    """pointer_publish found ``_current`` naming a different version
+    than the caller based its work on — a concurrent publisher won the
+    race; the caller must recompute on fresh state, not flip."""
+
+
 def pointer_publish(spark, root: str, version: str, *,
-                    meta: dict | None = None, keep: int = 2) -> None:
+                    meta: dict | None = None, keep: int = 2,
+                    retain: "set[str] | frozenset" = frozenset(),
+                    expect_current=_EXPECT_UNSET) -> None:
     """Flip ``root/_current`` to ``version`` (which must already be a
     fully-written directory under ``root``) and GC everything that is
     neither the new current nor one of its ``keep-1`` predecessors —
@@ -364,11 +375,29 @@ def pointer_publish(spark, root: str, version: str, *,
     tiny-file write; a reader that resolved the OLD pointer a moment
     earlier keeps reading a directory GC retains (keep >= 2).
 
+    ``retain`` names version directories that must NEVER be swept
+    regardless of ``keep`` — the hook for layered layouts where the
+    current version's manifest still references files in older
+    versions.
+
     GC never touches versions numbered ABOVE the new current: such a
     directory belongs to a concurrent publisher that has fully written
     but not yet flipped (ADVICE r10) — deleting it would destroy a
     publish in flight; it becomes subject to GC once ITS flip makes a
-    later publish see it below current."""
+    later publish see it below current.
+
+    ``expect_current`` (VERDICT r11 §wrong-2) is the compare-and-swap
+    guard for read-compute-publish writers: pass the version name the
+    caller READ its inputs from (or None for "no pointer existed
+    yet") and the flip is REFUSED with :class:`PointerMovedError` —
+    naming both versions — when ``_current`` has moved since, instead
+    of silently discarding the interleaved publish's rows. The check
+    and the flip are not one atomic op (no filesystem primitive for
+    that on object stores), so a writer can still lose a
+    millisecond-scale photo-finish race — the guard turns the
+    systemic overlap (a cron firing during a long fold) from silent
+    last-writer-wins into a loud retryable error, and callers that
+    need strict exclusion hold a lease as well."""
     import json as _json
 
     if keep < 2:
@@ -383,6 +412,16 @@ def pointer_publish(spark, root: str, version: str, *,
         if doc["version"] != version:
             raise ValueError("meta must not override 'version'")
     prev = pointer_read(spark, root)  # what in-flight readers hold
+    if expect_current is not _EXPECT_UNSET and prev != expect_current:
+        raise PointerMovedError(
+            f"refusing to flip {root}/_current to {version}: the "
+            f"caller computed against "
+            f"{expect_current if expect_current else '<no pointer>'} "
+            f"but the pointer now names "
+            f"{prev if prev else '<no pointer>'} — a concurrent "
+            "publish landed in between; recompute on fresh state and "
+            "retry (the written version directory is left for the "
+            "next publish's GC)")
     write_text_atomic(spark, join(root, "_current"), _json.dumps(doc))
     # GC: always retain the new current AND the previously-POINTED
     # version (an in-flight reader resolved it moments ago — numeric
@@ -400,6 +439,12 @@ def pointer_publish(spark, root: str, version: str, *,
     live = {cur_n}
     if prev is not None:
         live.add(int(prev[len(_VERSION_PREFIX):]))
+    for name in retain:
+        if name.startswith(_VERSION_PREFIX):
+            try:
+                live.add(int(name[len(_VERSION_PREFIX):]))
+            except ValueError:
+                continue
     rest = sorted(v for v in versions if v not in live and v <= cur_n)
     if keep > len(live):
         # negative-slice form: clamps at the list head when fewer

@@ -34,6 +34,19 @@ def _rank_hash(key_col: str, seed: int):
         .bitwiseXOR(F.lit(-(1 << 63)))
 
 
+def sample_deterministic(df: DataFrame, fraction: float, *,
+                         key_col: str, seed: int = 42) -> DataFrame:
+    """Partitioning-independent Bernoulli(fraction) sample: keep rows
+    whose normalized hash falls below the fraction. Same rows on every
+    layout; complementary seeds give disjoint reproducible splits."""
+    if not 0.0 <= fraction <= 1.0:
+        raise ValueError(f"fraction {fraction} outside [0, 1]")
+    if fraction >= 1.0:
+        return df  # bound would overflow int64; the sample is everything
+    bound = int(fraction * float(1 << 64)) - (1 << 63)
+    return df.filter(_rank_hash(key_col, seed) < F.lit(bound))
+
+
 def stratified_sample_exact(df: DataFrame, *, strata_cols: list[str],
                             n_per_stratum: int, key_col: str,
                             seed: int = 42,
@@ -123,3 +136,38 @@ def stratified_sample_exact(df: DataFrame, *, strata_cols: list[str],
         f"stratified_sample_exact: shortfall after {max_rounds} "
         "doublings — statistically impossible unless key_col collides "
         "heavily; use a higher-cardinality key")
+
+
+def gumbel_topk_sample(df: DataFrame, *, weight_col: str, n: int,
+                       key_col: str, seed: int = 42,
+                       temperature: float = 1.0) -> DataFrame:
+    """Weighted sampling WITHOUT replacement of ``n`` rows via the
+    Gumbel-top-k trick (Kool et al., ICML 2019 — public): rank by
+    ``logw/temperature + Gumbel noise`` and take the top n; the result
+    is distributed exactly as sequential sampling proportional to
+    ``softmax(logw/temperature)`` without replacement.
+
+    ``weight_col`` is a LOG weight (any real; NULL rows are excluded —
+    no weight means no chance, and NULL would otherwise sort
+    unpredictably). Noise is derived from ``xxhash64(key_col, seed)``,
+    so the sample is deterministic and partitioning-independent, same
+    contract as :func:`sample_deterministic`. The plan is
+    TakeOrderedAndProject (orderBy + limit) — per-partition heaps of n,
+    no global sort, no single-reducer ranking window.
+    """
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
+    if temperature <= 0:
+        raise ValueError(f"temperature must be > 0, got {temperature}")
+    # uniform in (0,1) strictly: 53 mantissa-exact bits from the hash,
+    # +1 / +2 keeps both endpoints out so log(-log(u)) never hits ±inf
+    h53 = F.shiftrightunsigned(
+        F.xxhash64(F.col(key_col), F.lit(seed)), 11)
+    u = (h53.cast("double") + F.lit(1.0)) / F.lit(float((1 << 53) + 2))
+    gumbel = -F.log(-F.log(u))
+    key = F.col(weight_col).cast("double") / F.lit(float(temperature)) \
+        + gumbel
+    return (df.filter(F.col(weight_col).isNotNull())
+            .orderBy(key.desc(), F.col(key_col).asc())
+            .limit(n))
+

@@ -292,11 +292,13 @@ def test_pointer_primitives_and_gc(spark, mockfs):
                              meta={"version": "x"})
 
 
-def test_pointer_gc_keeps_concurrent_publisher(spark, mockfs):
+def test_pointer_gc_retain_and_concurrent_publisher(spark, mockfs):
     """ADVICE r10 GC hardening: (a) versions ABOVE the new current are
     a concurrent publisher's fully-written, not-yet-flipped work — GC
-    must not sweep them; (b) keep > available predecessors keeps
-    everything instead of under-keeping (the negative-slice bug)."""
+    must not sweep them; (b) ``retain`` pins manifest-referenced
+    versions regardless of keep; (c) keep > available predecessors
+    keeps everything instead of under-keeping (the negative-slice
+    bug)."""
     root = mockfs("ptr2")
 
     def mkv(n):
@@ -307,7 +309,7 @@ def test_pointer_gc_keeps_concurrent_publisher(spark, mockfs):
     for n in (1, 2, 3):
         mkv(n)
         fsio.pointer_publish(spark, root, f"v_{n:06d}")
-    # (b) keep=4 with only {3 cur, 2 prev, 1 orphan-predecessor}: the
+    # (c) keep=4 with only {3 cur, 2 prev, 1 orphan-predecessor}: the
     # old slice arithmetic kept only v2 — everything must survive
     mkv(4)
     fsio.pointer_publish(spark, root, "v_000004", keep=4)
@@ -320,6 +322,16 @@ def test_pointer_gc_keeps_concurrent_publisher(spark, mockfs):
     names = set(fsio.list_names(spark, root))
     assert "v_000006" in names          # not swept: above current
     assert "v_000002" not in names      # below + beyond keep: swept
+    # (b) retain pins an old version a manifest still references
+    mkv(7)
+    fsio.pointer_publish(spark, root, "v_000007", keep=2,
+                         retain={"v_000004"})
+    names = set(fsio.list_names(spark, root))
+    assert "v_000004" in names
+    mkv(8)
+    fsio.pointer_publish(spark, root, "v_000008", keep=2)
+    assert "v_000004" not in set(fsio.list_names(spark, root))
+
     # absent-pointer semantics: version dirs with NO pointer (crashed
     # before the first flip) still resolve as legacy after the brief
     # retry — the flat stores remain live until a publish completes
@@ -384,3 +396,41 @@ def test_pointer_reader_never_sees_window_100_flips(spark, mockfs):
     assert failures == []
     assert reads[0] > 0  # the reader really ran against the flips
     assert fsio.pointer_read(spark, root) == "v_000100"
+
+
+def test_pointer_publish_expect_current_cas(spark, mockfs):
+    """VERDICT r11 §wrong-2: a read-compute-publish writer passes the
+    version it based its work on as ``expect_current``; the flip is
+    refused with PointerMovedError (naming both versions) when a
+    concurrent publish moved the pointer in between — instead of
+    silently discarding that publish's rows. A matching expectation
+    (including "no pointer yet" = None) flips normally; omitting the
+    argument keeps the unguarded behavior."""
+    root = mockfs("cas")
+
+    def _mkver(n):
+        v = f"v_{n:06d}"
+        fsio.mkdirs(spark, fsio.join(root, v))
+        fsio.write_text_atomic(spark, fsio.join(root, v, "d"), str(n))
+        return v
+
+    v1 = _mkver(1)
+    # first publish: caller read NO pointer → expect_current=None
+    fsio.pointer_publish(spark, root, v1, expect_current=None)
+    assert fsio.pointer_read(spark, root) == v1
+
+    # fold A reads v1 ... fold B publishes v2 ... fold A must refuse
+    v2, v3 = _mkver(2), _mkver(3)
+    fsio.pointer_publish(spark, root, v2, expect_current=v1)
+    with pytest.raises(fsio.PointerMovedError) as ei:
+        fsio.pointer_publish(spark, root, v3, expect_current=v1)
+    assert "v_000001" in str(ei.value) and "v_000002" in str(ei.value)
+    assert fsio.pointer_read(spark, root) == v2   # flip did not happen
+    # a None expectation is also a mismatch once a pointer exists
+    with pytest.raises(fsio.PointerMovedError):
+        fsio.pointer_publish(spark, root, v3, expect_current=None)
+    # retry on fresh state succeeds; omitting the arg stays unguarded
+    fsio.pointer_publish(spark, root, v3, expect_current=v2)
+    v4 = _mkver(4)
+    fsio.pointer_publish(spark, root, v4)
+    assert fsio.pointer_read(spark, root) == v4

@@ -121,6 +121,11 @@ UNREFERENCED_ALLOWED = frozenset({
     # SDK surface: table loaders for callers outside the registry
     "dexscraper_spark:load_tables",
     "dexscraper_spark.sources.tables:load_events",
+    # SDK surface: partitioning-independent samplers, kept with their
+    # tests after their only callers (the training-data driver and
+    # ``select``) were retired
+    "dexscraper_spark.operators.sampling:gumbel_topk_sample",
+    "dexscraper_spark.operators.sampling:sample_deterministic",
     # socket test servers (the socket/websocket sources' loopback peers)
     "dexscraper_spark.sources.socket_source:FrameSocketServer",
     "dexscraper_spark.sources.websocket:WsFrameSocketServer",
