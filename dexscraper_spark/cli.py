@@ -179,7 +179,8 @@ def build_parser() -> argparse.ArgumentParser:
                     help="pack: chunk (default; concat-and-chunk, docs may "
                          "span chunks) | bins (greedy first-fit, whole "
                          "docs). ann: build (default) | query | extend | "
-                         "republish (recall-gated retrain + atomic swap)")
+                         "republish (recall-gated retrain + pointer "
+                         "publish)")
     pk.add_argument("--max-tokens", type=int, default=2048)
     pk.add_argument("--num-shards", type=int, default=64,
                     help="pack bins: independent packing shards")
@@ -205,8 +206,9 @@ def build_parser() -> argparse.ArgumentParser:
                     help="ann build/extend: parquet with (vec_id, "
                          "embedding)")
     an.add_argument("--index", default=None,
-                    help="ann: index directory (build writes, "
-                         "query/extend read)")
+                    help="ann: index root (build and republish "
+                         "publish a version behind its _current pointer; "
+                         "query/extend read the live version)")
     an.add_argument("--queries", default=None,
                     help="ann query: parquet with query vectors")
     an.add_argument("--k", type=int, default=10)
@@ -219,14 +221,7 @@ def build_parser() -> argparse.ArgumentParser:
                     help="ann build: centroids per subspace (<=256)")
     an.add_argument("--max-drop", type=float, default=0.05,
                     help="ann republish: max recall@k regression vs the "
-                         "live artifact before the swap is refused")
-    an.add_argument("--layout", default="auto",
-                    choices=["auto", "swap", "pointer"],
-                    help="ann republish: publish protocol — 'pointer' "
-                         "= reader-atomic version-pointer root (no "
-                         "rename window; use on object stores), "
-                         "'swap' = legacy 2-rename flat dir, 'auto' = "
-                         "whatever the artifact already is")
+                         "live artifact before the publish is refused")
     an.add_argument("--min-recall", type=float, default=None,
                     help="ann republish: absolute recall@k floor for "
                          "publishing")
@@ -673,25 +668,24 @@ def _run_zorder(args, spark) -> int:
 
 def _run_ann(args, spark) -> int:
     """IVF-PQ index maintenance as a CLI. --mode build: fit coarse
-    quantizer + PQ codebooks on --vectors and persist the compressed
-    index to --index; --mode query: search it (writes JSON lines of
+    quantizer + PQ codebooks on --vectors and publish the compressed
+    index as the next version of the --index root (see ivf_pq_publish);
+    --mode query: search the live version (writes JSON lines of
     (query_id, neighbor_id, cosine, rank)); --mode extend: assign and
     encode NEW vectors with the stored centroids/codebooks — append-
     only, rerun-idempotent, and self-repairing after a crash between
     the two table writes (see ivf_pq_extend_saved); --mode republish:
-    recall-gated retrain on --vectors (the current corpus) + atomic
+    recall-gated retrain on --vectors (the current corpus) + pointer
     publish — exits 1 without touching the artifact when the gate
-    refuses (see ivf_pq_republish). --layout pointer selects the
-    reader-atomic version-pointer publish (no rename window; the right
-    choice on object stores); query/extend resolve the pointer
-    transparently."""
+    refuses (see ivf_pq_republish). Build and republish refuse a root
+    holding a flat artifact (exit 2); query/extend still read it."""
     import json as _json
 
     from pyspark.sql import functions as F
 
     from dexscraper_spark.operators.quantize import (
-        ivf_pq_encode, ivf_pq_extend_saved, ivf_pq_query_saved,
-        ivf_pq_republish, ivf_pq_save, pq_train)
+        ivf_pq_encode, ivf_pq_extend_saved, ivf_pq_publish,
+        ivf_pq_query_saved, ivf_pq_republish, pq_train)
     from dexscraper_spark.operators.similarity import ivf_build
 
     mode = args.mode or "build"
@@ -724,10 +718,12 @@ def _run_ann(args, spark) -> int:
                 books = pq_train(vecs, dim=int(probe.d), m=args.pq_m,
                                  ksub=args.pq_ksub)
                 codes = ivf_pq_encode(index, books)
-                ivf_pq_save(spark, index, books, codes, args.index)
+                version = ivf_pq_publish(spark, index, books, codes,
+                                         args.index)
             finally:
                 index.unpersist()
-            n = spark.read.parquet(f"{args.index}/codes").count()
+            n = spark.read.parquet(
+                f"{args.index}/{version}/codes").count()
             _emit(_json.dumps({"mode": "build", "indexed": n,
                                "nlist": args.nlist}), args.output)
         elif mode == "extend":
@@ -744,7 +740,7 @@ def _run_ann(args, spark) -> int:
                 spark, corpus, args.index, nlist=args.nlist,
                 m=args.pq_m, ksub=args.pq_ksub, k=args.k,
                 nprobe=args.nprobe, max_drop=args.max_drop,
-                min_recall=args.min_recall, layout=args.layout)
+                min_recall=args.min_recall)
             _emit(_json.dumps({"mode": "republish", **res}),
                   args.output)
             # a refused gate is a failed maintenance run for the

@@ -3,7 +3,7 @@
 The engine's DATA plane (parquet reads/writes) always goes through
 Spark and is filesystem-agnostic for free. Its CONTROL plane — tiny
 JSON manifests/specs, version-directory listings, `_SUCCESS` probes,
-atomic directory swaps — historically used local `open`/`os.*` calls,
+version-pointer flips — historically used local `open`/`os.*` calls,
 which throw on ``s3a://``/``abfss://``/``hdfs://`` paths (VERDICT r8
 §next-1: the ONE cluster-readiness gap left). This module is the single
 shared helper all those sites route through:
@@ -23,8 +23,6 @@ Semantics notes (same contract both paths):
   rename — atomic on HDFS, best-effort on object stores (standard
   practice: the window is a missing-file read, never a torn one,
   because the tmp write is only renamed after a successful close).
-* ``rename`` moves files OR directories and fails if dst exists
-  (callers delete first — explicit, like the 2-rename swap protocol).
 * ``delete`` is recursive and returns quietly when the path is absent
   (``shutil.rmtree(ignore_errors=True)`` parity).
 
@@ -102,15 +100,6 @@ def list_names(spark, path: str) -> list[str]:
     return [st.getPath().getName() for st in fs.listStatus(jp)]
 
 
-def mkdirs(spark, path: str) -> None:
-    lp = _local_path(path)
-    if lp is not None:
-        os.makedirs(lp, exist_ok=True)
-        return
-    fs, jp = _fs(spark, path)
-    fs.mkdirs(jp)
-
-
 def delete(spark, path: str) -> None:
     """Recursive delete; silent no-op when absent."""
     lp = _local_path(path)
@@ -128,33 +117,11 @@ def delete(spark, path: str) -> None:
         fs.delete(jp, True)
 
 
-def rename(spark, src: str, dst: str) -> None:
-    """Move a file or directory. Raises if src is missing or dst exists
-    (delete dst first — the swap protocols do this explicitly)."""
-    ls, ld = _local_path(src), _local_path(dst)
-    if ls is not None and ld is not None:
-        if os.path.exists(ld):
-            raise FileExistsError(f"rename target exists: {dst}")
-        os.rename(ls, ld)
-        return
-    if (ls is None) != (ld is None):
-        raise ValueError(
-            f"rename across filesystems is not a rename: {src} -> {dst}")
-    fs, jsrc = _fs(spark, src)
-    _, jdst = _fs(spark, dst)
-    if fs.exists(jdst):
-        raise FileExistsError(f"rename target exists: {dst}")
-    if not fs.rename(jsrc, jdst):
-        # Hadoop rename() reports failure as a boolean
-        raise OSError(f"rename failed: {src} -> {dst}")
-
-
 def list_files_recursive(spark, path: str) -> dict:
     """``{relative/file/path: size}`` for every FILE under ``path``
     (directories themselves are not listed); {} when absent. The
-    relative keys make a manifest taken on one directory verifiable
-    against a sibling after a rename — the completeness-witness
-    contract below."""
+    relative keys are what a completeness manifest records (see
+    manifest_build)."""
     lp = _local_path(path)
     out: dict = {}
     if lp is not None:
@@ -189,10 +156,9 @@ def manifest_build(spark, path: str,
     and the root-level completion markers themselves (``skip_names`` —
     the marker carries the manifest, so listing it would make every
     re-stamp self-invalidating). Written INTO the artifact's completion
-    marker so recovery can tell a complete directory from one a crashed
-    copy-backed rename left partial (object stores: Hadoop rename =
-    per-file copy+delete, and underscore markers tend to move first — a
-    bare marker is NOT proof the data files arrived)."""
+    marker, so a check of the live version can tell a complete
+    directory from one with data files missing — a bare marker is NOT
+    proof the data files are there."""
     return {rel: size
             for rel, size in list_files_recursive(spark, path).items()
             if not any(rel.endswith(s) for s in skip_suffixes)
@@ -206,24 +172,6 @@ def manifest_missing(spark, path: str, files: dict) -> list:
     have = list_files_recursive(spark, path)
     return sorted(rel for rel, size in files.items()
                   if have.get(rel) != size)
-
-
-def drain_rename(spark, src: str, dst: str) -> None:
-    """Finish an interrupted ``rename(src, dst)``: move every file
-    still under ``src`` to the same relative path under ``dst``
-    (skipping files ``dst`` already has — those are the ones the
-    interrupted rename had moved), then remove ``src``. Only correct
-    when ``dst`` holds no OTHER content than the partial rename's —
-    the swap protocols guarantee that by renaming into a just-deleted
-    path."""
-    for rel in list_files_recursive(spark, src):
-        target = join(dst, *rel.split("/"))
-        if exists(spark, target):
-            continue
-        parent = target.rsplit("/", 1)[0]
-        mkdirs(spark, parent)
-        rename(spark, join(src, *rel.split("/")), target)
-    delete(spark, src)
 
 
 def create_exclusive(spark, path: str, text: str) -> bool:
@@ -257,13 +205,7 @@ def create_exclusive(spark, path: str, text: str) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Version-pointer publishes — reader-atomic artifact replacement.
-#
-# The 2-rename swap protocols (compact_zordered, ivf_pq_republish) have
-# a reader-visible window: between `path -> __old` and `tmp -> path`
-# the path is missing, and on object stores where rename is a per-file
-# copy that window is seconds-long for a big artifact (VERDICT r9
-# §next-3). The pointer layout removes the window entirely:
+# Version-pointer publishes — the one way an artifact is replaced.
 #
 #     root/_current          <- tiny JSON {"version": "v_000007", ...}
 #     root/v_000006/...      <- previous artifact (kept for laggards)
@@ -273,10 +215,13 @@ def create_exclusive(spark, path: str, text: str) -> bool:
 # completeness marker), then flip `_current` with one atomic tiny-file
 # write; readers resolve the pointer and read a directory that is never
 # renamed or deleted while it can still be resolved (GC keeps the
-# current + `keep-1` predecessors). Crash windows: a crash before the
-# flip leaves an orphan version directory the next publish's GC sweeps;
-# a crash during the flip leaves at worst a `_current.tmp` and the old
-# pointer intact. No recovery procedure is needed — that is the point.
+# current + `keep-1` predecessors). No live directory is ever renamed,
+# so readers see no missing-path window, even on object stores where a
+# directory rename is a seconds-long per-file copy. Crash windows: a
+# crash before the flip leaves an orphan version directory the next
+# publish's GC sweeps; a crash during the flip leaves at worst a
+# `_current.tmp` and the old pointer intact. No recovery procedure is
+# needed — that is the point.
 # ---------------------------------------------------------------------------
 
 _VERSION_PREFIX = "v_"
@@ -458,14 +403,14 @@ def pointer_publish(spark, root: str, version: str, *,
 
 
 def witness_verify(spark, path: str, marker_names: tuple) -> bool | None:
-    """Shared completeness-witness rule for the 2-rename swap artifacts
-    (IVF-PQ publishes, z-order compactions): the first marker of
-    ``marker_names`` present under ``path`` decides —
+    """Completeness-witness rule for a published version directory
+    (the check ``ivf_pq_recover`` runs on the version ``_current``
+    names): the first marker of ``marker_names`` present under ``path``
+    decides —
 
     * marker parses as JSON with a ``files`` manifest → **verify it**:
       True iff every listed file exists with the listed size (a marker
-      that arrived ahead of its data files in a copy-backed rename
-      fails here — the ADVICE r9 partial-path hole);
+      whose data files are missing fails here);
     * marker present but legacy (no manifest) → True, trusted as
       before (pre-manifest artifacts; documented residual exposure);
     * no marker at all → None (caller falls back to other witnesses or

@@ -751,29 +751,6 @@ def semantic_dedup(emb: DataFrame, *, id_col: str = "vec_id",
     uncapped exact-within-cluster kernel.
     Returns the surviving rows of ``emb`` (all original columns).
     """
-    return semantic_dedup_with_state(
-        emb, id_col=id_col, vec_col=vec_col, nlist=nlist,
-        threshold=threshold, seed=seed, round_to=round_to,
-        assign_n=assign_n, max_cluster=max_cluster)[0]
-
-
-def semantic_dedup_with_state(emb: DataFrame, *, id_col: str = "vec_id",
-                              vec_col: str = "embedding",
-                              nlist: int = 16, threshold: float = 0.95,
-                              seed: int = 42, round_to: int = 6,
-                              assign_n: int = 1,
-                              max_cluster: int | None = None
-                              ) -> tuple[DataFrame, DataFrame]:
-    """:func:`semantic_dedup` plus the SEMANTIC-DEDUP STATE: every input
-    vector labelled with its duplicate group.
-
-    State schema, one row per input vector (LOSERS included, as in the
-    curation fingerprint store): ``(id_col, vec_col, component long)`` where
-    ``component`` is the vector's duplicate-group label = the group's
-    min id (the published survivor); singletons label themselves.
-    Both frames are lazy; the pair-graph components are materialized
-    once and feed both.
-    """
     from dexscraper_spark.operators.similarity import (
         _ivf_assign, exact_cosine_pairs_blocked, ivf_build_deterministic)
     from dexscraper_spark.persist import materialize_artifact
@@ -812,8 +789,8 @@ def semantic_dedup_with_state(emb: DataFrame, *, id_col: str = "vec_id",
                 round_to=round_to, verify_against=verify)
         # Truncate lineage: the components frame is answer-sized
         # (pair-graph nodes only) but its plan reads the cluster-
-        # assignment artifact — materialize it so the returned frames
-        # survive the index release below (a mere persist() could evict
+        # assignment artifact — materialize it so the returned frame
+        # survives the index release below (a mere persist() could evict
         # and then recompute against the deleted artifact). Released by
         # clear_plan_cache() like every other artifact.
         comps = materialize_artifact(
@@ -823,10 +800,4 @@ def semantic_dedup_with_state(emb: DataFrame, *, id_col: str = "vec_id",
                       .select(F.col("node").alias(id_col))
     finally:
         index.unpersist()
-    survivors = emb.join(losers, id_col, "left_anti")
-    state = (emb.select(F.col(id_col), F.col(vec_col))
-             .join(comps.withColumnRenamed("node", id_col), id_col,
-                   "left")
-             .withColumn("component",
-                         F.coalesce(F.col("component"), F.col(id_col))))
-    return survivors, state
+    return emb.join(losers, id_col, "left_anti")

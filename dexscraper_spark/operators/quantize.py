@@ -440,21 +440,13 @@ def _probe_lists(index, queries: DataFrame, nprobe: int) -> DataFrame:
 def ivf_pq_topk(corpus: DataFrame, index, codes: DataFrame,
                 queries: DataFrame, books: PqCodebooks, *,
                 k: int = 10, nprobe: int = 4, expand: int = 4,
-                round_to: int | None = 6,
-                exclude_ids: DataFrame | None = None) -> DataFrame:
+                round_to: int | None = 6) -> DataFrame:
     """IVF-PQ search: probe the nprobe nearest lists per query (tiny
     broadcast centroid compare), equi-join the probed lists' CODES
     (never the vectors), ADC-score row-locally, keep k × expand per
     query, exact-rerank those. Shuffle volume: the list-id equi-join
     carries only probed-list code rows; everything after is bounded by
-    queries × k × expand. ``codes`` is ``ivf_pq_encode``'s output.
-
-    ``exclude_ids`` (an ``(id_col)`` frame) removes those corpus ids
-    from the candidate set BEFORE the ADC ranking window — the knob the
-    streaming dedup-ingest fold needs for replay-exact decisions. It is
-    applied AFTER the probed-list equi-join so the list-partitioned
-    codes scan keeps its file pruning (an anti-join upstream of the
-    probe join would force a full code-table read per call)."""
+    queries × k × expand. ``codes`` is ``ivf_pq_encode``'s output."""
     id_col, vec_col = index.id_col, index.vec_col
     probes = _probe_lists(index, queries, nprobe)
     qrows = [(r[0], list(r[1])) for r in
@@ -462,13 +454,9 @@ def ivf_pq_topk(corpus: DataFrame, index, codes: DataFrame,
     adc = _adc_score_udf(books, qrows)
     w = Window.partitionBy("query_id").orderBy(
         F.col("__adc").asc(), F.col("neighbor_id").asc())
-    probed = (codes.filter(F.col("code").isNotNull())
-              .join(broadcast(probes), "__list"))
-    if exclude_ids is not None:
-        probed = probed.join(exclude_ids.select(id_col), id_col,
-                             "left_anti")
     cand = (
-        probed
+        codes.filter(F.col("code").isNotNull())
+        .join(broadcast(probes), "__list")
         .select("query_id", F.col(id_col).alias("neighbor_id"), "code")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("__adc", adc(F.col("query_id"), F.col("code")))
@@ -485,7 +473,9 @@ def ivf_pq_save(spark, index, books: PqCodebooks, codes: DataFrame,
     """Persist the full compressed-search artifact as one directory:
     the IVF assignment + centroids (ivf_save layout), the PQ codebooks,
     and the codes partitioned by list id — probes then prune code FILES
-    to nprobe/nlist, the on-disk twin of the in-memory plan."""
+    to nprobe/nlist, the on-disk twin of the in-memory plan. ``path`` is
+    one version directory of a pointer root: :func:`ivf_pq_publish`
+    saves here, then flips the root's pointer to it."""
     from dexscraper_spark.operators.similarity import ivf_save
 
     from dexscraper_spark import fsio
@@ -499,12 +489,10 @@ def ivf_pq_save(spark, index, books: PqCodebooks, codes: DataFrame,
     # completion marker written through fsio, LAST: a witness that does
     # not depend on Spark's _SUCCESS markers (clusters can disable
     # mapreduce.fileoutputcommitter.marksuccessfuljobs) — what
-    # ivf_pq_recover trusts before treating the artifact as live. It
-    # carries the expected-file MANIFEST (name -> size) of everything
-    # just written: on object stores a Hadoop directory rename is a
-    # per-file copy+delete and the marker can arrive at the destination
-    # ahead of the data files, so marker PRESENCE alone must never be
-    # read as completeness — recovery re-verifies the manifest.
+    # ivf_pq_recover verifies on the live version. It carries the
+    # expected-file MANIFEST (name -> size) of everything just written,
+    # so a version with files missing (removed or never copied in) fails
+    # the check even though its marker is present.
     fsio.write_text_atomic(
         spark, fsio.join(path, "_complete"),
         _json.dumps({"files": fsio.manifest_build(spark, path)}))
@@ -512,11 +500,11 @@ def ivf_pq_save(spark, index, books: PqCodebooks, codes: DataFrame,
 
 def ivf_pq_load(spark, path: str, *, id_col: str = "vec_id",
                 vec_col: str = "embedding") -> tuple:
-    """(index, books, codes) from an ivf_pq_save directory — or from a
-    version-POINTER root (``path/_current`` names the live version
-    directory): readers resolve the pointer first, so a republish under
-    the pointer layout is invisible to them (no rename window at
-    all)."""
+    """(index, books, codes) from a version-pointer root
+    (``path/_current`` names the live version directory): readers
+    resolve the pointer first, so a publish is invisible to them (no
+    rename window at all). A root without a pointer is read as a flat
+    ivf_pq_save directory."""
     from dexscraper_spark import fsio
     from dexscraper_spark.operators.similarity import ivf_load
 
@@ -539,12 +527,14 @@ def ivf_pq_extend_saved(spark, path: str, new_vectors: DataFrame, *,
     of skipping the whole batch forever (idempotence keyed only on the
     first write would do exactly that). Returns counts.
 
-    Holds the artifact's maintenance lease for the duration: an extend
-    interleaving a concurrent :func:`ivf_pq_republish` would append
-    into a directory the swap is about to delete/rename (and the
-    republish's corpus snapshot would silently miss the appended
-    vectors). Concurrent extends of ONE artifact are likewise
-    serialized — the two appends are not atomic together."""
+    On a pointer root the appends land in the version ``_current``
+    names (a root without a pointer is extended in place). Holds the
+    root's maintenance lease for the duration: an extend interleaving a
+    concurrent :func:`ivf_pq_republish` would append into a version the
+    republish's corpus snapshot has already read, so the published
+    rebuild would silently miss the appended vectors. Concurrent
+    extends of ONE artifact are likewise serialized — the two appends
+    are not atomic together."""
     return _with_maintenance_lease(
         spark, path, "ivf_pq_extend_saved",
         lambda: _extend_saved_locked(spark, path, new_vectors,
@@ -557,9 +547,9 @@ def _extend_saved_locked(spark, path: str, new_vectors: DataFrame, *,
     from dexscraper_spark.operators.similarity import (
         _ivf_assign, ivf_load)
 
-    # pointer layout: appends land in the CURRENT version directory
-    # (in-place, like any parquet append); the lease is keyed on the
-    # ROOT so extend and republish exclude each other across versions
+    # appends land in the CURRENT version directory (in place, like
+    # any parquet append); the lease is keyed on the ROOT so extend and
+    # republish exclude each other across versions
     path = fsio.pointer_resolve(spark, path)
     index = ivf_load(spark, path, id_col=id_col, vec_col=vec_col)
     books = pq_load(spark, f"{path}/pq_books")
@@ -593,166 +583,95 @@ def _extend_saved_locked(spark, path: str, new_vectors: DataFrame, *,
 
 
 def ivf_pq_query_saved(spark, path: str, queries: DataFrame, *,
-                       corpus: DataFrame | None = None,
                        k: int = 10, nprobe: int = 4, expand: int = 4,
                        round_to: int | None = 6,
                        id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       exclude_ids: DataFrame | None = None
-                       ) -> DataFrame:
-    """One-stop search against a SAVED artifact: resolve the pointer
-    ONCE (so index and codes come from the same version even if a
-    republish flips mid-call) and run :func:`ivf_pq_topk`. ``corpus``
-    (for the exact rerank) defaults to the artifact's own assigned
-    vectors."""
+                       vec_col: str = "embedding") -> DataFrame:
+    """One-stop search against a SAVED artifact: load it (one pointer
+    resolve, so index and codes come from the same version even if a
+    republish flips mid-call) and run :func:`ivf_pq_topk`, exact-
+    reranking against the artifact's own assigned vectors."""
+    index, books, codes = ivf_pq_load(spark, path, id_col=id_col,
+                                      vec_col=vec_col)
+    return ivf_pq_topk(index.assigned, index, codes, queries, books,
+                       k=k, nprobe=nprobe, expand=expand,
+                       round_to=round_to)
+
+
+def ivf_pq_publish(spark, index, books: PqCodebooks, codes: DataFrame,
+                   path: str, *, meta: dict | None = None) -> str:
+    """Publish an IVF-PQ artifact under the version-pointer root
+    ``path`` — the one publish step ``ann --mode build`` and
+    :func:`ivf_pq_republish` share. The artifact is saved completely
+    into the root's next version directory (:func:`ivf_pq_save` stamps
+    its manifest-carrying ``_complete`` marker last), then
+    ``path/_current`` is flipped with one atomic tiny-file write
+    (:func:`dexscraper_spark.fsio.pointer_publish`). No live directory
+    is ever renamed, so readers see no window and a crash needs no
+    repair: it leaves at most an orphan version directory, which the
+    next publish's GC sweeps. ``keep=2`` retains the previous version
+    for readers that resolved the pointer a moment before the flip.
+    ``meta`` rides in the pointer file (republish's gate record).
+    Returns the published version name.
+
+    A root that holds a FLAT artifact (``codes/`` or ``_complete``
+    directly under it, written before every publish went through the
+    pointer) is refused and left untouched: query and extend still read
+    it, and a one-time move makes it publishable."""
     from dexscraper_spark import fsio
 
-    resolved = fsio.pointer_resolve(spark, path)
-    index, books, codes = ivf_pq_load(spark, resolved, id_col=id_col,
-                                      vec_col=vec_col)
-    if corpus is None:
-        corpus = index.assigned
-    return ivf_pq_topk(corpus, index, codes, queries, books, k=k,
-                       nprobe=nprobe, expand=expand, round_to=round_to,
-                       exclude_ids=exclude_ids)
+    _refuse_flat(spark, path)
+    version = fsio.pointer_next_version(spark, path)
+    ivf_pq_save(spark, index, books, codes, fsio.join(path, version))
+    fsio.pointer_publish(spark, path, version, meta=meta, keep=2)
+    return version
+
+
+def _refuse_flat(spark, path: str) -> None:
+    from dexscraper_spark import fsio
+
+    if fsio.pointer_read(spark, path) is None and (
+            fsio.exists(spark, fsio.join(path, "codes"))
+            or fsio.exists(spark, fsio.join(path, "_complete"))):
+        raise ValueError(
+            f"{path} holds a FLAT ivf_pq artifact — move it to "
+            "<path>/v_000001 and write the _current pointer first")
 
 
 def ivf_pq_recover(spark, path: str, *,
                    clear_lease: bool = True) -> str:
-    """Finish or undo a :func:`ivf_pq_republish` swap interrupted by a
-    crash. Returns ``"ok"`` (live artifact present and complete; stale
-    siblings cleaned), ``"rolled_forward"`` (the rebuilt artifact had
-    committed — the swap is completed), or ``"rolled_back"`` (it had
-    not — the previous artifact is restored). Raises when neither a
-    complete artifact nor a recoverable sibling exists — after clearing
-    any UNCOMMITTED ``__rebuilding`` leftovers, so a first-ever publish
-    that crashed mid-save never wedges the path.
+    """Check a version-pointer root after a crash. Publishes never
+    rename a live directory (:func:`ivf_pq_publish`), so there is
+    nothing to roll forward or back; orphan version directories from
+    crashed publishes are harmless and swept by the next publish's GC.
+    Returns ``"ok"`` when the version ``_current`` names passes its
+    completeness witness: the ``_complete`` marker's expected-file
+    manifest verifies against the listing, or, for an artifact saved
+    before markers existed, ``codes/_SUCCESS`` is present. Raises
+    ``ValueError`` (touching nothing) when it fails, and
+    ``FileNotFoundError`` when the root has no pointer.
 
-    A bare directory at ``path`` is NOT trusted as live: on object
-    stores Hadoop rename is a copy, so a crash mid-swap can leave a
-    PARTIAL ``path`` while the rest of the artifact sits in a sibling.
-    Completeness witness = ``_committed`` (republish) or ``_complete``
-    (any ivf_pq_save — both written via fsio, so they exist even on
-    clusters that disable Spark's ``_SUCCESS`` markers) or
-    ``codes/_SUCCESS`` (pre-marker artifacts) — and when the marker
-    carries an expected-file MANIFEST (every save since the manifest
-    change), the witness only counts after the manifest VERIFIES
-    against the actual listing: a copy-backed rename moves the
-    underscore markers ahead of the data files, so a crash mid-rename
-    can park a bare marker on a half-filled directory (ADVICE r9). A
-    manifest-failing ``path`` with a committed sibling is repaired by
-    FINISHING the interrupted rename file-by-file (fsio.drain_rename:
-    the swap only ever renames into a just-deleted path, so the two
-    halves union to exactly the new artifact) and re-verifying; a
-    witness-less/unverifiable ``path`` with no committed sibling is
-    refused untouched — deleting a live (merely marker-less) artifact
-    or rolling back to an OLDER ``__old`` would be silent data loss,
-    strictly worse than a loud stop. Legacy manifest-less markers are
-    still trusted as before (documented residual exposure). A
-    ``__republish.lock`` lease left by the crashed run is cleared on
-    every successful recovery."""
+    With ``clear_lease`` (the default) the ``__republish.lock`` lease a
+    crashed holder left is cleared. Republish's own entry check passes
+    ``clear_lease=False`` so it can never silently break a LIVE
+    concurrent holder's exclusion."""
     from dexscraper_spark import fsio
 
-    tmp, old = f"{path}__rebuilding", f"{path}__old"
-    lock = f"{path}__republish.lock"
-
-    # version-pointer root: publishes are reader-atomic, so the only
-    # "recovery" is confirming the pointed-at version verifies (orphan
-    # version dirs from crashed publishes are swept by the next
-    # publish's GC, not here — they are harmless)
     pv = fsio.pointer_read(spark, path)
     if pv is not None:
         live = fsio.join(path, pv)
-        ok = fsio.witness_verify(spark, live,
-                                 ("_committed", "_complete"))
+        ok = fsio.witness_verify(spark, live, ("_complete",))
         if ok is None:
-            ok = fsio.exists(spark, fsio.join(live, "codes",
-                                              "_SUCCESS"))
+            ok = fsio.exists(spark, fsio.join(live, "codes", "_SUCCESS"))
         if not ok:
             raise ValueError(
                 f"pointer at {path} names {pv} but that version fails "
                 "its completeness witness — refusing to touch it")
-        if clear_lease:
-            fsio.delete(spark, lock)
-        return "ok"
-
-    def _done(status: str) -> str:
-        # the lease is cleared only on an EXPLICIT recover call — the
-        # automatic entry recovery inside republish passes
-        # clear_lease=False so it can never silently break a LIVE
-        # concurrent holder's exclusion
-        if clear_lease:
-            fsio.delete(spark, lock)
-        return status
-
-    tmp_witness = fsio.witness_verify(spark, tmp, ("_committed",))
-    if fsio.exists(spark, path):
-        ok = fsio.witness_verify(spark, path,
-                                 ("_committed", "_complete"))
-        if ok is None:
-            ok = fsio.exists(spark, fsio.join(path, "codes",
-                                              "_SUCCESS"))
-        if ok:
-            # live artifact: any siblings are a stale crashed attempt —
-            # clear them so the next republish starts clean
-            fsio.delete(spark, tmp)
-            fsio.delete(spark, old)
-            return _done("ok")
-        if tmp_witness:
-            # tmp verifies ALONE -> the swap never started moving it
-            # (crash before/mid path->old); path remnants are the old
-            # artifact's stragglers, superseded by the committed rebuild
-            fsio.delete(spark, path)
-            fsio.rename(spark, tmp, path)
-            fsio.delete(spark, old)
-            return _done("rolled_forward")
-        if fsio.exists(spark, tmp) and (
-                fsio.exists(spark, fsio.join(tmp, "_committed"))
-                or fsio.exists(spark, fsio.join(path, "_committed"))):
-            # crash mid tmp->path: files split across the two halves
-            # (path had been fully renamed away first, so it holds ONLY
-            # new-artifact files) — finish the rename, then demand the
-            # manifest verify before declaring anything live
-            fsio.drain_rename(spark, tmp, path)
-            if fsio.witness_verify(spark, path, ("_committed",)):
-                fsio.delete(spark, old)
-                return _done("rolled_forward")
-            raise ValueError(
-                f"artifact at {path} is still incomplete after "
-                "completing the interrupted rename from "
-                f"{tmp} — manifest files are missing; refusing to "
-                "declare it live or delete siblings")
-        raise ValueError(
-            f"artifact at {path} lacks a verifiable completeness "
-            "witness (_committed/_complete manifest/codes/_SUCCESS) "
-            "and no committed rebuild sibling exists — refusing to "
-            "touch it (write the _complete marker if the artifact is "
-            "known-good)")
-    if tmp_witness:
-        fsio.rename(spark, tmp, path)
-        fsio.delete(spark, old)
-        return _done("rolled_forward")
-    if tmp_witness is False:
-        # committed but manifest-incomplete tmp with NO path: the swap
-        # protocol cannot produce this (files only ever drain tmp ->
-        # path, which would exist) — something external removed files
-        raise ValueError(
-            f"committed rebuild at {tmp} fails its own manifest and "
-            f"{path} is absent — data files are missing; not "
-            "recoverable automatically")
-    if fsio.exists(spark, old):
-        fsio.delete(spark, tmp)
-        fsio.rename(spark, old, path)
-        return _done("rolled_back")
-    # nothing recoverable; an uncommitted tmp is a crashed FIRST publish
-    # — clear it so the retry starts clean instead of wedging here again
-    fsio.delete(spark, tmp)
     if clear_lease:
-        fsio.delete(spark, lock)
-    raise FileNotFoundError(
-        f"no IVF-PQ artifact at {path} (nor a recoverable "
-        "__old/__rebuilding sibling; any uncommitted rebuild leftovers "
-        "were cleared)")
+        fsio.delete(spark, f"{path}__republish.lock")
+    if pv is None:
+        raise FileNotFoundError(f"no version pointer at {path}/_current")
+    return "ok"
 
 
 def ivf_pq_republish(spark, corpus: DataFrame, path: str, *,
@@ -762,14 +681,13 @@ def ivf_pq_republish(spark, corpus: DataFrame, path: str, *,
                      seed: int = 42, k: int = 5, n_queries: int = 32,
                      nprobe: int = 4, expand: int = 4,
                      max_drop: float = 0.05,
-                     min_recall: float | None = None,
-                     layout: str = "auto") -> dict:
-    """RECALL-GATED retrain + atomic republish of an ivf_pq_save
+                     min_recall: float | None = None) -> dict:
+    """RECALL-GATED retrain + reader-atomic republish of an IVF-PQ
     artifact — the periodic maintenance op that closes the drift story:
-    :func:`ivf_pq_extend_saved` (and the streaming fold) keep the
-    centroids/codebooks day-0 frozen by design, so under distribution
-    shift the assignment degrades and recall decays (RECALL.json tracks
-    it). This composes the existing pieces into one safe operation:
+    :func:`ivf_pq_extend_saved` keeps the centroids/codebooks day-0
+    frozen by design, so under distribution shift the assignment
+    degrades and recall decays (RECALL.json tracks it). This composes
+    the existing pieces into one safe operation:
 
     1. **Rebuild** on the CURRENT corpus with
        :func:`~dexscraper_spark.operators.similarity.
@@ -782,16 +700,16 @@ def ivf_pq_republish(spark, corpus: DataFrame, path: str, *,
        methodology and thresholds). Publish only if the rebuild is no
        worse than ``old - max_drop`` (and ≥ ``min_recall`` when given):
        a mis-parameterized retrain must never replace a healthy index.
-    3. **Swap** — the 2-rename protocol proven in
-       ``sinks.lake.compact_zordered``: write to ``<path>__rebuilding``,
-       stamp a ``_committed`` marker (which doubles as the gate record),
-       then ``path→__old``, ``tmp→path``. A crash at ANY point is
-       repaired by :func:`ivf_pq_recover` (called at entry too): roll
-       forward iff the marker exists, else roll back. All control-plane
-       probes/renames go through fsio, so ``path`` may be an
-       hdfs/s3a/abfss URI. Readers during the rename window retry; the
-       streaming extend fold keeps working across the swap because it
-       re-loads the artifact from ``path`` on every micro-batch.
+    3. **Publish** through :func:`ivf_pq_publish`: the rebuild goes to
+       ``path/v_NNNNNN`` and ``path/_current`` flips to it, carrying
+       the gate record. Readers resolve the pointer (``ivf_pq_load``/
+       ``ivf_pq_extend_saved`` do it automatically) and never see a
+       window. All control-plane probes go through fsio, so ``path``
+       may be an hdfs/s3a/abfss URI.
+
+    At entry, :func:`ivf_pq_recover` checks the live version's witness
+    (a root with no pointer yet is a first publish), and a root holding
+    a FLAT artifact is refused untouched, before any rebuild work.
 
     Cost: deterministic build = one bounded sample collect +
     |corpus| × nlist broadcast compares; PQ train = bounded sample;
@@ -800,89 +718,40 @@ def ivf_pq_republish(spark, corpus: DataFrame, path: str, *,
     budget). The rebuilt assignment is materialized once and feeds both
     the gate probe and the save (no double execution).
 
-    ``layout`` picks the publish protocol:
-
-    * ``"swap"`` — the 2-rename protocol above (flat directory at
-      ``path``; readers retry during the rename window).
-    * ``"pointer"`` — READER-ATOMIC version-pointer publish (VERDICT r9
-      §next-3): the rebuild is written completely to
-      ``path/v_NNNNNN``, then ``path/_current`` is flipped with one
-      atomic tiny-file write (:func:`dexscraper_spark.fsio.
-      pointer_publish`). There is NO window: readers resolve the
-      pointer (``ivf_pq_load``/``ivf_pq_extend_saved`` do it
-      automatically) and the previous version is retained for in-flight
-      laggards; crashed publishes leave only orphan version dirs the
-      next publish's GC sweeps — no recovery procedure exists because
-      none is needed. Use this layout on object stores, where the swap
-      rename is a seconds-long copy.
-    * ``"auto"`` (default) — ``pointer`` iff ``path/_current`` already
-      exists, else ``swap`` (full backward compatibility; opt a new
-      artifact into the pointer layout by passing ``layout="pointer"``
-      on its FIRST publish).
-
     Returns ``{"published": bool, "recall_new": .., "recall_old": ..,
-    "reason": ..}`` — recall_old is None when no artifact exists yet
-    (first publish: gate is min_recall only).
+    "reason": ..}`` plus ``"version"`` when published — recall_old is
+    None when no artifact exists yet (first publish: gate is min_recall
+    only).
     """
-    from dexscraper_spark import fsio
-
-    if layout not in ("auto", "swap", "pointer"):
-        raise ValueError(f"layout must be auto/swap/pointer, "
-                         f"got {layout!r}")
-    has_pointer = fsio.pointer_read(spark, path) is not None
-    pointer = layout == "pointer" or (layout == "auto" and has_pointer)
-    if pointer and not has_pointer and (
-            fsio.exists(spark, fsio.join(path, "codes"))
-            or fsio.exists(spark, fsio.join(path, "_complete"))):
-        raise ValueError(
-            f"{path} holds a FLAT ivf_pq artifact but layout='pointer' "
-            "was requested — move it to <path>/v_000001 and write the "
-            "_current pointer first, or republish with layout='swap'")
-    if layout == "swap" and has_pointer:
-        raise ValueError(
-            f"{path} is a version-pointer root but layout='swap' was "
-            "forced — refusing to overwrite the pointer layout")
-
-    # entry recovery (swap layout only — the pointer layout has no
-    # crash states to repair): finish/undo any interrupted prior swap.
-    # A first-ever publish legitimately finds nothing — or only the
-    # uncommitted leftovers of its own crashed previous attempt, which
-    # recover clears before raising; either way, proceed to publish.
-    if not pointer and (
-            fsio.exists(spark, path)
-            or fsio.exists(spark, f"{path}__rebuilding")
-            or fsio.exists(spark, f"{path}__old")):
-        try:
-            # clear_lease=False: entry recovery must never silently
-            # break a LIVE concurrent holder's exclusion — an orphaned
-            # crashed-run lease needs one explicit ivf_pq_recover call
-            ivf_pq_recover(spark, path, clear_lease=False)
-        except FileNotFoundError:
-            pass  # nothing recoverable: fresh publish
+    _refuse_flat(spark, path)
+    try:
+        ivf_pq_recover(spark, path, clear_lease=False)
+    except FileNotFoundError:
+        pass  # no pointer yet: this is the root's first publish
 
     # Maintenance lease: republish must not interleave with a
     # concurrent ivf_pq_extend_saved — vectors appended after this
     # run's corpus snapshot would be silently absent from the rebuilt
-    # index, and the extend's two-table append can race the swap's
-    # delete/rename of the same path (ADVICE r9). The lease makes the
-    # mistake LOUD rather than being a distributed mutex (create-if-
-    # absent is best-effort on object stores); a lease orphaned by a
-    # crash is cleared by ivf_pq_recover. The caller must also ensure
-    # ``corpus`` already contains every extended vector — the rebuild
-    # is corpus-only and a stale corpus frame silently drops the rest.
+    # index (ADVICE r9). The lease makes the mistake LOUD rather than
+    # being a distributed mutex (create-if-absent is best-effort on
+    # object stores); a lease orphaned by a crash is cleared by
+    # ivf_pq_recover. The caller must also ensure ``corpus`` already
+    # contains every extended vector — the rebuild is corpus-only and a
+    # stale corpus frame silently drops the rest.
     return _with_maintenance_lease(
         spark, path, "ivf_pq_republish",
         lambda: _republish_locked(
             spark, corpus, path, id_col=id_col, vec_col=vec_col,
             nlist=nlist, m=m, ksub=ksub, seed=seed, k=k,
             n_queries=n_queries, nprobe=nprobe, expand=expand,
-            max_drop=max_drop, min_recall=min_recall,
-            pointer=pointer))
+            max_drop=max_drop, min_recall=min_recall))
 
 
 def _with_maintenance_lease(spark, path: str, op: str, fn):
     """Run ``fn`` holding ``<path>__republish.lock`` — the shared
-    exclusion between republish and extend; raises loudly when held."""
+    exclusion between republish and extend of one pointer root (keyed
+    on the ROOT, so it spans versions); raises loudly when held. A
+    lease a crashed holder left is cleared by :func:`ivf_pq_recover`."""
     import json as _json
     import os as _os
     import time as _time
@@ -912,8 +781,7 @@ def _republish_locked(spark, corpus: DataFrame, path: str, *,
                       id_col: str, vec_col: str, nlist: int, m: int,
                       ksub: int, seed: int, k: int, n_queries: int,
                       nprobe: int, expand: int, max_drop: float,
-                      min_recall: float | None,
-                      pointer: bool = False) -> dict:
+                      min_recall: float | None) -> dict:
     from dexscraper_spark import fsio
     from dexscraper_spark.operators.similarity import (
         cosine_topk, ivf_build_deterministic)
@@ -945,9 +813,7 @@ def _republish_locked(spark, corpus: DataFrame, path: str, *,
                 nprobe=nprobe, expand=expand), k)
 
             recall_old = None
-            has_old = (fsio.pointer_read(spark, path) is not None
-                       if pointer else fsio.exists(spark, path))
-            if has_old:
+            if fsio.pointer_read(spark, path) is not None:
                 oidx, obooks, ocodes = ivf_pq_load(
                     spark, path, id_col=id_col, vec_col=vec_col)
                 recall_old = _recall_vs(exact, ivf_pq_topk(
@@ -967,47 +833,16 @@ def _republish_locked(spark, corpus: DataFrame, path: str, *,
                                   f"{recall_old} -> {recall_new} "
                                   f"(max_drop {max_drop})"}
 
-            import json as _json
             gate_record = {"recall_new": recall_new,
                            "recall_old": recall_old,
                            "k": k, "n_queries": n_queries,
                            "nlist": nlist, "m": m,
                            "ksub": ksub, "seed": seed}
-            if pointer:
-                # reader-atomic publish: write the version dir fully
-                # (ivf_pq_save stamps its manifest-carrying _complete
-                # marker LAST), then flip the tiny pointer file — no
-                # rename of a live directory anywhere. pointer_publish
-                # retains the previous version for in-flight readers
-                # and sweeps older versions + crashed-publish orphans.
-                version = fsio.pointer_next_version(spark, path)
-                ivf_pq_save(spark, index, books, codes,
-                            fsio.join(path, version))
-                fsio.pointer_publish(spark, path, version,
-                                     meta=gate_record, keep=2)
-                return {"published": True, "recall_new": recall_new,
-                        "recall_old": recall_old,
-                        "reason": "gate passed", "version": version}
-            tmp, old = f"{path}__rebuilding", f"{path}__old"
-            fsio.delete(spark, tmp)
-            ivf_pq_save(spark, index, books, codes, tmp)
-            # the gate record doubles as the commit marker AND carries
-            # the expected-file manifest (see ivf_pq_recover: a bare
-            # marker parked by a partial copy-backed rename is not
-            # proof the data files arrived). Built AFTER ivf_pq_save so
-            # it lists everything, _complete included.
-            fsio.write_text_atomic(spark, fsio.join(tmp, "_committed"),
-                                   _json.dumps({
-                                       **gate_record,
-                                       "files": fsio.manifest_build(
-                                           spark, tmp)}))
-            fsio.delete(spark, old)
-            if fsio.exists(spark, path):
-                fsio.rename(spark, path, old)
-            fsio.rename(spark, tmp, path)
-            fsio.delete(spark, old)
+            version = ivf_pq_publish(spark, index, books, codes, path,
+                                     meta=gate_record)
             return {"published": True, "recall_new": recall_new,
-                    "recall_old": recall_old, "reason": "gate passed"}
+                    "recall_old": recall_old,
+                    "reason": "gate passed", "version": version}
         finally:
             codes.unpersist()
     finally:

@@ -304,10 +304,10 @@ def exact_cosine_pairs_blocked(emb: DataFrame, *, id_col: str = "vec_id",
 def _lsh_planes(spark, *, num_planes: int = 16, dim: int = 64) -> list:
     """Hyperplane weights h_p[i] = (xxhash64(p*dim + i) mod 2001 - 1000)/1000
     — deterministic pseudo-random planes. Evaluated ONCE per session by the
-    JVM (one tiny job) and folded into the signature expression as literals:
-    leaving xxhash64 inside the per-row lambda re-hashes num_planes×dim
-    times per ROW (46 M hash evals over a 60 k corpus — measured as the
-    dominant LSH cost). Same formula, same doubles, identical signatures.
+    JVM (one tiny job) and handed to the signature UDF as constants:
+    hashing inside the per-row path re-hashes num_planes×dim times per
+    ROW (46 M hash evals over a 60 k corpus — measured as the dominant
+    LSH cost).
     """
     def build():
         # xxhash64 of the INT index — matches the int arithmetic
@@ -322,37 +322,10 @@ def _lsh_planes(spark, *, num_planes: int = 16, dim: int = 64) -> list:
     return get_or_build(spark, "lsh_planes", (num_planes, dim), build)
 
 
-def lsh_signature(vec_col, *, num_planes: int = 16, dim: int = 64,
-                  planes: list | None = None):
-    """Random-hyperplane signature: bit p = sign(v · h_p), planes from
-    ``_lsh_planes`` (constant literals — no per-row hashing; pass ``planes``
-    when a session is at hand to reuse the cache). Column-expression
-    variant for SQL-side use/debugging. CAVEAT: the per-plane dot is a
-    sequential left fold, while the bucketed path's vectorized quantizer
-    (``_lsh_signature_udf``) sums via BLAS — for a vector whose margin on
-    some plane is within float summation-order drift (~1e-16) the sign
-    bit can differ between the two; don't mix their buckets.
-    """
-    v = vec_col if not isinstance(vec_col, str) else F.col(vec_col)
-    if planes is None:
-        from pyspark.sql import SparkSession
-        planes = _lsh_planes(SparkSession.active(),
-                             num_planes=num_planes, dim=dim)
-    sig = None
-    for p, plane in enumerate(planes):
-        w = F.array(*[F.lit(float(x)) for x in plane])
-        dot_p = F.aggregate(
-            F.zip_with(v, w, lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda s, t: s + t)
-        term = F.shiftleft((dot_p > F.lit(0.0)).cast("bigint"), p)
-        sig = term if sig is None else sig + term
-    return sig
-
-
 def _lsh_signature_udf(planes: list):
     """Vectorized signature: one Arrow batch → one numpy matmul
     (n×dim @ dim×P) → sign bits packed to int64. This is the scale path:
-    the column-expression fold is interpreted per row (measured ~0.5 ms/row
+    a column-expression fold is interpreted per row (measured ~0.5 ms/row
     — 8 HOF evaluations each allocating a zipped array), while the matmul
     amortizes to microseconds/row and is exactly how a production ANN
     quantizer computes signatures. Per-row output depends only on the row
@@ -536,18 +509,15 @@ class IvfIndex:
         self.id_col = id_col
         self.vec_col = vec_col
         self.nlist = nlist
-        # the frames whose storage unpersist() releases — normally just
-        # `assigned`, but an ivf_add-extended index's assigned is a
-        # union PLAN over the base artifact: the base handle must ride
-        # along or release becomes a silent no-op leak
+        # the frames whose storage unpersist() releases — `assigned`,
+        # or none for a centroid-only shell that owns no storage
         self._release_handles = (release_handles if release_handles
                                  is not None else [assigned])
 
     def unpersist(self):
         """Release the index's storage: deletes the materialized
         artifact dir for ``cache=True`` indexes (unpersist() cannot free
-        a parquet artifact), block-manager unpersist otherwise; an
-        extended index (ivf_add) releases its base's storage."""
+        a parquet artifact), block-manager unpersist otherwise."""
         from dexscraper_spark.persist import release_artifact
         for df in self._release_handles:
             if not release_artifact(df):
@@ -692,51 +662,6 @@ def _ivf_assign(index: IvfIndex, new_vectors: DataFrame, *,
     )
 
 
-def ivf_add(index: IvfIndex, new_vectors: DataFrame) -> IvfIndex:
-    """Extend an IVF index with a batch of new vectors WITHOUT refitting
-    the coarse quantizer: assign each to its nearest existing centroid
-    and append — the nightly maintenance op of an embedding pipeline.
-
-    Cost ∝ |delta| × nlist (broadcast centroid compare) plus a
-    delta-sized append; the existing assignment is never recomputed or
-    rewritten. The quantizer is immutable by design — per-batch refit
-    would invalidate every stored assignment; centroid drift under
-    distribution shift is a periodic RETRAIN decision (rebuild via
-    :func:`ivf_build`), not a per-batch one — standard IVF practice.
-    Assignment parity with the original KMeans transform is pinned by
-    test (drop-and-re-add reproduces the build's own lists bit-for-bit).
-    """
-    return IvfIndex(
-        index.assigned.unionByName(_ivf_assign(index, new_vectors)),
-        index.centroids, id_col=index.id_col, vec_col=index.vec_col,
-        nlist=index.nlist, release_handles=index._release_handles)
-
-
-def ivf_extend_saved(spark, path: str, new_vectors: DataFrame, *,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     skip_existing: bool = True) -> IvfIndex:
-    """Fold a vector batch into an on-disk index (:func:`ivf_save`
-    layout): assign against the stored centroids and APPEND the new
-    rows into the list-partitioned assignment table — existing parquet
-    files are never read back or rewritten (delta-sized write; probes
-    keep pruning partitions). Returns the reloaded extended index.
-
-    ``skip_existing`` (default) anti-joins the batch against the stored
-    ids first, making a RETRIED nightly append idempotent — the append
-    itself is not atomic, so a rerun after a success (or after a crash
-    that landed part of the batch) would otherwise duplicate vectors
-    and corrupt top-k ranks. Costs one column-pruned id scan of the
-    index; orchestrators with their own write-audit-publish dance can
-    turn it off."""
-    index = ivf_load(spark, path, id_col=id_col, vec_col=vec_col)
-    if skip_existing:
-        new_vectors = new_vectors.join(
-            index.assigned.select(id_col), id_col, "left_anti")
-    _ivf_assign(index, new_vectors).write.mode("append") \
-        .partitionBy("__list").parquet(f"{path}/assigned")
-    return ivf_load(spark, path, id_col=id_col, vec_col=vec_col)
-
-
 def ivf_query(index: IvfIndex, queries: DataFrame, *, k: int = 10,
               nprobe: int = 4, round_to: int | None = 6) -> DataFrame:
     """Probe the nprobe nearest lists per query, exact-rank candidates.
@@ -786,14 +711,3 @@ def ivf_query(index: IvfIndex, queries: DataFrame, *, k: int = 10,
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def ivf_topk(corpus: DataFrame, queries: DataFrame, *, id_col: str = "vec_id",
-             vec_col: str = "embedding", k: int = 10, nlist: int = 16,
-             nprobe: int = 4, seed: int = 42,
-             round_to: int | None = 6) -> DataFrame:
-    """One-shot convenience: build (uncached) + query. For any repeated
-    use, call ``ivf_build`` once and ``ivf_query`` per query instead."""
-    index = ivf_build(corpus, id_col=id_col, vec_col=vec_col, nlist=nlist,
-                      seed=seed, cache=False)
-    return ivf_query(index, queries, k=k, nprobe=nprobe, round_to=round_to)

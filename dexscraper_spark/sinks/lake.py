@@ -220,7 +220,7 @@ def _write_curve(keyed: DataFrame, path: str, *, n_files: int,
                  mode: str = "overwrite") -> None:
     """One curve-segment write: contiguous Z-ranges per file (range
     partition — a hash repartition would scatter the curve), sorted
-    within files, key dropped. Shared by write/append/compact so the
+    within files, key dropped. Shared by write and append so the
     layout can never silently diverge between them."""
     (keyed.repartitionByRange(n_files, "__zkey")
      .sortWithinPartitions("__zkey")
@@ -263,48 +263,6 @@ def write_zordered(df: DataFrame, path: str, *, cols: list[str],
                      cuts=cuts)
 
 
-def zordered_resolve(spark, root: str) -> str:
-    """The directory readers should scan: ``root/<current version>``
-    under a version-pointer layout (``root/_current`` exists), else
-    ``root`` itself — every reader of a flat table keeps working."""
-    from dexscraper_spark import fsio
-
-    return fsio.pointer_resolve(spark, root)
-
-
-def read_zordered(spark, root: str) -> DataFrame:
-    """Pointer-aware table read (Spark's listing already skips the
-    underscore-prefixed ``_zorder`` spec and markers)."""
-    return spark.read.parquet(zordered_resolve(spark, root))
-
-
-def write_zordered_versioned(df: DataFrame, root: str, *,
-                             cols: list[str], bits: int | None = None,
-                             n_files: int = 32) -> str:
-    """First publish of a READER-ATOMIC z-ordered table (VERDICT r9
-    §next-3): the table is written completely to ``root/v_NNNNNN``
-    (curve files, ``_zorder`` spec, then a ``_committed`` marker with
-    the expected-file manifest), and ``root/_current`` is flipped with
-    one atomic tiny-file write. Readers resolve the pointer
-    (:func:`read_zordered`); compaction publishes a NEW version and
-    flips — there is no rename window at all, which is the difference
-    vs the flat layout's 2-rename swap on object stores where a rename
-    is a seconds-long per-file copy. Returns the version name."""
-    import json as _json
-
-    from dexscraper_spark import fsio
-
-    spark = df.sparkSession
-    version = fsio.pointer_next_version(spark, root)
-    vdir = fsio.join(root, version)
-    write_zordered(df, vdir, cols=cols, bits=bits, n_files=n_files)
-    fsio.write_text_atomic(
-        spark, fsio.join(vdir, "_committed"),
-        _json.dumps({"files": fsio.manifest_build(spark, vdir)}))
-    fsio.pointer_publish(spark, root, version, keep=2)
-    return version
-
-
 def append_zordered(df: DataFrame, path: str, *,
                     n_files: int = 8) -> tuple:
     """Append a delta batch to an existing z-ordered table using the
@@ -314,139 +272,14 @@ def append_zordered(df: DataFrame, path: str, *,
     table (re-run write_zordered periodically to compact and refresh
     cuts if the value distribution drifts). Returns (cols, bits).
 
-    On a version-pointer root the delta lands in the CURRENT version
-    directory (in-place parquet append — same visibility semantics as
-    any parquet append); a compaction racing the append is excluded by
-    operations order, not locks: run appends and compactions from one
-    maintenance scheduler."""
-    path = zordered_resolve(df.sparkSession, path)
+    On a version-pointer root (``path/_current`` exists) the delta lands
+    in the CURRENT version directory (in-place parquet append — same
+    visibility semantics as any parquet append)."""
+    from dexscraper_spark import fsio
+
+    path = fsio.pointer_resolve(df.sparkSession, path)
     cols, bits, cuts = zorder_spec_load(df.sparkSession, path)
     keyed = df.withColumn(
         "__zkey", zorder_key(df, cols, bits=bits, cuts=cuts))
     _write_curve(keyed, path, n_files=n_files, mode="append")
     return cols, bits
-
-
-def compact_zordered(spark, path: str, *, n_files: int = 32) -> None:
-    """Periodic maintenance for an appended table: rewrite ALL files as
-    fresh curve segments using the table's STORED cut points (appends
-    keep curve coordinates but fragment files; compaction restores the
-    one-contiguous-segment-per-file layout without re-deriving the
-    layout — re-run write_zordered instead when the value distribution
-    has drifted).
-
-    Swap protocol (two renames are not atomic together, so recovery is
-    explicit): the new table is fully written + committed to a temp
-    sibling, then path→__old, then temp→path. A rerun after a crash at
-    ANY point self-repairs — if ``path`` is missing it either finishes
-    the swap (committed temp exists) or rolls ``__old`` back; readers
-    during the rename window must retry (same stance as the fold
-    stores). All probe/rename/delete calls go through
-    :mod:`dexscraper_spark.fsio`, so ``path`` may be an hdfs/s3a/abfss
-    URI (renames on object stores are copy-backed but the recovery
-    protocol only needs them to complete, not to be fast)."""
-    import json as _json
-
-    from dexscraper_spark import fsio
-
-    # version-pointer root: compaction is a reader-atomic PUBLISH — the
-    # rewritten table goes to a fresh version dir, the pointer flips,
-    # the previous version stays for in-flight readers, GC sweeps
-    # older versions and crashed-publish orphans. No swap, no window,
-    # no recovery protocol.
-    pv = fsio.pointer_read(spark, path)
-    if pv is not None:
-        live = fsio.join(path, pv)
-        cols, bits, cuts = zorder_spec_load(spark, live)
-        df = spark.read.parquet(live)
-        version = fsio.pointer_next_version(spark, path)
-        vdir = fsio.join(path, version)
-        keyed = df.withColumn(
-            "__zkey", zorder_key(df, cols, bits=bits, cuts=cuts))
-        _write_curve(keyed, vdir, n_files=n_files)
-        zorder_spec_save(spark, vdir, cols=cols, bits=bits, cuts=cuts)
-        fsio.write_text_atomic(
-            spark, fsio.join(vdir, "_committed"),
-            _json.dumps({"files": fsio.manifest_build(spark, vdir)}))
-        fsio.pointer_publish(spark, path, version, keep=2)
-        return
-
-    tmp = f"{path}__compacting"
-    old = f"{path}__old"
-    # A bare directory at `path` is not trusted as live: on object
-    # stores rename is a copy, so a crash mid-swap can leave a PARTIAL
-    # `path` while the rest sits in a sibling. Witness rule (shared
-    # with ivf_pq_recover): a `_committed` marker with an expected-file
-    # MANIFEST must VERIFY against the listing — a bare marker parked
-    # ahead of its data files by a partial copy-backed rename does not
-    # count (ADVICE r9: tmp/_SUCCESS could be trusted after the rename
-    # had already drained data files OUT of tmp). Legacy witnesses
-    # (`_SUCCESS`, the `_zorder` spec dir) are still accepted on tables
-    # compacted before the manifest change. Appends only ADD files, so
-    # a live table's manifest keeps verifying between compactions.
-    tmp_witness = fsio.witness_verify(spark, tmp, ("_committed",))
-    if tmp_witness is None:
-        tmp_witness = fsio.exists(spark, fsio.join(tmp, "_SUCCESS"))
-
-    def _live(p: str) -> bool:
-        ok = fsio.witness_verify(spark, p, ("_committed",))
-        if ok is not None:
-            return bool(ok)
-        return (fsio.exists(spark, fsio.join(p, "_SUCCESS"))
-                or fsio.exists(spark, fsio.join(p, "_zorder")))
-
-    if fsio.exists(spark, path) and not _live(path):
-        if tmp_witness:
-            # tmp verifies alone -> the swap never started moving it;
-            # path remnants are the old table's stragglers, superseded
-            fsio.delete(spark, path)
-        elif fsio.exists(spark, tmp) and (
-                fsio.exists(spark, fsio.join(tmp, "_committed"))
-                or fsio.exists(spark, fsio.join(path, "_committed"))):
-            # crash mid tmp->path: the compacted table's files split
-            # across the two halves (path had been fully renamed away
-            # first, so it holds ONLY new files) — finish the rename
-            # and demand the manifest verify before trusting anything
-            fsio.drain_rename(spark, tmp, path)
-            if not fsio.witness_verify(spark, path, ("_committed",)):
-                raise ValueError(
-                    f"table at {path} is still incomplete after "
-                    f"completing the interrupted rename from {tmp} — "
-                    "manifest files are missing; refusing to proceed")
-            fsio.delete(spark, old)
-        else:
-            raise ValueError(
-                f"table at {path} has no verifiable completeness "
-                "witness (_committed manifest, _SUCCESS, or _zorder "
-                "spec) and no committed compaction sibling — refusing "
-                "to compact or delete it")
-    if not fsio.exists(spark, path):
-        # crashed mid-swap on a previous run: roll forward if the
-        # compacted table committed (and verifies), else roll back
-        if tmp_witness:
-            fsio.rename(spark, tmp, path)
-            fsio.delete(spark, old)
-            return
-        if fsio.exists(spark, old):
-            fsio.rename(spark, old, path)
-        else:
-            raise FileNotFoundError(f"no table at {path} (nor a "
-                                    "recoverable __old/__compacting)")
-    cols, bits, cuts = zorder_spec_load(spark, path)
-    df = spark.read.parquet(path)
-    fsio.delete(spark, tmp)
-    keyed = df.withColumn(
-        "__zkey", zorder_key(df, cols, bits=bits, cuts=cuts))
-    _write_curve(keyed, tmp, n_files=n_files)
-    zorder_spec_save(spark, tmp, cols=cols, bits=bits, cuts=cuts)
-    # commit marker with the expected-file manifest, written LAST so it
-    # lists everything (curve files, _SUCCESS, the _zorder spec)
-    fsio.write_text_atomic(
-        spark, fsio.join(tmp, "_committed"),
-        _json.dumps({"files": fsio.manifest_build(spark, tmp)}))
-    fsio.delete(spark, old)
-    fsio.rename(spark, path, old)
-    fsio.rename(spark, tmp, path)
-    # post-success cleanup only — the swap is already complete, and the
-    # next run clears a leftover __old anyway
-    fsio.delete(spark, old)

@@ -379,6 +379,7 @@ def test_cli_ann_build_query_extend(spark, tmp_path, capsys):
 
     from pyspark.sql import functions as F
 
+    from dexscraper_spark import fsio
     from dexscraper_spark.cli import run
 
     emb = spark.read.parquet(
@@ -429,7 +430,7 @@ def test_cli_ann_build_query_extend(spark, tmp_path, capsys):
     assert rc == 0
     assert capsys.readouterr().out.strip()
 
-    # republish: recall-gated retrain on the full corpus, atomic swap
+    # republish: recall-gated retrain on the full corpus, pointer flip
     emb.write.parquet(str(tmp_path / "all"))
     rc = run(["ann", "--mode", "republish", "--index", idx,
               "--vectors", str(tmp_path / "all"), "--nlist", "8",
@@ -438,7 +439,8 @@ def test_cli_ann_build_query_extend(spark, tmp_path, capsys):
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["mode"] == "republish" and out["published"]
     assert out["recall_old"] is not None
-    assert spark.read.parquet(f"{idx}/codes").count() == 500
+    assert spark.read.parquet(
+        f"{fsio.pointer_resolve(spark, idx)}/codes").count() == 500
     # a refused gate exits nonzero and leaves the artifact alone
     rc = run(["ann", "--mode", "republish", "--index", idx,
               "--vectors", str(tmp_path / "all"), "--nlist", "8",
@@ -446,7 +448,72 @@ def test_cli_ann_build_query_extend(spark, tmp_path, capsys):
     assert rc == 1
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert not out["published"] and "min_recall" in out["reason"]
-    assert spark.read.parquet(f"{idx}/codes").count() == 500
+    assert spark.read.parquet(
+        f"{fsio.pointer_resolve(spark, idx)}/codes").count() == 500
+
+
+def test_cli_ann_one_publish_protocol(spark, tmp_path, capsys):
+    """Every ANN index is a version-pointer root: build publishes
+    v_000001 behind _current and query answers through the pointer; a
+    root holding a FLAT ivf_pq_save artifact is refused by build and
+    republish with every file left byte-identical; --layout is gone."""
+    import os
+    import shutil
+
+    from dexscraper_spark import fsio
+    from dexscraper_spark.cli import build_parser, run
+
+    emb = spark.read.parquet(
+        "/root/testdata/sf0.001/embeddings.parquet") \
+        .select("vec_id", "embedding").filter("vec_id < 200")
+    vecs, queries = str(tmp_path / "vecs"), str(tmp_path / "queries")
+    emb.write.parquet(vecs)
+    emb.orderBy("vec_id").limit(3).write.parquet(queries)
+    idx = str(tmp_path / "index")
+    small = ["--nlist", "4", "--pq-ksub", "16"]
+
+    assert run(["ann", "--vectors", vecs, "--index", idx, *small],
+               spark=spark) == 0
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1]) \
+        == {"mode": "build", "indexed": 200, "nlist": 4}
+    assert fsio.pointer_read(spark, idx) == "v_000001"
+    assert sorted(os.listdir(idx)) == ["_current", "v_000001"]
+
+    assert run(["ann", "--mode", "query", "--index", idx, "--queries",
+                queries, "--k", "3", "--nprobe", "4"], spark=spark) == 0
+    lines = [json.loads(x) for x in
+             capsys.readouterr().out.strip().splitlines()]
+    assert sorted({r["query_id"] for r in lines}) == [0, 1, 2]
+    assert len(lines) == 9
+
+    # the version directory IS an ivf_pq_save artifact: as a root of
+    # its own it is the flat layout
+    flat = str(tmp_path / "flat")
+    shutil.copytree(os.path.join(idx, "v_000001"), flat)
+
+    def snapshot():
+        out = {}
+        for d, _, files in os.walk(flat):
+            for f in files:
+                with open(os.path.join(d, f), "rb") as fh:
+                    out[os.path.relpath(os.path.join(d, f), flat)] = \
+                        fh.read()
+        return out
+
+    before = snapshot()
+    assert run(["ann", "--vectors", vecs, "--index", flat, *small],
+               spark=spark) != 0
+    assert "FLAT" in capsys.readouterr().err
+    assert run(["ann", "--mode", "republish", "--vectors", vecs,
+                "--index", flat, *small], spark=spark) != 0
+    assert "FLAT" in capsys.readouterr().err
+    assert snapshot() == before
+    assert sorted(os.listdir(tmp_path)) == ["flat", "index", "queries",
+                                            "vecs"]
+
+    with pytest.raises(SystemExit) as ei:
+        build_parser().parse_args(["ann", "--layout", "pointer"])
+    assert ei.value.code == 2
 
 
 def test_cli_ann_validation(spark, capsys):

@@ -13,9 +13,7 @@ the test tmpdir, so every fsio call resolves through
 RawLocalFileSystem under a fake scheme fails Hadoop's own checkPath —
 "Wrong FS" — so viewfs is the honest in-process option), while the
 bytes land in a local tmpdir we can independently verify. The same
-scheme then drives the three consumers end-to-end: the versioned
-streaming fold store, the z-order compaction swap, and the
-training-shard manifest.
+scheme then drives the version-pointer publish primitives end to end.
 """
 
 from __future__ import annotations
@@ -44,13 +42,25 @@ def mockfs(spark, tmp_path):
     return at
 
 
+def _mkdirs(spark, path: str) -> None:
+    """Test setup: create a directory on either path class (publishes
+    create their directories through the writers, so fsio has no
+    mkdirs of its own)."""
+    lp = fsio._local_path(path)
+    if lp is not None:
+        os.makedirs(lp, exist_ok=True)
+        return
+    fs, jp = fsio._fs(spark, path)
+    fs.mkdirs(jp)
+
+
 # ---------------------------------------------------------------- local
 
 def test_local_roundtrip_no_spark(tmp_path):
     """The local fast path needs no SparkSession at all."""
     p = str(tmp_path / "store")
     assert not fsio.exists(None, p)
-    fsio.mkdirs(None, p)
+    _mkdirs(None, p)
     assert fsio.is_dir(None, p)
     fsio.write_text_atomic(None, fsio.join(p, "spec.json"), '{"k": 3}')
     assert json.loads(fsio.read_text(None, p + "/spec.json")) == {"k": 3}
@@ -59,11 +69,6 @@ def test_local_roundtrip_no_spark(tmp_path):
     fsio.write_text_atomic(None, p + "/spec.json", '{"k": 4}')
     assert json.loads(fsio.read_text(None, p + "/spec.json")) == {"k": 4}
     assert not os.path.exists(p + "/spec.json.tmp")  # tmp cleaned up
-    fsio.rename(None, p + "/spec.json", p + "/spec2.json")
-    assert fsio.list_names(None, p) == ["spec2.json"]
-    fsio.write_text_atomic(None, p + "/other", "x")
-    with pytest.raises(FileExistsError):
-        fsio.rename(None, p + "/other", p + "/spec2.json")
     fsio.delete(None, p)
     assert not fsio.exists(None, p)
     fsio.delete(None, p)  # absent: silent no-op
@@ -87,7 +92,7 @@ def test_nonlocal_path_without_spark_fails_loudly():
 def test_mockfs_text_roundtrip_and_listing(spark, mockfs, tmp_path):
     root = mockfs("ctrl")
     assert not fsio.exists(spark, root)
-    fsio.mkdirs(spark, root)
+    _mkdirs(spark, root)
     assert fsio.is_dir(spark, root)
     doc = {"alpha": 0.01, "cols": ["a", "b"]}
     fsio.write_text_atomic(spark, fsio.join(root, "_spec.json"),
@@ -101,13 +106,6 @@ def test_mockfs_text_roundtrip_and_listing(spark, mockfs, tmp_path):
     # atomic overwrite through the Hadoop branch too
     fsio.write_text_atomic(spark, fsio.join(root, "_spec.json"), "{}")
     assert fsio.read_text(spark, fsio.join(root, "_spec.json")) == "{}"
-    fsio.rename(spark, fsio.join(root, "_spec.json"),
-                fsio.join(root, "spec_old.json"))
-    assert fsio.list_names(spark, root) == ["spec_old.json"]
-    fsio.write_text_atomic(spark, fsio.join(root, "x"), "x")
-    with pytest.raises(FileExistsError):
-        fsio.rename(spark, fsio.join(root, "x"),
-                    fsio.join(root, "spec_old.json"))
     fsio.delete(spark, root)
     assert not fsio.exists(spark, root)
     fsio.delete(spark, root)  # absent: no-op
@@ -121,41 +119,11 @@ def test_mockfs_unicode_text(spark, mockfs):
     fsio.delete(spark, p)
 
 
-def test_rename_across_filesystems_rejected(spark, mockfs, tmp_path):
-    p = mockfs("a.txt")
-    fsio.write_text_atomic(spark, p, "x")
-    with pytest.raises(ValueError, match="across filesystems"):
-        fsio.rename(spark, p, str(tmp_path / "b.txt"))
-    fsio.delete(spark, p)
-
-
-# ------------------------------------------- consumers on a mockfs root
-
-def test_compact_zordered_on_mockfs(spark, mockfs, tmp_path):
-    """The 2-rename compaction swap runs against the Hadoop client."""
-    from dexscraper_spark.sinks.lake import (
-        compact_zordered, write_zordered)
-
-    df = spark.range(500).selectExpr(
-        "cast(id as double) a", "cast(pmod(id * 37, 500) as double) b")
-    path = mockfs("ztab")
-    write_zordered(df, path, cols=["a", "b"], n_files=4)
-    before = spark.read.parquet(path)
-    n, s = before.count(), before.selectExpr("sum(a)").first()[0]
-    compact_zordered(spark, path, n_files=2)
-    after = spark.read.parquet(path)
-    assert after.count() == n
-    assert after.selectExpr("sum(a)").first()[0] == s
-    # swap hygiene: no leftover __old/__compacting siblings
-    assert not fsio.exists(spark, path + "__old")
-    assert not fsio.exists(spark, path + "__compacting")
-
-
-# ----------------------- manifest witnesses + drain_rename (ADVICE r9)
+# --------------------------------------- manifest witnesses (ADVICE r9)
 
 def test_manifest_build_verify_local(tmp_path):
     root = str(tmp_path / "art")
-    fsio.mkdirs(None, fsio.join(root, "codes", "__list=0"))
+    _mkdirs(None, fsio.join(root, "codes", "__list=0"))
     fsio.write_text_atomic(None, fsio.join(root, "codes", "__list=0",
                                            "part-0"), "abc")
     fsio.write_text_atomic(None, fsio.join(root, "top"), "xy")
@@ -173,7 +141,7 @@ def test_manifest_build_verify_local(tmp_path):
 
 def test_witness_verify_rules_local(tmp_path):
     root = str(tmp_path / "a")
-    fsio.mkdirs(None, root)
+    _mkdirs(None, root)
     fsio.write_text_atomic(None, fsio.join(root, "data"), "d")
     # no marker -> None (caller decides)
     assert fsio.witness_verify(None, root, ("_committed",)) is None
@@ -189,31 +157,6 @@ def test_witness_verify_rules_local(tmp_path):
     assert fsio.witness_verify(None, root, ("_committed",)) is False
 
 
-def test_drain_rename_completes_interrupted_move(spark, mockfs,
-                                                 tmp_path):
-    """Simulate a copy-backed rename that crashed half-way: some files
-    (markers first) landed at dst, the rest still sit at src —
-    drain_rename must reunite them, on the Hadoop branch."""
-    src, dst = mockfs("t__rebuilding"), mockfs("t")
-    fsio.mkdirs(spark, fsio.join(src, "codes"))
-    fsio.write_text_atomic(spark, fsio.join(src, "codes", "part-0"), "A")
-    fsio.write_text_atomic(spark, fsio.join(src, "codes", "part-1"), "BB")
-    fsio.write_text_atomic(spark, fsio.join(src, "_marker"), "m")
-    man = fsio.manifest_build(spark, src)
-    # "crash": only the marker and one data file made it across
-    fsio.mkdirs(spark, fsio.join(dst, "codes"))
-    fsio.rename(spark, fsio.join(src, "_marker"),
-                fsio.join(dst, "_marker"))
-    fsio.rename(spark, fsio.join(src, "codes", "part-0"),
-                fsio.join(dst, "codes", "part-0"))
-    assert fsio.manifest_missing(spark, dst, man) != []
-    fsio.drain_rename(spark, src, dst)
-    assert fsio.manifest_missing(spark, dst, man) == []
-    assert not fsio.exists(spark, src)
-    assert fsio.read_text(spark, fsio.join(dst, "codes", "part-1")) \
-        == "BB"
-
-
 def test_create_exclusive_local_and_mockfs(spark, mockfs, tmp_path):
     p = str(tmp_path / "locks" / "a.lock")  # parent auto-created
     assert fsio.create_exclusive(None, p, "one") is True
@@ -225,37 +168,6 @@ def test_create_exclusive_local_and_mockfs(spark, mockfs, tmp_path):
     assert fsio.read_text(spark, q) == "one"
 
 
-def test_compact_swap_parked_marker_not_trusted(spark, mockfs):
-    """ADVICE r9 (medium): a crash mid tmp->path rename can park the
-    commit marker at path while data files still sit in tmp — the bare
-    marker must NOT certify the table, and recovery must reunite the
-    halves instead of deleting the only copy of the remainder."""
-    from dexscraper_spark.sinks.lake import (compact_zordered,
-                                             write_zordered)
-
-    df = spark.range(400).selectExpr(
-        "cast(id as double) a", "cast(pmod(id * 31, 400) as double) b")
-    path = mockfs("ztab2")
-    write_zordered(df, path, cols=["a", "b"], n_files=4)
-    compact_zordered(spark, path, n_files=2)  # now has _committed
-    n = spark.read.parquet(path).count()
-
-    # simulate the crashed swap: path fully renamed away (old), then
-    # tmp->path interrupted after moving ONLY the underscore files
-    tmp, old = path + "__compacting", path + "__old"
-    fsio.rename(spark, path, tmp)     # pretend this is the new rewrite
-    fsio.mkdirs(spark, path)
-    for name in fsio.list_names(spark, tmp):
-        if name.startswith("_") and name != "_zorder":
-            fsio.rename(spark, fsio.join(tmp, name),
-                        fsio.join(path, name))
-    # marker is at path, data is in tmp: path must not read as complete
-    assert fsio.witness_verify(spark, path, ("_committed",)) is False
-    compact_zordered(spark, path, n_files=2)  # recovers, then compacts
-    assert spark.read.parquet(path).count() == n
-    assert not fsio.exists(spark, tmp) and not fsio.exists(spark, old)
-
-
 # ------------------------- version-pointer publishes (VERDICT r9 #3)
 
 def test_pointer_primitives_and_gc(spark, mockfs):
@@ -265,7 +177,7 @@ def test_pointer_primitives_and_gc(spark, mockfs):
     assert fsio.pointer_next_version(spark, root) == "v_000001"
     with pytest.raises(FileNotFoundError):  # version dir must exist
         fsio.pointer_publish(spark, root, "v_000001")
-    fsio.mkdirs(spark, fsio.join(root, "v_000001"))
+    _mkdirs(spark, fsio.join(root, "v_000001"))
     fsio.write_text_atomic(spark, fsio.join(root, "v_000001", "d"), "1")
     with pytest.raises(ValueError, match="keep"):
         fsio.pointer_publish(spark, root, "v_000001", keep=1)
@@ -277,16 +189,16 @@ def test_pointer_primitives_and_gc(spark, mockfs):
         spark, fsio.join(root, "_current")))["n"] == 7
     # an ORPHAN above current (crashed publish) bumps next_version and
     # is swept by the next successful publish's GC
-    fsio.mkdirs(spark, fsio.join(root, "v_000002"))  # orphan, no flip
+    _mkdirs(spark, fsio.join(root, "v_000002"))  # orphan, no flip
     assert fsio.pointer_next_version(spark, root) == "v_000003"
-    fsio.mkdirs(spark, fsio.join(root, "v_000003"))
+    _mkdirs(spark, fsio.join(root, "v_000003"))
     fsio.write_text_atomic(spark, fsio.join(root, "v_000003", "d"), "3")
     fsio.pointer_publish(spark, root, "v_000003", keep=2)
     names = set(fsio.list_names(spark, root))
     # keep=2: current + its predecessor; the orphan is gone
     assert names == {"_current", "v_000001", "v_000003"}
     # meta must not override the version key
-    fsio.mkdirs(spark, fsio.join(root, "v_000004"))
+    _mkdirs(spark, fsio.join(root, "v_000004"))
     with pytest.raises(ValueError, match="version"):
         fsio.pointer_publish(spark, root, "v_000004",
                              meta={"version": "x"})
@@ -302,7 +214,7 @@ def test_pointer_gc_retain_and_concurrent_publisher(spark, mockfs):
     root = mockfs("ptr2")
 
     def mkv(n):
-        fsio.mkdirs(spark, fsio.join(root, f"v_{n:06d}"))
+        _mkdirs(spark, fsio.join(root, f"v_{n:06d}"))
         fsio.write_text_atomic(
             spark, fsio.join(root, f"v_{n:06d}", "d"), str(n))
 
@@ -336,7 +248,7 @@ def test_pointer_gc_retain_and_concurrent_publisher(spark, mockfs):
     # before the first flip) still resolve as legacy after the brief
     # retry — the flat stores remain live until a publish completes
     root2 = mockfs("ptr3")
-    fsio.mkdirs(spark, fsio.join(root2, "v_000001"))
+    _mkdirs(spark, fsio.join(root2, "v_000001"))
     assert fsio.pointer_read(spark, root2) is None
     assert fsio.pointer_resolve(spark, root2) == root2
 
@@ -384,7 +296,7 @@ def test_pointer_reader_never_sees_window_100_flips(spark, mockfs):
         for _ in range(100):
             v = fsio.pointer_next_version(spark, root)
             vdir = fsio.join(root, v)
-            fsio.mkdirs(spark, vdir)
+            _mkdirs(spark, vdir)
             fsio.write_text_atomic(spark, fsio.join(vdir, "data"), v)
             fsio.write_text_atomic(
                 spark, fsio.join(vdir, "_committed"),
@@ -410,7 +322,7 @@ def test_pointer_publish_expect_current_cas(spark, mockfs):
 
     def _mkver(n):
         v = f"v_{n:06d}"
-        fsio.mkdirs(spark, fsio.join(root, v))
+        _mkdirs(spark, fsio.join(root, v))
         fsio.write_text_atomic(spark, fsio.join(root, v, "d"), str(n))
         return v
 

@@ -224,14 +224,16 @@ def test_ohlc_windowed_invariants_and_partition_independence(spark):
         assert l <= o <= h and l <= c <= h and n >= 1
 
 
-def test_ivf_topk_recall_vs_brute_force(spark):
+def test_ivf_query_recall_vs_brute_force(spark):
     """IVF must return valid ranked neighbors with reasonable recall of
     the brute-force top-5 (bounded by nprobe/nlist by design)."""
-    from dexscraper_spark.operators.similarity import cosine_topk, ivf_topk
+    from dexscraper_spark.operators.similarity import (
+        cosine_topk, ivf_build, ivf_query)
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 5)
     exact = cosine_topk(emb, queries, k=5)
-    approx = ivf_topk(emb, queries, k=5, nlist=8, nprobe=4)
+    approx = ivf_query(ivf_build(emb, nlist=8, cache=False), queries,
+                       k=5, nprobe=4)
     exact_sets = {}
     for r in exact.collect():
         exact_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
@@ -274,20 +276,24 @@ def test_ivf_build_query_split_and_disk_index(spark, tmp_path):
     index.unpersist()
 
 
-def test_ivf_add_matches_build_assignment(spark):
-    """Incremental index maintenance: drop 10% of a built index's
-    assignment, ivf_add the same vectors back — the assignments must
-    reproduce the build's own lists bit-for-bit (our nearest-centroid
-    rule == KMeans transform's), so queries against the extended index
-    equal queries against the original."""
+def test_ivf_assign_matches_build_assignment(spark):
+    """Incremental index maintenance (what ivf_pq_extend_saved does with
+    the stored centroids): drop 10% of a built index's assignment,
+    _ivf_assign the same vectors and union them back — the assignments
+    must reproduce the build's own lists bit-for-bit (our
+    nearest-centroid rule == KMeans transform's), so queries against
+    the extended index equal queries against the original."""
     from dexscraper_spark.operators.similarity import (
-        ivf_add, ivf_build, ivf_query, IvfIndex)
+        _ivf_assign, ivf_build, ivf_query, IvfIndex)
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     full = ivf_build(emb, nlist=8, seed=42, cache=False)
     delta_ids = F.col("vec_id") % 10 == 3
     pruned = IvfIndex(full.assigned.filter(~delta_ids), full.centroids,
                       id_col="vec_id", vec_col="embedding", nlist=8)
-    ext = ivf_add(pruned, emb.filter(delta_ids))
+    ext = IvfIndex(
+        pruned.assigned.unionByName(
+            _ivf_assign(pruned, emb.filter(delta_ids))),
+        pruned.centroids, id_col="vec_id", vec_col="embedding", nlist=8)
     a = sorted(tuple(r) for r in full.assigned.collect())
     b = sorted(tuple(r) for r in ext.assigned.collect())
     assert a == b
@@ -297,38 +303,6 @@ def test_ivf_add_matches_build_assignment(spark):
     qb = sorted(tuple(r) for r in
                 ivf_query(ext, queries, k=5, nprobe=4).collect())
     assert qa == qb
-
-
-def test_ivf_extend_saved_appends_without_rewriting(spark, tmp_path):
-    """On-disk nightly append: extending a saved index writes only new
-    files into the touched list partitions — every pre-existing parquet
-    file survives byte-identical (never read back or rewritten) — and
-    the reloaded index answers like the in-memory extended one."""
-    import glob
-    import os
-
-    from dexscraper_spark.operators.similarity import (
-        ivf_add, ivf_build, ivf_extend_saved, ivf_query, ivf_save, IvfIndex)
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    old = emb.filter(F.col("vec_id") % 10 != 3)
-    new = emb.filter(F.col("vec_id") % 10 == 3)
-    base = ivf_build(old, nlist=8, seed=7, cache=False)
-    path = str(tmp_path / "idx")
-    ivf_save(base, path)
-    before = {p: os.path.getmtime(p) for p in
-              glob.glob(f"{path}/assigned/**/*.parquet", recursive=True)}
-    ext_disk = ivf_extend_saved(spark, path, new)
-    after = set(glob.glob(f"{path}/assigned/**/*.parquet", recursive=True))
-    assert set(before) <= after and len(after) > len(before)
-    for p, mt in before.items():
-        assert os.path.getmtime(p) == mt  # untouched, not rewritten
-    queries = emb.filter(F.col("vec_id") < 5)
-    mem = sorted(tuple(r) for r in
-                 ivf_query(ivf_add(base, new), queries, k=5,
-                           nprobe=4).collect())
-    disk = sorted(tuple(r) for r in
-                  ivf_query(ext_disk, queries, k=5, nprobe=4).collect())
-    assert mem == disk
 
 
 def test_ohlc_frames_cascade_equals_direct(spark):
@@ -755,50 +729,3 @@ def test_simhash_wide_probe_side_delta_semantics(spark):
         fc.unionByName(fd), id_col="doc_id", max_hamming=3, probe=fd)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert got == {(1, 100)}  # only pairs touching the probe side
-
-
-def test_ivf_extend_saved_retry_is_idempotent(spark, tmp_path):
-    """A retried nightly append (orchestrator re-run after success or
-    partial crash) must not duplicate vectors: skip_existing anti-joins
-    the batch against stored ids, so rerunning the same extend leaves
-    the index unchanged."""
-    from dexscraper_spark.operators.similarity import (
-        ivf_build, ivf_extend_saved, ivf_save)
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    old = emb.filter(F.col("vec_id") % 10 != 3)
-    new = emb.filter(F.col("vec_id") % 10 == 3)
-    path = str(tmp_path / "idx")
-    ivf_save(ivf_build(old, nlist=8, seed=7, cache=False), path)
-    once = ivf_extend_saved(spark, path, new)
-    n = once.assigned.count()
-    assert n == emb.count()
-    twice = ivf_extend_saved(spark, path, new)   # full retry
-    assert twice.assigned.count() == n
-    # a partial-crash retry (half the batch already landed) also heals
-    # to exactly-once: only the missing half appends
-    third = ivf_extend_saved(spark, path,
-                             new.unionByName(new.limit(0)))
-    assert third.assigned.count() == n
-    assert third.assigned.groupBy("vec_id").count() \
-        .filter(F.col("count") > 1).count() == 0
-
-
-def test_ivf_add_extended_index_releases_base_artifact(spark):
-    """unpersist() on an ivf_add-extended index must release the BASE
-    index's materialized artifact (the extended assigned is a union
-    plan release_artifact can't see)."""
-    import os
-
-    import dexscraper_spark.persist as P
-    from dexscraper_spark.operators.similarity import ivf_add, ivf_build
-
-    P.release_artifacts()
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = ivf_build(emb.filter(F.col("vec_id") % 2 == 0), nlist=4,
-                     cache=True)
-    [path] = P._ARTIFACT_DIRS
-    ext = ivf_add(base, emb.filter(F.col("vec_id") % 2 == 1))
-    assert ext.assigned.count() == emb.count()
-    ext.unpersist()
-    assert not os.path.exists(path) and P._ARTIFACT_DIRS == []
-

@@ -160,22 +160,15 @@ UNREFERENCED_ALLOWED = frozenset({
     "dexscraper_spark.operators.multimodal:resize_images",
     "dexscraper_spark.operators.multimodal:video_dedup",
     "dexscraper_spark.operators.sessionize:cluster_values",
-    "dexscraper_spark.operators.similarity:ivf_add",
-    "dexscraper_spark.operators.similarity:ivf_extend_saved",
-    "dexscraper_spark.operators.similarity:ivf_topk",
-    "dexscraper_spark.operators.similarity:lsh_signature",
     "dexscraper_spark.operators.sketch:dd_histogram",
     "dexscraper_spark.operators.sketch:dd_merge",
     "dexscraper_spark.operators.sketch:dd_quantiles",
     "dexscraper_spark.operators.sketch:kmv_merge",
     "dexscraper_spark.plans.catalog:_text_metrics_exprs",
     "dexscraper_spark.plans.curation:curation_stats",
-    "dexscraper_spark.sinks.lake:compact_zordered",
-    "dexscraper_spark.sinks.lake:read_zordered",
     "dexscraper_spark.sinks.lake:write_bucketed",
     "dexscraper_spark.sinks.lake:write_ohlc",
     "dexscraper_spark.sinks.lake:write_tokens",
-    "dexscraper_spark.sinks.lake:write_zordered_versioned",
     "dexscraper_spark.sources.decode:parse_frame_multi_strategy",
 })
 

@@ -171,157 +171,3 @@ def test_zorder_spec_roundtrip_and_validation(spark, tmp_path):
         .write.mode("overwrite").parquet(str(tmp_path / "zbad" / "_zorder"))
     with pytest.raises(ValueError, match="corrupt"):
         zorder_spec_load(spark, str(tmp_path / "zbad"))
-
-
-def test_zorder_compact_restores_layout(spark, tmp_path):
-    from dexscraper_spark.sinks.lake import compact_zordered
-
-    base = _grid(spark, 30_000)
-    path = str(tmp_path / "ctab")
-    write_zordered(base, path, cols=["x", "y"], n_files=16)
-    for lo in (30_000, 34_000):
-        delta = _grid(spark, 38_000).filter(
-            (F.col("id") >= lo) & (F.col("id") < lo + 4_000))
-        from dexscraper_spark.sinks.lake import append_zordered
-        append_zordered(delta, path, n_files=4)
-    import glob as _glob
-    assert len(_glob.glob(f"{path}/*.parquet")) >= 24  # fragmented
-
-    compact_zordered(spark, path, n_files=16)
-    files = _glob.glob(f"{path}/*.parquet")
-    assert len(files) == 16                            # compacted
-    back = spark.read.parquet(path)
-    assert back.count() == 38_000                      # nothing lost
-    zy, zt = _overlapping_row_groups(path, 0.4, 0.45, "y")
-    assert zy < zt / 2                                 # pruning restored
-    # spec survives the swap: further appends still work
-    from dexscraper_spark.sinks.lake import zorder_spec_load
-    cols, bits, _ = zorder_spec_load(spark, path)
-    assert cols == ["x", "y"] and bits == 8
-
-
-def test_zorder_compact_crash_recovery(spark, tmp_path):
-    """Reruns self-repair from a crash at either rename: committed temp
-    rolls forward; uncommitted temp rolls the original back."""
-    import os
-    import shutil
-
-    from dexscraper_spark.sinks.lake import compact_zordered
-
-    base = _grid(spark, 3_000)
-    path = str(tmp_path / "ctab2")
-    write_zordered(base, path, cols=["x", "y"], n_files=4)
-
-    # crash AFTER the compacted temp committed, between the renames:
-    compact_zordered(spark, path, n_files=4)   # produce a valid table
-    shutil.copytree(path, f"{path}__compacting")  # committed temp
-    os.rename(path, f"{path}__old")               # first rename done
-    compact_zordered(spark, path, n_files=4)      # rerun: rolls forward
-    assert spark.read.parquet(path).count() == 3_000
-    assert not os.path.exists(f"{path}__old")
-
-    # crash BEFORE the temp committed (no _SUCCESS): roll back
-    os.rename(path, f"{path}__old")
-    os.makedirs(f"{path}__compacting", exist_ok=True)  # junk, no marker
-    compact_zordered(spark, path, n_files=4)
-    assert spark.read.parquet(path).count() == 3_000
-
-    # nothing recoverable: loud failure
-    shutil.rmtree(path)
-    import pytest as _pytest
-    with _pytest.raises(FileNotFoundError, match="recoverable"):
-        compact_zordered(spark, path, n_files=4)
-
-
-def test_zorder_compact_partial_path_not_blessed(spark, tmp_path):
-    """Object-store copy-backed rename hazard: a crash mid-swap can
-    leave a PARTIAL `path` (no _SUCCESS) while the complete copy sits
-    in a sibling — compaction must replace the partial, never compact
-    it; and a witness-less path with NO sibling is refused untouched."""
-    import os
-    import shutil
-
-    import pytest as _pytest
-
-    from dexscraper_spark.sinks.lake import compact_zordered
-
-    base = _grid(spark, 2_000)
-    path = str(tmp_path / "ctab3")
-    write_zordered(base, path, cols=["x", "y"], n_files=4)
-
-    # partial path + committed temp -> replaced from the temp
-    shutil.copytree(path, f"{path}__compacting")
-    shutil.rmtree(path)
-    os.makedirs(path)
-    open(f"{path}/part-junk.parquet", "w").write("x")  # no witness
-    compact_zordered(spark, path, n_files=4)
-    assert spark.read.parquet(path).count() == 2_000
-
-    # witness-less path + only an OLDER __old sibling: REFUSED (rolling
-    # an existing table back could discard appended rows); the table's
-    # data files are left untouched
-    shutil.copytree(path, f"{path}__old")
-    os.remove(f"{path}/_SUCCESS")
-    shutil.rmtree(f"{path}/_zorder")  # kill both witnesses
-    n_files_before = len(os.listdir(path))
-    with _pytest.raises(ValueError, match="witness"):
-        compact_zordered(spark, path, n_files=4)
-    assert len(os.listdir(path)) == n_files_before  # untouched
-    # operator resolves manually (restores the pristine copy): works
-    shutil.rmtree(path)
-    os.rename(f"{path}__old", path)
-    compact_zordered(spark, path, n_files=4)
-    assert spark.read.parquet(path).count() == 2_000
-
-    # witness-less path with no sibling: refuse, never delete
-    p2 = str(tmp_path / "bare")
-    os.makedirs(p2)
-    open(f"{p2}/data.parquet", "w").write("x")
-    with _pytest.raises(ValueError, match="witness"):
-        compact_zordered(spark, p2, n_files=4)
-    assert os.path.exists(f"{p2}/data.parquet")
-
-
-def test_zordered_versioned_pointer_publish(spark, tmp_path):
-    """Version-pointer z-order table (VERDICT r9 §next-3): write v1 +
-    pointer, append into the live version, compact into v2 with a
-    pointer flip — readers resolve through read_zordered and never see
-    a rename window; the previous version survives for laggards."""
-    from dexscraper_spark import fsio
-    from dexscraper_spark.sinks.lake import (append_zordered,
-                                             compact_zordered,
-                                             read_zordered,
-                                             write_zordered_versioned,
-                                             zordered_resolve)
-
-    df = spark.range(600).selectExpr(
-        "cast(id as double) a", "cast(pmod(id * 37, 600) as double) b")
-    root = str(tmp_path / "ztab")
-    v1 = write_zordered_versioned(df, root, cols=["a", "b"], n_files=4)
-    assert v1 == "v_000001"
-    assert zordered_resolve(spark, root).endswith("v_000001")
-    assert read_zordered(spark, root).count() == 600
-    # the published version verifies its manifest witness
-    assert fsio.witness_verify(
-        spark, fsio.join(root, v1), ("_committed",)) is True
-
-    delta = spark.range(600, 700).selectExpr(
-        "cast(id as double) a", "cast(pmod(id * 37, 600) as double) b")
-    append_zordered(delta, root, n_files=2)  # lands in live version
-    assert read_zordered(spark, root).count() == 700
-
-    compact_zordered(spark, root, n_files=4)
-    assert fsio.pointer_read(spark, root) == "v_000002"
-    after = read_zordered(spark, root)
-    assert after.count() == 700
-    assert after.selectExpr("sum(a)").first()[0] == \
-        sum(float(x) for x in range(700))
-    # laggard copy retained; no swap siblings exist in this layout
-    assert fsio.exists(spark, fsio.join(root, "v_000001"))
-    assert not fsio.exists(spark, root + "__compacting")
-    assert not fsio.exists(spark, root + "__old")
-    # second compact GCs v1 (keep=2: current + previous)
-    compact_zordered(spark, root, n_files=2)
-    assert fsio.pointer_read(spark, root) == "v_000003"
-    assert not fsio.exists(spark, fsio.join(root, "v_000001"))
-    assert read_zordered(spark, root).count() == 700
