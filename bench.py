@@ -43,25 +43,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Registry rows that MATERIALIZE an artifact on first build (documented in
-# each builder): warm runs serve the artifact, so only these get a second,
-# caches-cleared timing in the cold pass. Comments name the persist-layer
-# kind (persist.get_or_build) each row's artifact is memoized under.
-MATERIALIZED_ROWS = (
-    "ohlc_bars",                # "ohlc_bars" (plans/catalog.py)
-    "similarity_ivf_full_probe",  # "ivf_index"
-    "curation_pipeline",        # curated-corpus artifact (plans/curation.py)
-    "sink_csv_lines",           # "bars" (plans/sinks_catalog.py)
-    "sink_bar_rows",
-    "sink_excel",               # "xtokens"
-    "sink_document_rows",       # "tokens"
-    "sink_text_lines",          # "xtokens" + "bars"
-    # In-query tracked persists (not artifacts, but warm runs 2..3 serve
-    # the persisted intermediate from the CacheManager): a caches-cleared
-    # cold row records the honest first-build cost (VERDICT r12 §wrong-2).
-    "tokens_pipeline_e2e",      # persist_decoded tracked_persist
-    "dedup_minhash_lsh",        # persist_signatures tracked_persist
-)
+from dexscraper_spark.plans.registry import all_queries  # noqa: E402
+
+# Registry rows declared ``register(..., materializes=True)``: warm runs
+# serve a first-build artifact or tracked persist, so only these get a
+# second, caches-cleared timing in the cold pass.
+MATERIALIZED_ROWS = tuple(name for name, q in all_queries().items()
+                          if q.materializes)
 
 
 def _bpe_bench(spark, sf_dir):
@@ -202,8 +190,6 @@ def main() -> None:
         from dexscraper_spark.plans.registry import clear_plan_cache
         qmap = queries()
         for name in MATERIALIZED_ROWS:
-            if name not in qmap:
-                continue
             try:
                 clear_plan_cache()
                 t0 = time.time()

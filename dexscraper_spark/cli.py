@@ -678,13 +678,14 @@ def _run_ann(args, spark) -> int:
     recall-gated retrain on --vectors (the current corpus) + pointer
     publish — exits 1 without touching the artifact when the gate
     refuses (see ivf_pq_republish). Build and republish refuse a root
-    holding a flat artifact (exit 2); query/extend still read it."""
+    holding a flat artifact at entry, before any Spark job (exit 2);
+    query/extend still read it."""
     import json as _json
 
     from pyspark.sql import functions as F
 
     from dexscraper_spark.operators.quantize import (
-        ivf_pq_encode, ivf_pq_extend_saved, ivf_pq_publish,
+        _refuse_flat, ivf_pq_encode, ivf_pq_extend_saved, ivf_pq_publish,
         ivf_pq_query_saved, ivf_pq_republish, pq_train)
     from dexscraper_spark.operators.similarity import ivf_build
 
@@ -704,6 +705,9 @@ def _run_ann(args, spark) -> int:
         return 2
     try:
         if mode == "build":
+            # refuse a flat root before the KMeans fit and codebook
+            # training, not after them (ivf_pq_publish checks again)
+            _refuse_flat(spark, args.index)
             vecs = (spark.read.parquet(args.vectors)
                     .select("vec_id", "embedding"))
             # infer the dimension from the data — a hardcoded 64 turns

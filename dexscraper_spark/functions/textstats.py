@@ -1,9 +1,9 @@
 """Text analysis for training-data pipelines (BASELINE.json north star):
-language ID, quality scoring, token counting, document fingerprinting.
+language ID, quality scoring, token counting, repetition ratio.
 
 Two implementation families live here:
 
-* built-in expressions (split/regexp/length/xxhash) — run inside the
+* built-in expressions (split/regexp/length) — run inside the
   scan stage; on 100 TB of documents the cost is one codegen'd pass;
 * ``mapInArrow`` batch kernels (``gate_metrics_arrow``,
   ``text_metrics_arrow``) — vectorized twins of the expression forms.
@@ -72,14 +72,6 @@ def punct_ratio(text: Column) -> Column:
     n = F.length(text)
     p = n - F.length(F.regexp_replace(text, r"[^A-Za-z0-9\s]", ""))
     return F.when(n > 0, p.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    words = STOPWORDS[lang]
-    t = tokens(F.lower(text))
-    hits = F.size(F.filter(t, lambda x: _in_list(x, words)))
-    return F.when(F.size(t) > 0,
-                  hits.cast("double") / F.size(t).cast("double")).otherwise(F.lit(0.0))
 
 
 def quality_score(text: Column) -> Column:
@@ -582,26 +574,6 @@ def gate_metrics_arrow(df, *, id_col: str = "doc_id",
                 names=names)
 
     return narrow.mapInArrow(_kernel, out_schema)
-
-
-def rolling_fingerprint(text_col: str, *, n: int = 8,
-                        num_hashes: int = 4) -> Column:
-    """Document fingerprint: one 64-bit id hashed from the text's
-    char-shingle min-hash signature (``char_ngram_minhash``), so it is a
-    shingle-set identity — the same id for the same shingle multiset.
-    For plain exact-content identity use ``xxhash64(text)`` directly."""
-    sig = char_ngram_minhash(text_col, n=n, num_hashes=num_hashes)
-    return F.xxhash64(sig.cast("string"))
-
-
-def char_ngram_minhash(text_col: str, *, n: int = 8, num_hashes: int = 4) -> Column:
-    """Rolling-hash-style fingerprint: min xxhash64 over ``n``-char windows,
-    one value per seed — an array<long> content signature."""
-    sh = (f"transform(sequence(1, greatest(length({text_col}) - {n - 1}, 1)), "
-          f"i -> substring({text_col}, i, {n}))")
-    return F.expr(
-        f"transform(sequence(0, {num_hashes - 1}), s -> "
-        f"array_min(transform({sh}, g -> xxhash64(g, s))))")
 
 
 def repetition_ratio(text: Column, n: int = 3) -> Column:

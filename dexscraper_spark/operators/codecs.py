@@ -1,20 +1,18 @@
-"""Pure-Python image codecs for the multimodal stages — REAL formats,
-no external libraries.
+"""Pure-Python image and audio codecs for the multimodal stages — REAL
+formats, no external libraries.
 
 * BMP: uncompressed 24/32-bit BITMAPINFOHEADER (bottom-up or top-down
   rows, 4-byte row padding).
 * PNG: 8-bit greyscale/RGB/RGBA, non-interlaced — full zlib inflate
   (stdlib) + all five scanline filters (None/Sub/Up/Average/Paeth).
-* JPEG: baseline sequential AND Huffman-progressive DCT
-  (operators/jpeg.py — from-spec Huffman decode, multi-scan progressive
-  coefficient accumulation, dequantize, IDCT, subsampling, restart
-  markers, JFIF YCbCr→RGB). Arithmetic-coded streams still raise.
 * WAV: RIFF PCM audio, 8/16-bit, any channel count (decode + O(1)
   probe + encoder twin; cross-checked against the stdlib ``wave``
-  module in tests). Compressed audio genuinely needs external codecs.
-* AVI: MJPEG-in-RIFF video — container chunk walk + per-frame JPEG
-  payloads decoded by the in-repo JPEG codec (decode + O(1) avih probe
-  + encoder twin). Any other video codec raises.
+  module in tests).
+
+Every other format (JPEG, WebP, compressed audio, any video container)
+needs a real codec library and raises the marked ``NotImplementedError``
+from :func:`decode_image`; the bulk media stages give such rows null
+metadata.
 
 Decoded output is canonical row-major top-down pixel bytes (images) /
 interleaved PCM bytes (audio), so ``decode_image``/``decode_wav`` give
@@ -38,12 +36,8 @@ def sniff_format(data: bytes) -> str | None:
         return "bmp"
     if data[:8] == PNG_SIGNATURE:
         return "png"
-    if data[:2] == b"\xFF\xD8":
-        return "jpeg"
     if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
         return "wav"
-    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        return "avi"
     return None
 
 
@@ -54,9 +48,8 @@ def probe_image(data: bytes) -> dict | None:
     Python inflate+unfilter just to learn width×height.
 
     Returns {format, width, height, channels} or None if the payload is
-    not a recognizable BMP/PNG/JPEG header. Never raises on truncated
-    input. (JPEG: a marker walk to SOFn — header-scale, still no pixel
-    decode.)"""
+    not a recognizable BMP/PNG header. Never raises on truncated
+    input."""
     try:
         if data[:2] == b"BM" and len(data) >= 30:
             width = struct.unpack_from("<i", data, 18)[0]
@@ -74,25 +67,6 @@ def probe_image(data: bytes) -> dict | None:
                 return None
             return {"format": "png", "width": width, "height": height,
                     "channels": ch}
-        if data[:2] == b"\xFF\xD8":
-            pos = 2
-            while pos + 4 <= len(data):
-                if data[pos] != 0xFF:
-                    return None
-                marker = data[pos + 1]
-                if marker in (0x01, 0xD9) or 0xD0 <= marker <= 0xD7:
-                    pos += 2
-                    continue
-                seglen = struct.unpack_from(">H", data, pos + 2)[0]
-                if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8,
-                                                             0xCC):
-                    h, w = struct.unpack_from(">HH", data, pos + 5)
-                    nc = data[pos + 9]
-                    if w <= 0 or nc not in (1, 3):
-                        return None
-                    return {"format": "jpeg", "width": w, "height": h,
-                            "channels": nc}
-                pos += 2 + seglen
     except (struct.error, IndexError):
         return None
     return None
@@ -279,19 +253,15 @@ def encode_png(width: int, height: int, pixels: bytes, *, channels: int = 3,
 
 
 def decode_image(data: bytes) -> dict:
-    """Dispatch: real BMP/PNG/JPEG (baseline AND progressive) decode;
-    anything else raises (WebP, arithmetic-coded JPEG etc. genuinely
-    need external codecs)."""
+    """Dispatch: real BMP/PNG decode; anything else raises (JPEG, WebP
+    etc. need a real codec library)."""
     fmt = sniff_format(data)
     if fmt == "bmp":
         return decode_bmp(data)
     if fmt == "png":
         return decode_png(data)
-    if fmt == "jpeg":
-        from dexscraper_spark.operators.jpeg import decode_jpeg
-        return decode_jpeg(data)
     raise NotImplementedError(
-        "STUB: only BMP/PNG/JPEG have pure-Python decoders; "
+        "STUB: only BMP/PNG have pure-Python decoders; "
         "other formats need a real codec library")
 
 
@@ -390,138 +360,3 @@ def encode_wav(samples: bytes, *, sample_rate: int, channels: int = 1,
            + b"data" + struct.pack("<I", len(samples)) + samples)
     return out
 
-
-# ---------------------------------------------------------------------------
-# AVI (RIFF) with MJPEG frames — the real video twin: the container is
-# a RIFF chunk walk (same machinery as WAV) and every frame is a JPEG
-# the in-repo codec already decodes, so video becomes real end-to-end
-# with no external library.
-# ---------------------------------------------------------------------------
-
-def _riff_lists(data: bytes, pos: int, end: int):
-    """Yield (fourcc, list_type_or_None, payload_start, payload_end)
-    for each chunk in [pos, end) — LIST chunks report their list type."""
-    while pos + 8 <= end:
-        cid = data[pos:pos + 4]
-        size = struct.unpack_from("<I", data, pos + 4)[0]
-        body_start = pos + 8
-        body_end = min(body_start + size, end)
-        if cid == b"LIST" and size >= 4:
-            yield cid, data[body_start:body_start + 4], \
-                body_start + 4, body_end
-        else:
-            yield cid, None, body_start, body_end
-        pos = body_start + size + (size & 1)
-
-
-def probe_video(data: bytes) -> dict | None:
-    """O(1) AVI metadata from the avih main header (dwWidth/dwHeight at
-    offsets 32/36, dwTotalFrames at 16) — no frame walk. Returns
-    {format, width, height, n_frames} or None; never raises."""
-    try:
-        if not (data[:4] == b"RIFF" and data[8:12] == b"AVI "):
-            return None
-        for cid, ltype, s, e in _riff_lists(data, 12, len(data)):
-            if cid == b"LIST" and ltype == b"hdrl":
-                for cid2, _lt, s2, e2 in _riff_lists(data, s, e):
-                    if cid2 == b"avih" and e2 - s2 >= 40:
-                        nf = struct.unpack_from("<I", data, s2 + 16)[0]
-                        w = struct.unpack_from("<I", data, s2 + 32)[0]
-                        h = struct.unpack_from("<I", data, s2 + 36)[0]
-                        if w <= 0 or h <= 0:
-                            return None
-                        return {"format": "avi", "width": int(w),
-                                "height": int(h), "n_frames": int(nf)}
-    except (struct.error, IndexError):
-        return None
-    return None
-
-
-def decode_avi_mjpeg(data: bytes) -> dict:
-    """MJPEG-in-AVI → {format, width, height, n_frames, frames} with
-    ``frames`` the list of per-frame JPEG byte strings from the movi
-    list (decode each with :func:`decode_image`). Raises ValueError on
-    malformed input, NotImplementedError for non-MJPEG streams (real
-    video codecs genuinely need external libraries)."""
-    if not (data[:4] == b"RIFF" and data[8:12] == b"AVI "):
-        raise ValueError("not an AVI file")
-    meta = probe_video(data)
-    if meta is None:
-        raise ValueError("AVI: missing/truncated avih header")
-    # stream handler check: the strh fccHandler (or strf biCompression)
-    # must be MJPG — frame payloads of any other codec are opaque
-    handler = None
-    for cid, ltype, s, e in _riff_lists(data, 12, len(data)):
-        if cid == b"LIST" and ltype == b"hdrl":
-            for cid2, lt2, s2, e2 in _riff_lists(data, s, e):
-                if cid2 == b"LIST" and lt2 == b"strl":
-                    for cid3, _lt, s3, e3 in _riff_lists(data, s2, e2):
-                        if cid3 == b"strh" and e3 - s3 >= 8 \
-                                and data[s3:s3 + 4] == b"vids":
-                            handler = data[s3 + 4:s3 + 8]
-    if handler is not None and handler not in (b"MJPG", b"mjpg"):
-        raise NotImplementedError(
-            f"AVI: only MJPEG streams are decodable in-repo "
-            f"(handler {handler!r} needs an external codec)")
-    frames: list[bytes] = []
-
-    def _collect_frames(start: int, end: int) -> None:
-        for cid2, lt2, s2, e2 in _riff_lists(data, start, end):
-            # standard interleaved AVIs wrap each frame group in a
-            # LIST 'rec ' — descend into those (ADVICE r9), they nest
-            # one level by spec but recursion costs nothing
-            if cid2 == b"LIST" and lt2 == b"rec ":
-                _collect_frames(s2, e2)
-            # ##dc (compressed) / ##db (uncompressed) video chunks
-            elif cid2[2:4] in (b"dc", b"db"):
-                frames.append(data[s2:e2])
-
-    for cid, ltype, s, e in _riff_lists(data, 12, len(data)):
-        if cid == b"LIST" and ltype == b"movi":
-            _collect_frames(s, e)
-    if not frames:
-        raise ValueError("AVI: no movi frame chunks")
-    return {"format": "avi", "width": meta["width"],
-            "height": meta["height"], "n_frames": len(frames),
-            "frames": frames}
-
-
-def encode_avi_mjpeg(frames: list, *, width: int, height: int,
-                     fps: int = 10) -> bytes:
-    """Per-frame JPEG byte strings → minimal spec-shaped MJPEG AVI
-    (RIFF: LIST hdrl {avih, LIST strl {strh vids/MJPG, strf
-    BITMAPINFOHEADER}}, LIST movi {00dc...}, idx1) — the test-fixture
-    twin proving the decoder end-to-end without ffmpeg."""
-    if not frames:
-        raise ValueError("encode_avi_mjpeg: no frames")
-
-    def chunk(cid: bytes, payload: bytes) -> bytes:
-        return cid + struct.pack("<I", len(payload)) + payload \
-            + (b"\x00" if len(payload) & 1 else b"")
-
-    def lst(ltype: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", ltype + payload)
-
-    usec = 1_000_000 // max(fps, 1)
-    maxb = max(len(f) for f in frames)
-    avih = struct.pack("<14I", usec, maxb * fps, 0, 0x10, len(frames),
-                       0, 1, maxb, width, height, 0, 0, 0, 0)
-    strh = (b"vids" + b"MJPG" + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0,
-                                            1, fps, 0, len(frames),
-                                            maxb, 0xFFFFFFFF, 0)
-            + struct.pack("<4H", 0, 0, width, height))
-    strf = struct.pack("<IiiHH4sIiiII", 40, width, height, 1, 24,
-                       b"MJPG", width * height * 3, 0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh)
-                     + chunk(b"strf", strf)))
-    movi_body = b"".join(chunk(b"00dc", f) for f in frames)
-    movi = lst(b"movi", movi_body)
-    # idx1: offsets are relative to the start of the movi list data
-    idx = bytearray()
-    off = 4
-    for f in frames:
-        idx += b"00dc" + struct.pack("<III", 0x10, off, len(f))
-        off += 8 + len(f) + (len(f) & 1)
-    body = hdrl + movi + chunk(b"idx1", bytes(idx))
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"AVI " + body

@@ -6,12 +6,13 @@ The Spark-side plumbing here is real and tested — schemas, partitioning,
 ``mapInPandas`` batch shapes, exploded frame rows, feature vectors feeding
 the similarity operators. The *codec* step has two real paths: the
 deterministic in-repo container format (``FAKE`` header) whose decode is
-exact, and pure-Python real codecs (operators/codecs.py + jpeg.py —
-BMP, PNG with full zlib inflate + scanline unfiltering, JPEG baseline
-AND progressive from the T.81 spec, and RIFF PCM WAV audio; no PIL, no
-audio libs). Only formats that genuinely need external codec libraries
-(WebP, arithmetic-coded JPEG, compressed audio, real video) raise a
-clearly marked ``NotImplementedError``.
+exact — the only format the registered ``multimodal_pipeline`` row
+reads, and the only video format — and pure-Python real codecs
+(operators/codecs.py — BMP, PNG with full zlib inflate + scanline
+unfiltering, and RIFF PCM WAV audio; no PIL, no audio libs). Formats
+that need external codec libraries (JPEG, WebP, compressed audio, real
+video containers) raise a clearly marked ``NotImplementedError`` when
+decoded directly; through the bulk stages they get null metadata.
 
 Scale notes:
 * payloads never leave executors: every stage is mapInPandas over binary
@@ -126,18 +127,6 @@ def _probe_real_audio(payload: bytes) -> dict | None:
             "n_frames": meta["n_samples"], "body": None}
 
 
-def _probe_real_video(payload: bytes) -> dict | None:
-    """O(1) real-video metadata (``codecs.probe_video`` — AVI avih
-    header): dims + declared frame count, no frame walk."""
-    from dexscraper_spark.operators.codecs import probe_video
-    meta = probe_video(payload)
-    if meta is None:
-        return None
-    return {"format": "avi", "kind": "video", "width": meta["width"],
-            "height": meta["height"], "channels": 3, "sample_rate": 0,
-            "n_frames": meta["n_frames"], "body": None}
-
-
 def _decode_real_audio(payload: bytes) -> dict | None:
     """Real-audio decode path (RIFF PCM WAV): same dict shape as
     ``_parse_header`` with the interleaved PCM bytes as the body (plus
@@ -159,16 +148,12 @@ def _decode_real_audio(payload: bytes) -> dict | None:
 
 
 def _decode_real_image(payload: bytes) -> dict | None:
-    """Real-codec path: pure-Python BMP/PNG/baseline-JPEG decode
-    (operators/codecs.py, operators/jpeg.py — zlib inflate + scanline
-    unfiltering, from-spec Huffman+IDCT; no PIL). Returns the same dict
+    """Real-codec path: pure-Python BMP/PNG decode (operators/codecs.py —
+    zlib inflate + scanline unfiltering; no PIL). Returns the same dict
     shape as ``_parse_header`` with decoded pixels as the body, or None
     if the payload is not a decodable file (palette/16-bit PNG, RLE
-    BMP, arithmetic-coded JPEG, truncated stream) — one bad row must not
-    abort a million-row mapInPandas task. Formats still needing external
-    codec libraries raise NotImplementedError inside
-    ``codecs.decode_image`` when called DIRECTLY; through this bulk
-    path they also yield None-meta rows."""
+    BMP, truncated stream, any other format) — one bad row must not
+    abort a million-row mapInPandas task."""
     from dexscraper_spark.operators.codecs import decode_image, sniff_format
     if sniff_format(payload) is None:
         return None
@@ -222,8 +207,7 @@ def decode_media_meta(media: DataFrame) -> DataFrame:
                     # metadata stage: O(1) header probes, never a pixel/
                     # sample decode (that belongs to the feature stages)
                     hdr = (_probe_real_image(bytes(payload))
-                           or _probe_real_audio(bytes(payload))
-                           or _probe_real_video(bytes(payload)))
+                           or _probe_real_audio(bytes(payload)))
                 out.append({
                     "media_id": int(mid), "kind": kind,
                     "format": hdr["format"] if hdr else None,
@@ -276,46 +260,26 @@ def resize_images(media: DataFrame, *, factor: int = 2) -> DataFrame:
 
 
 def sample_frames(media: DataFrame, *, every: int = 2) -> DataFrame:
-    """Video → exploded frame rows (1→N mapInPandas, UDTF shape).
-
-    Two payload classes: the FAKE container (raw frame bytes sliced by
-    the header's dims) and REAL MJPEG AVI (``codecs.decode_avi_mjpeg``
-    — each emitted frame is a JPEG byte string that
-    ``codecs.decode_image`` turns into pixels, composing video →
-    frames → image decode → features entirely in-repo). Non-video and
-    undecodable rows are dropped (shared media-stage contract)."""
+    """Video → exploded frame rows (1→N mapInPandas, UDTF shape): the
+    FAKE container's raw frame bytes, sliced by the header's dims.
+    Non-video and undecodable rows are dropped (shared media-stage
+    contract)."""
     import pandas as pd
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from dexscraper_spark.operators.codecs import (decode_avi_mjpeg,
-                                                       sniff_format)
         for pdf in batches:
             out = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
+                hdr = _parse_header(bytes(payload)) if payload is not None else None
+                if not hdr or hdr["kind"] != "video":
                     continue
-                raw = bytes(payload)
-                hdr = _parse_header(raw)
-                if hdr is not None:
-                    if hdr["kind"] != "video":
-                        continue
-                    w, h, nf = hdr["width"], hdr["height"], hdr["n_frames"]
-                    frame_bytes = w * h * max(hdr["channels"], 1)
-                    for fi in range(0, nf, every):
-                        start = fi * frame_bytes
-                        out.append({
-                            "media_id": int(mid), "frame_index": fi,
-                            "frame": hdr["body"][start:start + frame_bytes]})
-                    continue
-                if sniff_format(raw) == "avi":
-                    try:
-                        avi = decode_avi_mjpeg(raw)
-                    except Exception:
-                        continue
-                    for fi in range(0, avi["n_frames"], every):
-                        out.append({"media_id": int(mid),
-                                    "frame_index": fi,
-                                    "frame": avi["frames"][fi]})
+                w, h, nf = hdr["width"], hdr["height"], hdr["n_frames"]
+                frame_bytes = w * h * max(hdr["channels"], 1)
+                for fi in range(0, nf, every):
+                    start = fi * frame_bytes
+                    out.append({
+                        "media_id": int(mid), "frame_index": fi,
+                        "frame": hdr["body"][start:start + frame_bytes]})
             yield pd.DataFrame(out, columns=["media_id", "frame_index", "frame"])
 
     return media.mapInPandas(run, schema=FRAME_SCHEMA)
@@ -388,8 +352,7 @@ def decode_media_meta_features(media: DataFrame, *,
                 meta_hdr = hdr
                 if meta_hdr is None and raw is not None:
                     meta_hdr = (_probe_real_image(raw)
-                                or _probe_real_audio(raw)
-                                or _probe_real_video(raw))
+                                or _probe_real_audio(raw))
                 if hdr is not None:
                     body = hdr["body"]
                 else:
@@ -503,8 +466,8 @@ def audio_features(media: DataFrame, *, n_windows: int = 8) -> DataFrame:
 
 def video_features(media: DataFrame, *, every: int = 2,
                    dim: int = FEATURE_DIM) -> DataFrame:
-    """Per-VIDEO embedding: frame-sample (:func:`sample_frames`, real
-    MJPEG AVI or the fake container) → per-frame pixel-histogram
+    """Per-VIDEO embedding: frame-sample (:func:`sample_frames`, the
+    FAKE container) → per-frame pixel-histogram
     embedding (:func:`extract_features` over the decoded frames) →
     mean-pool per video. The pooling is pure built-ins (posexplode →
     per-position avg → re-assembled array): order-invariant and

@@ -144,6 +144,7 @@ def _ohlc_frame_sql(frame: str, seconds: int) -> str:
                        (("m5", 300), ("h1", 3600),
                         ("h6", 21600), ("h24", 86400))),
     survey_ref="A5,R5",
+    materializes=True,
 )
 def ohlc_bars(spark, sf_dir):
     """A5 × Timeframe: the full R5 m5/h1/h6/h24 frame vocabulary in one
@@ -1420,6 +1421,7 @@ def fallback_prefer_first(spark, sf_dir):
     LIMIT 10
     """,
     survey_ref="D1,S12,J1,J3,A7,A9,T1,§3.1",
+    materializes=True,
 )
 def tokens_pipeline_e2e(spark, sf_dir):
     from dexscraper_spark.plans.tokens_pipeline import trending_top_tokens
@@ -1538,6 +1540,7 @@ _register_blacklist_topk()
     SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.5
     """,
     survey_ref="northstar-dedup,A8",
+    materializes=True,
 )
 def dedup_minhash_lsh(spark, sf_dir):
     from dexscraper_spark.operators.dedup import (
@@ -1947,6 +1950,7 @@ def _ivf_index(spark, sf_dir: str, *, nlist: int = 8, seed: int = 42):
     ) WHERE rn <= 5
     """,
     survey_ref="northstar-similarity",
+    materializes=True,
 )
 def similarity_ivf_full_probe(spark, sf_dir):
     from dexscraper_spark.operators.similarity import ivf_query
@@ -2086,6 +2090,7 @@ def _curation_oracle_sql() -> str:
     "curation_pipeline",
     _curation_oracle_sql(),
     survey_ref="northstar-curation,A7,A8,northstar-split",
+    materializes=True,
 )
 def curation_pipeline(spark, sf_dir):
     """plans/curation.py curate_corpus end-to-end with the portable

@@ -28,6 +28,7 @@ class Query:
     build: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # ANSI SQL for DuckDB, None → rows-only check
     survey_ref: str = ""
+    materializes: bool = False
 
 
 _REGISTRY: dict[str, Query] = {}
@@ -55,7 +56,7 @@ clear_plan_cache = refresh
 
 
 def register(name: str, oracle: str | None, survey_ref: str = "",
-             cache_plan: bool = True):
+             cache_plan: bool = True, materializes: bool = False):
     """Register a (spark, sf_dir) -> DataFrame builder under ``name``.
 
     Invariant for every builder: its result must not depend on row
@@ -67,11 +68,16 @@ def register(name: str, oracle: str | None, survey_ref: str = "",
     ``cache_plan=False`` opts a query out of the prepared-plan cache —
     required for builders that EXECUTE during build (the streaming
     pipeline runs its micro-batches in the builder), where caching the
-    returned frame would cache results, not a plan."""
+    returned frame would cache results, not a plan.
+
+    ``materializes=True`` marks a row whose warm runs serve a
+    first-build artifact or tracked persist; bench.py gives exactly
+    these rows a caches-cleared cold timing."""
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if not cache_plan:
             _REGISTRY[name] = Query(name=name, build=fn, oracle=oracle,
-                                    survey_ref=survey_ref)
+                                    survey_ref=survey_ref,
+                                    materializes=materializes)
             return fn
 
         def prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,7 +93,8 @@ def register(name: str, oracle: str | None, survey_ref: str = "",
         prepared.__doc__ = fn.__doc__
         prepared.__wrapped__ = fn
         _REGISTRY[name] = Query(name=name, build=prepared, oracle=oracle,
-                                survey_ref=survey_ref)
+                                survey_ref=survey_ref,
+                                materializes=materializes)
         return fn  # direct imports keep uncached build-every-call semantics
     return deco
 

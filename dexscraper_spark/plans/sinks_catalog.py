@@ -89,6 +89,7 @@ def _line_sql(fmt_key: str, *tail: str) -> str:
     FROM bars
     """,
     survey_ref="K3,K4,K5,A5",
+    materializes=True,
 )
 def sink_csv_lines(spark, sf_dir):
     """The three line-format sinks (K5 MT5, K3 CSV-OHLCV, K4 CSV-OHLCVT)
@@ -122,6 +123,7 @@ def sink_csv_lines(spark, sf_dir):
     FROM bars
     """,
     survey_ref="K6,K7,A5",
+    materializes=True,
 )
 def sink_bar_rows(spark, sf_dir):
     """K6 + K7 per-bar row shapes side by side over the shared cached bar
@@ -218,6 +220,7 @@ def _excel_tokens(spark, sf_dir: str):
     FROM tokens
     """,
     survey_ref="K10,A1",
+    materializes=True,
 )
 def sink_excel(spark, sf_dir):
     """K10: the 13-column Excel CSV projection (models.py:603-662) over a
@@ -330,6 +333,7 @@ def _build_tokens(spark, sf_dir: str):
     )
     """,
     survey_ref="K8,K9,A5",
+    materializes=True,
 )
 def sink_document_rows(spark, sf_dir):
     """K8 + K9 per-token document rows in one sink-tagged union over the
@@ -468,6 +472,7 @@ _PROM_VOL_FMT = 'dexscraper_token_volume_24h_usd{symbol="%s"} %.2f'
     FROM top10 WHERE volume_24h IS NOT NULL AND volume_24h != 0.0
     """,
     survey_ref="K1,K2,K11,A1",
+    materializes=True,
 )
 def sink_text_lines(spark, sf_dir):
     """K1/K2/K11 as line columns (reference models.py:665-752,

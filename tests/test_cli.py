@@ -456,7 +456,8 @@ def test_cli_ann_one_publish_protocol(spark, tmp_path, capsys):
     """Every ANN index is a version-pointer root: build publishes
     v_000001 behind _current and query answers through the pointer; a
     root holding a FLAT ivf_pq_save artifact is refused by build and
-    republish with every file left byte-identical; --layout is gone."""
+    republish with every file left byte-identical, the build before it
+    starts any Spark job; --layout is gone."""
     import os
     import shutil
 
@@ -501,9 +502,17 @@ def test_cli_ann_one_publish_protocol(spark, tmp_path, capsys):
         return out
 
     before = snapshot()
-    assert run(["ann", "--vectors", vecs, "--index", flat, *small],
-               spark=spark) != 0
+    sc = spark.sparkContext
+    sc.setJobGroup("ann-refused-build", "build over a flat root")
+    try:
+        assert run(["ann", "--vectors", vecs, "--index", flat, *small],
+                   spark=spark) != 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert "FLAT" in capsys.readouterr().err
+    # refused at entry: no vector read, KMeans fit or codebook training
+    assert sc.statusTracker().getJobIdsForGroup("ann-refused-build") == []
     assert run(["ann", "--mode", "republish", "--vectors", vecs,
                 "--index", flat, *small], spark=spark) != 0
     assert "FLAT" in capsys.readouterr().err

@@ -79,14 +79,12 @@ def test_png_decode_multi_idat_and_ihdr_fields():
 def test_decode_image_dispatch_and_remaining_stub():
     assert sniff_format(encode_bmp(2, 2, _gradient(2, 2))) == "bmp"
     assert sniff_format(PNG_SIGNATURE + b"x") == "png"
-    # JPEG now dispatches to the real baseline decoder (r7): a stream
-    # that LOOKS like jpeg but is malformed fails loudly, not as a stub
-    assert sniff_format(b"\xff\xd8\xff\xe0fakejpeg") == "jpeg"
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0fakejpeg")
-    # formats still needing external codecs remain honestly stubbed
-    with pytest.raises(NotImplementedError):
-        decode_image(b"RIFFxxxxWEBPdata")
+    # JPEG, like WebP, needs an external codec library: it is not
+    # sniffed and takes the marked stub path
+    assert sniff_format(b"\xff\xd8\xff\xe0fakejpeg") is None
+    for data in (b"\xff\xd8\xff\xe0fakejpeg", b"RIFFxxxxWEBPdata"):
+        with pytest.raises(NotImplementedError, match="STUB"):
+            decode_image(data)
 
 
 def test_multimodal_meta_decodes_real_files(spark):

@@ -1,6 +1,9 @@
 """Multimodal plumbing tests: schema, batch shapes, frame explode,
-feature vectors feeding the similarity operator, and the stubbed real-codec
-path raising the marked NotImplementedError."""
+feature vectors feeding the similarity operator, the real BMP/PNG/WAV
+codec paths next to the FAKE container, video dedup over FAKE-container
+videos, and stubbed formats (JPEG, WebP) raising the marked
+NotImplementedError when decoded directly and yielding null metadata
+through the bulk stages."""
 
 from __future__ import annotations
 
@@ -68,41 +71,50 @@ def test_features_feed_similarity(spark):
     assert len(got) == 3 and all(r["query_id"] == 0 for r in got)
 
 
+def _jpeg_header(w=8, h=8, nc=1):
+    """A JFIF stream up to its SOF0 frame header: enough for any real
+    decoder to read the dims; here it must take the stub path."""
+    import struct as _struct
+    app0 = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+    sof0 = _struct.pack(">BHHB", 8, h, w, nc) + b"\x01\x11\x00" * nc
+    return (b"\xff\xd8"
+            + b"\xff\xe0" + _struct.pack(">H", 2 + len(app0)) + app0
+            + b"\xff\xc0" + _struct.pack(">H", 2 + len(sof0)) + sof0
+            + b"\xff\xd9")
+
+
 def test_real_codec_path_decodes_bmp_png_jpeg():
-    """BMP/PNG/baseline-JPEG decode for real (pure-Python,
-    tests/test_codecs.py + test_jpeg.py); only formats needing external
-    codec libs stay stubbed."""
-    from dexscraper_spark.operators.codecs import encode_bmp
+    """BMP/PNG decode for real (pure-Python, tests/test_codecs.py);
+    JPEG and every other format needing an external codec library take
+    the stub path: decode_image raises, the bulk path yields None."""
+    from dexscraper_spark.operators.codecs import (decode_image,
+                                                   encode_bmp,
+                                                   probe_image,
+                                                   sniff_format)
     px = bytes(range(2 * 2 * 3))
     img = _decode_real_image(encode_bmp(2, 2, px))
     assert img["format"] == "bmp" and img["body"] == px
     # non-image bytes (the FAKE container) are not the real-codec path
     assert _decode_real_image(encode_fake_media(
         "image", width=2, height=2, channels=1, body=b"abcd")) is None
-    from dexscraper_spark.operators.jpeg import encode_jpeg
-    jimg = _decode_real_image(encode_jpeg(bytes([128] * 64), 8, 8, 1))
-    assert jimg is not None and jimg["format"] == "jpeg"
-    # PROGRESSIVE JPEG flows through the same bulk path — same pixels
-    # as its baseline twin (pure coefficient reordering)
-    from dexscraper_spark.operators.jpeg import encode_jpeg_progressive
-    px3 = bytes(range(48)) * 4  # 8x8 RGB
-    pimg = _decode_real_image(encode_jpeg_progressive(px3, 8, 8, 3))
-    bimg = _decode_real_image(encode_jpeg(px3, 8, 8, 3))
-    assert pimg is not None and pimg["format"] == "jpeg"
-    assert pimg["body"] == bimg["body"]
-    with pytest.raises(NotImplementedError, match="STUB"):
-        from dexscraper_spark.operators.codecs import decode_image
-        decode_image(b"RIFFxxxxWEBPdata")
+    jpeg = _jpeg_header()
+    assert sniff_format(jpeg) is None and probe_image(jpeg) is None
+    assert _decode_real_image(jpeg) is None
+    for stubbed in (jpeg, b"RIFFxxxxWEBPdata"):
+        with pytest.raises(NotImplementedError, match="STUB"):
+            decode_image(stubbed)
 
 
 def test_malformed_payload_yields_null_meta(spark):
     import pandas as pd
     from dexscraper_spark.operators.multimodal import MEDIA_SCHEMA
-    pdf = pd.DataFrame({"media_id": [0, 1], "kind": ["image", "image"],
-                        "payload": [b"NOTFAKE123456789", b""]})
+    pdf = pd.DataFrame({"media_id": [0, 1, 2],
+                        "kind": ["image", "image", "image"],
+                        "payload": [b"NOTFAKE123456789", b"",
+                                    _jpeg_header()]})
     meta = decode_media_meta(spark.createDataFrame(pdf, schema=MEDIA_SCHEMA))
     rows = meta.collect()
-    assert all(r["format"] is None for r in rows)
+    assert len(rows) == 3 and all(r["format"] is None for r in rows)
 
 
 def test_decode_media_meta_corrupt_payload_yields_null_meta(spark):
@@ -315,141 +327,26 @@ def test_audio_features_fake_container_and_extract_features_wav(spark):
 
 
 # ---------------------------------------------------------------------------
-# Real video: MJPEG-in-AVI container + frame-sampling composition
-
-
-def _mjpeg_avi(n_frames=5, w=16, h=12, seed=3):
-    import numpy as np
-
-    from dexscraper_spark.operators.codecs import encode_avi_mjpeg
-    from dexscraper_spark.operators.jpeg import encode_jpeg
-
-    rng = np.random.default_rng(seed)
-    imgs = [rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-            for _ in range(n_frames)]
-    frames = [encode_jpeg(im.tobytes(), w, h, 3, quality=90)
-              for im in imgs]
-    return encode_avi_mjpeg(frames, width=w, height=h, fps=5), frames
-
-
-def test_avi_mjpeg_roundtrip_and_probe():
-    from dexscraper_spark.operators.codecs import (decode_avi_mjpeg,
-                                                   decode_image,
-                                                   probe_video,
-                                                   sniff_format)
-
-    avi, frames = _mjpeg_avi()
-    assert sniff_format(avi) == "avi"
-    assert probe_video(avi) == {"format": "avi", "width": 16,
-                                "height": 12, "n_frames": 5}
-    d = decode_avi_mjpeg(avi)
-    assert d["frames"] == frames          # byte-exact container walk
-    img = decode_image(d["frames"][2])
-    assert (img["width"], img["height"], img["channels"]) == (16, 12, 3)
-
-
-def test_avi_validation_and_foreign_codec():
-    import pytest as _pytest
-
-    from dexscraper_spark.operators.codecs import (decode_avi_mjpeg,
-                                                   encode_avi_mjpeg)
-
-    with _pytest.raises(ValueError, match="AVI"):
-        decode_avi_mjpeg(b"RIFF\x00\x00\x00\x00AVI ")
-    with _pytest.raises(ValueError, match="frames"):
-        encode_avi_mjpeg([], width=4, height=4)
-    # a non-MJPEG stream handler must raise, not emit opaque bytes
-    avi, _ = _mjpeg_avi(n_frames=2)
-    bad = bytearray(avi)
-    pos = bad.find(b"vidsMJPG")
-    bad[pos + 4:pos + 8] = b"H264"
-    with _pytest.raises(NotImplementedError, match="MJPEG"):
-        decode_avi_mjpeg(bytes(bad))
-
-
-def test_avi_flows_through_meta_and_frame_sampling(spark):
-    """Real video end-to-end in Spark: O(1) avih probe in the metadata
-    stage, then sample_frames explodes the MJPEG frames — each of which
-    the in-repo JPEG codec decodes to the exact pixels of a direct
-    decode of the same frame bytes (video -> frames -> image decode
-    composes entirely in-repo)."""
-    import pandas as pd
-
-    from dexscraper_spark.operators.codecs import decode_image
-    from dexscraper_spark.operators.multimodal import (
-        MEDIA_SCHEMA, decode_media_meta, sample_frames)
-
-    avi, frames = _mjpeg_avi(n_frames=6)
-    pdf = pd.DataFrame([(0, "video", avi), (1, "video", b"not a video")],
-                       columns=["media_id", "kind", "payload"])
-    df = spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-    metas = {r["media_id"]: r for r in decode_media_meta(df).collect()}
-    assert metas[0]["format"] == "avi" and metas[0]["n_frames"] == 6
-    assert metas[0]["width"] == 16 and metas[0]["kind"] == "video"
-    assert metas[1]["format"] is None     # bad row: null meta, no abort
-
-    rows = sample_frames(df, every=2).collect()
-    assert sorted(r["frame_index"] for r in rows) == [0, 2, 4]
-    for r in rows:
-        assert bytes(r["frame"]) == frames[r["frame_index"]]
-        img = decode_image(bytes(r["frame"]))
-        assert (img["width"], img["height"]) == (16, 12)
-    # FAKE-container videos still sample through the same stage
-    from dexscraper_spark.operators.multimodal import synthetic_media
-    fake_rows = sample_frames(synthetic_media(spark, 3), every=2).collect()
-    assert {r["media_id"] for r in fake_rows} == {2}
-
-
-def test_avi_rec_list_wrapped_frames_decode(spark=None):
-    """Standard interleaved AVIs wrap frame chunks in LIST 'rec '
-    groups (ADVICE r9): the movi walk must descend into them instead
-    of failing with 'no movi frame chunks'."""
-    import struct
-
-    from dexscraper_spark.operators.codecs import decode_avi_mjpeg
-
-    avi, frames = _mjpeg_avi(n_frames=3)
-
-    def chunk(cid, payload):
-        return cid + struct.pack("<I", len(payload)) + payload \
-            + (b"\x00" if len(payload) & 1 else b"")
-
-    # rebuild the container with every 00dc chunk wrapped in a rec list
-    movi_pos = avi.find(b"LIST", 12)
-    while avi[movi_pos + 8:movi_pos + 12] != b"movi":
-        size = struct.unpack("<I", avi[movi_pos + 4:movi_pos + 8])[0]
-        movi_pos += 8 + size + (size & 1)
-    rec_body = b"".join(
-        chunk(b"LIST", b"rec " + chunk(b"00dc", f)) for f in frames)
-    movi = chunk(b"LIST", b"movi" + rec_body)
-    body = avi[12:movi_pos] + movi          # hdrl etc. + rec-wrapped movi
-    rebuilt = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"AVI " + body
-    d = decode_avi_mjpeg(rebuilt)
-    assert d["frames"] == frames and d["n_frames"] == 3
+# Video: FAKE-container frame sampling composed with features + dedup
 
 
 def test_video_dedup_composes_frames_features_semdedup(spark):
-    """The video end-to-end story (VERDICT r9 optional #7): two videos
-    with the same visual content (one with rec-wrapped frames — a
-    container re-mux, bytes differ) collapse to the min media_id; a
-    visually different video and a non-video row pass through."""
-    import numpy as np
-    import struct as _struct
-
-    from dexscraper_spark.operators.codecs import encode_avi_mjpeg
-    from dexscraper_spark.operators.jpeg import encode_jpeg
+    """The video end-to-end story: two videos with the same visual
+    content (the second a longer clip of the same scene, so the
+    payload bytes differ) collapse to the min media_id; a visually
+    different video and a non-video row pass through."""
     from dexscraper_spark.operators.multimodal import (video_dedup,
                                                        video_features)
 
-    def const_video(val, n=4, w=16, h=12):
-        img = np.full((h, w, 3), val, dtype=np.uint8)
-        frames = [encode_jpeg(img.tobytes(), w, h, 3, quality=90)
-                  for _ in range(n)]
-        return encode_avi_mjpeg(frames, width=w, height=h, fps=5)
+    def scene_video(val, n=4, w=16, h=12):
+        frame = bytes((val + i % 3) % 256 for i in range(w * h * 3))
+        return encode_fake_media("video", width=w, height=h, channels=3,
+                                 n_frames=n, body=frame * n)
 
-    a = const_video(10)           # media 1
-    dup = const_video(10)         # media 2: same visual content
-    c = const_video(200)          # media 3: different content
+    a = scene_video(10)           # media 1
+    dup = scene_video(10, n=6)    # media 2: same visual content
+    assert dup != a
+    c = scene_video(200)          # media 3: different content
     rows = [(1, "video", a), (2, "video", dup),
             (3, "video", c), (9, "image", b"\x00" * 8)]
     media = spark.createDataFrame(

@@ -145,16 +145,11 @@ UNREFERENCED_ALLOWED = frozenset({
     "dexscraper_spark.functions.lookups:not_blacklisted",
     "dexscraper_spark.functions.lookups:not_english_word",
     "dexscraper_spark.functions.textstats:_doc_gate_metrics",
-    "dexscraper_spark.functions.textstats:rolling_fingerprint",
-    "dexscraper_spark.functions.textstats:stopword_ratio",
     "dexscraper_spark.operators.bpe:bpe_load",
     "dexscraper_spark.operators.bpe:bpe_save",
-    "dexscraper_spark.operators.codecs:encode_avi_mjpeg",
     "dexscraper_spark.operators.codecs:encode_bmp",
     "dexscraper_spark.operators.codecs:encode_png",
     "dexscraper_spark.operators.codecs:encode_wav",
-    "dexscraper_spark.operators.jpeg:encode_jpeg",
-    "dexscraper_spark.operators.jpeg:encode_jpeg_progressive",
     "dexscraper_spark.operators.multimodal:audio_features",
     "dexscraper_spark.operators.multimodal:decode_media_meta",
     "dexscraper_spark.operators.multimodal:resize_images",
