@@ -18,6 +18,11 @@ Source modes (options):
   * ``n_frames``  — deterministic synthetic frames (the test/demo mode;
     stands in for the live socket).
 
+A stream reads synthetic frames, or the live WebSocket feed(s) named by
+``endpoints="host:port[,host:port...]"`` (``socket_source``). An option
+key the chosen mode does not read is an error, not a silent fallback to
+synthetic data.
+
 Pushdown surface: EqualTo / In / GreaterThan(OrEqual) / LessThan(OrEqual)
 / IsNotNull on any decoded column. At 100 TB the win is identical to the
 reference's server-side filtering: rows that fail the pushed predicates
@@ -69,6 +74,9 @@ def synthetic_payloads(start_id: int, end_id: int, pairs_per_frame: int):
         yield i, make_frame(sample_pairs(pairs_per_frame, seed=i % 13))
 
 
+_OUT_COLS = tuple(f.name for f in DECODED_SCHEMA.fields)
+
+
 def _passes(row: dict, pushed: list[Filter]) -> bool:
     for f in pushed:
         col = f.attribute[0]
@@ -82,7 +90,7 @@ def _passes(row: dict, pushed: list[Filter]) -> bool:
             if v != f.value:
                 return False
         elif isinstance(f, In):
-            if v not in f.values:
+            if v not in f.value:
                 return False
         elif isinstance(f, GreaterThan):
             if not v > f.value:
@@ -97,6 +105,18 @@ def _passes(row: dict, pushed: list[Filter]) -> bool:
             if not v <= f.value:
                 return False
     return True
+
+
+def decode_rows(frames, pushed: list[Filter]):
+    """The one row path of every dexframes reader (batch scan, synthetic
+    stream, socket stream): decode each ``(msg_id, payload)`` frame,
+    stamp ``msg_id``, drop rows failing the ``pushed`` predicates, emit
+    ``DECODED_SCHEMA`` tuples."""
+    for msg_id, payload in frames:
+        for rec in parse_frame(payload):
+            rec["msg_id"] = msg_id
+            if _passes(rec, pushed):
+                yield tuple(rec.get(c) for c in _OUT_COLS)
 
 
 class FrameDataSourceReader(DataSourceReader):
@@ -131,7 +151,6 @@ class FrameDataSourceReader(DataSourceReader):
                 for i in range(0, max(self.n_frames, 1), per)]
 
     def read(self, partition: FramePartition):
-        out_cols = [f.name for f in DECODED_SCHEMA.fields]
         if partition.path is not None:
             # stable content-free id from the file NAME: crc32, not the
             # built-in hash() — hash(str) is salted per process
@@ -146,11 +165,25 @@ class FrameDataSourceReader(DataSourceReader):
             payloads = synthetic_payloads(partition.start_id,
                                           partition.end_id,
                                           self.pairs_per_frame)
-        for msg_id, payload in payloads:
-            for rec in parse_frame(payload):
-                rec["msg_id"] = msg_id
-                if _passes(rec, self.pushed):
-                    yield tuple(rec.get(c) for c in out_cols)
+        return decode_rows(payloads, self.pushed)
+
+
+_BATCH_OPTIONS = frozenset({"frames_dir", "n_frames", "pairs_per_frame"})
+_STREAM_OPTIONS = frozenset({
+    "pairs_per_frame", "frames_per_batch", "max_frames", "filters_json",
+    "endpoints", "connect_retries", "backoff_base_s", "backoff_cap_s"})
+
+
+def _check_options(options, known: frozenset, mode: str) -> None:
+    """Refuse option keys the mode does not read: a typo (``endpoint``)
+    or a retired option (``port``) must not fall back to synthetic rows.
+    Spark hands over the user's keys only, lowercased."""
+    unknown = sorted(set(options) - known)
+    if unknown:
+        raise ValueError(
+            f"unknown dexframes {mode} option(s) {unknown}; "
+            f"known: {sorted(known)}. A live feed is a stream with "
+            f"endpoints='host:port[,host:port...]'")
 
 
 class FrameDataSource(DataSource):
@@ -165,12 +198,14 @@ class FrameDataSource(DataSource):
         return DECODED_SCHEMA
 
     def reader(self, schema) -> FrameDataSourceReader:
+        _check_options(self.options, _BATCH_OPTIONS, "batch")
         return FrameDataSourceReader(self.options)
 
     def streamReader(self, schema):
-        """Partitioned fleet reader — only when ``endpoints`` names the
-        shard list; otherwise raise NOT_IMPLEMENTED so Spark falls back
-        to :meth:`simpleStreamReader` (pyspark's documented dispatch)."""
+        """The socket reader — only when ``endpoints`` names the live
+        feed(s); otherwise raise NOT_IMPLEMENTED so Spark falls back to
+        :meth:`simpleStreamReader` (pyspark's documented dispatch)."""
+        _check_options(self.options, _STREAM_OPTIONS, "stream")
         if self.options.get("endpoints"):
             from dexscraper_spark.sources.socket_source import (
                 PartitionedSocketStreamReader)
@@ -182,12 +217,6 @@ class FrameDataSource(DataSource):
         )
 
     def simpleStreamReader(self, schema) -> "FrameSimpleStreamReader":
-        if self.options.get("port"):
-            # live-socket leg (S1): same decode/filter path, frames pulled
-            # from a TCP endpoint with the reference's reconnect envelope
-            from dexscraper_spark.sources.socket_source import (
-                SocketFrameStreamReader)
-            return SocketFrameStreamReader(self.options)
         return FrameSimpleStreamReader(self.options)
 
 
@@ -223,10 +252,8 @@ def register_frame_source(spark) -> None:
 # readBetweenOffsets replays any committed range bit-identically
 # (exactly-once on restart, like re-reading a Kafka range).
 #
-# SimpleDataSourceStreamReader reads on the driver — matching the
-# reference's single-socket ingestion. At fleet scale, shard subscriptions
-# across a partitioned DataSourceStreamReader (one socket per partition);
-# the decode/filter path below is shared either way.
+# The live feed is the partitioned socket reader (``socket_source``); the
+# filter compile below and ``decode_rows`` serve both stream readers.
 # ---------------------------------------------------------------------------
 
 # Filters-DSL → decoded-frame column names (subset the frame can serve;
@@ -245,49 +272,32 @@ _FRAME_COLS = {"liquidity_usd", "volume_h24", "price_change_h24", "fdv",
                "chain", "protocol"}
 
 
-class SubscriptionFilter:
+def subscription_filters(options) -> list[Filter]:
     """Subscription-time Filters-DSL pushdown, compiled ONCE at stream
-    definition from the ``filters_json`` option and applied during the
-    scan — the Spark-native form of the reference compiling filter/rank
-    params into the WebSocket connect URL so the server pre-filters the
-    stream (scraper.py:177-246; config.py:254-281). Shared by the
-    driver-side simple reader and the partitioned fleet reader: the spec
-    is plain picklable state, so it ships to executors unchanged."""
+    definition from the ``filters_json`` option into the same ``Filter``
+    objects batch pushdown receives, and evaluated during the scan by
+    ``_passes`` — the Spark-native form of the reference compiling
+    filter/rank params into the WebSocket connect URL so the server
+    pre-filters the stream (scraper.py:177-246; config.py:254-281). The
+    objects are picklable dataclasses, so they ship to executors as is."""
+    spec = options.get("filters_json")
+    if not spec:
+        return []
+    import json
 
-    def __init__(self, options):
-        import json
-
-        self._triples: list[tuple[str, str, object]] = []
-        self._chains: list[str] | None = None
-        self._dexes: list[str] | None = None
-        spec = options.get("filters_json")
-        if spec:
-            from dexscraper_spark.config import Filters
-            flt = Filters(**json.loads(spec))
-            self._triples = [
-                (col, op, value)
-                for col, op, value in flt.range_predicates(FRAME_COLUMN_MAP)
-                if col in _FRAME_COLS
-            ]
-            if flt.chain_ids:
-                self._chains = [c.value for c in flt.chain_ids]
-            if flt.dex_ids:
-                self._dexes = [d.value for d in flt.dex_ids]
-
-    def keep(self, rec: dict) -> bool:
-        for col, op, value in self._triples:
-            v = rec.get(col)
-            if v is None:
-                return False
-            if op == ">=" and not v >= value:
-                return False
-            if op == "<=" and not v <= value:
-                return False
-        if self._chains is not None and rec.get("chain") not in self._chains:
-            return False
-        if self._dexes is not None and rec.get("protocol") not in self._dexes:
-            return False
-        return True
+    from dexscraper_spark.config import Filters
+    flt = Filters(**json.loads(spec))
+    ops = {">=": GreaterThanOrEqual, "<=": LessThanOrEqual}
+    pushed: list[Filter] = [
+        ops[op]((col,), value)
+        for col, op, value in flt.range_predicates(FRAME_COLUMN_MAP)
+        if col in _FRAME_COLS
+    ]
+    if flt.chain_ids:
+        pushed.append(In(("chain",), tuple(c.value for c in flt.chain_ids)))
+    if flt.dex_ids:
+        pushed.append(In(("protocol",), tuple(d.value for d in flt.dex_ids)))
+    return pushed
 
 
 class FrameSimpleStreamReader(SimpleDataSourceStreamReader):
@@ -298,7 +308,7 @@ class FrameSimpleStreamReader(SimpleDataSourceStreamReader):
         self.frames_per_batch = int(options.get("frames_per_batch", 4) or 4)
         # 0 = unbounded; a bound lets Trigger.AvailableNow drain and stop.
         self.max_frames = int(options.get("max_frames", 0) or 0)
-        self._filter = SubscriptionFilter(options)
+        self._pushed = subscription_filters(options)
 
     # -- offset protocol ----------------------------------------------------
     def initialOffset(self) -> dict:
@@ -324,14 +334,7 @@ class FrameSimpleStreamReader(SimpleDataSourceStreamReader):
         pass  # nothing to acknowledge: the generator is stateless
 
     # -- scan ---------------------------------------------------------------
-    def _keep(self, rec: dict) -> bool:
-        return self._filter.keep(rec)
-
     def _scan(self, start_id: int, end_id: int):
-        out_cols = [f.name for f in DECODED_SCHEMA.fields]
-        for i, payload in synthetic_payloads(start_id, end_id,
-                                             self.pairs_per_frame):
-            for rec in parse_frame(payload):
-                rec["msg_id"] = i
-                if self._keep(rec):
-                    yield tuple(rec.get(c) for c in out_cols)
+        return decode_rows(synthetic_payloads(start_id, end_id,
+                                              self.pairs_per_frame),
+                           self._pushed)

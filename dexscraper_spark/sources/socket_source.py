@@ -1,152 +1,74 @@
-"""S1 — live network ingestion: a socket-backed streaming reader with the
-reference's reconnect/backoff envelope.
+"""S1 — live network ingestion: the partitioned WebSocket stream reader
+with the reference's reconnect/backoff envelope.
 
 The reference's entry point is a long-lived WebSocket subscription with
 connect-retry, exponential backoff and resubscription on drop
 (scraper.py:177-246). This module is that leg made Spark-native and
-testable without network egress:
+testable without network egress. The wire is RFC 6455; the subscription
+protocol and its local test server live in ``websocket``.
 
-* ``SocketFrameStreamReader`` — a ``SimpleDataSourceStreamReader`` that
-  pulls wire-format frames from a TCP endpoint. Offsets are frame
-  sequence numbers; each fetch subscribes from the next unconsumed seq,
-  so a dropped connection resumes EXACTLY where it left off — no
-  duplicates, no gaps — and a committed offset range replays through the
-  server's history buffer (``readBetweenOffsets``), the same
-  exactly-once contract as the synthetic reader. Decode and
-  subscription-time Filters pushdown are inherited unchanged from
-  ``FrameSimpleStreamReader``.
-* ``FrameSocketServer`` — the local stand-in for the remote endpoint: a
-  threaded TCP server replaying a frame history from any requested seq,
-  with fault injection (``fail_after_frames`` drops the connection
-  mid-stream without a clean end marker) for reconnect tests.
-
-Wire protocol (length-prefixed, deliberately minimal):
-  client → server: one JSON line ``{"start_seq": N, "max_frames": K}``
-  (or the control query ``{"latest": true}`` → one JSON line
-  ``{"latest_seq": N}`` — the partitioned reader's offset poll)
-  server → client: repeated ``>QI`` (seq, payload_len) headers + payload,
-  then an END marker (seq = 2^64−1, len 0). EOF *without* the END marker
-  means the connection dropped → the reader reconnects with backoff and
-  resumes from the next unconsumed seq. The marker is what distinguishes
-  "no more frames right now" (a live tail returning a short batch) from
-  a mid-stream failure.
-
-Scale shape — two readers share the fetch loop below:
-
-* ``SocketFrameStreamReader`` (``SimpleDataSourceStreamReader``) consumes
-  on the driver — matching the reference's single-socket ingestion.
+* ``fetch_frames`` / ``query_latest_seq`` wrap one connection each in
+  the retry envelope. Offsets are frame sequence numbers; each fetch
+  subscribes from the next unconsumed seq, so a dropped connection
+  resumes EXACTLY where it left off — no duplicates, no gaps.
 * ``PartitionedSocketStreamReader`` (``DataSourceStreamReader``) is the
-  fleet path: the ``endpoints`` option names N shard servers, each micro-
-  batch plans one ``InputPartition`` per shard, and the socket
-  subscription for each shard is opened ON THE EXECUTOR that runs its
-  partition — frame bytes never cross the driver. The driver's only
-  network traffic is the O(#shards) latest-seq control query per
-  micro-batch. Offsets are per-shard seq maps; each planned range is
-  deterministic and replayable from the server's history buffer, so the
-  exactly-once contract of the single-socket reader holds globally.
+  one socket reader: ``spark.readStream.format("dexframes")
+  .option("endpoints", "h1:p1[,h2:p2,...]")``. A single live feed is
+  ``endpoints="host:port"``. Each micro-batch plans one
+  ``InputPartition`` per shard, and each shard subscription is opened
+  ON THE EXECUTOR that runs its partition — frame bytes never cross the
+  driver. The driver's only network traffic is the O(#shards)
+  latest-seq control query per micro-batch. Offsets are per-shard seq
+  maps; each planned range is deterministic and replayable from the
+  server's history buffer, so the exactly-once contract holds globally.
 """
 
 from __future__ import annotations
 
-import json
-import socket
-import struct
-import threading
 import time
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import DataSourceStreamReader, InputPartition
 
-from dexscraper_spark.sources.decode import DECODED_SCHEMA, parse_frame
+from dexscraper_spark.sources import websocket as ws
 from dexscraper_spark.sources.frame_source import (
-    FrameSimpleStreamReader,
-    SubscriptionFilter,
+    decode_rows,
+    subscription_filters,
 )
 
-HDR = struct.Struct(">QI")
-END_SEQ = (1 << 64) - 1
 # msg_id = shard * SHARD_STRIDE + seq: one int64 carries both shard
 # identity and the per-shard frame seq (shard < 2^23, seq < 2^40)
 SHARD_STRIDE = 1 << 40
 
 
-def _tcp_stream(host: str, port: int, start_seq: int, want: int):
-    """One TCP subscription: yields (seq, payload); RETURNS on a clean
-    END marker or after ``want`` frames; raises OSError/ConnectionError
-    on a drop. The outer retry loop owns reconnection."""
-    with socket.create_connection((host, port), timeout=10.0) as sk:
-        sk.sendall(json.dumps(
-            {"start_seq": start_seq, "max_frames": want},
-        ).encode("utf-8") + b"\n")
-        fh = sk.makefile("rb")
-        got = 0
-        while got < want:
-            hdr = fh.read(HDR.size)
-            if len(hdr) < HDR.size:
-                raise ConnectionError("dropped before END marker")
-            seq, ln = HDR.unpack(hdr)
-            if seq == END_SEQ:
-                return
-            payload = fh.read(ln)
-            if len(payload) < ln:
-                raise ConnectionError("truncated frame payload")
-            yield seq, payload
-            got += 1
-
-
-def _ws_stream(host: str, port: int, start_seq: int, want: int):
-    """The RFC 6455 twin of :func:`_tcp_stream`: HTTP upgrade handshake,
-    masked client frames, ping answered with pong inline, data messages
-    ``8-byte seq ‖ payload``. A close frame or EOF before the END marker
-    is a drop (reference transport: scraper.py:177-246)."""
-    from dexscraper_spark.sources import websocket as ws
-    with socket.create_connection((host, port), timeout=10.0) as sk:
-        fh = ws.client_handshake(sk, host)
-        ws.send_frame(sk, json.dumps(
-            {"start_seq": start_seq, "max_frames": want},
-        ).encode("utf-8"), opcode=ws.OP_TEXT, mask=True)
-        got = 0
-        while got < want:
-            opcode, msg = ws.recv_message(fh, sk, mask_replies=True)
-            if opcode == ws.OP_CLOSE:
-                raise ConnectionError("ws closed before END marker")
-            if len(msg) < 8:
-                raise ConnectionError("ws: short data message")
-            seq = int.from_bytes(msg[:8], "big")
-            if seq == END_SEQ:
-                return
-            yield seq, msg[8:]
-            got += 1
-
-
-_STREAMS = {"tcp": _tcp_stream, "ws": _ws_stream}
+def _backoff(attempt: int, host: str, port: int, retries: int,
+             base: float, cap: float, err: OSError) -> None:
+    """The scraper.py:177-246 retry envelope: exponential doubling from
+    ``base``, capped at ``cap``; past ``retries`` strikes, fail loudly."""
+    if attempt > retries:
+        raise ConnectionError(
+            f"dexframes socket {host}:{port} "
+            f"unreachable after {retries} retries") from err
+    time.sleep(min(base * (2 ** max(attempt - 1, 0)), cap))
 
 
 def fetch_frames(host: str, port: int, start_seq: int, max_frames: int, *,
                  connect_retries: int = 8, backoff_base: float = 0.05,
-                 backoff_cap: float = 1.0,
-                 transport: str = "tcp") -> list[tuple[int, bytes]]:
+                 backoff_cap: float = 1.0) -> list[tuple[int, bytes]]:
     """Subscribe from ``start_seq``; collect up to ``max_frames``
     (seq, payload) pairs. On a dropped connection, reconnect with capped
     exponential backoff and REsubscribe from the next unconsumed seq —
     consumed frames are never re-requested, so a flaky link can cause
-    neither duplicates nor gaps. The scraper.py:177-246 retry envelope:
-    exponential doubling from base, capped, counter reset after any
-    successful frame (a healthy reconnect is not a strike).
-
-    ``transport`` selects the wire layer under the identical resume
-    semantics: "tcp" (length-prefixed frames) or "ws" (RFC 6455)."""
-    if max_frames <= 0:
-        return []
-    stream = _STREAMS[transport]
+    neither duplicates nor gaps. The retry counter resets after any
+    successful frame (a healthy reconnect is not a strike)."""
     frames: list[tuple[int, bytes]] = []
     next_seq = start_seq
     attempt = 0
     while len(frames) < max_frames:
         got_this_attempt = 0
         try:
-            for seq, payload in stream(host, port, next_seq,
-                                       max_frames - len(frames)):
+            for seq, payload in ws.subscribe(host, port, next_seq,
+                                             max_frames - len(frames)):
                 if seq != next_seq:
                     raise ConnectionError(
                         f"sequence gap: expected {next_seq}, got {seq}")
@@ -158,115 +80,25 @@ def fetch_frames(host: str, port: int, start_seq: int, max_frames: int, *,
         except OSError as e:
             if got_this_attempt == 0:
                 attempt += 1
-            if attempt > connect_retries:
-                raise ConnectionError(
-                    f"dexframes socket {host}:{port} "
-                    f"unreachable after {connect_retries} retries"
-                ) from e
-            time.sleep(min(backoff_base * (2 ** max(attempt - 1, 0)),
-                           backoff_cap))
+            _backoff(attempt, host, port, connect_retries, backoff_base,
+                     backoff_cap, e)
     return frames
 
 
 def query_latest_seq(host: str, port: int, *, connect_retries: int = 8,
-                     backoff_base: float = 0.05, backoff_cap: float = 1.0,
-                     transport: str = "tcp") -> int:
+                     backoff_base: float = 0.05,
+                     backoff_cap: float = 1.0) -> int:
     """Control-plane query: the server's current history length (the seq
-    one past the newest frame). O(bytes)=one JSON line — this is ALL the
-    driver pulls per shard per micro-batch in the partitioned reader."""
+    one past the newest frame). O(bytes)=one JSON message — this is ALL
+    the driver pulls per shard per micro-batch."""
     attempt = 0
     while True:
         try:
-            with socket.create_connection((host, port), timeout=10.0) as sk:
-                if transport == "ws":
-                    from dexscraper_spark.sources import websocket as ws
-                    fh = ws.client_handshake(sk, host)
-                    ws.send_frame(sk, b'{"latest": true}',
-                                  opcode=ws.OP_TEXT, mask=True)
-                    opcode, msg = ws.recv_message(fh, sk, mask_replies=True)
-                    if opcode == ws.OP_CLOSE:
-                        raise ConnectionError("ws closed on latest query")
-                    return int(json.loads(msg.decode("utf-8"))["latest_seq"])
-                sk.sendall(b'{"latest": true}\n')
-                line = sk.makefile("rb").readline()
-                if not line:
-                    raise ConnectionError("empty latest-seq response")
-                return int(json.loads(line.decode("utf-8"))["latest_seq"])
+            return ws.latest_seq(host, port)
         except OSError as e:
             attempt += 1
-            if attempt > connect_retries:
-                raise ConnectionError(
-                    f"dexframes socket {host}:{port} "
-                    f"unreachable after {connect_retries} retries"
-                ) from e
-            time.sleep(min(backoff_base * (2 ** max(attempt - 1, 0)),
-                           backoff_cap))
-
-
-class SocketFrameStreamReader(FrameSimpleStreamReader):
-    """``spark.readStream.format("dexframes").option("port", ...)``.
-
-    Options (beyond the FrameSimpleStreamReader set):
-      host (default 127.0.0.1), port (required),
-      connect_retries (default 8), backoff_base_s (default 0.05),
-      backoff_cap_s (default 1.0) — the scraper.py:177-246 retry envelope:
-      exponential doubling from base, capped, counter reset after any
-      successful frame (a healthy reconnect is not a strike).
-    """
-
-    def __init__(self, options):
-        super().__init__(options)
-        self.host = options.get("host", "127.0.0.1")
-        self.port = int(options["port"])
-        self.connect_retries = int(options.get("connect_retries", 8) or 8)
-        self.backoff_base = float(options.get("backoff_base_s", 0.05) or 0.05)
-        self.backoff_cap = float(options.get("backoff_cap_s", 1.0) or 1.0)
-        self.transport = options.get("transport", "tcp")
-        if self.transport not in _STREAMS:
-            raise ValueError(f"unknown transport {self.transport!r}; "
-                             f"expected one of {sorted(_STREAMS)}")
-
-    # -- offset protocol ----------------------------------------------------
-    def initialOffset(self) -> dict:
-        return {"seq": 0}
-
-    def read(self, start: dict):
-        s = int(start["seq"])
-        want = self.frames_per_batch
-        if self.max_frames:
-            # same bounded-drain contract as the synthetic reader: a
-            # max_frames option caps total consumption so availableNow /
-            # demo runs terminate at the requested frame count
-            want = min(want, self.max_frames - s)
-            if want <= 0:
-                return iter(()), {"seq": s}
-        frames = self._fetch(s, want)
-        return iter(list(self._decode(frames))), {"seq": s + len(frames)}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        s, e = int(start["seq"]), int(end["seq"])
-        frames = self._fetch(s, e - s)
-        if len(frames) != e - s:
-            raise ConnectionError(
-                f"replay of committed range [{s}, {e}) returned "
-                f"{len(frames)} frames — server history no longer covers it")
-        return iter(list(self._decode(frames)))
-
-    # -- fetch loop ---------------------------------------------------------
-    def _fetch(self, start_seq: int, max_frames: int):
-        return fetch_frames(self.host, self.port, start_seq, max_frames,
-                            connect_retries=self.connect_retries,
-                            backoff_base=self.backoff_base,
-                            backoff_cap=self.backoff_cap,
-                            transport=self.transport)
-
-    def _decode(self, frames):
-        out_cols = [f.name for f in DECODED_SCHEMA.fields]
-        for seq, payload in frames:
-            for rec in parse_frame(payload):
-                rec["msg_id"] = seq
-                if self._keep(rec):
-                    yield tuple(rec.get(c) for c in out_cols)
+            _backoff(attempt, host, port, connect_retries, backoff_base,
+                     backoff_cap, e)
 
 
 @dataclass
@@ -281,20 +113,20 @@ class SocketShardPartition(InputPartition):
 
 
 class PartitionedSocketStreamReader(DataSourceStreamReader):
-    """The fleet-scale S1 leg: ``spark.readStream.format("dexframes")
+    """The S1 leg: ``spark.readStream.format("dexframes")
     .option("endpoints", "h1:p1,h2:p2,...")``.
 
     The reference runs ONE WebSocket into one process
-    (scraper.py:177-246); a 1000-executor cluster needs N sharded
-    subscriptions with none of the bytes funneling through a coordinator.
-    Shape:
+    (scraper.py:177-246) — here ``endpoints="host:port"``; a
+    1000-executor cluster needs N sharded subscriptions with none of the
+    bytes funneling through a coordinator. Shape:
 
     * **Offsets** are per-shard seq maps ``{"0": s0, "1": s1, ...}`` —
-      the same exactly-once frame-seq contract as the single-socket
-      reader, held independently per shard.
+      an exactly-once frame-seq contract held independently per shard.
     * **Driver** work per micro-batch is one O(1)-byte latest-seq control
       query per shard (rate-limited advance: at most ``frames_per_batch``
-      frames/shard/batch), then partition planning. No frame payloads.
+      frames/shard/batch after the first poll), then partition planning.
+      No frame payloads.
     * **Executors** open the shard subscription inside ``read()`` — the
       capped-backoff reconnect/resume loop (``fetch_frames``) runs where
       the partition runs, so a flaky shard link stalls only its own task.
@@ -303,7 +135,8 @@ class PartitionedSocketStreamReader(DataSourceStreamReader):
       rather than silently dropping frames.
 
     ``msg_id`` is ``shard * 2^40 + seq`` so downstream dedup/windowing
-    sees globally unique, shard-attributable frame ids.
+    sees globally unique, shard-attributable frame ids; a single
+    endpoint is shard 0, so its ``msg_id`` is the frame seq.
 
     Options: ``endpoints`` (required, "host:port[,host:port...]"),
     ``frames_per_batch`` (per-shard advance cap per micro-batch, default
@@ -323,17 +156,13 @@ class PartitionedSocketStreamReader(DataSourceStreamReader):
             self.endpoints.append((host or "127.0.0.1", int(port)))
         if not self.endpoints:
             raise ValueError(
-                "dexframes fleet reader needs endpoints='host:port[,...]'")
+                "dexframes socket reader needs endpoints='host:port[,...]'")
         self.frames_per_batch = int(options.get("frames_per_batch", 4) or 4)
         self.max_frames = int(options.get("max_frames", 0) or 0)
         self.connect_retries = int(options.get("connect_retries", 8) or 8)
         self.backoff_base = float(options.get("backoff_base_s", 0.05) or 0.05)
         self.backoff_cap = float(options.get("backoff_cap_s", 1.0) or 1.0)
-        self.transport = options.get("transport", "tcp")
-        if self.transport not in _STREAMS:
-            raise ValueError(f"unknown transport {self.transport!r}; "
-                             f"expected one of {sorted(_STREAMS)}")
-        self._filter = SubscriptionFilter(options)
+        self._pushed = subscription_filters(options)
         # driver-side rate-limit memory: the offset latestOffset() last
         # returned. None right after (re)start — the first poll returns
         # the servers' truth (capped by max_frames), and the engine
@@ -349,8 +178,7 @@ class PartitionedSocketStreamReader(DataSourceStreamReader):
         for i, (host, port) in enumerate(self.endpoints):
             latest = query_latest_seq(
                 host, port, connect_retries=self.connect_retries,
-                backoff_base=self.backoff_base, backoff_cap=self.backoff_cap,
-                transport=self.transport)
+                backoff_base=self.backoff_base, backoff_cap=self.backoff_cap)
             if self.max_frames:
                 latest = min(latest, self.max_frames)
             if self._last is not None:
@@ -377,111 +205,18 @@ class PartitionedSocketStreamReader(DataSourceStreamReader):
         frames = fetch_frames(
             partition.host, partition.port, partition.start_seq, want,
             connect_retries=self.connect_retries,
-            backoff_base=self.backoff_base, backoff_cap=self.backoff_cap,
-            transport=self.transport)
+            backoff_base=self.backoff_base, backoff_cap=self.backoff_cap)
         if len(frames) != want:
             raise ConnectionError(
                 f"shard {partition.shard}: planned range "
                 f"[{partition.start_seq}, {partition.end_seq}) returned "
                 f"{len(frames)} frames — server history no longer covers it")
-        out_cols = [f.name for f in DECODED_SCHEMA.fields]
         base = partition.shard * SHARD_STRIDE
-        for seq, payload in frames:
-            for rec in parse_frame(payload):
-                rec["msg_id"] = base + seq
-                if self._filter.keep(rec):
-                    yield tuple(rec.get(c) for c in out_cols)
+        return decode_rows(((base + seq, payload) for seq, payload in frames),
+                           self._pushed)
 
     def commit(self, end: dict) -> None:
         pass  # server-side history buffer needs no acknowledgement
 
     def stop(self) -> None:
         pass  # sockets are opened and closed per read()
-
-
-class FrameSocketServer:
-    """Threaded local frame server: replays ``payloads[seq]`` from any
-    requested seq, END-marks clean completion, and supports abrupt-drop
-    fault injection. ``kill()`` closes the listener and every live
-    connection (the mid-stream crash); a new instance on the same port
-    models the endpoint coming back."""
-
-    def __init__(self, payloads, host: str = "127.0.0.1", port: int = 0,
-                 fail_after_frames: int | None = None):
-        self.payloads = list(payloads)
-        self.fail_after = fail_after_frames
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        if hasattr(socket, "SO_REUSEPORT"):
-            # REUSEADDR only covers TIME_WAIT; a crash-restart while old
-            # child connections linger in ESTABLISHED/CLOSE_WAIT needs
-            # REUSEPORT to rebind the listener immediately
-            self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEPORT, 1)
-        self._sock.bind((host, port))
-        self._sock.listen(16)
-        self.host, self.port = self._sock.getsockname()
-        self._stop = False
-        self._conns: list[socket.socket] = []
-        self._thread: threading.Thread | None = None
-
-    def start(self) -> "FrameSocketServer":
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
-        return self
-
-    def _accept_loop(self):
-        while not self._stop:
-            try:
-                conn, _ = self._sock.accept()
-            except OSError:
-                return
-            self._conns.append(conn)
-            threading.Thread(target=self._serve, args=(conn,),
-                             daemon=True).start()
-
-    def append(self, payload: bytes) -> None:
-        """Grow the live history (the 'new frames arriving' half of a
-        live-tail test). list.append is atomic under the GIL; _serve
-        snapshots len() per request, so a concurrent append is simply
-        not yet visible to an in-flight subscription."""
-        self.payloads.append(payload)
-
-    def _serve(self, conn: socket.socket):
-        try:
-            fh = conn.makefile("rb")
-            req = json.loads(fh.readline().decode("utf-8"))
-            if req.get("latest"):
-                # control-plane query: current history length, one line
-                conn.sendall(json.dumps(
-                    {"latest_seq": len(self.payloads)}).encode("utf-8")
-                    + b"\n")
-                return
-            s = int(req.get("start_seq", 0))
-            m = int(req.get("max_frames", 1 << 30))
-            sent = 0
-            for seq in range(s, min(len(self.payloads), s + m)):
-                if self.fail_after is not None and sent >= self.fail_after:
-                    return  # abrupt drop: no END marker
-                p = self.payloads[seq]
-                conn.sendall(HDR.pack(seq, len(p)) + p)
-                sent += 1
-            conn.sendall(HDR.pack(END_SEQ, 0))
-        except OSError:
-            pass  # client went away mid-send; nothing to clean up
-        finally:
-            try:
-                conn.close()
-            except OSError:
-                pass
-
-    def kill(self):
-        self._stop = True
-        try:
-            self._sock.close()
-        except OSError:
-            pass
-        for c in self._conns:
-            try:
-                c.close()
-            except OSError:
-                pass

@@ -1,7 +1,7 @@
-"""RFC 6455 (WebSocket) client frame layer — the literal transport the
-reference speaks (scraper.py:177-246 holds a long-lived WebSocket
-subscription; :208-216 its ping/pong keepalive envelope). Implemented
-from the public spec, from scratch:
+"""RFC 6455 (WebSocket) — the one wire of the live source, the literal
+transport the reference speaks (scraper.py:177-246 holds a long-lived
+WebSocket subscription; :208-216 its ping/pong keepalive envelope).
+Implemented from the public spec, from scratch:
 
 * client handshake (Sec-WebSocket-Key → Sec-WebSocket-Accept check),
 * frame encode/decode — FIN/opcode, 7/16/64-bit payload lengths,
@@ -9,16 +9,23 @@ from the public spec, from scratch:
 * control frames: ping answered with pong inline (the keepalive), close
   and clean EOF distinguished from a mid-stream drop.
 
-The app-level protocol on top mirrors the TCP frame protocol in
-``socket_source`` with one simplification: WebSocket messages are
-self-delimiting, so a data message is ``8-byte big-endian seq ‖
-payload`` (no length prefix), the END marker is a message with
-``seq = 2^64−1`` and empty payload, and the subscription / latest-seq
-requests are the same JSON, sent as a text message.
+This module owns the whole subscription protocol on top:
 
-``WsFrameSocketServer`` is the local stand-in endpoint (threaded,
-handshake + masked-client-frame decode + history replay + fault
-injection), mirroring ``FrameSocketServer`` for the ws transport.
+* client → server: one JSON text message ``{"start_seq": N,
+  "max_frames": K}``, or the control query ``{"latest": true}`` →
+  one text message ``{"latest_seq": N}`` (the seq one past the newest
+  frame);
+* server → client: data messages ``8-byte big-endian seq ‖ payload``,
+  then the END marker, a message with ``seq = 2^64−1`` and no payload.
+  A close frame or EOF *before* the END marker means the connection
+  dropped; the END marker is what tells "no more frames right now" (a
+  live tail returning a short batch) from a mid-stream failure.
+
+``subscribe`` and ``latest_seq`` are the client half (one connection
+each; ``socket_source`` wraps them in the reconnect/backoff envelope).
+``WsFrameSocketServer`` is the server half: the local stand-in endpoint
+(threaded, handshake + masked-client-frame decode + history replay +
+fault injection).
 """
 
 from __future__ import annotations
@@ -170,12 +177,50 @@ def recv_message(fh, sock: socket.socket, *,
                     b"".join(parts))
 
 
+def subscribe(host: str, port: int, start_seq: int, want: int):
+    """One subscription connection: yields (seq, payload) from
+    ``start_seq``; RETURNS on the END marker or after ``want`` frames;
+    raises ConnectionError (an OSError) on a close frame or EOF before
+    the END marker — the caller's retry loop owns reconnection."""
+    with socket.create_connection((host, port), timeout=10.0) as sk:
+        fh = client_handshake(sk, host)
+        send_frame(sk, json.dumps(
+            {"start_seq": start_seq, "max_frames": want},
+        ).encode("utf-8"), opcode=OP_TEXT, mask=True)
+        got = 0
+        while got < want:
+            opcode, msg = recv_message(fh, sk, mask_replies=True)
+            if opcode == OP_CLOSE:
+                raise ConnectionError("ws closed before END marker")
+            if len(msg) < 8:
+                raise ConnectionError("ws: short data message")
+            seq = int.from_bytes(msg[:8], "big")
+            if seq == END_SEQ:
+                return
+            yield seq, msg[8:]
+            got += 1
+
+
+def latest_seq(host: str, port: int) -> int:
+    """One control-query connection: the server's current history length
+    (the seq one past the newest frame)."""
+    with socket.create_connection((host, port), timeout=10.0) as sk:
+        fh = client_handshake(sk, host)
+        send_frame(sk, b'{"latest": true}', opcode=OP_TEXT, mask=True)
+        opcode, msg = recv_message(fh, sk, mask_replies=True)
+        if opcode == OP_CLOSE:
+            raise ConnectionError("ws closed on latest query")
+        return int(json.loads(msg.decode("utf-8"))["latest_seq"])
+
+
 class WsFrameSocketServer:
-    """Threaded local WebSocket frame server — the ws twin of
-    ``FrameSocketServer``: real RFC 6455 handshake, masked-client-frame
-    decode, history replay from any seq, a ping mid-stream (so clients
-    must implement the keepalive), END-marker completion, and
-    ``fail_after_frames`` fault injection (drop with no close frame)."""
+    """Threaded local WebSocket frame server: real RFC 6455 handshake,
+    masked-client-frame decode, history replay from any seq, a ping
+    mid-stream (so clients must implement the keepalive), END-marker
+    completion, and ``fail_after_frames`` fault injection (drop with no
+    close frame). ``kill()`` closes the listener and every live
+    connection (the mid-stream crash); a new instance on the same port
+    models the endpoint coming back."""
 
     def __init__(self, payloads, host: str = "127.0.0.1", port: int = 0,
                  fail_after_frames: int | None = None,
@@ -186,6 +231,9 @@ class WsFrameSocketServer:
         self._sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
         self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
         if hasattr(socket, "SO_REUSEPORT"):
+            # REUSEADDR only covers TIME_WAIT; a crash-restart while old
+            # child connections linger in ESTABLISHED/CLOSE_WAIT needs
+            # REUSEPORT to rebind the listener immediately
             self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEPORT, 1)
         self._sock.bind((host, port))
         self._sock.listen(16)
@@ -201,6 +249,9 @@ class WsFrameSocketServer:
         return self
 
     def append(self, payload: bytes) -> None:
+        """Grow the live history. list.append is atomic under the GIL and
+        _serve reads len() per request, so a concurrent append is simply
+        not yet visible to an in-flight subscription."""
         self.payloads.append(payload)
 
     def _accept_loop(self):

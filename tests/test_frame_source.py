@@ -2,11 +2,13 @@
 
 Covers: filter pushdown visible in the physical plan and honored inside
 the scan, partial pushdown (unsupported filters handed back to Spark),
-the frames_dir file mode, and equality with the mapInPandas decode
-kernel on identical frames."""
+``isin`` pushdown, refusal of option keys the source does not read, the
+frames_dir file mode, and equality with the mapInPandas decode kernel on
+identical frames."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -47,6 +49,47 @@ def test_partial_pushdown_keeps_results_correct(spark):
     assert all(r["protocol"] == "raydium" for r in rows)
     plan = _plan(df)
     assert "EqualTo(chain,base)" in plan  # equality still pushed
+
+
+def test_isin_pushdown_matches_unpushed_filter(spark):
+    """``isin`` reaches the scan as an ``In`` filter and keeps the same
+    rows as an equivalent predicate Spark cannot push (array_contains
+    stays post-scan)."""
+    src = _source(spark).option("n_frames", 8).load()
+    pushed = src.filter(F.col("chain").isin("solana", "ethereum"))
+    assert "In(chain" in _plan(pushed).split("PushedFilters:")[1]
+    unpushed = src.filter(F.array_contains(
+        F.array(F.lit("solana"), F.lit("ethereum")), F.col("chain")))
+    a = sorted(tuple(r) for r in pushed.collect())
+    assert a == sorted(tuple(r) for r in unpushed.collect())
+    assert len(a) == 16  # pairs j=0,2 per frame are solana
+
+
+def test_unknown_option_fails_loudly(spark):
+    """An option key the chosen mode does not read — a typo such as
+    ``endpoint`` or a retired ``port``/``transport`` — must raise, not
+    fall back to synthetic frames."""
+    from dexscraper_spark.sources.frame_source import FrameDataSource
+
+    schema = FrameDataSource({}).schema()
+    with pytest.raises(ValueError, match="endpoints="):
+        FrameDataSource({"endpoint": "127.0.0.1:9"}).streamReader(schema)
+    with pytest.raises(ValueError, match=r"\['port', 'transport'\]"):
+        FrameDataSource({"port": "9", "transport": "ws"}).streamReader(schema)
+    with pytest.raises(ValueError, match="endpoints"):
+        FrameDataSource({"n_frames": "8",
+                         "endpoints": "127.0.0.1:9"}).reader(schema)
+    # through Spark: a batch typo fails the scan instead of returning rows
+    with pytest.raises(Exception, match="unknown dexframes batch option"):
+        _source(spark).option("n_frame", 8).load().count()
+    # and a stream typo fails the query instead of draining fake frames
+    q = (spark.readStream.format("dexframes")
+         .option("endpoint", "127.0.0.1:9").option("max_frames", 2).load()
+         .writeStream.format("memory").queryName("typo_mem")
+         .trigger(availableNow=True).start())
+    with pytest.raises(Exception, match="unknown dexframes stream option"):
+        q.awaitTermination(120)
+    assert not spark.table("typo_mem").count()
 
 
 def test_frames_dir_mode_roundtrip(spark, tmp_path):

@@ -126,8 +126,7 @@ UNREFERENCED_ALLOWED = frozenset({
     # ``select``) were retired
     "dexscraper_spark.operators.sampling:gumbel_topk_sample",
     "dexscraper_spark.operators.sampling:sample_deterministic",
-    # socket test servers (the socket/websocket sources' loopback peers)
-    "dexscraper_spark.sources.socket_source:FrameSocketServer",
+    # socket test server (the socket source's loopback WebSocket peer)
     "dexscraper_spark.sources.websocket:WsFrameSocketServer",
     # export formats K4-K9, to be wired into the CLI's --format
     "dexscraper_spark.sinks.exporters:csv_ohlcvt_lines",

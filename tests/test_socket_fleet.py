@@ -1,9 +1,9 @@
-"""S1 fleet leg: the partitioned ``DataSourceStreamReader`` — one socket
-subscription per partition, opened executor-side, with per-shard seq
-offsets (reference envelope scraper.py:177-246, sharded N ways). The
-global contract under test: across ≥2 shards with mid-stream drops and a
-full kill/restart, every frame lands exactly once — no dupes, no gaps —
-and the shard reads run in distinct scan partitions."""
+"""S1 fleet leg: the partitioned ``DataSourceStreamReader`` — one
+WebSocket subscription per partition, opened executor-side, with
+per-shard seq offsets (reference envelope scraper.py:177-246, sharded N
+ways). The global contract under test: across ≥2 shards with mid-stream
+drops and a full kill/restart, every frame lands exactly once — no
+dupes, no gaps — and the shard reads run in distinct scan partitions."""
 
 from __future__ import annotations
 
@@ -16,11 +16,11 @@ import pytest
 from dexscraper_spark.sources.binary import make_frame, sample_pairs
 from dexscraper_spark.sources.socket_source import (
     SHARD_STRIDE,
-    FrameSocketServer,
     PartitionedSocketStreamReader,
     SocketShardPartition,
     query_latest_seq,
 )
+from dexscraper_spark.sources.websocket import WsFrameSocketServer
 
 
 # r13 (VERDICT #6): multi-second delta/maintenance integration lane — the
@@ -45,7 +45,7 @@ def _reader(endpoints, **opts):
 
 
 def test_query_latest_seq_tracks_live_history():
-    srv = FrameSocketServer(_payloads(5)).start()
+    srv = WsFrameSocketServer(_payloads(5)).start()
     try:
         assert query_latest_seq("127.0.0.1", srv.port) == 5
         srv.append(_payloads(1)[0])
@@ -59,8 +59,8 @@ def test_latest_offset_rate_limits_and_never_regresses():
     """Per poll each shard advances at most frames_per_batch; a shard
     whose reported history shrinks (restart with shorter buffer) must
     not rewind the offset log."""
-    a = FrameSocketServer(_payloads(10)).start()
-    b = FrameSocketServer(_payloads(2)).start()
+    a = WsFrameSocketServer(_payloads(10)).start()
+    b = WsFrameSocketServer(_payloads(2)).start()
     try:
         r = _reader([a.port, b.port], frames_per_batch=3)
         # first poll after (re)start: servers' truth, uncapped
@@ -77,7 +77,7 @@ def test_latest_offset_rate_limits_and_never_regresses():
 
 
 def test_latest_offset_caps_at_max_frames():
-    srv = FrameSocketServer(_payloads(9)).start()
+    srv = WsFrameSocketServer(_payloads(9)).start()
     try:
         r = _reader([srv.port], max_frames=4)
         assert r.latestOffset() == {"0": 4}
@@ -99,7 +99,7 @@ def test_partitions_one_per_advancing_shard():
 
 
 def test_read_replay_of_uncovered_range_fails_loudly():
-    srv = FrameSocketServer(_payloads(3)).start()
+    srv = WsFrameSocketServer(_payloads(3)).start()
     try:
         r = _reader([srv.port])
         part = SocketShardPartition(0, "127.0.0.1", srv.port, 1, 9)
@@ -122,10 +122,10 @@ def test_spark_fleet_two_shards_exactly_once_with_drops(spark, tmp_path):
     from dexscraper_spark.sources.frame_source import register_frame_source
 
     register_frame_source(spark)
-    a = FrameSocketServer(_payloads(6, seed_base=0),
-                          fail_after_frames=2).start()
-    b = FrameSocketServer(_payloads(4, seed_base=5),
-                          fail_after_frames=2).start()
+    a = WsFrameSocketServer(_payloads(6, seed_base=0),
+                            fail_after_frames=2).start()
+    b = WsFrameSocketServer(_payloads(4, seed_base=5),
+                            fail_after_frames=2).start()
     try:
         q = (spark.readStream.format("dexframes")
              .option("endpoints", f"127.0.0.1:{a.port},127.0.0.1:{b.port}")
@@ -176,9 +176,10 @@ def test_spark_fleet_shard_killed_and_restarted_mid_query(spark, tmp_path):
     from dexscraper_spark.sources.frame_source import register_frame_source
 
     register_frame_source(spark)
-    steady = FrameSocketServer(_payloads(5)).start()
+    steady = WsFrameSocketServer(_payloads(5)).start()
     victim_payloads = _payloads(5, seed_base=7)
-    victim = FrameSocketServer(victim_payloads, fail_after_frames=2).start()
+    victim = WsFrameSocketServer(victim_payloads,
+                                 fail_after_frames=2).start()
     vport = victim.port
     restarted = {}
 
@@ -188,7 +189,7 @@ def test_spark_fleet_shard_killed_and_restarted_mid_query(spark, tmp_path):
         time.sleep(0.3)  # readers sit in their backoff loop meanwhile
         for _ in range(100):  # rebinding races lingering conns briefly
             try:
-                restarted["srv"] = FrameSocketServer(
+                restarted["srv"] = WsFrameSocketServer(
                     victim_payloads, port=vport).start()
                 return
             except OSError:
@@ -235,7 +236,7 @@ def test_fleet_live_tail_across_micro_batches(spark, tmp_path):
     from dexscraper_spark.sources.frame_source import register_frame_source
 
     register_frame_source(spark)
-    srv = FrameSocketServer(_payloads(3)).start()
+    srv = WsFrameSocketServer(_payloads(3)).start()
     out = str(tmp_path / "out")
     try:
         def drain():
@@ -276,7 +277,7 @@ def test_spark_fleet_eight_shards(spark, tmp_path):
 
     register_frame_source(spark)
     sizes = [3, 5, 2, 4, 6, 1, 3, 2]
-    servers = [FrameSocketServer(_payloads(n, seed_base=i)).start()
+    servers = [WsFrameSocketServer(_payloads(n, seed_base=i)).start()
                for i, n in enumerate(sizes)]
     try:
         eps = ",".join(f"127.0.0.1:{s.port}" for s in servers)
@@ -315,8 +316,8 @@ def test_fleet_continuous_microbatches_with_live_appends(spark, tmp_path):
     from dexscraper_spark.sources.frame_source import register_frame_source
 
     register_frame_source(spark)
-    a = FrameSocketServer(_payloads(4)).start()
-    b = FrameSocketServer(_payloads(2, seed_base=9)).start()
+    a = WsFrameSocketServer(_payloads(4)).start()
+    b = WsFrameSocketServer(_payloads(2, seed_base=9)).start()
     q = None
     try:
         q = (spark.readStream.format("dexframes")

@@ -1,6 +1,7 @@
-"""S1 live-socket leg: reconnect/backoff envelope over a REAL TCP socket
-(reference scraper.py:177-246), no-dupes-no-gaps resume, and the Spark
-streaming integration through the dexframes format."""
+"""S1 live-socket leg: reconnect/backoff envelope over a REAL WebSocket
+(reference scraper.py:177-246), no-dupes-no-gaps resume, replay of a
+committed range, and the Spark streaming integration through the
+dexframes format with a single ``endpoints="host:port"`` feed."""
 
 from __future__ import annotations
 
@@ -11,64 +12,60 @@ import pytest
 
 from dexscraper_spark.sources.binary import make_frame, sample_pairs
 from dexscraper_spark.sources.socket_source import (
-    FrameSocketServer, SocketFrameStreamReader)
+    PartitionedSocketStreamReader, SocketShardPartition, fetch_frames)
+from dexscraper_spark.sources.websocket import WsFrameSocketServer
 
 
 def _payloads(n, pairs=4):
     return [make_frame(sample_pairs(pairs, seed=i % 13)) for i in range(n)]
 
 
-def _reader(port, **opts):
-    base = {"port": str(port), "frames_per_batch": "3",
-            "connect_retries": "10", "backoff_base_s": "0.02",
-            "backoff_cap_s": "0.2"}
-    base.update({k: str(v) for k, v in opts.items()})
-    return SocketFrameStreamReader(base)
+def _fetch(port, start_seq, max_frames, connect_retries=10):
+    return fetch_frames("127.0.0.1", port, start_seq, max_frames,
+                        connect_retries=connect_retries, backoff_base=0.02,
+                        backoff_cap=0.2)
 
 
 def test_fetch_serves_frames_over_real_socket():
-    srv = FrameSocketServer(_payloads(5)).start()
+    srv = WsFrameSocketServer(_payloads(5)).start()
     try:
-        r = _reader(srv.port)
-        frames = r._fetch(0, 3)
+        frames = _fetch(srv.port, 0, 3)
         assert [s for s, _ in frames] == [0, 1, 2]
         # live tail: asking past the history returns a short, clean batch
-        assert [s for s, _ in r._fetch(3, 10)] == [3, 4]
-        assert r._fetch(5, 10) == []
+        assert [s for s, _ in _fetch(srv.port, 3, 10)] == [3, 4]
+        assert _fetch(srv.port, 5, 10) == []
     finally:
         srv.kill()
 
 
 def test_mid_stream_drop_reconnects_without_dupes_or_gaps():
     """fail_after_frames=2 drops EVERY connection after 2 frames with no
-    END marker — the reader must reconnect and resume from the next
+    END marker — the fetch must reconnect and resume from the next
     unconsumed seq until the batch is complete."""
-    srv = FrameSocketServer(_payloads(7), fail_after_frames=2).start()
+    srv = WsFrameSocketServer(_payloads(7), fail_after_frames=2).start()
     try:
-        r = _reader(srv.port, frames_per_batch=7)
-        frames = r._fetch(0, 7)
+        frames = _fetch(srv.port, 0, 7)
         assert [s for s, _ in frames] == list(range(7))  # exactly once each
     finally:
         srv.kill()
 
 
 def test_server_killed_mid_stream_then_restarted_resumes():
-    """The VERDICT r4 ask #5 scenario: serve some frames over a real
-    socket, KILL the server mid-stream, restart it on the same port, and
-    assert the reader reconnects (backoff) and resumes with no dupes and
-    no gaps."""
+    """Serve some frames over a real socket, KILL the server mid-stream,
+    restart it on the same port, and assert the fetch reconnects
+    (backoff) and resumes with no dupes and no gaps."""
     payloads = _payloads(6)
-    srv = FrameSocketServer(payloads, fail_after_frames=2).start()
+    srv = WsFrameSocketServer(payloads, fail_after_frames=2).start()
     port = srv.port
     restarted = {}
 
     def kill_then_restart():
-        time.sleep(0.05)  # let the reader consume the first frames
+        time.sleep(0.05)  # let the fetch consume the first frames
         srv.kill()
-        time.sleep(0.3)   # reader sits in its backoff loop meanwhile
+        time.sleep(0.3)   # the fetch sits in its backoff loop meanwhile
         for _ in range(100):  # rebinding races lingering conns briefly
             try:
-                restarted["srv"] = FrameSocketServer(
+                restarted["srv"] = WsFrameSocketServer(
                     payloads, port=port).start()
                 return
             except OSError:
@@ -77,8 +74,7 @@ def test_server_killed_mid_stream_then_restarted_resumes():
     t = threading.Thread(target=kill_then_restart)
     t.start()
     try:
-        r = _reader(port, frames_per_batch=6)
-        frames = r._fetch(0, 6)
+        frames = _fetch(port, 0, 6)
         assert [s for s, _ in frames] == list(range(6))
     finally:
         t.join()
@@ -86,33 +82,40 @@ def test_server_killed_mid_stream_then_restarted_resumes():
 
 
 def test_unreachable_endpoint_fails_loudly_after_retries():
-    srv = FrameSocketServer(_payloads(1))  # bound but never started
+    srv = WsFrameSocketServer(_payloads(1))  # bound but never started
     srv.kill()
-    r = _reader(srv.port, connect_retries=2)
     t0 = time.time()
     with pytest.raises(ConnectionError, match="unreachable after 2 retries"):
-        r._fetch(0, 1)
+        _fetch(srv.port, 0, 1, connect_retries=2)
     assert time.time() - t0 >= 0.02 + 0.04  # backoff actually slept
 
 
 def test_read_between_offsets_replays_committed_range_exactly():
-    srv = FrameSocketServer(_payloads(6)).start()
+    """A committed seq range re-read by the reader's executor path gives
+    identical rows; a range the server's history no longer covers fails
+    loudly."""
+    srv = WsFrameSocketServer(_payloads(6)).start()
     try:
-        r = _reader(srv.port)
-        rows1 = list(r.readBetweenOffsets({"seq": 1}, {"seq": 4}))
-        rows2 = list(r.readBetweenOffsets({"seq": 1}, {"seq": 4}))
+        r = PartitionedSocketStreamReader(
+            {"endpoints": f"127.0.0.1:{srv.port}",
+             "backoff_base_s": "0.02"})
+        part = SocketShardPartition(0, "127.0.0.1", srv.port, 1, 4)
+        rows1 = list(r.read(part))
+        rows2 = list(r.read(part))
         assert rows1 == rows2 and len(rows1) == 3 * 4  # 3 frames x 4 pairs
+        assert {row[0] for row in rows1} == {1, 2, 3}  # msg_id == seq
         with pytest.raises(ConnectionError, match="history"):
-            r.readBetweenOffsets({"seq": 4}, {"seq": 99})
+            list(r.read(SocketShardPartition(0, "127.0.0.1", srv.port,
+                                             4, 99)))
     finally:
         srv.kill()
 
 
 def test_spark_stream_over_socket_with_drops_no_dupes(spark, tmp_path):
-    """End to end through spark.readStream.format('dexframes'): a flaky
-    server (drops every connection after 2 frames) + subscription-time
-    filter pushdown; the drained sink must hold each surviving record
-    exactly once."""
+    """End to end through spark.readStream.format('dexframes') with one
+    endpoint: a flaky WebSocket server (drops every connection after 2
+    frames) + subscription-time filter pushdown; the drained sink must
+    hold each surviving record exactly once, with msg_id == seq."""
     import json
 
     from pyspark.sql import functions as F
@@ -120,13 +123,12 @@ def test_spark_stream_over_socket_with_drops_no_dupes(spark, tmp_path):
     from dexscraper_spark.sources.frame_source import register_frame_source
 
     register_frame_source(spark)
-    srv = FrameSocketServer(_payloads(6), fail_after_frames=2).start()
+    srv = WsFrameSocketServer(_payloads(6), fail_after_frames=2).start()
     try:
         q = (spark.readStream.format("dexframes")
-             .option("port", str(srv.port))
-             # one batch spans the whole history (availableNow drains the
-             # prefetched batch); fail_after=2 still forces 3 reconnects
-             # inside this single fetch
+             .option("endpoints", f"127.0.0.1:{srv.port}")
+             # one batch spans the whole history; fail_after=2 still
+             # forces 3 reconnects inside this single fetch
              .option("frames_per_batch", "6")
              .option("backoff_base_s", "0.02")
              .option("filters_json", json.dumps({"chain_ids": ["solana"]}))
@@ -139,7 +141,8 @@ def test_spark_stream_over_socket_with_drops_no_dupes(spark, tmp_path):
                .groupBy("msg_id", "record_position")
                .agg(F.count(F.lit(1)).alias("n"),
                     F.max("chain").alias("chain")).collect())
-        assert {r["msg_id"] for r in got} == set(range(6))
+        assert {r["msg_id"] for r in got} == set(range(6))  # msg_id == seq
+        assert len(got) == 6 * 2   # both solana pairs of every frame
         assert all(r["n"] == 1 for r in got)          # no dupes
         assert all(r["chain"] == "solana" for r in got)  # pushdown applied
     finally:
@@ -152,14 +155,13 @@ def test_spark_stream_over_socket_with_drops_no_dupes(spark, tmp_path):
 def test_fetch_resume_across_drop_points(fail_after, n_frames, batch):
     """Resume correctness holds wherever the connection drops: any
     fail_after/batch combination yields each seq exactly once, in order."""
-    srv = FrameSocketServer(_payloads(n_frames),
-                            fail_after_frames=fail_after).start()
+    srv = WsFrameSocketServer(_payloads(n_frames),
+                              fail_after_frames=fail_after).start()
     try:
-        r = _reader(srv.port, frames_per_batch=batch)
         got = []
         seq = 0
         while seq < n_frames:
-            frames = r._fetch(seq, batch)
+            frames = _fetch(srv.port, seq, batch)
             if not frames:
                 break
             got.extend(s for s, _ in frames)

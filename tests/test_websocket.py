@@ -1,9 +1,10 @@
-"""RFC 6455 client frame layer (sources/websocket.py) — the literal
-WebSocket transport the reference speaks (scraper.py:177-246, keepalive
-:208-216): handshake accept-hash vectors, masked-frame encode/decode at
-every payload-length form, ping→pong keepalive, fragmentation
-reassembly, and the same reconnect/no-dupes/no-gaps and Spark streaming
-contracts as the TCP transport — via transport="ws"."""
+"""RFC 6455 layer (sources/websocket.py) — the one wire of the live
+source, the literal WebSocket transport the reference speaks
+(scraper.py:177-246, keepalive :208-216): handshake accept-hash vectors,
+masked-frame encode/decode at every payload-length form, ping→pong
+keepalive, fragmentation reassembly, the latest-seq control query, and
+the fleet reader's exactly-once drain over two ws shards. The
+single-endpoint stream contracts live in test_socket_source.py."""
 
 from __future__ import annotations
 
@@ -164,7 +165,7 @@ def test_handshake_rejects_wrong_accept():
 
 
 def test_ws_fetch_over_real_server_with_drops_and_fragments():
-    """fetch_frames(transport='ws') against the ws server: handshake,
+    """fetch_frames against the ws server: handshake,
     mid-stream ping, fragmented data messages, every connection dropped
     after 2 frames with no close frame — resume must still deliver each
     seq exactly once, in order."""
@@ -172,7 +173,7 @@ def test_ws_fetch_over_real_server_with_drops_and_fragments():
                               fragment_data=True).start()
     try:
         frames = fetch_frames("127.0.0.1", srv.port, 0, 7,
-                              backoff_base=0.02, transport="ws")
+                              backoff_base=0.02)
         assert [s for s, _ in frames] == list(range(7))
         assert frames[3][1] == srv.payloads[3]
     finally:
@@ -182,45 +183,16 @@ def test_ws_fetch_over_real_server_with_drops_and_fragments():
 def test_ws_latest_seq_query():
     srv = WsFrameSocketServer(_payloads(4)).start()
     try:
-        assert query_latest_seq("127.0.0.1", srv.port, transport="ws") == 4
+        assert query_latest_seq("127.0.0.1", srv.port) == 4
         srv.append(_payloads(1)[0])
-        assert query_latest_seq("127.0.0.1", srv.port, transport="ws") == 5
-    finally:
-        srv.kill()
-
-
-def test_spark_stream_over_ws_transport(spark, tmp_path):
-    """End to end: spark.readStream.format('dexframes') over the
-    RFC 6455 transport, flaky server, exactly-once drain."""
-    from pyspark.sql import functions as F
-
-    from dexscraper_spark.sources.frame_source import register_frame_source
-
-    register_frame_source(spark)
-    srv = WsFrameSocketServer(_payloads(5), fail_after_frames=2).start()
-    try:
-        q = (spark.readStream.format("dexframes")
-             .option("port", str(srv.port))
-             .option("transport", "ws")
-             .option("frames_per_batch", "5")
-             .option("backoff_base_s", "0.02")
-             .load()
-             .writeStream.format("memory").queryName("ws_mem")
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True).start())
-        assert q.awaitTermination(120)
-        got = (spark.table("ws_mem")
-               .groupBy("msg_id", "record_position")
-               .agg(F.count(F.lit(1)).alias("n")).collect())
-        assert {r["msg_id"] for r in got} == set(range(5))
-        assert all(r["n"] == 1 for r in got)
+        assert query_latest_seq("127.0.0.1", srv.port) == 5
     finally:
         srv.kill()
 
 
 def test_spark_fleet_over_ws_transport(spark, tmp_path):
-    """The partitioned fleet reader speaks ws too: two ws shard servers,
-    executor-side subscriptions, exactly-once globally."""
+    """The partitioned fleet reader over two ws shard servers (one
+    flaky): executor-side subscriptions, exactly-once globally."""
     from pyspark.sql import functions as F
 
     from dexscraper_spark.sources.frame_source import register_frame_source
@@ -232,7 +204,6 @@ def test_spark_fleet_over_ws_transport(spark, tmp_path):
     try:
         q = (spark.readStream.format("dexframes")
              .option("endpoints", f"127.0.0.1:{a.port},127.0.0.1:{b.port}")
-             .option("transport", "ws")
              .option("frames_per_batch", "4")
              .option("max_frames", "4")
              .option("backoff_base_s", "0.02")
