@@ -135,6 +135,9 @@ UNREFERENCED_ALLOWED = frozenset({
     "dexscraper_spark.sinks.exporters:binance_klines_document",
     "dexscraper_spark.sinks.exporters:coingecko_document",
     "dexscraper_spark.sinks.exporters:pancakeswap_document",
+    # reference twin: the two-kernel form the fused media kernel
+    # (decode_media_meta_features) is checked against field for field
+    "dexscraper_spark.operators.multimodal:decode_media_meta",
     # the rest: no entry point runs, measures or checks them; each is
     # to be wired to one or deleted
     "dexscraper_spark.functions.formatting:fixed8",
@@ -146,12 +149,6 @@ UNREFERENCED_ALLOWED = frozenset({
     "dexscraper_spark.functions.textstats:_doc_gate_metrics",
     "dexscraper_spark.operators.bpe:bpe_load",
     "dexscraper_spark.operators.bpe:bpe_save",
-    "dexscraper_spark.operators.codecs:encode_bmp",
-    "dexscraper_spark.operators.codecs:encode_png",
-    "dexscraper_spark.operators.codecs:encode_wav",
-    "dexscraper_spark.operators.multimodal:audio_features",
-    "dexscraper_spark.operators.multimodal:decode_media_meta",
-    "dexscraper_spark.operators.multimodal:resize_images",
     "dexscraper_spark.operators.multimodal:video_dedup",
     "dexscraper_spark.operators.sessionize:cluster_values",
     "dexscraper_spark.operators.sketch:dd_histogram",

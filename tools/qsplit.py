@@ -15,7 +15,10 @@ first-rerun ≈ the pre-final-shuffle execution cost; rerun ≈ final
 stage + Arrow fetch floor (useful for "is this row result-transfer
 bound?" — guide §1.4).
 
-Usage: python tools/qsplit.py [-n RUNS] query [query ...]
+With no query names every registered row is timed. Rows print sorted
+by first-run time, slowest first, with a TOTAL line of the medians.
+
+Usage: python tools/qsplit.py [-n RUNS] [query ...]
 """
 
 from __future__ import annotations
@@ -52,7 +55,8 @@ def main() -> None:
     spark.range(1).toDF("x").mapInPandas(lambda it: it, "x long").count()
 
     qmap = queries()
-    for name in names:
+    rows = []
+    for name in names or list(qmap):
         build = qmap[name]
         build(spark, sf_dir).toPandas()   # warm artifacts; untimed
         bts, fts, rts = [], [], []
@@ -69,8 +73,15 @@ def main() -> None:
             rts.append(t3 - t2)
         release_tracked()
         med = statistics.median
-        print(f"{name:32s} build={med(bts):.3f} first={med(fts):.3f} "
-              f"rerun={med(rts):.3f}  plan~={med(fts)-med(rts):.3f}")
+        rows.append((name, med(bts), med(fts), med(rts)))
+
+    rows.sort(key=lambda r: -r[2])
+    for name, b, f, r in rows:
+        print(f"{name:32s} build={b:.3f} first={f:.3f} "
+              f"rerun={r:.3f}  plan~={f - r:.3f}")
+    b, f, r = (sum(row[i] for row in rows) for i in (1, 2, 3))
+    print(f"{'TOTAL':32s} build={b:.3f} first={f:.3f} "
+          f"rerun={r:.3f}  plan~={f - r:.3f}")
 
 
 if __name__ == "__main__":
